@@ -1,0 +1,5 @@
+"""End-to-end benchmark of kgtm: KG build, streaming resolution, document dedup.
+
+Run one workload with ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root; see README.md.
+"""
