@@ -1,31 +1,29 @@
-"""Entity linking: ladder-candidate broadcast join + min-rung pick.
+"""Entity linking: first-hit-wins ladder probe against the ontology dictionary.
 
 Set-oriented translation of the reference's first-hit-wins ladder
-(/root/reference/ontologytimemachine/utils/proxy_logic.py:88-144): generate
-ALL candidate keys per mention (kgtm.normalize.candidate_paths_col), inner
-broadcast-join against the ontology dictionary on (host, cand_path), keep the
-minimum rung per mention. "First ladder hit wins and canonicalizes the path"
-becomes a min_by over rung — the proof obligation from SURVEY.md §7 item (5);
-tests include cases where multiple rungs match different dictionary entries.
+(ontologytimemachine/utils/proxy_logic.py:88-144): every mention's ≤6
+rung-ordered candidate keys (kgtm.normalize.ladder_probe_expr) are probed
+against a host → map<path, ontology_iri> dictionary and the FIRST non-null
+hit wins and canonicalizes the path — the min-rung proof obligation from
+SURVEY.md §7 item (5); tests include cases where multiple rungs match
+different dictionary entries.
 
-Scale notes:
-  * The dictionary side is broadcast (1,816 rows in the reference; ≤ a few MB
-    even at 10^6 ontologies) — the mention side never shuffles for the join.
-  * Round 7: the min-rung pick is computed PER ROW by probing the rung-ordered
-    candidate array against a broadcast host→(path→iri) map and taking the
-    first non-null hit (broadcast_ladder_link) — zero exchanges and zero
-    aggregates on the mention side. The earlier explode→join→groupBy(min_by)
-    formulation shuffled the 6x candidate fan-out once per query; the probe
-    form never materializes candidates as rows at all.
-  * Hot dictionary hosts (semanticscience.org 265/1,816 entries — BASELINE.md
-    skew row) are a *broadcast* side concern only: they widen one map row,
-    never a join partition.
+One probe, two ways to bring the dictionary to it (broadcast_ladder_link):
+  * a small driver-local dictionary folds into the plan as ONE map literal
+    (session.map_literal) — zero joins, zero dictionary-side stages;
+  * any other dictionary is reduced to one row per host and broadcast-joined
+    on host — the mention side never shuffles, and plan size is O(1) in
+    |dictionary|.
+Both are aggregation-free on the mention side, so they run unchanged under
+streaming append mode. Hot dictionary hosts (semanticscience.org 265/1,816
+entries — BASELINE.md skew row) widen one map row, never a join partition.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from kgtm.normalize import candidate_paths_col
 
@@ -60,54 +58,6 @@ def link_mentions(
     return broadcast_ladder_link(mentions.select(*cols), index)
 
 
-def ladder_link_expr(index_rows: list[tuple[str, str, str]], host_col: str = "host", path_col: str = "path"):
-    """Aggregation-free ladder linking as ONE column expression.
-
-    ``index_rows``: [(host, path, ontology_iri)] — the dictionary embedded as
-    a map literal (the closest translation of the reference's resident
-    in-memory set, download_archivo_urls.py:13). The rung-ordered candidate
-    array is probed with map lookups and the FIRST hit wins — the literal
-    short-circuit of proxy_logic.py:103-141, no groupBy.
-
-    Use when (a) the plan must stay aggregation-free (streaming append mode),
-    or (b) per-row lookup beats a join. For very large dictionaries (>>10^5
-    entries) prefer the broadcast-join paths: a map literal that size bloats
-    the plan.
-
-    Returns struct(is_linked, ontology_iri, canonical_path, rung).
-    """
-    kv = []
-    for h, p, iri in index_rows:
-        kv += [F.lit(f"{h}|{p}"), F.lit(iri)]
-    m = F.create_map(*kv)
-    hosts = sorted({h for h, _, _ in index_rows})
-    host_set = F.array(*[F.lit(h) for h in hosts])
-    cands = candidate_paths_col(path_col)
-    probed = F.transform(
-        cands,
-        lambda c: F.struct(
-            c["rung"].alias("rung"),
-            c["cand_path"].alias("cand_path"),
-            m[F.concat(F.col(host_col), F.lit("|"), c["cand_path"])].alias(
-                "ontology_iri"
-            ),
-        ),
-    )
-    first = F.get(F.filter(probed, lambda x: x["ontology_iri"].isNotNull()), 0)
-    p = F.col(path_col)
-    pathless_hit = (p.isNull() | (p == "")) & F.array_contains(
-        host_set, F.col(host_col)
-    )
-    return F.struct(
-        (first.isNotNull() | pathless_hit).alias("is_linked"),
-        first["ontology_iri"].alias("ontology_iri"),
-        first["cand_path"].alias("canonical_path"),
-        F.when(first.isNotNull(), first["rung"])
-        .when(pathless_hit, F.lit(0))
-        .alias("rung"),
-    )
-
-
 def host_path_map(index: DataFrame) -> DataFrame:
     """Dictionary side for the stream-static broadcast ladder:
     (d_host, path_map: map<path, ontology_iri>) — one row per host.
@@ -127,49 +77,28 @@ def host_path_map(index: DataFrame) -> DataFrame:
     )
 
 
-#: Above this many dictionary entries the literal-probe fast path bows out:
-#: a map literal that size bloats the plan (ladder_link_expr's caveat) and
-#: the broadcast join is the honest shape. Archivo itself is 1,816 entries.
-LITERAL_DICT_MAX = 4096
-
-
 def _literal_host_map(index: DataFrame):
-    """map<host, map<path, iri>> literal for a driver-local small dictionary;
-    None when the index is not a plan literal (session.local_literal_rows) or
-    carries NULL keys (create_map cannot hold them — the broadcast path's
-    map_from_entries cannot either, so those dictionaries are invalid both
-    ways, but fall back rather than change the failure mode here)."""
-    from kgtm.session import local_literal_rows
+    """map<host, map<path, iri>> literal of a driver-local small dictionary
+    (session.local_literal_rows); None otherwise — then the caller keeps
+    the broadcast join. Same reduction as host_path_map: duplicate
+    (host, path) rows resolve to min(ontology_iri), and a NULL host is
+    dropped (it never matches the join's d_host)."""
+    from kgtm.session import local_literal_rows, map_literal
 
-    rows = local_literal_rows(
-        index, ["host", "path", "ontology_iri"], LITERAL_DICT_MAX
-    )
+    rows = local_literal_rows(index, ["host", "path", "ontology_iri"])
     if rows is None:
         return None
     per_host: dict[str, dict[str, str]] = {}
-    for r in rows:
-        if r.host is None or r.path is None or r.ontology_iri is None:
-            return None
-        pm = per_host.setdefault(r.host, {})
-        # duplicate (host, path) rows resolve to min(ontology_iri) — the
-        # same deterministic pick as host_path_map's first groupBy
-        if r.path not in pm or r.ontology_iri < pm[r.path]:
-            pm[r.path] = r.ontology_iri
-    return F.create_map(
-        *[
-            x
-            for h in sorted(per_host)
-            for x in (
-                F.lit(h),
-                F.create_map(
-                    *[
-                        y
-                        for p in sorted(per_host[h])
-                        for y in (F.lit(p), F.lit(per_host[h][p]))
-                    ]
-                ),
-            )
-        ]
+    for host, path, iri in rows:
+        if host is None:
+            continue
+        pm = per_host.setdefault(host, {})
+        if pm.get(path) is None or (iri is not None and iri < pm[path]):
+            pm[path] = iri
+    s = index.schema
+    return map_literal(
+        per_host,
+        MapType(s["host"].dataType, MapType(s["path"].dataType, s["ontology_iri"].dataType)),
     )
 
 
@@ -179,17 +108,19 @@ def broadcast_ladder_link(
     host_col: str = "host",
     path_col: str = "path",
 ) -> DataFrame:
-    """Ladder linking as ONE stream-static broadcast join + pure expressions —
-    the large-dictionary streaming path (NOTES item 5).
+    """Ladder linking as one map probe per row, against a dictionary that
+    is either folded into the plan as a literal or broadcast-joined on host.
 
-    ladder_link_expr folds the dictionary into the plan as a map LITERAL,
-    which bloats plans past ~10^5 entries; here the dictionary arrives as a
-    broadcast (host → map<path, iri>) table, so plan size is O(1) in
-    |dictionary|. The rung-ordered candidate array is probed against the
-    joined map column and the FIRST hit wins — same short-circuit semantics
-    as ladder_link_expr / min-rung link_mentions (proxy_logic.py:88-144).
+    A small driver-local dictionary (session.local_literal_rows) becomes ONE
+    map<host, map<path, iri>> literal, so the query runs zero joins. Any
+    other dictionary arrives as a broadcast (host → map<path, iri>) table
+    (host_path_map), so plan size is O(1) in |dictionary|. Either way the
+    rung-ordered candidates are probed against the host's map and the FIRST
+    hit wins — the same short-circuit semantics as the reference
+    (proxy_logic.py:88-144), with identical rows and schema on both plans.
 
-    Append-safe: the stream side sees a broadcast join plus stateless column
+    Append-safe: the stream side sees a literal lookup or a broadcast join
+    plus stateless column
     expressions — no aggregation, so it runs under streaming append mode.
     Path-less mentions link on host membership alone (proxy_logic.py:100-101:
     d_host non-null after the left join), rung 0, no iri/canonical path.
@@ -211,14 +142,9 @@ def broadcast_ladder_link(
     """
     from kgtm.normalize import ladder_probe_expr
 
-    # Literal fast path (round 7, guide §2.4): a small driver-local
-    # dictionary folds into the plan as a map LITERAL — the reference's own
-    # shape (its dictionary is a resident in-memory set,
-    # download_archivo_urls.py:13) — so the query runs ZERO joins, ZERO
-    # broadcast builds and ZERO dictionary-side stages; the probe is the
-    # same scalar cascade either way. Non-local or large dictionaries keep
-    # the broadcast-join plan below (the 100 TB shape) — the switch derives
-    # from the actual plan (LocalRelation + size cap), not a sandbox tune.
+    # The switch derives from the actual plan (LocalRelation + size cap),
+    # never from a tuned constant: at production scale the dictionary is not
+    # a plan literal and the broadcast join below is the plan.
     hm = _literal_host_map(index)
     if hm is not None:
         joined = df.select(

@@ -32,6 +32,7 @@ import datetime as dt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StructField, StructType
 
 ONTO_VERSION_MODES = [
     "original",
@@ -85,58 +86,49 @@ def asof_snapshots(snapshots: DataFrame, pin_ts: dt.datetime) -> DataFrame:
     return latest_snapshots(snapshots.filter(F.col("version_ts") <= F.lit(pin_ts)))
 
 
-#: Size cap for the literal-map fast path below — mirrors
-#: kgtm.link.LITERAL_DICT_MAX (a map literal past this bloats the plan; the
-#: broadcast join is the honest shape for big snapshot tables).
-LITERAL_SNAPSHOTS_MAX = 4096
+_SNAPSHOT_COLS = ("version_ts", "snapshot_iri", "file_url")
 
 
 def _literal_latest_map(snapshots: DataFrame, pin_ts: dt.datetime | None):
     """map<ontology_iri, struct(version_ts, snapshot_iri, file_url)> literal
-    of the per-ontology max-version snapshot (<= pin when given), for a
-    driver-local small snapshot table; None when the table is not a plan
-    literal (session.local_literal_rows) — then the caller keeps the
-    broadcast-join dim, the 100 TB shape.
+    of the per-ontology max-version snapshot (<= pin when given) of a
+    driver-local small snapshot table (session.local_literal_rows); None
+    otherwise — then the caller keeps the broadcast-join dim.
 
     The reduction mirrors latest_snapshots/asof_snapshots: max version_ts
-    per ontology with the row's (snapshot_iri, file_url) attached. Spark's
+    per ontology with that row's (snapshot_iri, file_url); rows with a NULL
+    ontology_iri (never joined) or version_ts (never a max) drop out. Spark's
     max_by is nondeterministic across equal version_ts; here ties break on
     (snapshot_iri, file_url) — a deterministic pick inside the same
     contract.
     """
-    from kgtm.session import local_literal_rows
+    from kgtm.session import local_literal_rows, map_literal
 
-    rows = local_literal_rows(
-        snapshots,
-        ["ontology_iri", "version_ts", "snapshot_iri", "file_url"],
-        LITERAL_SNAPSHOTS_MAX,
-    )
+    rows = local_literal_rows(snapshots, ["ontology_iri", *_SNAPSHOT_COLS])
     if rows is None:
         return None
+    if pin_ts is not None and pin_ts.tzinfo is not None:
+        # collected timestamps are naive local time; compare against the
+        # same instant F.lit(pin_ts) denotes on the join path
+        pin_ts = pin_ts.astimezone().replace(tzinfo=None)
+
+    def rank(snap: tuple) -> tuple:
+        ts, iri, url = snap
+        return ts, iri or "", url or ""
+
     best: dict[str, tuple] = {}
-    for r in rows:
-        if r.ontology_iri is None or r.version_ts is None:
-            return None
-        if pin_ts is not None and r.version_ts > pin_ts:
+    for onto, ts, iri, url in rows:
+        if onto is None or ts is None or (pin_ts is not None and ts > pin_ts):
             continue
-        key = (r.version_ts, r.snapshot_iri or "", r.file_url or "")
-        if r.ontology_iri not in best or key > best[r.ontology_iri][0]:
-            best[r.ontology_iri] = (key, r)
-    if not best:
-        return None  # empty map literal has no useful type; use the join
-    return F.create_map(
-        *[
-            x
-            for iri in sorted(best)
-            for x in (
-                F.lit(iri),
-                F.struct(
-                    F.lit(best[iri][1].version_ts).alias("version_ts"),
-                    F.lit(best[iri][1].snapshot_iri).alias("snapshot_iri"),
-                    F.lit(best[iri][1].file_url).alias("file_url"),
-                ),
-            )
-        ]
+        if onto not in best or rank((ts, iri, url)) > rank(best[onto]):
+            best[onto] = (ts, iri, url)
+    s = snapshots.schema
+    return map_literal(
+        best,
+        MapType(
+            s["ontology_iri"].dataType,
+            StructType([StructField(c, s[c].dataType) for c in _SNAPSHOT_COLS]),
+        ),
     )
 
 
@@ -147,30 +139,62 @@ def attach_reduced_snapshots(
     ontology's max-version snapshot (<= pin when given) — the shared dim
     attach of resolve_links and the lifecycle queries.
 
-    Literal fast path (round 7, guide §2.4): when the snapshot table is a
-    small driver-local literal, the per-ontology reduction folds into the
-    plan as a map literal and the attach is three GetMapValue fields — zero
-    joins, zero broadcast builds, zero dim-side aggregation stages. Other
-    snapshot tables keep the reduce-then-broadcast-join plan.
+    Literal fast path: when the snapshot table is a small driver-local
+    literal, the per-ontology reduction folds into the plan as a map literal
+    and the attach is three GetMapValue fields — zero joins, zero broadcast
+    builds, zero dim-side aggregation stages. Other snapshot tables keep the
+    reduce-then-broadcast-join plan. Both plans yield the same rows and
+    schema.
     """
     hm = _literal_latest_map(snapshots, pin_ts)
     if hm is not None:
         hit = hm[F.col("ontology_iri")]
-        return linked.select(
-            "*",
-            hit["version_ts"].alias("version_ts"),
-            hit["snapshot_iri"].alias("snapshot_iri"),
-            hit["file_url"].alias("file_url"),
-        )
+        return linked.select("*", *[hit[c].alias(c) for c in _SNAPSHOT_COLS])
     dim = (
         latest_snapshots(snapshots)
         if pin_ts is None
         else asof_snapshots(snapshots, pin_ts)
     )
+    # the USING join moves ontology_iri first; restore linked's order so
+    # both plans yield the same schema
     return linked.join(
-        F.broadcast(dim.select("ontology_iri", "version_ts", "snapshot_iri", "file_url")),
+        F.broadcast(dim.select("ontology_iri", *_SNAPSHOT_COLS)),
         "ontology_iri",
         "left",
+    ).select(*linked.columns, *_SNAPSHOT_COLS)
+
+
+def _with_source(
+    out: DataFrame, archived_tag: str, live_cols: tuple[str, str, str] | None = None
+) -> DataFrame:
+    """Append ``source``, the response-source taxonomy (SURVEY.md §1.4):
+    'unlinked', else 'not-found' without a snapshot, else ``archived_tag``.
+
+    ``live_cols`` (status, content-type, accept) arms the failover gate
+    (proxy_logic.py:209-238 + utils.py:18-32): a linked row whose live
+    response is acceptable — status in the passthrough whitelist AND
+    Content-Type among the Accept header's mimetypes — is 'original', and
+    since a live-accepted response IS the original, its snapshot columns
+    are nulled (they only carry the archived leg). A NULL gate (no Accept
+    header / no live response) falls back, like the reference's empty
+    parse.
+    """
+    source = F.when(~F.col("is_linked"), F.lit("unlinked"))
+    if live_cols is not None:
+        from kgtm.negotiate import live_acceptable_col
+
+        live_ok = F.coalesce(live_acceptable_col(*live_cols), F.lit(False))
+        source = source.when(live_ok, F.lit("original"))
+        nulled = ("snapshot_iri", "version_ts", "file_url")
+        out = out.select(
+            *[c for c in out.columns if c not in nulled],
+            *[F.when(~live_ok | ~F.col("is_linked"), F.col(c)).alias(c) for c in nulled],
+        )
+    return out.withColumn(
+        "source",
+        source.when(F.col("snapshot_iri").isNull(), F.lit("not-found")).otherwise(
+            F.lit(archived_tag)
+        ),
     )
 
 
@@ -278,16 +302,14 @@ def resolve_links_per_row_pin(
             F.col("s_version_ts"),
         ).alias("best"),
     )
-    return best.select(
-        *[c for c in linked.columns],
-        F.col("best.s_snapshot_iri").alias("snapshot_iri"),
-        F.col("best.s_version_ts").alias("version_ts"),
-        F.col("best.s_file_url").alias("file_url"),
-    ).withColumn(
-        "source",
-        F.when(~F.col("is_linked"), F.lit("unlinked"))
-        .when(F.col("snapshot_iri").isNull(), F.lit("not-found"))
-        .otherwise(F.lit("archivo-timestamp")),
+    return _with_source(
+        best.select(
+            *linked.columns,
+            F.col("best.s_snapshot_iri").alias("snapshot_iri"),
+            F.col("best.s_version_ts").alias("version_ts"),
+            F.col("best.s_file_url").alias("file_url"),
+        ),
+        "archivo-timestamp",
     )
 
 
@@ -338,42 +360,12 @@ def resolve_links(
     if mode == "timestampArchived":
         if pin_ts is None:
             raise ValueError("timestampArchived requires pin_ts")
-        src_tag = "archivo-timestamp"
         out = attach_reduced_snapshots(linked, snapshots, pin_ts)
-    else:  # latestArchived and the archived leg of failover
-        src_tag = "archivo-latest"
-        out = attach_reduced_snapshots(linked, snapshots)
-    source = (
-        F.when(~F.col("is_linked"), F.lit("unlinked"))
-        .when(F.col("snapshot_iri").isNull(), F.lit("not-found"))
-        .otherwise(F.lit(src_tag))
+        return _with_source(out, "archivo-timestamp")
+    # latestArchived, and the archived leg of failover
+    live = (
+        (live_status_col, live_content_type_col, accept_col)
+        if mode == "originalFailoverLiveLatest"
+        else None
     )
-    if mode == "originalFailoverLiveLatest":
-        # Faithful failover (proxy_logic.py:209-238 + utils.py:18-32): accept
-        # the live response iff its status is in the passthrough whitelist AND
-        # its Content-Type is among the Accept header's mimetypes; else fall
-        # back to latest-archived. A NULL gate (no Accept header / no live
-        # response) falls back, like the reference's empty parse.
-        from kgtm.negotiate import live_acceptable_col
-
-        live_ok = F.coalesce(
-            live_acceptable_col(live_status_col, live_content_type_col, accept_col),
-            F.lit(False),
-        )
-        source = (
-            F.when(~F.col("is_linked"), F.lit("unlinked"))
-            .when(live_ok, F.lit("original"))
-            .when(F.col("snapshot_iri").isNull(), F.lit("not-found"))
-            .otherwise(F.lit(src_tag))
-        )
-        # A live-accepted response IS the original: no snapshot attaches
-        # (mirrors mode='original'; the archived columns only carry the
-        # failover leg).
-        out = out.select(
-            *[c for c in out.columns if c not in ("snapshot_iri", "version_ts", "file_url")],
-            *[
-                F.when(~live_ok | ~F.col("is_linked"), F.col(c)).alias(c)
-                for c in ("snapshot_iri", "version_ts", "file_url")
-            ],
-        )
-    return out.withColumn("source", source)
+    return _with_source(attach_reduced_snapshots(linked, snapshots), "archivo-latest", live)

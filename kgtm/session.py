@@ -13,7 +13,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -81,30 +83,54 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_literal_rows(df, cols: list[str], max_rows: int):
-    """The rows of ``df`` when its optimized plan is a driver-local literal
-    (LocalRelation) of at most ``max_rows`` rows; None otherwise.
+#: Row cap of the literal fold: a dim with more rows than this keeps its
+#: broadcast-join plan (a map literal that size bloats the plan; Archivo
+#: itself is 1,816 entries).
+LITERAL_MAX_ROWS = 4096
 
-    This is the size/locality guard of the literal fast paths (kgtm.link /
-    kgtm.resolve): a dictionary that is ALREADY a plan literal can be folded
-    into consumer plans as a map literal — zero joins, zero broadcast
-    builds, zero dim-side stages. Anything that is not provably local and
-    small (a parquet-backed dictionary, an RDD-parallelized frame, a big
-    inline table) returns None and the caller keeps its broadcast-join
-    plan, so at production dictionary scale the decision flips automatically
-    (same contract as fan_out_small_scan below: derived from the actual
-    plan, never a constant tuned to this sandbox).
+
+def local_literal_rows(df, cols: list[str], max_rows: int = LITERAL_MAX_ROWS):
+    """The rows of ``df.select(*cols)`` when its optimized plan is a
+    driver-local literal (LocalRelation) of at most ``max_rows`` rows; None
+    otherwise.
+
+    This is the only guard of the literal fold (kgtm.link / kgtm.resolve): a
+    dim that is ALREADY a plan literal can be folded into consumer plans as
+    a :func:`map_literal` — zero joins, zero broadcast builds, zero dim-side
+    stages. Anything that is not provably local and small (a parquet-backed
+    dictionary, an RDD-parallelized frame, a big inline table) returns None
+    and the caller keeps its broadcast-join plan, so at production
+    dictionary scale the decision flips automatically (derived from the
+    actual plan, never a constant tuned to one machine). A missing column
+    raises, exactly as it would on the join path.
     """
-    try:
-        proj = df.select(*cols)
-        plan = proj._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LocalRelation":
-            return None
-        if plan.data().size() > max_rows:
-            return None
-        return proj.collect()  # LocalTableScan: driver-side, no tasks
-    except Exception:
+    proj = df.select(*cols)
+    plan = proj._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
         return None
+    if plan.data().size() > max_rows:
+        return None
+    return proj.collect()  # LocalTableScan: driver-side, no tasks
+
+
+def map_literal(d: dict, dtype: MapType) -> Column:
+    """``d`` as ONE map literal of type ``dtype``: nested dicts become maps,
+    tuples become structs (fields by position).
+
+    The cast pins the type the broadcast path's dim column has, so the
+    literal and join plans agree by construction: an all-NULL field stays
+    typed (a bare ``F.lit(None)`` is void) and an empty dict is a typed
+    empty map. The whole tree is foldable, so the optimizer collapses it to
+    a single Literal."""
+
+    def lit(v) -> Column:
+        if isinstance(v, dict):
+            return F.create_map(*[x for k, w in v.items() for x in (lit(k), lit(w))])
+        if isinstance(v, tuple):
+            return F.struct(*map(lit, v))
+        return F.lit(v)
+
+    return lit(d).cast(dtype)
 
 
 #: ensure_min_parallelism sizing: one task per this many input bytes for

@@ -6,7 +6,9 @@ resolution pipeline as kgtm.pipeline expressed over a transcript *stream*:
 
   readStream (file source, transcripts schema) →
   mention extraction (stateless codegen exprs) →
-  broadcast ladder link + latest-snapshot resolution (stream-static joins) →
+  ladder link (a map-literal probe for a small plan-literal dictionary, else
+  a stream-static broadcast join) + latest-snapshot resolution (stream-static
+  broadcast join) →
   append sink, exactly-once per file via checkpointLocation.
 
 Also: watermarked per-conversation windowed counts (late-data handling) —
@@ -24,9 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgtm.extract import iri_mentions_col
-from kgtm.link import broadcast_ladder_link, ladder_link_expr
+from kgtm.link import broadcast_ladder_link
 from kgtm.normalize import parse_iri_cols
-from kgtm.resolve import latest_snapshots
+from kgtm.resolve import _with_source, latest_snapshots
 from kgtm.schemas import TRANSCRIPTS_SCHEMA
 
 
@@ -44,23 +46,20 @@ def streaming_resolution(
     snapshots: DataFrame,
     mode: str = "latestArchived",
     live_legs: DataFrame | None = None,
-    ladder: str = "broadcast",
 ) -> DataFrame:
     """Stream of resolved mention rows.
 
     Linking must stay aggregation-free — append output mode forbids
-    unwatermarked aggregations, and the min-rung groupBy of the batch path IS
-    one. Two append-safe formulations:
+    unwatermarked aggregations. link.broadcast_ladder_link probes each row
+    with pure expressions: a small plan-literal dictionary is folded into
+    the plan as a map literal, any other one is reached through ONE
+    stream-static broadcast join against (host → map<path, iri>), whose
+    plan size is O(1) in the dictionary, so 10^5+-entry dictionaries stream
+    fine.
 
-      * ladder='broadcast' (default, the scale path): ONE stream-static
-        broadcast join against (host → map<path, iri>) + a pure-expression
-        rung probe (link.broadcast_ladder_link). Plan size is O(1) in the
-        dictionary, so 10^5+-entry dictionaries stream fine.
-      * ladder='literal': the dictionary is collected driver-side and folded
-        into the plan as a map literal (ladder_link_expr) — fine for small
-        dictionaries, bloats plans past ~10^5 entries.
-
-    The snapshot dim stays a stream-static broadcast join (append-safe).
+    The snapshot dim is a stream-static broadcast join of latest_snapshots
+    (append-safe); the source taxonomy and failover null-out are batch
+    resolve_links' own (resolve._with_source).
 
     mode='originalFailoverLiveLatest' additionally needs ``live_legs`` — a
     STATIC (surface, live_status, live_content_type, accept_header) table of
@@ -84,57 +83,19 @@ def streaming_resolution(
         "surface",
         *parse_iri_cols("surface"),
     )
-    if ladder == "literal":
-        index_rows = [
-            (r.host, r.path, r.ontology_iri)
-            for r in ontology_index.select("host", "path", "ontology_iri").collect()
-        ]
-        link = ladder_link_expr(index_rows)
-        linked = mentions.select(
-            "*",
-            link["is_linked"].alias("is_linked"),
-            link["ontology_iri"].alias("ontology_iri"),
-            link["canonical_path"].alias("canonical_path"),
-            link["rung"].alias("rung"),
-        )
-    else:
-        linked = broadcast_ladder_link(mentions, ontology_index)
+    linked = broadcast_ladder_link(mentions, ontology_index)
     dim = F.broadcast(latest_snapshots(snapshots))
     out = linked.join(dim, "ontology_iri", "left")
-    if mode == "originalFailoverLiveLatest":
-        if live_legs is None:
-            raise ValueError(
-                "originalFailoverLiveLatest needs a static live_legs table "
-                "(surface, live_status, live_content_type, accept_header)"
-            )
-        from kgtm.negotiate import live_acceptable_col
-
-        out = out.join(F.broadcast(live_legs), "surface", "left")
-        live_ok = F.coalesce(
-            live_acceptable_col("live_status", "live_content_type", "accept_header"),
-            F.lit(False),
+    if mode != "originalFailoverLiveLatest":
+        return _with_source(out, "archivo-latest")
+    if live_legs is None:
+        raise ValueError(
+            "originalFailoverLiveLatest needs a static live_legs table "
+            "(surface, live_status, live_content_type, accept_header)"
         )
-        source = (
-            F.when(~F.col("is_linked"), F.lit("unlinked"))
-            .when(live_ok, F.lit("original"))
-            .when(F.col("snapshot_iri").isNull(), F.lit("not-found"))
-            .otherwise(F.lit("archivo-latest"))
-        )
-        # A live-accepted response IS the original: no snapshot attaches —
-        # null ALL archived-leg columns, matching batch resolve_links.
-        return out.select(
-            *[c for c in out.columns if c not in ("snapshot_iri", "version_ts", "file_url")],
-            *[
-                F.when(~live_ok | ~F.col("is_linked"), F.col(c)).alias(c)
-                for c in ("snapshot_iri", "version_ts", "file_url")
-            ],
-        ).withColumn("source", source)
-    return out.withColumn(
-        "source",
-        F.when(~F.col("is_linked"), F.lit("unlinked"))
-        .when(F.col("snapshot_iri").isNull(), F.lit("not-found"))
-        .otherwise(F.lit("archivo-latest")),
-    )
+    out = out.join(F.broadcast(live_legs), "surface", "left")
+    live = ("live_status", "live_content_type", "accept_header")
+    return _with_source(out, "archivo-latest", live)
 
 
 def run_stream_to_parquet(

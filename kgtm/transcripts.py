@@ -217,7 +217,9 @@ def ontology_snapshot_rows() -> list[tuple]:
 
 
 def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
+    """``s`` as a Spark SQL string literal. The parser reads a backslash as
+    an escape, so backslashes are doubled, as are single quotes."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def local_index_df(spark: SparkSession, rows: list[tuple[str, str, str, str]]) -> DataFrame:

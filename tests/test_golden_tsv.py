@@ -10,7 +10,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from kgtm.normalize import resolve_membership, split_iri
+from kgtm.normalize import parse_iri_cols, resolve_membership, split_iri
 from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA
 
 TSV = Path(__file__).parent / "golden" / "link_cases.tsv"
@@ -24,6 +24,20 @@ DICT_ROWS = [
     ("http://dict.org/ambig/Term0", "dict.org", "/ambig/Term0", "term"),
 ]
 DICT_SET = {(h, p) for _, h, p, _ in DICT_ROWS}
+
+
+# path-less and 1-segment-miss surfaces (proxy_logic.py:100-101)
+PATHLESS = ["http://dict.org", "https://dict.org", "http://nodict.org", "http://dict.org/zzz"]
+
+
+def _mentions(spark, surfaces):
+    return spark.createDataFrame([(s,) for s in surfaces], "surface string").select(
+        F.lit("c").alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.xxhash64("surface").alias("mention_id"),
+        "surface",
+        *parse_iri_cols("surface"),
+    )
 
 
 def load_cases():
@@ -55,17 +69,7 @@ def test_spark_path_matches_golden(spark):
     from kgtm.link import link_mentions
 
     index = spark.createDataFrame(DICT_ROWS, ONTOLOGY_INDEX_SCHEMA)
-    from kgtm.normalize import parse_iri_cols
-
-    mentions = spark.createDataFrame(
-        [(c["surface_iri"],) for c in CASES], "surface string"
-    ).select(
-        F.lit("c").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        F.xxhash64("surface").alias("mention_id"),
-        "surface",
-        *parse_iri_cols("surface"),
-    )
+    mentions = _mentions(spark, [c["surface_iri"] for c in CASES])
     got = {r.surface: r for r in link_mentions(mentions, index).collect()}
     for c in CASES:
         r = got[c["surface_iri"]]
@@ -81,20 +85,9 @@ def test_broadcast_ladder_matches_golden(spark):
     large-dictionary streaming path) — must agree with the golden corpus and
     with link_mentions row-for-row, including path-less host-only matches."""
     from kgtm.link import broadcast_ladder_link, link_mentions
-    from kgtm.normalize import parse_iri_cols
 
     index = spark.createDataFrame(DICT_ROWS, ONTOLOGY_INDEX_SCHEMA)
-    surfaces = [c["surface_iri"] for c in CASES] + [
-        "http://dict.org", "https://dict.org", "http://nodict.org",
-        "http://dict.org/zzz",
-    ]
-    mentions = spark.createDataFrame([(s,) for s in surfaces], "surface string").select(
-        F.lit("c").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        F.xxhash64("surface").alias("mention_id"),
-        "surface",
-        *parse_iri_cols("surface"),
-    )
+    mentions = _mentions(spark, [c["surface_iri"] for c in CASES] + PATHLESS)
     cols = ["surface", "is_linked", "ontology_iri", "canonical_path", "rung"]
     got = {r.surface: r for r in broadcast_ladder_link(mentions, index).select(*cols).collect()}
     for c in CASES:
@@ -115,24 +108,14 @@ def test_broadcast_ladder_matches_golden(spark):
 def test_pathless_host_only_match(spark):
     """proxy_logic.py:100-101: a path-less request matches on host alone
     (membership true, no canonical write-back, no specific ontology)."""
-    from kgtm.link import ladder_link_expr, link_mentions
-    from kgtm.normalize import parse_iri_cols, resolve_membership
+    from kgtm.link import link_mentions
+    from kgtm.transcripts import local_index_df
 
     assert resolve_membership("dict.org", "", DICT_SET) == (True, None, 0)
     assert resolve_membership("nodict.org", "", DICT_SET)[0] is False
 
     index = spark.createDataFrame(DICT_ROWS, ONTOLOGY_INDEX_SCHEMA)
-    mentions = spark.createDataFrame(
-        [("http://dict.org",), ("https://dict.org",), ("http://nodict.org",),
-         ("http://dict.org/zzz",)],  # 1-segment miss: gparent="" must NOT host-match
-        "surface string",
-    ).select(
-        F.lit("c").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        F.xxhash64("surface").alias("mention_id"),
-        "surface",
-        *parse_iri_cols("surface"),
-    )
+    mentions = _mentions(spark, PATHLESS)
     got = {r.surface: r for r in link_mentions(mentions, index).collect()}
     assert got["http://dict.org"].is_linked and got["http://dict.org"].rung == 0
     assert got["http://dict.org"].ontology_iri is None
@@ -140,14 +123,11 @@ def test_pathless_host_only_match(spark):
     assert not got["http://nodict.org"].is_linked
     assert not got["http://dict.org/zzz"].is_linked  # "" rung never host-matches
 
-    # map-literal formulation agrees
-    expr = ladder_link_expr([(h, p, i) for i, h, p, _ in DICT_ROWS])
-    got2 = {
-        r.surface: r
-        for r in mentions.select("surface", expr.alias("lk")).select(
-            "surface", "lk.is_linked", "lk.rung", "lk.ontology_iri"
-        ).collect()
-    }
-    assert got2["http://dict.org"].is_linked and got2["http://dict.org"].rung == 0
-    assert not got2["http://nodict.org"].is_linked
-    assert not got2["http://dict.org/zzz"].is_linked
+    # the literal-fold plan (a plan-literal dictionary) agrees with the
+    # broadcast-join plan on every golden and path-less case
+    mentions = _mentions(spark, [c["surface_iri"] for c in CASES] + PATHLESS)
+    lit = link_mentions(mentions, local_index_df(spark, DICT_ROWS))
+    bc = link_mentions(mentions, index)
+    assert lit.schema == bc.schema
+    assert lit.exceptAll(bc).count() == 0
+    assert bc.exceptAll(lit).count() == 0

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
 from pyspark.sql import functions as F
 
 from kgtm.link import link_mentions
@@ -88,8 +91,52 @@ def test_literal_probe_matches_broadcast_ladder(spark, events):
     lit = link_mentions(m, ontology_index_df(spark))
     rdd_index = spark.createDataFrame(ontology_index_rows(), ONTOLOGY_INDEX_SCHEMA)
     bc = link_mentions(m, rdd_index)
+    assert "Join" not in _plan(lit) and "BroadcastHashJoin" in _plan(bc)
+    assert lit.schema == bc.schema  # names, order, types and nullability
     assert lit.exceptAll(bc).count() == 0
     assert bc.exceptAll(lit).count() == 0
+
+
+@pytest.mark.parametrize(
+    "mode, pin",
+    [
+        ("latestArchived", None),
+        ("timestampArchived", dt.datetime(2024, 7, 1)),
+        ("originalFailoverLiveLatest", None),
+    ],
+)
+def test_literal_snapshots_match_broadcast_resolve(spark, events, mode, pin):
+    """resolve_links over a plan-literal snapshot table (map-literal fold)
+    and over the same rows as a non-literal frame (broadcast-join dim) must
+    give identical rows and an identical schema, in every archived mode."""
+    from kgtm.resolve import resolve_links
+
+    linked = link_mentions(
+        extract_mentions(events_to_transcripts(events)), ontology_index_df(spark)
+    )
+    if mode == "originalFailoverLiveLatest":
+        # a deterministic mix of no live leg, a bad status, a mime
+        # mismatch and an accepted live response
+        k = F.abs(F.xxhash64("surface")) % 4
+        linked = linked.select(
+            "*",
+            F.when(k == 1, 500).when(k > 1, 200).cast("int").alias("live_status"),
+            F.when(k == 2, "text/html").otherwise("text/turtle").alias("live_content_type"),
+            F.lit("text/turtle").alias("accept_header"),
+        )
+    lit_snaps = ontology_snapshots_df(spark)
+    join_snaps = spark.createDataFrame(lit_snaps.collect(), ONTOLOGY_SNAPSHOTS_SCHEMA)
+    lit = resolve_links(linked, lit_snaps, mode, pin)
+    bc = resolve_links(linked, join_snaps, mode, pin)
+    assert "Join" not in _plan(lit) and "BroadcastHashJoin" in _plan(bc)
+    assert lit.schema == bc.schema
+    assert lit.exceptAll(bc).count() == 0
+    assert bc.exceptAll(lit).count() == 0
+    sources = {r.source for r in bc.select("source").distinct().collect()}
+    archived = "archivo-timestamp" if mode == "timestampArchived" else "archivo-latest"
+    assert {"unlinked", archived} <= sources
+    if mode == "originalFailoverLiveLatest":
+        assert "original" in sources
 
 
 def test_flagship_resolution_joins_broadcast(spark, events):
