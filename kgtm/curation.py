@@ -186,12 +186,7 @@ def incremental_curate(
     jaccard_threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    corpus_digests: DataFrame | None = None,
-    corpus_flat: DataFrame | None = None,
-    corpus_shingle_df: DataFrame | None = None,
-    corpus_doc_sizes: DataFrame | None = None,
-    corpus_hot: DataFrame | None = None,
-    corpus_n_buckets: int | None = None,
+    state: CorpusState | None = None,
     skip_guards: bool = False,
     _state_out: dict | None = None,
     _plan_probes: dict | None = None,
@@ -202,20 +197,22 @@ def incremental_curate(
     The append-only production shape: prior decisions are immutable (the
     ledger is the audit log); a new batch must not re-curate the world. The
     QUADRATIC work scales with the batch — the near-dup candidate join is
-    probe-driven (ngram_jaccard_pairs_probe: pairs touching new docs only,
-    never the old×old self-join) and exact dedup is a digest join of the
-    batch against prior digests.
+    probe-driven (dedup.probe_pairs_with_sizes: pairs touching new docs
+    only, never the old×old self-join) and exact dedup is a digest join of
+    the batch against prior digests.
 
     The LINEAR corpus-side work has two modes:
-      - derive mode (``old_docs`` given): each call re-scans and re-shingles
-        the prior corpus from text — simple, but O(corpus text) per batch.
-      - state mode (``corpus_digests`` + ``corpus_flat`` given): the
-        corpus-side digest set and participant shingle flat are MATERIALIZED
-        tables maintained by the store (append_curated_batch /
+      - derive mode (``old_docs`` given, ``state`` None): each call re-scans
+        and re-shingles the prior corpus from text — simple, but O(corpus
+        text) per batch.
+      - state mode (``state`` given): the five materialized corpus tables
+        (CorpusState — digests, shingle flat, df contributions, post-cap doc
+        sizes, hot set) maintained by the store (append_curated_batch /
         persist_curated_corpus write a delta per commit), so a batch append
         reads compact int/hash tables instead of re-deriving them from text
-        and ``old_docs`` is not needed at all. Decisions are identical in
-        both modes (pytest-asserted parity).
+        and ``old_docs`` is not needed at all. The stored flat is scanned
+        once, filtered map-side to the batch's shingles.
+    Decisions are identical in both modes (pytest-asserted parity).
 
     ``skip_guards=True`` skips the precondition job — ONLY for callers that
     have already verified the preconditions in their own single-job guard
@@ -239,17 +236,17 @@ def incremental_curate(
     old survivors standing here (ledger immutability, by design).
     """
     from kgtm.dedup import (
+        DEFAULT_MAX_SHINGLE_DF,
+        _capped_flat,
         dedup_clusters,
         flat_shingles,
-        ngram_jaccard_pairs_probe,
-        probe_pairs_from_split,
+        probe_pairs_with_sizes,
     )
 
-    state_mode = corpus_digests is not None and corpus_flat is not None
-    if not state_mode and old_docs is None:
+    if state is None and old_docs is None:
         raise ValueError(
             "incremental_curate needs either old_docs (derive mode) or "
-            "corpus_digests + corpus_flat (state mode)"
+            "state (state mode)"
         )
     if not skip_guards:
         # ONE Spark job for every precondition: max old id + threshold-drift
@@ -288,8 +285,8 @@ def incremental_curate(
     # State mode: the prior digest set IS the materialized table — the exact
     # keepers own one distinct digest each, and every old HQ doc's digest is
     # owned by some keeper, so keepers' digests == distinct HQ digests.
-    if state_mode:
-        old_digests = corpus_digests.select(F.col("dg").alias("_dg"))
+    if state is not None:
+        old_digests = state.digests.select(F.col("dg").alias("_dg"))
     else:
         old_hq = old_docs.join(
             old_ledger.filter(
@@ -319,14 +316,12 @@ def incremental_curate(
     # near-dup stage: graph participants of the full run = exact-survivors
     # on both sides (old side: ledger kept + near-dup-dropped — both passed
     # the exact stage and sit in the full run's pair graph)
-    if state_mode:
-        # corpus_flat already holds the old participants' (id, shingle) rows;
+    if state is not None:
+        # state.flat already holds the old participants' (id, shingle) rows;
         # only the batch is shingled from text. The df cap runs over the
         # COMBINED shingle space — same as a full run, so a shingle pushed
         # over the cap by the batch is dropped on both sides exactly as
         # curate_documents would.
-        from kgtm.dedup import DEFAULT_MAX_SHINGLE_DF, probe_pairs_with_sizes
-
         new_flat = flat_shingles(
             hq_new.join(new_survived_exact, id_col, "left_semi").select(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -334,149 +329,102 @@ def incremental_curate(
             text_col="text",
             id_col="doc_id",
         )
-        v2 = (
-            corpus_shingle_df is not None
-            and corpus_doc_sizes is not None
-            and corpus_hot is not None
+        # NO consumer below touches the full corpus flat more than the ONE
+        # map-side-filtered columnar scan (o_hit) plus the bucket-pruned
+        # newly-hot owner lookup. Hot set is INCREMENTAL: hot_now =
+        # stored_hot ∪ {batch shingles whose stored_total + batch_count
+        # crosses the cap} — df only grows and only batch shingles' totals
+        # change, so this equals the full recompute over the combined
+        # corpus. Participant sizes come from the materialized
+        # ledger_doc_sizes sum (post-cap under stored_hot) corrected by the
+        # newly-hot ownership counts.
+        batch_df = new_flat.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        hot_old = state.hot.select("shingle").distinct()
+        cand = batch_df.join(hot_old, "shingle", "left_anti")
+        # stored totals for the batch's (not-yet-hot) shingles only —
+        # a map-side-filtered scan of the df table, never a full groupBy
+        old_tot = (
+            state.shingle_df.select("shingle", "df")
+            .join(F.broadcast(cand.select("shingle")), "shingle", "left_semi")
+            .groupBy("shingle")
+            .agg(F.sum("df").alias("old_df"))
         )
-        if v2:
-            # ---- v2 (round 5): NO consumer below touches the full corpus
-            # flat more than the ONE map-side-filtered columnar scan (o_hit)
-            # plus the bucket-pruned newly-hot owner lookup. Hot set is
-            # INCREMENTAL: hot_now = stored_hot ∪ {batch shingles whose
-            # stored_total + batch_count crosses the cap} — df only grows
-            # and only batch shingles' totals change, so this equals the
-            # full recompute over the combined corpus. Participant sizes
-            # come from the materialized ledger_doc_sizes sum (post-cap
-            # under stored_hot) corrected by the newly-hot ownership counts.
-            batch_df = new_flat.groupBy("shingle").agg(
-                F.count(F.lit(1)).alias("df")
+        newly_hot = (
+            cand.join(old_tot, "shingle", "left")
+            .filter(
+                F.coalesce(F.col("old_df"), F.lit(0)) + F.col("df")
+                > DEFAULT_MAX_SHINGLE_DF
             )
-            hot_old = corpus_hot.select("shingle").distinct()
-            cand = batch_df.join(hot_old, "shingle", "left_anti")
-            # stored totals for the batch's (not-yet-hot) shingles only —
-            # a map-side-filtered scan of the df table, never a full groupBy
-            old_tot = (
-                corpus_shingle_df.select("shingle", "df")
-                .join(F.broadcast(cand.select("shingle")), "shingle", "left_semi")
-                .groupBy("shingle")
-                .agg(F.sum("df").alias("old_df"))
+            .select("shingle")
+            .localCheckpoint(eager=False)
+        )
+        hot_now = hot_old.unionByName(newly_hot).localCheckpoint(eager=False)
+        p = new_flat.join(
+            F.broadcast(hot_now), "shingle", "left_anti"
+        ).localCheckpoint(eager=False)
+        # ONE scan of the stored flat: broadcast-semi on the batch's
+        # post-cap shingle set filters map-side, so only rows that can
+        # pair with the batch are ever shuffled (hot rows self-exclude:
+        # p's shingles are post-cap)
+        probe_sh = p.select("shingle").distinct()
+        o_hit_raw = state.flat.select("id", "shingle").join(
+            F.broadcast(probe_sh), "shingle", "left_semi"
+        )
+        o_hit = o_hit_raw.localCheckpoint(eager=False)
+        # owner corrections: stored docs owning a newly-hot shingle have
+        # their stored post-cap size overcounted by exactly that many
+        # rows. |newly-hot| is tiny (shingles cross the cap once), so
+        # the lookup collects it and prunes to the buckets it hits.
+        owner_corr_raw = (
+            _pruned_flat_lookup(state.flat, newly_hot, state.n_buckets)
+            .groupBy("id")
+            .agg((-F.count(F.lit(1))).alias("corr"))
+        )
+        owner_corr = owner_corr_raw.localCheckpoint(eager=False)
+        if _plan_probes is not None:
+            # pre-checkpoint frames (checkpoints erase lineage from the
+            # final plan) so plan-shape tests can pin the O(batch)
+            # contract structurally — never consumed on the hot path
+            _plan_probes.update(
+                {
+                    "o_hit": o_hit_raw,
+                    "old_tot": old_tot,
+                    "owner_corr": owner_corr_raw,
+                    "newly_hot": newly_hot,
+                }
             )
-            newly_hot = (
-                cand.join(old_tot, "shingle", "left")
-                .filter(
-                    F.coalesce(F.col("old_df"), F.lit(0)) + F.col("df")
-                    > DEFAULT_MAX_SHINGLE_DF
-                )
-                .select("shingle")
-                .localCheckpoint(eager=False)
+        batch_sizes = p.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+        old_ids = o_hit.select("id").distinct()
+        old_sizes = (
+            state.doc_sizes.select("id", "n_sh")
+            .join(old_ids, "id", "left_semi")
+            .groupBy("id")
+            .agg(F.sum("n_sh").alias("n_sh"))
+            .join(owner_corr, "id", "left")
+            .select(
+                "id",
+                (F.col("n_sh") + F.coalesce(F.col("corr"), F.lit(0))).alias("n_sh"),
             )
-            hot_now = hot_old.unionByName(newly_hot).localCheckpoint(eager=False)
-            p = new_flat.join(
-                F.broadcast(hot_now), "shingle", "left_anti"
-            ).localCheckpoint(eager=False)
-            # ONE scan of the stored flat: broadcast-semi on the batch's
-            # post-cap shingle set filters map-side, so only rows that can
-            # pair with the batch are ever shuffled (hot rows self-exclude:
-            # p's shingles are post-cap)
-            probe_sh = p.select("shingle").distinct()
-            o_hit_raw = corpus_flat.select("id", "shingle").join(
-                F.broadcast(probe_sh), "shingle", "left_semi"
-            )
-            o_hit = o_hit_raw.localCheckpoint(eager=False)
-            # owner corrections: stored docs owning a newly-hot shingle have
-            # their stored post-cap size overcounted by exactly that many
-            # rows. |newly-hot| is tiny (shingles cross the cap once), so
-            # the lookup collects it and prunes to the buckets it hits.
-            owner_corr_raw = (
-                _pruned_flat_lookup(corpus_flat, newly_hot, corpus_n_buckets)
-                .groupBy("id")
-                .agg((-F.count(F.lit(1))).alias("corr"))
-            )
-            owner_corr = owner_corr_raw.localCheckpoint(eager=False)
-            if _plan_probes is not None:
-                # pre-checkpoint frames (checkpoints erase lineage from the
-                # final plan) so plan-shape tests can pin the O(batch)
-                # contract structurally — never consumed on the hot path
-                _plan_probes.update(
-                    {
-                        "o_hit": o_hit_raw,
-                        "old_tot": old_tot,
-                        "owner_corr": owner_corr_raw,
-                        "newly_hot": newly_hot,
-                    }
-                )
-            batch_sizes = p.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-            old_ids = o_hit.select("id").distinct()
-            old_sizes = (
-                corpus_doc_sizes.select("id", "n_sh")
-                .join(old_ids, "id", "left_semi")
-                .groupBy("id")
-                .agg(F.sum("n_sh").alias("n_sh"))
-                .join(owner_corr, "id", "left")
-                .select(
-                    "id",
-                    (F.col("n_sh") + F.coalesce(F.col("corr"), F.lit(0))).alias(
-                        "n_sh"
+        )
+        pairs = probe_pairs_with_sizes(
+            p, o_hit, batch_sizes.unionByName(old_sizes), jaccard_threshold
+        )
+        if _state_out is not None:
+            # the O(batch) state contributions the committing append
+            # writes — computed HERE once (all lazily checkpointed above,
+            # so the post-commit state write reuses materialized RDDs)
+            _state_out.update(
+                {
+                    "ledger_digests": new_digests.join(
+                        new_survived_exact, id_col, "left_semi"
+                    ).select(F.col("_dg").alias("dg")),
+                    "ledger_shingles": new_flat,
+                    "ledger_shingle_df": batch_df,
+                    "ledger_doc_sizes": batch_sizes.unionByName(
+                        owner_corr.select("id", F.col("corr").alias("n_sh"))
                     ),
-                )
-            )
-            pairs = probe_pairs_with_sizes(
-                p, o_hit, batch_sizes.unionByName(old_sizes), jaccard_threshold
-            )
-            if _state_out is not None:
-                # the O(batch) state contributions the committing append
-                # writes — computed HERE once (all lazily checkpointed above,
-                # so the post-commit state write reuses materialized RDDs)
-                _state_out.update(
-                    {
-                        "ledger_digests": new_digests.join(
-                            new_survived_exact, id_col, "left_semi"
-                        ).select(F.col("_dg").alias("dg")),
-                        "ledger_shingles": new_flat,
-                        "ledger_shingle_df": batch_df,
-                        "ledger_doc_sizes": batch_sizes.unionByName(
-                            owner_corr.select("id", F.col("corr").alias("n_sh"))
-                        ),
-                        "ledger_hot": newly_hot,
-                    }
-                )
-        else:
-            old_flat = corpus_flat.select("id", "shingle")
-            if corpus_shingle_df is not None:
-                # hot set from the MATERIALIZED per-shingle df contributions
-                # + the batch's own counts — an aggregation over (distinct
-                # shingles + batch), not a groupBy shuffle of the whole
-                # corpus flat. Contribution sums == a fresh count over the
-                # combined flat because contributions partition it by commit.
-                batch_df = new_flat.groupBy("shingle").agg(
-                    F.count(F.lit(1)).alias("df")
-                )
-                hot = (
-                    corpus_shingle_df.select("shingle", "df")
-                    .unionByName(batch_df)
-                    .groupBy("shingle")
-                    .agg(F.sum("df").alias("df_total"))
-                    .filter(F.col("df_total") > DEFAULT_MAX_SHINGLE_DF)
-                    .select("shingle")
-                )
-            else:
-                combined = old_flat.unionByName(new_flat)
-                hot = (
-                    combined.groupBy("shingle")
-                    .agg(F.count(F.lit(1)).alias("df_"))
-                    .filter(F.col("df_") > DEFAULT_MAX_SHINGLE_DF)
-                    .select("shingle")
-                )
-            # the probe/rest split is known BY CONSTRUCTION here (probe ids
-            # == the batch's ids == exactly new_flat's ids), so skip the two
-            # probe-membership joins the generic entry point runs over the
-            # full flat — the corpus flat is touched once by the pair join
-            # and once by the participant-size pass, nothing else
-            pairs = probe_pairs_from_split(
-                new_flat.join(F.broadcast(hot), "shingle", "left_anti"),
-                old_flat.join(F.broadcast(hot), "shingle", "left_anti"),
-                jaccard_threshold,
+                    "ledger_hot": newly_hot,
+                }
             )
     else:
         old_participants = old_docs.join(
@@ -489,12 +437,17 @@ def incremental_curate(
         graph_docs = old_participants.select(id_col, text_col).unionByName(
             hq_new.join(new_survived_exact, id_col, "left_semi").select(id_col, text_col)
         )
-        pairs = ngram_jaccard_pairs_probe(
-            graph_docs,
-            new_survived_exact,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=jaccard_threshold,
+        # the df cap runs over the whole graph (old ∪ batch participants),
+        # as in a full run; the probe side is the batch's exact survivors
+        pair_side, sizes = _capped_flat(
+            graph_docs, text_col, id_col, 3, DEFAULT_MAX_SHINGLE_DF
+        )
+        probe = new_survived_exact.select(F.col(id_col).alias("id"))
+        pairs = probe_pairs_with_sizes(
+            pair_side.join(probe, "id", "left_semi"),
+            pair_side.join(probe, "id", "left_anti"),
+            sizes,
+            jaccard_threshold,
         )
     # node universe: new exact-survivors + only the OLD docs that appear in
     # a pair (an old doc in no probe pair cannot affect any new decision)
@@ -610,13 +563,14 @@ def _commit_ledger_rows(
 
 
 # ---------------------------------------------------------------------------
-# materialized corpus-side curation state (digests + shingle flat)
+# materialized corpus-side curation state (the five STATE_TABLES)
 # ---------------------------------------------------------------------------
 
-#: v1 core state (round 4): digest set, participant shingle flat, df
-#: contributions. v2 additions (round 5): per-doc post-cap shingle counts
-#: and the accreted hot-shingle set — what lets an append skip every
-#: counting pass over the corpus flat (see incremental_curate's v2 branch).
+#: The five state tables: digest set, participant shingle flat, df
+#: contributions, per-doc post-cap shingle counts and the accreted
+#: hot-shingle set — together they let an append skip every counting pass
+#: over the corpus flat (see incremental_curate's state mode). A store is
+#: state-backed only when ALL five cover its resolved ledger chain.
 STATE_TABLES = (
     "ledger_digests",
     "ledger_shingles",
@@ -624,7 +578,6 @@ STATE_TABLES = (
     "ledger_doc_sizes",
     "ledger_hot",
 )
-_STATE_TABLES_V1 = STATE_TABLES[:3]
 
 #: DDL schemas of the state tables AS READ BACK (data columns + the sb/commit
 #: partition columns partition discovery would add) — the read-side fallback
@@ -657,11 +610,12 @@ N_SHINGLE_BUCKETS = 64
 
 class CorpusState:
     """Materialized corpus-side curation state, as read for one resolved
-    ledger chain. ``doc_sizes``/``hot`` are None for v1 (round-4) stores —
-    incremental_curate then falls back to counting passes over ``flat``."""
+    ledger chain: one frame per STATE_TABLES entry, all required — the
+    state-mode input of incremental_curate. ``n_buckets`` is the sb=
+    directory-bucket count recorded in the flat's manifests (None when the
+    flat is unbucketed; lookups then skip partition pruning)."""
 
-    def __init__(self, digests, flat, shingle_df, doc_sizes=None, hot=None,
-                 n_buckets=None):
+    def __init__(self, digests, flat, shingle_df, doc_sizes, hot, n_buckets=None):
         self.digests = digests
         self.flat = flat
         self.shingle_df = shingle_df
@@ -807,7 +761,7 @@ def _live_state_commits(
     """Live (unreplaced) state-commit MANIFESTS per table, optionally
     restricted to contributions tagged to ledger commits in ``want``. The
     ONE definition of which state commits count, shared by _read_state /
-    _state_coverage (selection) and upgrade_to_state / compact_ledger /
+    _covering_state (selection) and upgrade_to_state / compact_ledger /
     persist_curated_corpus (the ``replaces`` maps their rewrites pass to
     _write_state) — so the rule cannot drift between readers and rewriters."""
     out: dict[str, list[dict]] = {}
@@ -834,20 +788,35 @@ def _state_replaces(
     }
 
 
+def _covering_state(
+    commits: list[dict], resolved: list[dict]
+) -> dict[str, list[dict]] | None:
+    """Live state-commit manifests per table tagged to the resolved ledger
+    chain, or None unless EVERY state table covers EVERY resolved commit —
+    the manifest-only test (no data read) that decides whether a store is
+    state-backed."""
+    want = {c["commit_id"] for c in resolved}
+    live = _live_state_commits(commits, STATE_TABLES, want)
+    if any({c["for_ledger_commit"] for c in cs} != want for cs in live.values()):
+        return None
+    return live
+
+
 def _read_state(spark, out_dir: str, resolved: list[dict]) -> CorpusState | None:
     """State covering EXACTLY the resolved ledger commits, or None when any
-    resolved commit lacks a CORE (v1) state commit (state was never written,
-    or a writer crashed between the ledger commit and its state commits) —
-    callers then fall back to derive mode. The v2 tables (doc_sizes / hot)
-    are OPTIONAL per store generation: when their coverage is incomplete
-    (round-4 store) the returned CorpusState carries None for them and
-    incremental_curate uses the v1 counting passes instead."""
+    of the five tables lacks a commit for some resolved ledger commit (state
+    was never written, a writer crashed between the ledger commit and its
+    state commits, or a round-4 store holds only three tables). Coverage is
+    decided from manifests before any table is read, so an incomplete
+    store's directories never reach partition discovery. On None, callers
+    fall back to derive mode when given ``old_docs`` and otherwise raise,
+    pointing at upgrade_to_state."""
     from kgtm.materialize import list_commits, read_table
 
     from kgtm.dedup import DEFAULT_MAX_SHINGLE_DF
 
     want = {c["commit_id"] for c in resolved}
-    live = _live_state_commits(list_commits(out_dir, spark), STATE_TABLES, want)
+    commits = list_commits(out_dir, spark)
     # df-cap drift guard: hot membership and post-cap doc sizes are FUNCTIONS
     # of the cap the writer ran with; consuming them under a different cap
     # silently diverges decisions from a full re-run (shingles in the gap
@@ -857,7 +826,7 @@ def _read_state(spark, out_dir: str, resolved: list[dict]) -> CorpusState | None
     # error, and derive mode would diverge the same way.
     stamped = {
         c["max_shingle_df"]
-        for cs in live.values()
+        for cs in _live_state_commits(commits, STATE_TABLES, want).values()
         for c in cs
         if "max_shingle_df" in c
     }
@@ -869,24 +838,17 @@ def _read_state(spark, out_dir: str, resolved: list[dict]) -> CorpusState | None
             "not reusable across cap changes; re-curate the corpus "
             "(persist_curated_corpus) under the new cap"
         )
+    live = _covering_state(commits, resolved)
+    if live is None:
+        return None
     frames: dict[str, DataFrame] = {}
-    n_buckets: set[int | None] = set()
     for table in STATE_TABLES:
-        sel = live[table]
-        if {c["for_ledger_commit"] for c in sel} != want:
-            if table in _STATE_TABLES_V1:
-                return None
-            frames[table] = None
-            continue
         try:
             df = read_table(spark, out_dir, table=table)
         except FileNotFoundError:
             # manifests exist but every data dir is gone (out-of-band
             # deletion) — treat as no state rather than failing the append
-            if table in _STATE_TABLES_V1:
-                return None
-            frames[table] = None
-            continue
+            return None
         except AnalysisException as e:
             if "UNABLE_TO_INFER_SCHEMA" not in str(e):
                 raise
@@ -898,18 +860,16 @@ def _read_state(spark, out_dir: str, resolved: list[dict]) -> CorpusState | None
             # and downstream joins run unchanged.
             df = spark.createDataFrame([], _STATE_READ_SCHEMAS[table])
         frames[table] = df.filter(
-            F.col("commit").isin([c["commit_id"] for c in sel])
+            F.col("commit").isin([c["commit_id"] for c in live[table]])
         ).drop("commit")
-        if table == "ledger_shingles":
-            n_buckets = {c.get("shingle_buckets") for c in sel}
-    nb = n_buckets.pop() if len(n_buckets) == 1 else None
+    n_buckets = {c.get("shingle_buckets") for c in live["ledger_shingles"]}
     return CorpusState(
         digests=frames["ledger_digests"],
         flat=frames["ledger_shingles"],
         shingle_df=frames["ledger_shingle_df"],
         doc_sizes=frames["ledger_doc_sizes"],
         hot=frames["ledger_hot"],
-        n_buckets=nb,
+        n_buckets=n_buckets.pop() if len(n_buckets) == 1 else None,
     )
 
 
@@ -984,31 +944,17 @@ def persist_curated_corpus(
     return c
 
 
-def _state_coverage(spark, out_dir: str, resolved: list[dict]) -> set[str]:
-    """State tables whose live commits fully cover the resolved ledger
-    chain (manifest-only check — no data read)."""
-    from kgtm.materialize import list_commits
-
-    want = {c["commit_id"] for c in resolved}
-    live = _live_state_commits(list_commits(out_dir, spark), STATE_TABLES, want)
-    return {
-        t
-        for t, cs in live.items()
-        if {c["for_ledger_commit"] for c in cs} == want
-    }
-
-
 def upgrade_to_state(spark, out_dir: str, docs: DataFrame,
                      text_col: str = "text", id_col: str = "doc_id") -> dict:
-    """Backfill materialized curation state for a store written before state
-    existed (plain persist_ledger / derive-mode appends) or before the v2
-    tables (doc_sizes / hot — a round-4 store), WITHOUT re-curating: one
-    linear derivation pass over ``docs`` (which must be the corpus the
-    newest ledger version covers — verified against the ledger's id set),
-    writing ONLY the state tables whose coverage is missing (re-writing a
-    covered table would double its additive contributions). Then every
-    future append is state-backed, old_docs-free, and on the v2 O(batch)
-    read path.
+    """Backfill materialized curation state for a store that is not fully
+    state-backed — written before state existed (plain persist_ledger /
+    derive-mode appends), a round-4 store holding only three of the five
+    tables, or a store whose writer crashed part-way through a state write —
+    WITHOUT re-curating: one linear derivation pass over ``docs`` (which
+    must be the corpus the newest ledger version covers — verified against
+    the ledger's id set) writes all five tables for the resolved snapshot.
+    Then every future append is state-backed and old_docs-free. This is the
+    only migration path; appends never repair partial state themselves.
 
     Contribution tagging requires one state commit per resolved ledger
     commit, so a multi-commit chain is first folded by compact_ledger (a
@@ -1022,9 +968,9 @@ def upgrade_to_state(spark, out_dir: str, docs: DataFrame,
         compact_ledger(spark, out_dir)
         resolved = _resolve_ledger_commits(spark, out_dir)
     target = resolved[0]
-    covered = _state_coverage(spark, out_dir, resolved)
-    if set(STATE_TABLES) <= covered:
-        return target  # already fully state-backed (v2)
+    commits = list_commits(out_dir, spark)
+    if _covering_state(commits, resolved) is not None:
+        return target  # already fully state-backed
     ledger = _read_resolved_ledger(spark, out_dir, resolved)
     mismatch = (
         ledger.select(F.col(id_col).alias("id")).withColumn("_l", F.lit(True))
@@ -1042,17 +988,17 @@ def upgrade_to_state(spark, out_dir: str, docs: DataFrame,
             f"({mismatch} ids differ) — pass the exact document set the "
             "ledger covers"
         )
-    # Rewrite ALL tables (replacing any covered v1 commits) rather than
-    # filling only the gaps: a per-gap fill would leave ledger_shingles
-    # half-bucketed across commits (pre-round-5 commits have no sb=
-    # directories), and parquet partition discovery refuses mixed layouts
-    # under one table root. The rewrite costs the same single derivation
-    # pass the upgrade already pays, and `replaces` keeps the additive
+    # The rewrite replaces EVERY live state commit, not only those tagged to
+    # the resolved chain — the same rule persist_curated_corpus applies to
+    # its ``stale`` map. A compaction that found incomplete state orphans
+    # the old chain's partial contributions (tagged to commits it replaced);
+    # left live, a round-4 store's unbucketed ledger_shingles dirs would sit
+    # beside the new sb= dirs, and parquet partition discovery refuses mixed
+    # layouts under one table root. `replaces` also keeps the additive
     # contribution sums correct (replaced commits drop out of state reads).
-    want = {rc["commit_id"] for rc in resolved}
-    old_state = _state_replaces(list_commits(out_dir, spark), covered, want)
+    stale = _state_replaces(commits, STATE_TABLES)
     frames = _state_frames(docs, ledger, text_col, id_col)
-    _write_state(frames, out_dir, target["commit_id"], replaces=old_state)
+    _write_state(frames, out_dir, target["commit_id"], replaces=stale)
     return target
 
 
@@ -1079,10 +1025,13 @@ def append_curated_batch(
     read_ledger resolves newest-snapshot + deltas, and compact_ledger folds
     them back into one snapshot when the delta chain grows long.
 
-    ``old_docs`` is needed only as the derive-mode fallback for stores
-    without state (pre-state stores, or a crash between a ledger commit and
-    its state write). When state is available it is authoritative and
-    ``old_docs`` is ignored.
+    Two modes, as in incremental_curate. State mode runs when all five
+    state tables cover the resolved chain; it is then authoritative and
+    ``old_docs`` is ignored. Otherwise (a pre-state store, a round-4 store
+    with three tables, or a writer that crashed between the ledger commit
+    and the end of its state write) the append runs in derive mode over
+    ``old_docs``, or raises a ValueError naming upgrade_to_state when
+    ``old_docs`` is not passed — partial state is never used.
 
     Thresholds default to the values RECORDED in the base ledger commit's
     manifest (explicit arguments override, at the caller's own risk — the
@@ -1151,21 +1100,17 @@ def append_curated_batch(
             jaccard_threshold=jt,
             text_col=text_col,
             id_col=id_col,
-            corpus_digests=state.digests,
-            corpus_flat=state.flat,
-            corpus_shingle_df=state.shingle_df,
-            corpus_doc_sizes=state.doc_sizes,
-            corpus_hot=state.hot,
-            corpus_n_buckets=state.n_buckets,
+            state=state,
             _state_out=state_out,
         )
     else:
         if old_docs is None:
             raise ValueError(
                 f"store {out_dir} has no materialized curation state for the "
-                "base ledger version and old_docs was not passed — either "
-                "pass the base corpus documents (derive mode) or re-persist "
-                "via persist_curated_corpus to enable state mode"
+                "base ledger version (none of the five state tables, or not "
+                "all of them, cover it) and old_docs was not passed — pass "
+                "the base corpus documents (derive mode), or backfill the "
+                "state once with upgrade_to_state"
             )
         # derive-mode single-job guard: id-set equality (old_docs must be
         # exactly the base corpus — a shrunken corpus would silently keep
@@ -1250,28 +1195,13 @@ def append_curated_batch(
     )
     if state is not None:
         # keep the materialized state current: the delta's own O(batch)
-        # contribution, tagged to the delta commit. (Written AFTER the ledger
-        # commit — a crash in between leaves the ledger authoritative and
-        # _read_state incomplete, so the next append falls back to derive
-        # mode instead of reading half-state.) The v2 path stashed its
-        # contribution frames during the curate (including the newly-hot set
-        # and owner corrections — NOT derivable from new_docs alone); a v1
-        # store derives the three core frames from the batch text. A v1
-        # store stays v1 here on purpose: writing v2 tables for only the
-        # delta would leave their coverage incomplete anyway (upgrade_to_
-        # state is the explicit migration path).
-        if state_out:
-            _write_state(
-                state_out, out_dir, c["commit_id"], n_buckets=state.n_buckets
-            )
-        else:
-            frames = _state_frames(new_docs, new_rows, text_col, id_col)
-            _write_state(
-                {t: frames[t] for t in _STATE_TABLES_V1},
-                out_dir,
-                c["commit_id"],
-                n_buckets=state.n_buckets,
-            )
+        # contribution, tagged to the delta commit, stashed by the curate
+        # (including the newly-hot set and owner corrections — NOT
+        # derivable from new_docs alone). Written AFTER the ledger commit —
+        # a crash in between (or part-way through the five table commits)
+        # leaves the ledger authoritative and the state incomplete, so the
+        # next append reads no state at all instead of half-state.
+        _write_state(state_out, out_dir, c["commit_id"], n_buckets=state.n_buckets)
     if max_deltas is not None:
         chain = _resolve_ledger_commits(spark, out_dir)
         if len(chain) - 1 >= max_deltas and chain[-1]["commit_id"] == c["commit_id"]:
@@ -1367,29 +1297,25 @@ def compact_ledger(spark, out_dir: str, coordinator=None) -> dict:
     if state is not None:
         want = {rc["commit_id"] for rc in resolved}
         all_commits = list_commits(out_dir, spark)  # ONE manifest scan
+        # fold the per-commit contributions into canonical form — consumers
+        # sum them anyway, but compaction is the moment to collapse
+        # duplicates: df totals per shingle, owner corrections into the
+        # post-cap sizes, and a deduped hot set (contributions are disjoint
+        # in a healthy store)
         frames: dict[str, DataFrame] = {
             "ledger_digests": state.digests.localCheckpoint(eager=True),
             "ledger_shingles": state.flat.localCheckpoint(eager=True),
-            # fold the per-commit df contributions into canonical totals —
-            # consumers sum contributions anyway, but compaction is the
-            # moment to collapse duplicates of hot shingles
             "ledger_shingle_df": state.shingle_df.groupBy("shingle")
             .agg(F.sum("df").alias("df"))
             .localCheckpoint(eager=True),
+            "ledger_doc_sizes": state.doc_sizes.groupBy("id")
+            .agg(F.sum("n_sh").alias("n_sh"))
+            .localCheckpoint(eager=True),
+            "ledger_hot": state.hot.select("shingle")
+            .distinct()
+            .localCheckpoint(eager=True),
         }
-        if state.doc_sizes is not None and state.hot is not None:
-            # v2 fold: corrections collapse into the canonical post-cap
-            # sizes; the hot set dedupes (contributions are disjoint in a
-            # healthy store, but compaction is the moment to be canonical)
-            frames["ledger_doc_sizes"] = (
-                state.doc_sizes.groupBy("id")
-                .agg(F.sum("n_sh").alias("n_sh"))
-                .localCheckpoint(eager=True)
-            )
-            frames["ledger_hot"] = (
-                state.hot.select("shingle").distinct().localCheckpoint(eager=True)
-            )
-        old_state = _state_replaces(all_commits, frames, want)
+        old_state = _state_replaces(all_commits, STATE_TABLES, want)
         _write_state(frames, out_dir, c["commit_id"], replaces=old_state)
     return c
 

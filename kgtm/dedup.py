@@ -234,50 +234,25 @@ def _jaccard_from_inter(inter, sizes, threshold):
     )
 
 
-def ngram_jaccard_pairs_probe(
-    df: DataFrame,
-    probe_ids: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
+def probe_pairs_with_sizes(
+    p: DataFrame, o: DataFrame, sizes: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """Probe-driven exact Jaccard: all (id_a < id_b, jaccard >= threshold)
-    pairs where AT LEAST ONE side is in ``probe_ids`` — never the
-    rest×rest self-join.
+    pairs with AT LEAST ONE side on the probe side — never the rest×rest
+    self-join. ``p`` = probe-side (id, shingle) rows, ``o`` = the rest, both
+    already df-capped; ``sizes`` (id, n_sh) holds post-cap shingle counts
+    and may cover a superset of the pair participants — the inner size join
+    keeps only what pairs need.
 
-    The incremental-ingest shape: when a new batch lands in a curated
-    corpus, only pairs touching the batch can change any decision, so the
-    candidate join is probe-flat ⋈ corpus-flat — cost scales with the
-    batch's shingle fan-out, not |corpus|². Semantics (shingle space,
-    df cap computed over the WHOLE corpus, post-cap Jaccard) are identical
-    to ngram_jaccard_pairs restricted to probe-touching pairs.
-    """
-    pair_side = _apply_cap(flat_shingles(df, text_col, id_col, n), max_shingle_df)
-    return probe_pairs_from_flat(pair_side, probe_ids, threshold)
-
-
-def probe_pairs_from_flat(
-    pair_side: DataFrame, probe_ids: DataFrame, threshold: float = 0.8
-) -> DataFrame:
-    """Probe-driven exact Jaccard over an ALREADY df-capped flat
-    (id, shingle) frame — the state-backed incremental entry point: when the
-    corpus flat is a materialized store table (kgtm.curation's
-    ledger_shingles), the per-batch cost is the batch's own shingle fan-out
-    plus one columnar scan of the compact int-pair table, never a
-    re-shingling of corpus text.
-    """
-    probe = probe_ids.select(F.col(probe_ids.columns[0]).alias("id")).distinct()
-    p = pair_side.join(probe, "id", "left_semi")
-    o = pair_side.join(probe, "id", "left_anti")
-    return probe_pairs_from_split(p, o, threshold)
-
-
-def _probe_inter(p: DataFrame, o: DataFrame) -> DataFrame:
-    """Shared candidate stage of the probe operators: per-(id_a < id_b)
-    shared-shingle counts for probe×probe + probe×rest pairs. The two joins
-    are disjoint by construction, so no pair double-counts."""
+    The incremental-ingest shape (kgtm.curation.incremental_curate): when a
+    batch lands in a curated corpus, only pairs touching the batch can
+    change a decision, so the candidate join is probe-flat ⋈ corpus-flat —
+    cost scales with the batch's shingle fan-out, not |corpus|². In state
+    mode ``o`` arrives pre-restricted to rows sharing a probe shingle and
+    the old sizes come from the materialized ``ledger_doc_sizes``, so NO
+    consumer here touches the full corpus."""
+    # probe×probe + probe×rest shared-shingle counts; the two joins are
+    # disjoint by construction, so no pair double-counts
     pp = (
         p.select(F.col("id").alias("id_a"), "shingle")
         .join(p.select(F.col("id").alias("id_b"), "shingle"), "shingle")
@@ -292,54 +267,13 @@ def _probe_inter(p: DataFrame, o: DataFrame) -> DataFrame:
             "shingle",
         )
     )
-    return (
+    inter = (
         pp.select("id_a", "id_b", "shingle")
         .unionByName(po)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-
-
-def probe_pairs_from_split(
-    p: DataFrame, o: DataFrame, threshold: float = 0.8
-) -> DataFrame:
-    """Probe pairs when the probe/rest split of the capped flat is ALREADY
-    known: ``p`` = probe-side (id, shingle) rows, ``o`` = rest. The
-    state-backed incremental curation path lands here directly — its probe
-    ids are exactly the batch's ids, so p is the batch's own flat and o the
-    stored corpus flat, skipping the two probe-membership joins (each a full
-    scan of the corpus flat) that the generic entry point needs."""
-    # consumed twice (participant-id projection + the size join below)
-    inter = _probe_inter(p, o).localCheckpoint(eager=False)
-    # per-id sizes only for PAIR PARTICIPANTS — a full-corpus sizes groupBy
-    # would shuffle counts for every old doc although the inner join below
-    # consumes only the candidate set's ids
-    participants = (
-        inter.select(F.col("id_a").alias("id"))
-        .unionByName(inter.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    sizes = (
-        p.unionByName(o)
-        .join(participants, "id", "left_semi")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-    )
     return _jaccard_from_inter(inter, sizes, threshold)
-
-
-def probe_pairs_with_sizes(
-    p: DataFrame, o: DataFrame, sizes: DataFrame, threshold: float = 0.8
-) -> DataFrame:
-    """Probe pairs with participant post-cap sizes SUPPLIED externally —
-    the v2 state-backed incremental path (kgtm.curation): old participants'
-    sizes come from the materialized ``ledger_doc_sizes`` contributions
-    instead of a counting pass over the corpus flat, and ``o`` arrives
-    pre-restricted to rows sharing a probe shingle (one map-side-filtered
-    columnar scan of the stored flat), so NO consumer here touches the full
-    corpus. ``sizes`` (id, n_sh) may cover a superset of the actual pair
-    participants — the inner size join keeps only what pairs need."""
-    return _jaccard_from_inter(_probe_inter(p, o), sizes, threshold)
 
 
 # ---------------------------------------------------------------------------

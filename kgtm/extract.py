@@ -9,9 +9,9 @@ ontology file, and extraction is:
   * mention detection — IRIs in text. Hot path is a pure column expression
     (regexp_extract_all stays inside codegen); there is also a vectorized
     pandas-UDF gazetteer matcher for non-IRI surface forms.
-  * triple extraction — rule-based SVO over sentences, as a vectorized
-    pandas UDF (Arrow batches; the .str/regex work is C-backed pandas, zero
-    per-row Python interpretation of Spark rows).
+  * triple extraction — rule-based SVO over sentences, also a pure column
+    expression (one regexp_extract_all span capture, split into subj/pred/
+    obj), so the whole scan stays in codegen.
 
 UDF *bodies* are pure pd.Series → pd.Series functions, importable and
 unit-testable without Spark (SURVEY.md §5).
@@ -24,7 +24,7 @@ import re
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType
 
 from kgtm.normalize import parse_iri_cols
 
@@ -36,7 +36,7 @@ IRI_REGEX = r"https?://[A-Za-z0-9.\-]+(?:/[A-Za-z0-9./#_\-]*)?"
 # disjoint from the character the pattern requires next (host/path classes
 # exclude whitespace and '/', \s excludes letters), so no shorter run can
 # ever succeed where the maximal one fails — verified output-identical on
-# the sf0.1 corpus and pinned by the extract_triples==arrow parity test.
+# the sf0.1 corpus and pinned by the SVO extraction tests.
 # Measured: amplified span extraction 1.91 s -> 1.74 s.
 IRI_REGEX_P = r"https?://[A-Za-z0-9.\-]++(?:/[A-Za-z0-9./#_\-]*+)?+"
 
@@ -52,12 +52,6 @@ SVO_VERBS = [
     "deprecates",
     "replaces",
 ]
-
-_SVO_RE = re.compile(
-    r"(?P<subj>[A-Za-z][\w.\-]*|" + IRI_REGEX + r")\s+"
-    r"(?P<pred>" + "|".join(SVO_VERBS) + r")\s+"
-    r"(?P<obj>" + IRI_REGEX + r"|[A-Z][\w.\-]*)"
-)
 
 # ---------------------------------------------------------------------------
 # Mention detection — column-expression hot path
@@ -131,36 +125,15 @@ def extract_mentions(
 
 
 # ---------------------------------------------------------------------------
-# SVO triple extraction — vectorized pandas UDF
+# SVO triple extraction — codegen column expressions
 # ---------------------------------------------------------------------------
 
-_TRIPLE_ELEM = StructType(
-    [
-        StructField("subj", StringType()),
-        StructField("pred", StringType()),
-        StructField("obj", StringType()),
-    ]
-)
-
-
-def svo_extract_series(texts: pd.Series) -> pd.Series:
-    """Pure UDF body: text → list[dict(subj,pred,obj)] via the SVO grammar.
-
-    Vectorized: str.findall is a single C-loop over the Arrow batch.
-    """
-    found = texts.fillna("").str.findall(_SVO_RE)
-    return found.map(
-        lambda ms: [{"subj": s, "pred": p, "obj": o} for (s, p, o) in ms]
-    )
-
-
-svo_extract_udf = F.pandas_udf(svo_extract_series, ArrayType(_TRIPLE_ELEM))
-
-# Codegen twin of _SVO_RE: one capture of the whole "subj pred obj" span.
-# Subjects/verbs/IRIs are space-free tokens, so split-by-space recovers the
-# three groups without sub-captures (regexp_extract_all yields one group).
-# Possessive quantifiers per IRI_REGEX_P's equivalence note (word classes
-# exclude \s, \s excludes verb letters — no backtrack can change a match).
+# One capture of the whole "subj pred obj" span: a subject word or IRI, a
+# verb from SVO_VERBS, then an IRI or a capitalised word. Subjects/verbs/IRIs
+# are space-free tokens, so split-by-space recovers the three groups without
+# sub-captures (regexp_extract_all yields one group). Possessive quantifiers
+# per IRI_REGEX_P's equivalence note (word classes exclude \s, \s excludes
+# verb letters — no backtrack can change a match).
 _SVO_SPAN_REGEX = (
     r"((?:[A-Za-z][\w.\-]*+|" + IRI_REGEX_P + r")\s++"
     r"(?:" + "|".join(SVO_VERBS) + r")\s++"
@@ -176,10 +149,8 @@ def svo_spans_col(text: str | Column = "text") -> Column:
 def extract_triples(transcripts: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, subj, pred, obj, conf) from per-turn text.
 
-    Hot path: pure codegen (regexp_extract_all + explode + split) — zero
-    Python in the 100 TB scan. extract_triples_arrow is the pandas-UDF
-    formulation (same semantics, asserted by tests) for grammars that
-    outgrow a single regex.
+    Pure codegen (regexp_extract_all + explode + split) — zero Python in
+    the 100 TB scan. A NULL or match-free text yields no rows.
     """
     spans = transcripts.select(
         "conv_id", "turn_idx", F.explode_outer(svo_spans_col("text")).alias("span")
@@ -191,25 +162,6 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
         F.get(toks, 0).alias("subj"),
         F.get(toks, 1).alias("pred"),
         F.get(toks, 2).alias("obj"),
-        F.lit(1.0).alias("conf"),
-    )
-
-
-def extract_triples_arrow(transcripts: DataFrame) -> DataFrame:
-    """Arrow pandas-UDF SVO extraction (same output as extract_triples)."""
-    with_arr = transcripts.select(
-        "conv_id", "turn_idx", svo_extract_udf(F.col("text")).alias("triples")
-    )
-    return with_arr.select(
-        "conv_id",
-        "turn_idx",
-        F.explode("triples").alias("t"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("t.subj").alias("subj"),
-        F.col("t.pred").alias("pred"),
-        F.col("t.obj").alias("obj"),
         F.lit(1.0).alias("conf"),
     )
 

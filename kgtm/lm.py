@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kgtm.textstats import words_col_guarded
 
@@ -196,7 +197,9 @@ def bucket_by_nll(
         # bucket count would index past the label array (ANSI error), and
         # a multi-row frame silently multiplies every scored row through
         # the crossJoin — validate both with one bounded collect (the
-        # frame is one row by contract).
+        # frame is one row by contract). The join then uses the collected
+        # row itself, so the source runs once and the boundaries applied
+        # are exactly the ones validated.
         rows = thresholds.limit(2).collect()
         if len(rows) != 1:
             raise ValueError(
@@ -210,6 +213,9 @@ def bucket_by_nll(
                 f"thresholds._thresholds has {None if arr is None else len(arr)} "
                 f"boundaries; n_buckets={n_buckets} needs {n_buckets - 1}"
             )
+        thresholds = scored.sparkSession.createDataFrame(
+            [(arr,)], StructType([thresholds.schema["_thresholds"]])
+        )
     idx = F.aggregate(
         "_thresholds",
         F.lit(0),

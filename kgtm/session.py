@@ -146,7 +146,7 @@ def ensure_min_parallelism(df):
     """Round-robin repartition an under-parallel ``df`` to a size-derived
     task count; unchanged when the plan already has enough partitions (then
     NO extra exchange exists at production scale — the decision derives
-    from the actual plan, like fan_out_small_scan).
+    from the actual plan).
 
     Round 7 (guide §2.5 input skew, measured): a one-row-group parquet
     fixture scans as ONE task, and everything pipelined into that stage —
@@ -156,62 +156,41 @@ def ensure_min_parallelism(df):
     ngram_jaccard run). The target is sized from the plan's byte estimate,
     NOT blindly to the core count: a measured sweep at sf0.1 gave 1.21 s
     (8-way) vs 2.08 s (serial) vs 3.60 s (64-way — per-task scheduling
-    overhead dominates tiny partitions). Callers repartition the narrow
-    (id, text) projection so only needed columns cross the exchange
-    (guide §2.3)."""
-    spark = df.sparkSession
-    para = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= para:
+    overhead dominates tiny partitions). An unknown size estimate reads as
+    Long.MaxValue, which gives the session's parallelism. Callers
+    repartition the narrow (id, text) projection so only needed columns
+    cross the exchange (guide §2.3)."""
+    para = df.sparkSession.sparkContext.defaultParallelism
+    n = df.rdd.getNumPartitions()
+    if n >= para:
         return df
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        target = max(1, min(para, -(-size // _BYTES_PER_TEXT_TASK)))
-    except Exception:
-        target = para
-    if df.rdd.getNumPartitions() >= target:
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    target = max(1, min(para, -(-size // _BYTES_PER_TEXT_TASK)))
+    if n >= target:
         return df
     return df.repartition(target)
 
 
-def fan_out_small_scan(df, min_factor: int = 1):
-    """Round-robin repartition a scan whose partition count is below the
-    session's parallelism; NO-OP when the scan is already parallel.
+def fan_out_small_scan(df):
+    """ensure_min_parallelism for a scan consumed by several subtrees: the
+    same size-derived fan-out, plus a lazy localCheckpoint when it
+    repartitions; NO-OP when the scan is already parallel.
 
     Why (round 7, guide §2.5 input skew): a one-row-group parquet file scans
     as ONE task no matter the split config, so every expression pipelined
     into the scan stage — shingling, quality regexes, digesting — runs
-    serially on one core. Repartitioning a tiny input costs one exchange of
-    the raw rows and buys back the whole session's parallelism for the
-    per-row work above it. At production scale the scan already has >= the
-    session's partitions and this returns the input unchanged, so the plan
-    carries no extra exchange — the decision derives from the actual scan
-    layout, never from a constant tuned to this sandbox.
+    serially on one core. The size-derived task count (not the core count)
+    keeps downstream pandas-UDF stages off near-empty partitions (measured:
+    32-way fan-out of the 2,000-row embedding fixture costs ~0.33 s per UDF
+    stage in 32 worker round-trips; the 64 KB/task sizing gives ~12
+    partitions and the same serial-escape).
     """
-    spark = df.sparkSession
-    para = spark.sparkContext.defaultParallelism * min_factor
-    if df.rdd.getNumPartitions() >= para:
-        return df
-    # Size-derived task count, like ensure_min_parallelism (round 7): a
-    # blanket fan-out to the core count makes every downstream stage — and
-    # every pandas-UDF evaluation — pay per-task/per-Python-worker overhead
-    # on near-empty partitions (measured: 32-way fan-out of the 2,000-row
-    # embedding fixture costs ~0.33 s per UDF stage in 32 worker
-    # round-trips; the 64 KB/task sizing gives ~12 partitions and the same
-    # serial-escape).
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        target = max(1, min(para, -(-size // _BYTES_PER_TEXT_TASK)))
-    except Exception:
-        target = para
-    if df.rdd.getNumPartitions() >= target:
+    out = ensure_min_parallelism(df)
+    if out is df:
         return df
     # lazy checkpoint: operators consume their input table from several
     # subtrees (curation: scoring + digesting + shingling); without it every
     # consumption re-runs the scan+repartition exchange as its own AQE query
     # stage (~0.2 s of scheduling each at this scale). Materializes on first
     # use — inside any timed region, per the bench protocol.
-    return df.repartition(target).localCheckpoint(eager=False)
+    return out.localCheckpoint(eager=False)

@@ -113,27 +113,29 @@ def main() -> None:
 
     # state-backed incremental curation: the decisive pair stage, built from
     # materialized corpus state exactly as append_curated_batch consumes it
-    from kgtm.curation import _state_frames, curate_documents, incremental_curate
+    from kgtm.curation import (
+        CorpusState,
+        _state_frames,
+        curate_documents,
+        incremental_curate,
+    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     old_docs = docs.filter("doc_id < 450")
     new_docs = docs.filter("doc_id >= 450")
     led = curate_documents(old_docs).localCheckpoint(eager=True)
     frames = _state_frames(old_docs, led, "text", "doc_id")
-    inc = incremental_curate(
-        None,
-        led,
-        new_docs,
-        corpus_digests=frames["ledger_digests"],
-        corpus_flat=frames["ledger_shingles"],
-        corpus_shingle_df=frames["ledger_shingle_df"],
-        corpus_doc_sizes=frames["ledger_doc_sizes"],
-        corpus_hot=frames["ledger_hot"],
-        skip_guards=True,
+    state = CorpusState(
+        digests=frames["ledger_digests"],
+        flat=frames["ledger_shingles"],
+        shingle_df=frames["ledger_shingle_df"],
+        doc_sizes=frames["ledger_doc_sizes"],
+        hot=frames["ledger_hot"],
     )
+    inc = incremental_curate(None, led, new_docs, state=state, skip_guards=True)
     sections.append(
         (
-            "incremental_curate (state-backed v2, the O(batch) append path)",
+            "incremental_curate (state mode, the O(batch) append path)",
             "What to check: NO groupBy and NO counting pass over the corpus "
             "shingle flat at all — the hot set is INCREMENTAL (stored hot "
             "union newly-hot from the batch's own counts + a map-side-"

@@ -12,7 +12,6 @@ from kgtm.extract import (
     extract_mentions,
     extract_triples,
     make_gazetteer_matcher,
-    svo_extract_series,
 )
 from kgtm.link import deny_unlinked, link_mentions
 from kgtm.resolve import asof_snapshots, latest_snapshots, resolve_links
@@ -21,23 +20,30 @@ from kgtm.transcripts import events_to_transcripts, ontology_index_df, ontology_
 
 
 # ---------------------------------------------------------------------------
-# pure UDF bodies (no Spark)
+# extraction: codegen SVO triples, and the gazetteer's pure UDF body
 # ---------------------------------------------------------------------------
 
 
-def test_svo_extract_series_pure():
-    s = pd.Series(
-        [
-            "Alice uses http://ex.org/onto today",
-            "foo imports Bar and baz extends http://ex.org/b",
-            "nothing here",
-            None,
-        ]
+def test_extract_triples_svo_cases(spark):
+    texts = [
+        "Alice uses http://ex.org/onto today",
+        "foo imports Bar and baz extends http://ex.org/b",
+        "nothing here",
+        None,
+    ]
+    turns = spark.createDataFrame(
+        [("c0", i, t) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, text string",
     )
-    out = svo_extract_series(s).tolist()
-    assert out[0] == [{"subj": "Alice", "pred": "uses", "obj": "http://ex.org/onto"}]
-    assert {t["pred"] for t in out[1]} == {"imports", "extends"}
-    assert out[2] == [] and out[3] == []
+    out = {}
+    for r in extract_triples(turns).collect():
+        out.setdefault(r.turn_idx, []).append((r.subj, r.pred, r.obj, r.conf))
+    assert out[0] == [("Alice", "uses", "http://ex.org/onto", 1.0)]
+    assert sorted(out[1]) == [
+        ("baz", "extends", "http://ex.org/b", 1.0),
+        ("foo", "imports", "Bar", 1.0),
+    ]
+    assert 2 not in out and 3 not in out  # no match, NULL text: no rows
 
 
 def test_gazetteer_matcher_pure():

@@ -240,3 +240,24 @@ def test_bucket_by_nll_plan_shape(spark, documents):
     # no window operator anywhere (an ntile() formulation would plan a
     # single-partition Window over the whole corpus)
     assert "Window" not in plan
+
+
+def test_bucket_by_nll_external_thresholds_read_once(spark, tmp_path):
+    """An external thresholds frame is validated with one bounded collect;
+    the crossJoin must use that collected row rather than run the source a
+    second time — the output plan holds no scan of the thresholds file."""
+    from kgtm.lm import bucket_by_nll, nll_bucket_thresholds
+
+    trusted = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2, 3], "nll_bits": [1.0, 2.0, 3.0]})
+    )
+    path = str(tmp_path / "trusted_bounds")
+    nll_bucket_thresholds(trusted).write.parquet(path)
+    target = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [10, 11, 12], "nll_bits": [0.5, 2.0, 9.9]})
+    )
+    out = bucket_by_nll(target, thresholds=spark.read.parquet(path))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "trusted_bounds" not in plan and "FileScan" not in plan, plan
+    got = {r.doc_id: r.bucket_label for r in out.collect()}
+    assert got == {10: "head", 11: "middle", 12: "tail"}

@@ -285,7 +285,7 @@ def _final_section(plan: str) -> str:
 
 def test_state_v2_append_plan_flat_scanned_once_no_shuffle(spark, documents, tmp_path):
     """Structural pin of the O(batch) append contract (BENCH/INGEST.md): in
-    the v2 state path the stored shingle flat is read by exactly ONE parquet
+    the state path the stored shingle flat is read by exactly ONE parquet
     scan, column-pruned to (id, shingle), filtered map-side by a broadcast
     semi-join on the batch's shingle set — the flat itself is never shuffled
     or aggregated — and the stored per-shingle df table is probed behind a
@@ -303,18 +303,13 @@ def test_state_v2_append_plan_flat_scanned_once_no_shuffle(spark, documents, tmp
     store = str(tmp_path / "store")
     persist_curated_corpus(old, store, min_quality=0.45, jaccard_threshold=0.5)
     st = _read_state(spark, store, _resolve_ledger_commits(spark, store))
-    assert st.doc_sizes is not None and st.hot is not None  # v2 tier
+    assert st is not None  # all five state tables cover the chain
     probes: dict = {}
     incremental_curate(
         None,
         read_ledger(spark, store),
         batch,
-        corpus_digests=st.digests,
-        corpus_flat=st.flat,
-        corpus_shingle_df=st.shingle_df,
-        corpus_doc_sizes=st.doc_sizes,
-        corpus_hot=st.hot,
-        corpus_n_buckets=st.n_buckets,
+        state=st,
         skip_guards=True,
         _plan_probes=probes,
     )
@@ -389,12 +384,7 @@ def test_state_v2_newly_hot_owner_lookup_prunes_buckets(spark, tmp_path):
         read_ledger(spark, store),
         batch,
         min_quality=0.0,
-        corpus_digests=st.digests,
-        corpus_flat=st.flat,
-        corpus_shingle_df=st.shingle_df,
-        corpus_doc_sizes=st.doc_sizes,
-        corpus_hot=st.hot,
-        corpus_n_buckets=st.n_buckets,
+        state=st,
         skip_guards=True,
         _plan_probes=probes,
     )

@@ -1,6 +1,6 @@
-"""Round-4 surface: O(batch) incremental ingest (delta ledger commits +
-materialized corpus-side curation state), ledger-aware store housekeeping,
-the pluggable commit coordinator, and the derandomized dedup twins."""
+"""Round-4 surface: expire_commits vs ledger delta chains, the pluggable
+commit coordinator, and the derandomized dedup twins. The ledger/state
+store tests live in tests/test_curation_store.py."""
 
 from __future__ import annotations
 
@@ -11,248 +11,8 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# delta-mode ledger commits + materialized state
+# housekeeping safety: expire_commits vs ledger delta chains
 # ---------------------------------------------------------------------------
-
-
-def test_append_is_delta_and_state_backed(spark, documents, tmp_path):
-    """The round-3 scale gap, closed: persist_curated_corpus writes the
-    snapshot + state once; append_curated_batch then needs NO old_docs, its
-    ledger commit holds ONLY the batch's rows (O(batch) write), and the
-    resolved read equals a full re-curation."""
-    from kgtm.curation import (
-        append_curated_batch,
-        curate_documents,
-        persist_curated_corpus,
-        read_ledger,
-    )
-    from kgtm.materialize import list_commits, read_table
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 200)
-    b1 = documents.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 260))
-    b2 = documents.filter((F.col("doc_id") >= 260) & (F.col("doc_id") < 300))
-
-    c1 = persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    assert c1.get("ledger_kind") == "snapshot"
-    # state-backed append: old_docs deliberately omitted
-    c2 = append_curated_batch(spark, store, new_docs=b1)
-    assert c2["ledger_kind"] == "delta" and c2["base_commit_id"] == c1["commit_id"]
-    assert c2["curation_params"] == {"min_quality": 0.4, "jaccard_threshold": 0.5}
-    # the delta COMMIT carries only the batch's rows — the O(batch) write
-    raw = read_table(spark, store, table="ledger")
-    assert raw.filter(F.col("commit") == c2["commit_id"]).count() == 60
-    # second chained append, still no old_docs
-    c3 = append_curated_batch(spark, store, new_docs=b2)
-    assert c3["base_commit_id"] == c2["commit_id"]
-
-    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
-
-    def snap(df):
-        return sorted(map(tuple, df.select(*cols).collect()))
-
-    full = curate_documents(
-        documents.filter(F.col("doc_id") < 300), min_quality=0.4, jaccard_threshold=0.5
-    )
-    latest = read_ledger(spark, store)
-    assert latest.count() == 300
-    # batch decisions equal the full run restricted to the batches (parity
-    # contract), old rows immutable
-    assert snap(latest.filter(F.col("doc_id") >= 200)) == snap(
-        full.filter(F.col("doc_id") >= 200)
-    )
-    assert snap(read_ledger(spark, store, as_of=c2["seq"])) == snap(
-        latest.filter(F.col("doc_id") < 260)
-    )
-    assert snap(read_ledger(spark, store, as_of=c1["seq"])) == snap(
-        latest.filter(F.col("doc_id") < 200)
-    )
-    # state tables accreted one commit per ledger commit
-    st = [c for c in list_commits(store) if c.get("table") == "ledger_digests"]
-    assert {c.get("for_ledger_commit") for c in st} == {
-        c1["commit_id"],
-        c2["commit_id"],
-        c3["commit_id"],
-    }
-
-
-def test_compact_ledger_folds_chain_and_state(spark, documents, tmp_path):
-    """compact_ledger folds snapshot+deltas into one snapshot (params carried
-    forward), pre-compaction as_of still resolves the chain, appends keep
-    working off the compacted base, and expire_replaced reclaims inputs."""
-    from kgtm.curation import (
-        append_curated_batch,
-        compact_ledger,
-        persist_curated_corpus,
-        read_ledger,
-    )
-    from kgtm.materialize import expire_replaced, list_commits
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 150)
-    b1 = documents.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 200))
-    b2 = documents.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 240))
-    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    c2 = append_curated_batch(spark, store, new_docs=b1)
-
-    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
-
-    def snap(df):
-        return sorted(map(tuple, df.select(*cols).collect()))
-
-    before = snap(read_ledger(spark, store))
-    comp = compact_ledger(spark, store)
-    assert comp["ledger_kind"] == "snapshot" and len(comp["replaces"]) == 2
-    assert comp["curation_params"] == {"min_quality": 0.4, "jaccard_threshold": 0.5}
-    assert snap(read_ledger(spark, store)) == before
-    # pre-compaction as_of resolves the ORIGINAL chain (time travel survives)
-    assert snap(read_ledger(spark, store, as_of=c2["seq"])) == before
-    # the compacted snapshot still carries state: next append stays state-backed
-    c3 = append_curated_batch(spark, store, new_docs=b2)
-    assert c3["base_commit_id"] == comp["commit_id"]
-    assert read_ledger(spark, store).count() == 240
-    victims = expire_replaced(store)
-    assert {v["commit_id"] for v in victims} >= {c2["commit_id"]}
-    assert read_ledger(spark, store).count() == 240
-    # a single-snapshot store refuses (nothing to fold)
-    compact_ledger(spark, store)  # folds comp + c3
-    with pytest.raises(ValueError, match="nothing to compact"):
-        compact_ledger(spark, store)
-
-
-def test_state_mode_equals_derive_mode_on_planted_corners(spark):
-    """incremental_curate(state) == incremental_curate(derive) == full run on
-    the corner-case corpus (exact dup of old, transitive near-dup via a
-    DROPPED old doc, low quality, new×new exact pair)."""
-    from kgtm.curation import (
-        _state_frames,
-        curate_documents,
-        incremental_curate,
-    )
-
-    good = (
-        "the quick brown fox jumps over the lazy dog and the story of the "
-        "garden is a long one for all of the people in the world to read"
-    )
-    g2 = good.replace("fox", "owl").replace("dog", "cat").replace("garden", "harbor")
-    planted = spark.createDataFrame(
-        [
-            (1, good),
-            (2, good + " almost"),
-            (3, g2),
-            (10, good),
-            (11, good + " almost ok"),
-            (12, g2 + " extra bit"),
-            (13, "x!!! ??? ;;; ,,,"),
-            (14, good.replace("the", "a certain").replace("people", "birds")),
-            (15, good.replace("the", "a certain").replace("people", "birds")),
-        ],
-        "doc_id long, text string",
-    )
-    old = planted.filter(F.col("doc_id") < 10)
-    new = planted.filter(F.col("doc_id") >= 10)
-    old_ledger = curate_documents(old).localCheckpoint(eager=True)
-    frames = _state_frames(old, old_ledger, "text", "doc_id")
-    digests, flat, sh_df = (
-        frames["ledger_digests"],
-        frames["ledger_shingles"],
-        frames["ledger_shingle_df"],
-    )
-
-    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
-
-    def snap(df):
-        return sorted(map(tuple, df.select(*cols).collect()))
-
-    derive = incremental_curate(old, old_ledger, new)
-    state = incremental_curate(
-        None, old_ledger, new, corpus_digests=digests, corpus_flat=flat
-    )
-    # with the materialized df table the cap decision comes from contribution
-    # sums instead of a corpus-flat groupBy — decisions must not change
-    state_df = incremental_curate(
-        None,
-        old_ledger,
-        new,
-        corpus_digests=digests,
-        corpus_flat=flat,
-        corpus_shingle_df=sh_df,
-    )
-    # v2: incremental hot set + materialized doc sizes + pruned lookups —
-    # decisions must STILL not change (round-5 O(batch) read path)
-    state_v2 = incremental_curate(
-        None,
-        old_ledger,
-        new,
-        corpus_digests=digests,
-        corpus_flat=flat,
-        corpus_shingle_df=sh_df,
-        corpus_doc_sizes=frames["ledger_doc_sizes"],
-        corpus_hot=frames["ledger_hot"],
-    )
-    full = curate_documents(planted).filter(F.col("doc_id") >= 10)
-    assert snap(derive) == snap(full)
-    assert snap(state) == snap(full)
-    assert snap(state_df) == snap(full)
-    assert snap(state_v2) == snap(full)
-    got = {r[0]: r for r in state.collect()}
-    assert got[10][3] == "exact-dup" and got[11][3] == "near-dup"
-    assert got[12][3] == "near-dup" and got[13][3] == "low-quality"
-    assert got[14][2] and got[15][3] == "exact-dup"
-
-
-def test_append_without_state_needs_old_docs(spark, documents, tmp_path):
-    """A plain persist_ledger store has no state: append without old_docs
-    raises with the fallback explained; with old_docs it works (derive mode)
-    and still commits an O(batch) delta."""
-    from kgtm.curation import append_curated_batch, curate_documents, persist_ledger
-    from kgtm.materialize import read_table
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 150)
-    new = documents.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 190))
-    persist_ledger(
-        curate_documents(old, min_quality=0.4, jaccard_threshold=0.5),
-        store,
-        min_quality=0.4,
-        jaccard_threshold=0.5,
-    )
-    with pytest.raises(ValueError, match="no materialized curation state"):
-        append_curated_batch(spark, store, new_docs=new)
-    c = append_curated_batch(spark, store, old_docs=old, new_docs=new)
-    assert c["ledger_kind"] == "delta"
-    raw = read_table(spark, store, table="ledger")
-    assert raw.filter(F.col("commit") == c["commit_id"]).count() == 40
-    # derive-mode single-job guard still enforces the id-set contract
-    with pytest.raises(ValueError, match="does not match the base ledger"):
-        append_curated_batch(
-            spark,
-            store,
-            old_docs=old.limit(10),
-            new_docs=documents.filter(
-                (F.col("doc_id") >= 190) & (F.col("doc_id") < 200)
-            ),
-        )
-
-
-# ---------------------------------------------------------------------------
-# housekeeping safety: compact_table / expire_commits vs ledger commits
-# ---------------------------------------------------------------------------
-
-
-def test_compact_table_refuses_ledger_tables(spark, documents, tmp_path):
-    """The generic union-compaction would duplicate doc_ids across snapshot
-    commits and drop curation_params — it must refuse and point at
-    compact_ledger (ADVICE round-3 medium)."""
-    from kgtm.curation import curate_documents, persist_ledger
-    from kgtm.materialize import compact_table
-
-    store = str(tmp_path / "store")
-    docs = documents.filter(F.col("doc_id") < 100)
-    persist_ledger(curate_documents(docs), store, min_quality=0.45)
-    persist_ledger(curate_documents(docs, min_quality=0.99), store, min_quality=0.99)
-    with pytest.raises(ValueError, match="compact_ledger"):
-        compact_table(spark, store, table="ledger")
 
 
 def test_expire_refuses_stranding_deltas(spark, documents, tmp_path):
@@ -375,88 +135,6 @@ def test_value_percentiles_approx_within_rank_error(spark, events):
             # and the approx value is an actual member of the group (the
             # sketch returns observed values, never interpolations)
             assert got in vals
-
-
-def test_upgrade_to_state_backfills_pre_state_store(spark, documents, tmp_path):
-    """A store written before state existed (persist_ledger + derive-mode
-    delta appends) upgrades via ONE linear derivation pass — no re-curation;
-    the chain is compacted first so contributions tag a single snapshot, and
-    the next append runs state-backed with no old_docs."""
-    from kgtm.curation import (
-        append_curated_batch,
-        curate_documents,
-        persist_ledger,
-        read_ledger,
-        upgrade_to_state,
-    )
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 150)
-    b1 = documents.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 180))
-    b2 = documents.filter((F.col("doc_id") >= 180) & (F.col("doc_id") < 210))
-    persist_ledger(
-        curate_documents(old, min_quality=0.4, jaccard_threshold=0.5),
-        store,
-        min_quality=0.4,
-        jaccard_threshold=0.5,
-    )
-    append_curated_batch(spark, store, old_docs=old, new_docs=b1)  # derive mode
-
-    corpus = documents.filter(F.col("doc_id") < 180)
-    with pytest.raises(ValueError, match="ids differ"):
-        upgrade_to_state(spark, store, corpus.limit(10))
-    target = upgrade_to_state(spark, store, corpus)
-    assert target["ledger_kind"] == "snapshot"  # chain was compacted
-    # idempotent
-    assert upgrade_to_state(spark, store, corpus)["commit_id"] == target["commit_id"]
-
-    c = append_curated_batch(spark, store, new_docs=b2)  # NO old_docs
-    assert c["ledger_kind"] == "delta"
-    latest = read_ledger(spark, store)
-    assert latest.count() == 210
-    full = curate_documents(
-        documents.filter(F.col("doc_id") < 210), min_quality=0.4, jaccard_threshold=0.5
-    )
-    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
-    got = sorted(map(tuple, latest.filter(F.col("doc_id") >= 180).select(*cols).collect()))
-    want = sorted(map(tuple, full.filter(F.col("doc_id") >= 180).select(*cols).collect()))
-    assert got == want
-
-
-def test_compact_ledger_detects_concurrent_append(spark, documents, tmp_path, monkeypatch):
-    """A delta landing between compact_ledger's chain resolution and its
-    commit would be permanently hidden (seq below the compacted snapshot,
-    absent from replaces) — the late re-check must refuse instead. Injected
-    via the _read_state seam, which runs after resolution and before the
-    commit."""
-    import kgtm.curation as cur
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 120)
-    b1 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    b2 = documents.filter((F.col("doc_id") >= 140) & (F.col("doc_id") < 160))
-    cur.persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    cur.append_curated_batch(spark, store, new_docs=b1)
-
-    real_read_state = cur._read_state
-    fired = {"done": False}
-
-    def sneaky(sp, od, resolved):
-        out = real_read_state(sp, od, resolved)
-        if not fired["done"]:
-            fired["done"] = True
-            cur.append_curated_batch(sp, od, new_docs=b2)  # the racing writer
-        return out
-
-    monkeypatch.setattr(cur, "_read_state", sneaky)
-    with pytest.raises(RuntimeError, match="concurrent ledger commit"):
-        cur.compact_ledger(spark, store)
-    monkeypatch.setattr(cur, "_read_state", real_read_state)
-    # nothing was hidden: all three versions' rows resolve, and the fold
-    # now succeeds over the full chain
-    assert cur.read_ledger(spark, store).count() == 160
-    cur.compact_ledger(spark, store)
-    assert cur.read_ledger(spark, store).count() == 160
 
 
 def test_corpus_is_ascii_for_winnow_oracle(spark):

@@ -1,117 +1,12 @@
-"""Round-5 coverage: CAS-guarded ledger appends, chain-linked delta
-resolution, auto-compaction, stale-claim release, out-of-band-deletion
-guards, and the state-expiry stranding guard.
-
-Verdict lineage: VERDICT.md r4 "Next round" items 3 (coordinator-backed CAS
-for append_curated_batch) and 4 (auto-compaction policy), plus ADVICE items
-on _read_resolved_ledger silent shrinkage and expire_commits' state-table
-guard.
-"""
+"""Round-5 coverage: concurrent CAS-guarded appends, decontamination
+strategy parity, positional winnowing, the manifest cache and shingle-hash
+chunking. The ledger/state store tests live in
+tests/test_curation_store.py."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------------------
-# out-of-band deletion: resolved ledger data must not silently shrink
-# ---------------------------------------------------------------------------
-
-
-def test_read_ledger_raises_on_missing_delta_dir(spark, documents, tmp_path):
-    """An out-of-band-deleted delta data dir (manifest left behind) must
-    raise, not silently drop that batch's rows from read_ledger."""
-    from kgtm.curation import (
-        append_curated_batch,
-        persist_curated_corpus,
-        read_ledger,
-    )
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 120)
-    batch = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 150))
-    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    delta = append_curated_batch(spark, store, new_docs=batch)
-    assert read_ledger(spark, store).count() == 150
-
-    shutil.rmtree(f"{store}/ledger/commit={delta['commit_id']}")
-    with pytest.raises(FileNotFoundError, match="out-of-band"):
-        read_ledger(spark, store).count()
-
-
-# ---------------------------------------------------------------------------
-# expire_commits: state-table stranding guard
-# ---------------------------------------------------------------------------
-
-
-def test_expire_refuses_stranding_live_state(spark, documents, tmp_path):
-    """A live state commit backing a LIVE ledger commit must not be expired
-    (the store would silently demote to derive mode); a state commit backing
-    a dead/unknown ledger commit expires fine."""
-    from kgtm.materialize import expire_commits, write_table
-
-    store = str(tmp_path / "store")
-    df = documents.limit(5)
-    led = write_table(
-        df.select("doc_id"),
-        store,
-        table="ledger",
-        partition_by=(),
-        extra_manifest={"ledger_kind": "snapshot"},
-    )
-    # two state commits on one table: the OLDER one backs the live ledger
-    # commit (would strand), the newer backs an unknown/dead commit id
-    write_table(
-        df.select("doc_id"),
-        store,
-        table="ledger_digests",
-        partition_by=(),
-        extra_manifest={
-            "ledger_kind": "state",
-            "for_ledger_commit": led["commit_id"],
-        },
-    )
-    write_table(
-        df.select("doc_id"),
-        store,
-        table="ledger_digests",
-        partition_by=(),
-        extra_manifest={"ledger_kind": "state", "for_ledger_commit": "deadbeef"},
-    )
-    with pytest.raises(ValueError, match="derive mode"):
-        expire_commits(store, keep_last=1)
-
-    # flip the order: now the victim backs the dead commit — expiry proceeds
-    store2 = str(tmp_path / "store2")
-    led2 = write_table(
-        df.select("doc_id"),
-        store2,
-        table="ledger",
-        partition_by=(),
-        extra_manifest={"ledger_kind": "snapshot"},
-    )
-    write_table(
-        df.select("doc_id"),
-        store2,
-        table="ledger_digests",
-        partition_by=(),
-        extra_manifest={"ledger_kind": "state", "for_ledger_commit": "deadbeef"},
-    )
-    write_table(
-        df.select("doc_id"),
-        store2,
-        table="ledger_digests",
-        partition_by=(),
-        extra_manifest={
-            "ledger_kind": "state",
-            "for_ledger_commit": led2["commit_id"],
-        },
-    )
-    victims = expire_commits(store2, keep_last=1)
-    assert any(c.get("for_ledger_commit") == "deadbeef" for c in victims)
 
 
 # ---------------------------------------------------------------------------
@@ -170,243 +65,6 @@ def test_concurrent_appends_same_base_exactly_one_wins(spark, documents, tmp_pat
         # exactly the contract (recompute means re-batching upstream)
         with pytest.raises(ValueError, match="monotone"):
             append_curated_batch(spark, store, new_docs=loser_batch, coordinator=coord)
-
-
-def test_orphaned_delta_is_invisible_and_never_a_base(spark, documents, tmp_path):
-    """A delta whose base_seq does not link to the chain head (a writer that
-    slipped past the claim) is structurally invisible to read_ledger, and
-    the next append bases itself on the chain head, not the orphan."""
-    from kgtm.curation import (
-        _resolve_ledger_commits,
-        append_curated_batch,
-        curate_documents,
-        persist_curated_corpus,
-        read_ledger,
-    )
-    from kgtm.curation import _commit_ledger_rows
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 100)
-    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-    d1 = append_curated_batch(spark, store, new_docs=b1)
-
-    # forge an orphan: a delta claiming a base_seq BELOW the chain head
-    orphan_rows = curate_documents(
-        documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 130))
-    )
-    _commit_ledger_rows(
-        orphan_rows,
-        store,
-        kind="delta",
-        curation_params={"min_quality": 0.4, "jaccard_threshold": 0.5},
-        extra={"base_seq": d1["base_seq"], "base_commit_id": "stale"},
-    )
-    assert read_ledger(spark, store).count() == 120  # orphan invisible
-    chain = _resolve_ledger_commits(spark, store)
-    assert chain[-1]["commit_id"] == d1["commit_id"]
-
-    # next append chains onto d1, not the orphan
-    b3 = documents.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 170))
-    d3 = append_curated_batch(spark, store, new_docs=b3)
-    assert d3["base_commit_id"] == d1["commit_id"]
-    assert read_ledger(spark, store).count() == 140
-
-
-# ---------------------------------------------------------------------------
-# auto-compaction policy
-# ---------------------------------------------------------------------------
-
-
-def test_append_auto_compacts_at_max_deltas(spark, documents, tmp_path):
-    """max_deltas=2: the append that brings the chain to 2 deltas folds it
-    back into one snapshot; decisions and threshold resolution survive."""
-    from kgtm.curation import (
-        _resolve_ledger_commits,
-        append_curated_batch,
-        persist_curated_corpus,
-        read_ledger,
-    )
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 100)
-    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-    b2 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    b3 = documents.filter((F.col("doc_id") >= 140) & (F.col("doc_id") < 160))
-
-    append_curated_batch(spark, store, new_docs=b1, max_deltas=2)
-    chain = _resolve_ledger_commits(spark, store)
-    assert [c.get("ledger_kind") for c in chain] == ["snapshot", "delta"]
-
-    append_curated_batch(spark, store, new_docs=b2, max_deltas=2)
-    chain = _resolve_ledger_commits(spark, store)
-    assert [c.get("ledger_kind") for c in chain] == ["snapshot"]  # folded
-    assert chain[0].get("curation_params", {}).get("min_quality") == 0.4
-    assert read_ledger(spark, store).count() == 140
-
-    # appends keep working from the compacted snapshot (params recorded)
-    append_curated_batch(spark, store, new_docs=b3, max_deltas=2)
-    assert read_ledger(spark, store).count() == 160
-
-
-# ---------------------------------------------------------------------------
-# state v2: incremental hot set, materialized doc sizes, bucketed layout
-# ---------------------------------------------------------------------------
-
-
-def test_state_v2_hot_crossing_corrections_and_invariant(spark, tmp_path):
-    """A shingle crossing the df cap DURING an append exercises the whole v2
-    correction machinery: newly-hot detection from stored df contributions,
-    owner corrections into ledger_doc_sizes, and the accreting ledger_hot
-    set. Three checks: (a) append decisions == full-run parity, (b) the
-    stored doc_sizes SUM equals a post-cap recount under the current hot
-    set for every participant, (c) the bucketed sb= layout is on disk."""
-    import os
-
-    from kgtm.curation import (
-        _read_state,
-        _resolve_ledger_commits,
-        append_curated_batch,
-        curate_documents,
-        persist_curated_corpus,
-        read_ledger,
-    )
-    from kgtm.dedup import DEFAULT_MAX_SHINGLE_DF
-
-    cap = DEFAULT_MAX_SHINGLE_DF  # 1000
-    n_a = cap + 50  # phrase A: hot already at the base snapshot
-    n_b_old = cap - 15  # phrase B: 985 old owners ...
-    n_batch = 30  # ... + 30 batch owners -> crosses the cap mid-append
-    a, b = "alpha beta gamma", "delta epsilon zeta"
-    rows = []
-    for i in range(n_a):
-        has_b = i < n_b_old
-        body = f"{a} {b}" if has_b else a
-        rows.append((i, f"{body} u{i} v{i} w{i} x{i} y{i}"))
-    for j in range(n_batch):
-        rows.append((10_000 + j, f"{b} bu{j} bv{j} bw{j} bx{j} by{j}"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string").localCheckpoint(
-        eager=True
-    )
-    old = docs.filter(F.col("doc_id") < 10_000)
-    batch = docs.filter(F.col("doc_id") >= 10_000)
-
-    store = str(tmp_path / "store")
-    persist_curated_corpus(old, store, min_quality=0.0, jaccard_threshold=0.5)
-    st0 = _read_state(spark, store, _resolve_ledger_commits(spark, store))
-    assert st0.doc_sizes is not None and st0.hot is not None  # v2 tier engaged
-    hot0 = st0.hot.count()
-    assert hot0 > 0  # phrase-A shingles already hot at the snapshot
-
-    append_curated_batch(spark, store, new_docs=batch)
-
-    # (a) parity with the full run, restricted to the batch
-    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
-    got = sorted(
-        map(tuple, read_ledger(spark, store).filter(F.col("doc_id") >= 10_000)
-            .select(*cols).collect())
-    )
-    want = sorted(
-        map(tuple, curate_documents(docs, min_quality=0.0, jaccard_threshold=0.5)
-            .filter(F.col("doc_id") >= 10_000).select(*cols).collect())
-    )
-    assert got == want
-
-    # (b) doc_sizes invariant: SUM of contributions == post-cap recount
-    st = _read_state(spark, store, _resolve_ledger_commits(spark, store))
-    assert st.hot.count() > hot0  # B-shingles crossed the cap
-    sizes = (
-        st.doc_sizes.groupBy("id").agg(F.sum("n_sh").alias("stored"))
-    )
-    recount = (
-        st.flat.select("id", "shingle")
-        .join(F.broadcast(st.hot.select("shingle").distinct()), "shingle", "left_anti")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("fresh"))
-    )
-    bad = (
-        sizes.join(recount, "id", "full_outer")
-        .filter(
-            F.coalesce(F.col("stored"), F.lit(0))
-            != F.coalesce(F.col("fresh"), F.lit(0))
-        )
-        .count()
-    )
-    assert bad == 0
-
-    # (c) bucketed directory layout on disk
-    shingle_commits = [
-        d for d in os.listdir(f"{store}/ledger_shingles") if d.startswith("commit=")
-    ]
-    assert shingle_commits
-    for d in shingle_commits:
-        subdirs = os.listdir(f"{store}/ledger_shingles/{d}")
-        assert any(s.startswith("sb=") for s in subdirs), (d, subdirs)
-
-
-def test_v1_store_upgrades_to_v2(spark, documents, tmp_path):
-    """A round-4 store (v1 core state only, unbucketed) keeps appending on
-    the v1 tier; upgrade_to_state rewrites the state bucketed with the v2
-    tables, and subsequent appends run the v2 path."""
-    from kgtm.curation import (
-        _STATE_TABLES_V1,
-        _read_state,
-        _resolve_ledger_commits,
-        _state_frames,
-        _write_state,
-        append_curated_batch,
-        curate_documents,
-        persist_ledger,
-        read_ledger,
-        upgrade_to_state,
-    )
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 120).localCheckpoint(eager=True)
-    ledger = curate_documents(old, min_quality=0.4).localCheckpoint(eager=True)
-    c = persist_ledger(ledger, store, min_quality=0.4, jaccard_threshold=0.5)
-    frames = _state_frames(old, ledger, "text", "doc_id")
-    _write_state(
-        {t: frames[t] for t in _STATE_TABLES_V1},
-        store,
-        c["commit_id"],
-        n_buckets=None,  # round-4 layout: unbucketed, core tables only
-    )
-
-    st = _read_state(spark, store, _resolve_ledger_commits(spark, store))
-    assert st is not None and st.doc_sizes is None and st.n_buckets is None
-
-    b1 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    append_curated_batch(spark, store, new_docs=b1)  # v1-tier append works
-    assert read_ledger(spark, store).count() == 140
-    st = _read_state(spark, store, _resolve_ledger_commits(spark, store))
-    assert st is not None and st.doc_sizes is None  # still v1
-
-    all_docs = old.unionByName(b1)
-    upgrade_to_state(spark, store, all_docs)
-    st = _read_state(spark, store, _resolve_ledger_commits(spark, store))
-    assert st.doc_sizes is not None and st.hot is not None
-    assert st.n_buckets is not None  # bucketed layout after the rewrite
-
-    b2 = documents.filter((F.col("doc_id") >= 140) & (F.col("doc_id") < 160))
-    append_curated_batch(spark, store, new_docs=b2)  # v2-tier append
-    assert read_ledger(spark, store).count() == 160
-    # parity of the v2 append against the full run on the combined corpus
-    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
-    got = sorted(
-        map(tuple, read_ledger(spark, store).filter(F.col("doc_id") >= 140)
-            .select(*cols).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            curate_documents(
-                documents.filter(F.col("doc_id") < 160), min_quality=0.4
-            ).filter(F.col("doc_id") >= 140).select(*cols).collect(),
-        )
-    )
-    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -528,48 +186,6 @@ def test_winnow_positions_localize_planted_overlap(spark):
     assert in_span[1] & in_span[2], "no shared pick localized the overlap"
 
 
-# ---------------------------------------------------------------------------
-# stale-claim release
-# ---------------------------------------------------------------------------
-
-
-def test_release_stale_ledger_claims(spark, documents, tmp_path):
-    """A crashed winner's claim blocks appends from that base until released;
-    fulfilled claims are never released."""
-    from kgtm.curation import (
-        _resolve_ledger_commits,
-        append_curated_batch,
-        persist_curated_corpus,
-        read_ledger,
-        release_stale_ledger_claims,
-    )
-    from kgtm.materialize import claim_marker, list_claim_markers
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 100)
-    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-    d1 = append_curated_batch(spark, store, new_docs=b1)
-    # d1's claim is fulfilled — never released, even with min_age_ms=0
-    assert release_stale_ledger_claims(spark, store, min_age_ms=0) == []
-
-    # simulate a crashed winner: claim the current head's successor marker
-    head = _resolve_ledger_commits(spark, store)[-1]
-    assert claim_marker(spark, store, f"ledger-succ-{head['commit_id']}", {"op": "append"})
-    b2 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    with pytest.raises(RuntimeError, match="successor claim"):
-        append_curated_batch(spark, store, new_docs=b2)
-
-    # age-gated release: too young → kept; old enough → released
-    assert release_stale_ledger_claims(spark, store, min_age_ms=3600 * 1000) == []
-    released = release_stale_ledger_claims(spark, store, min_age_ms=0)
-    assert released == [f"ledger-succ-{head['commit_id']}"]
-    assert f"ledger-succ-{head['commit_id']}" not in list_claim_markers(store, spark)
-
-    append_curated_batch(spark, store, new_docs=b2)
-    assert read_ledger(spark, store).count() == 140
-
-
 def test_manifest_cache_fresh_and_unpoisonable(spark, tmp_path):
     """The parsed-manifest cache (list_commits) must never go stale or get
     poisoned: a new commit is visible on the very next listing, a mutated
@@ -611,200 +227,8 @@ def test_manifest_cache_fresh_and_unpoisonable(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# re-curation snapshots serialize with appends (successor claim)
-# ---------------------------------------------------------------------------
-
-
-def test_recuration_snapshot_serializes_with_appends(spark, documents, tmp_path):
-    """A full RE-curation snapshot on a chained store competes for the same
-    ``ledger-succ-{head}`` claim as appends/compactions: it refuses while an
-    in-flight append holds the head's claim (no silently orphaned delta),
-    lands with ``base_commit_id`` once the claim is free (so the claim reads
-    as fulfilled and is never stale-released), and supersedes the old chain.
-    The FIRST snapshot into an empty store takes no claim."""
-    from kgtm.curation import (
-        _resolve_ledger_commits,
-        append_curated_batch,
-        curate_documents,
-        persist_curated_corpus,
-        persist_ledger,
-        read_ledger,
-        release_stale_ledger_claims,
-    )
-    from kgtm.materialize import (
-        claim_marker,
-        delete_claim_marker,
-        list_claim_markers,
-    )
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 100)
-    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-    # first snapshot: empty store at commit time → no successor claim taken
-    assert list_claim_markers(store, spark) == {}
-
-    b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-    append_curated_batch(spark, store, new_docs=b1)
-    head = _resolve_ledger_commits(spark, store)[-1]
-
-    # an in-flight append holds the head's successor claim: the re-curation
-    # must refuse instead of landing a snapshot that orphans the delta
-    assert claim_marker(
-        spark, store, f"ledger-succ-{head['commit_id']}", {"op": "append"}
-    )
-    full = documents.filter(F.col("doc_id") < 120)
-    releg = curate_documents(full, min_quality=0.99).localCheckpoint(eager=True)
-    with pytest.raises(RuntimeError, match="successor claim"):
-        persist_ledger(releg, store, min_quality=0.99, jaccard_threshold=0.5)
-    delete_claim_marker(store, f"ledger-succ-{head['commit_id']}", spark)
-
-    # claim free → the re-curation lands as the head's sole successor
-    # (persist_curated_corpus = the full re-curation path: ledger snapshot
-    # through the SAME persist_ledger claim + fresh state tables, so later
-    # appends keep running in state mode)
-    c = persist_curated_corpus(
-        full, store, min_quality=0.99, jaccard_threshold=0.5
-    )
-    chain = _resolve_ledger_commits(spark, store)
-    assert [x["commit_id"] for x in chain] == [c["commit_id"]]
-    assert c["base_commit_id"] == head["commit_id"]
-    # fulfilled claim: never stale-released, and a THIRD writer from the old
-    # head loses the CAS outright
-    assert release_stale_ledger_claims(spark, store, min_age_ms=0) == []
-    assert not claim_marker(
-        spark, store, f"ledger-succ-{head['commit_id']}", {"op": "append"}
-    )
-
-    # the snapshot is the full decision set under its own params
-    led = read_ledger(spark, store)
-    assert led.count() == 120
-    twin = curate_documents(full, min_quality=0.99)
-    cols = sorted(twin.columns)
-    led, twin = led.select(*cols), twin.select(*cols)
-    assert (
-        led.exceptAll(twin).count() == 0 and twin.exceptAll(led).count() == 0
-    )
-
-    # life goes on: the next append bases on the re-curation snapshot
-    b2 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    d2 = append_curated_batch(spark, store, new_docs=b2, min_quality=0.99)
-    assert d2["base_commit_id"] == c["commit_id"]
-    assert read_ledger(spark, store).count() == 140
-
-
-# ---------------------------------------------------------------------------
 # round-5 review fixes
 # ---------------------------------------------------------------------------
-
-
-def test_recuration_over_unbucketed_store_replaces_state(spark, documents, tmp_path):
-    """RE-curation over a pre-round-5 store (unbucketed v1 state) must mark
-    the old state commits replaced: read_table passes every live commit dir
-    of a table to ONE parquet() call, and partition discovery refuses mixed
-    sb=/flat layouts — without the replaces, the next append hard-fails on
-    an AnalysisException instead of reading state."""
-    from kgtm.curation import (
-        _STATE_TABLES_V1,
-        _read_state,
-        _resolve_ledger_commits,
-        _state_frames,
-        _write_state,
-        append_curated_batch,
-        curate_documents,
-        persist_curated_corpus,
-        persist_ledger,
-        read_ledger,
-    )
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 120).localCheckpoint(eager=True)
-    ledger = curate_documents(old, min_quality=0.4).localCheckpoint(eager=True)
-    c = persist_ledger(ledger, store, min_quality=0.4, jaccard_threshold=0.5)
-    frames = _state_frames(old, ledger, "text", "doc_id")
-    _write_state(
-        {t: frames[t] for t in _STATE_TABLES_V1},
-        store,
-        c["commit_id"],
-        n_buckets=None,  # round-4 layout: unbucketed, core tables only
-    )
-
-    # re-curation writes the round-5 bucketed layout beside the old dirs
-    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-
-    # the state read must see ONLY the new commits (old ones replaced),
-    # and the subsequent append must run the state path, not crash
-    st = _read_state(spark, store, _resolve_ledger_commits(spark, store))
-    assert st is not None and st.n_buckets is not None and st.doc_sizes is not None
-
-    b1 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    append_curated_batch(spark, store, new_docs=b1)
-    assert read_ledger(spark, store).count() == 140
-
-
-def test_append_auto_compaction_is_best_effort(spark, documents, tmp_path, monkeypatch):
-    """Auto-compaction losing its successor claim (or finding nothing to
-    compact after a racing writer) must NOT make the caller believe the
-    already-committed append failed — a retry would double-ingest."""
-    import kgtm.curation as cur
-
-    store = str(tmp_path / "store")
-    old = documents.filter(F.col("doc_id") < 100)
-    cur.persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
-
-    class _ExecutorLost(Exception):
-        """Stands in for Py4JJavaError/AnalysisException — the catch must be
-        Exception-wide, not a curated (RuntimeError, ValueError) subset."""
-
-    def losing_compact(*a, **k):
-        raise _ExecutorLost("executor lost during checkpoint")
-
-    monkeypatch.setattr(cur, "compact_ledger", losing_compact)
-    b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-    with pytest.warns(RuntimeWarning, match="auto-compaction failed"):
-        c = cur.append_curated_batch(spark, store, new_docs=b1, max_deltas=1)
-    assert c["seq"]  # the append's own commit is returned, not an exception
-    assert cur.read_ledger(spark, store).count() == 120  # and it landed
-
-
-def test_release_skips_unreadable_claims(spark, documents, tmp_path):
-    """An unreadable/corrupt claim payload must be SKIPPED by the stale-claim
-    sweep, never treated as infinitely old — releasing a fresh claim held by
-    a live writer re-opens the double-append race the CAS closes."""
-    from pathlib import Path as P
-
-    from kgtm.curation import persist_curated_corpus, release_stale_ledger_claims
-    from kgtm.materialize import list_claim_markers
-
-    store = str(tmp_path / "store")
-    persist_curated_corpus(
-        documents.filter(F.col("doc_id") < 60), store,
-        min_quality=0.4, jaccard_threshold=0.5,
-    )
-    corrupt = P(store) / "_commits" / ".claim-ledger-succ-deadbeef.json"
-    corrupt.write_bytes(b"{not json")
-    # unfulfilled base + min_age_ms=0 would release any readable stale claim;
-    # the unreadable one must survive every sweep
-    assert release_stale_ledger_claims(spark, store, min_age_ms=0) == []
-    assert corrupt.exists()
-    assert list_claim_markers(store, spark).get("ledger-succ-deadbeef") == {}
-
-
-def test_state_refuses_df_cap_drift(spark, documents, tmp_path, monkeypatch):
-    """Hot membership and post-cap doc sizes are functions of the df cap the
-    writer ran with; a build running a different cap must be refused, not
-    silently diverge (the gap shingles would never be re-examined)."""
-    import kgtm.dedup as dd
-    from kgtm.curation import append_curated_batch, persist_curated_corpus
-
-    store = str(tmp_path / "store")
-    persist_curated_corpus(
-        documents.filter(F.col("doc_id") < 60), store,
-        min_quality=0.4, jaccard_threshold=0.5,
-    )
-    monkeypatch.setattr(dd, "DEFAULT_MAX_SHINGLE_DF", dd.DEFAULT_MAX_SHINGLE_DF + 1)
-    b1 = documents.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 80))
-    with pytest.raises(ValueError, match="max_shingle_df"):
-        append_curated_batch(spark, store, new_docs=b1)
 
 
 def test_shingle_hash_chunking_is_invariant():
@@ -826,106 +250,3 @@ def test_shingle_hash_chunking_is_invariant():
         [dd._hash_shingles64(sh[:100]), dd._hash_shingles64(sh[100:])]
     )
     assert np.array_equal(parts, ref)
-
-
-def test_recuration_replaces_state_landed_during_curation(
-    spark, documents, tmp_path, monkeypatch
-):
-    """An append landing INSIDE the re-curation's (potentially hours-long)
-    curate_documents window must still get its now-superseded state commits
-    marked replaced — the replaces map is derived from a post-commit listing
-    keyed off the live chain, not a pre-curation snapshot of the listing
-    (which would miss the racing append's commits forever)."""
-    import kgtm.curation as cur
-    from kgtm.materialize import list_commits
-
-    store = str(tmp_path / "store")
-    cur.persist_curated_corpus(
-        documents.filter(F.col("doc_id") < 100), store,
-        min_quality=0.4, jaccard_threshold=0.5,
-    )
-
-    real = cur.curate_documents
-    b1 = (
-        documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
-        .localCheckpoint(eager=True)
-    )
-    fired = []
-
-    def racing(docs_arg, **kw):
-        if not fired:
-            fired.append(True)
-            # lands a delta + its state contributions mid-curation
-            cur.append_curated_batch(spark, store, new_docs=b1)
-        return real(docs_arg, **kw)
-
-    monkeypatch.setattr(cur, "curate_documents", racing)
-    full = documents.filter(F.col("doc_id") < 120)
-    c2 = cur.persist_curated_corpus(
-        full, store, min_quality=0.4, jaccard_threshold=0.5
-    )
-    assert fired  # the race actually happened
-
-    # every live state commit is tagged to the re-curation snapshot — the
-    # racing delta's contributions (and the old snapshot's) are replaced
-    live = cur._live_state_commits(list_commits(store, spark), cur.STATE_TABLES)
-    for table, cs in live.items():
-        assert {sc["for_ledger_commit"] for sc in cs} == {c2["commit_id"]}, table
-
-    # and the store keeps working on the state path
-    b2 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    cur.append_curated_batch(spark, store, new_docs=b2)
-    assert cur.read_ledger(spark, store).count() == 140
-
-
-def test_orphaned_ledger_deltas_audit(spark, documents, tmp_path):
-    """Chain-linked resolution silently skips a delta whose base_seq no
-    longer matches (by design — mis-folding would be worse), so there must
-    be an operational audit surface: orphaned_ledger_deltas returns exactly
-    the skipped deltas, and an intact chain returns none."""
-    import json as _json
-    from pathlib import Path as P
-
-    from kgtm.curation import (
-        append_curated_batch,
-        orphaned_ledger_deltas,
-        persist_curated_corpus,
-        read_ledger,
-    )
-
-    store = str(tmp_path / "store")
-    persist_curated_corpus(
-        documents.filter(F.col("doc_id") < 80), store,
-        min_quality=0.4, jaccard_threshold=0.5,
-    )
-    d1 = append_curated_batch(
-        spark, store,
-        new_docs=documents.filter(
-            (F.col("doc_id") >= 80) & (F.col("doc_id") < 100)
-        ),
-    )
-    d2 = append_curated_batch(
-        spark, store,
-        new_docs=documents.filter(
-            (F.col("doc_id") >= 100) & (F.col("doc_id") < 120)
-        ),
-    )
-    assert orphaned_ledger_deltas(spark, store) == []
-    assert read_ledger(spark, store).count() == 120
-
-    # simulate the overwrite-rename race: d2's recorded base is stale.
-    # The rewrite is out-of-band, so Hadoop's checksum sidecar must go too —
-    # LocalFileSystem is a ChecksumFileSystem, and a stale .crc makes
-    # list_commits treat the manifest as corrupt (skipped entirely), which
-    # would test nothing.
-    mpath = P(store) / "_commits" / f"{d2['seq']:010d}.json"
-    m = _json.loads(mpath.read_text())
-    assert m["commit_id"] == d2["commit_id"]
-    m["base_seq"] = d1["base_seq"]  # points at the snapshot, not d1
-    mpath.write_text(_json.dumps(m))
-    (mpath.parent / f".{mpath.name}.crc").unlink(missing_ok=True)
-
-    orphans = orphaned_ledger_deltas(spark, store)
-    assert [o["commit_id"] for o in orphans] == [d2["commit_id"]]
-    # the read drops exactly the orphan's batch, nothing else
-    assert read_ledger(spark, store).count() == 100
