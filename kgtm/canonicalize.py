@@ -1,4 +1,4 @@
-"""Canonicalization: connected components by min-label propagation.
+"""Canonicalization: connected components, labelled by component minimum.
 
 Generalizes the reference's "first ladder hit canonicalizes the path"
 write-back (/root/reference/ontologytimemachine/utils/proxy_logic.py:111-141)
@@ -6,131 +6,108 @@ to a transitive closure: surface forms that link to the same ontology — or to
 each other through shared mentions — collapse to one canonical id (the
 component's minimum label).
 
-Algorithm: plain min-label propagation over an undirected edge list
-(large-star/small-star would halve iterations on pathological chains; for
-entity-resolution graphs components are star-shaped and shallow, so plain
-propagation converges in 2-3 rounds).
+One operator, two plans, chosen on the size of the edge set:
 
-Scale notes (SURVEY.md §4 item 2):
-  * each iteration is one shuffle (edges ⋈ labels on src, then min per dst);
-    edges are canonicalized to both directions once, up front.
-  * ``localCheckpoint`` every iteration truncates lineage — without it the
-    plan doubles per round and the driver OOMs planning round ~15.
-  * convergence test is an aggregate (sum of label changes), not a collect
-    of labels.
+  * **small graph** (at most ``session.LITERAL_MAX_ROWS`` distinct edges —
+    the near-dup pair graphs and entity-link graphs kgtm builds): the edges
+    are collected and closed by union-find on the driver, the smaller root
+    always winning, so every root is its set's minimum. The labels come back
+    as a typed plan literal (LocalRelation), the same row cap as the dim
+    literal fold, and no shuffle round runs at all.
+  * **large graph**: two-phase large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"), O(log n) rounds
+    regardless of component diameter — near-dup clusters are often chains.
+
+Both plans start from ONE eager ``localCheckpoint`` of the loop-free,
+deduplicated edges, so the caller's edge plan (a pair join) runs exactly
+once; the driver plan decides on the checkpoint's exact row count (a byte
+estimate of a join's output says little about its rows).
+
+Scale notes for the star plan (SURVEY.md §4 item 2):
+  * ``localCheckpoint`` every round truncates lineage — without it the plan
+    doubles per round and the driver OOMs planning round ~15.
+  * convergence is one job per round: a symmetric-difference probe of the
+    old and new (distinct) edge sets, not a collect of labels.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from kgtm import session
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """edges(src,dst) → (node, component) with component = min node id.
-
-    Node ids must be orderable (string or numeric). Returns every node that
-    appears in any edge. Self-loops are fine; duplicate edges are deduped.
-    """
-    # Undirected: materialize both directions once, dedupe.
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    und = und.localCheckpoint(eager=True)
-
-    labels = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
-    converged = False
-    for _ in range(max_iter):
-        # Candidate labels flowing across edges: neighbor's current component.
-        prop = (
-            und.join(labels, und["a"] == labels["node"], "inner")
-            .select(F.col("b").alias("node"), F.col("component"))
-        )
-        new_labels = (
-            labels.select("node", "component")
-            .union(prop)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # Min-label propagation needs O(diameter) rounds; a silent unconverged
-        # return would split long-chain components. Callers with chain-shaped
-        # graphs should use connected_components_star (O(log n) rounds).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_star"
-        )
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 30,
 ) -> tuple[DataFrame, int]:
-    """Two-phase large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond").
+    """edges(src, dst) → ((node, component), rounds), component = min node.
 
-    Converges in O(log n) rounds regardless of graph DIAMETER — the scale
-    option when components can be long chains (plain min-label propagation
-    needs O(diameter) rounds). Returns ((node, component), n_rounds).
+    Node ids must be orderable (string or numeric); both columns share the
+    edge columns' type. Every node of a non-self-loop edge appears once;
+    self-loops and duplicate or reversed edges change nothing. ``rounds`` is
+    0 when the graph was closed on the driver, else the number of star
+    rounds. Raises RuntimeError when the star plan has not converged after
+    ``max_iter`` rounds (a silent return would split components).
 
     large-star: per node u, attach every LARGER neighbor to
         m = min(Γ(u) ∪ {u});
     small-star: per node u, attach every neighbor ≤ u (and u) to m.
     Fixpoint: the edge set is a star forest rooted at component minima.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    cur = e.distinct().localCheckpoint(eager=True)
-    # keep every node visible even if its edges become self-loops later
-    all_nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
+    cur = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
+    nodes = cur.select(F.col("a").alias("node")).union(cur.select(F.col("b").alias("node")))
+    node = nodes.schema["node"]
+
+    cap = session.LITERAL_MAX_ROWS
+    rows = cur.limit(cap + 1).collect()
+    if len(rows) <= cap:
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for a, b in rows:
+            ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        labels = [(n, find(n)) for n in parent]
+        schema = StructType(
+            [StructField(c, node.dataType, node.nullable) for c in ("node", "component")]
+        )
+        table = pa.table(
+            {"node": [n for n, _ in labels], "component": [c for _, c in labels]}
+        )
+        return cur.sparkSession.createDataFrame(table, schema=schema), 0
+
+    # keep every node visible even if its edges become self-loops later
+    all_nodes = nodes.distinct().localCheckpoint(eager=True)
 
     def neighborhood_min(und: DataFrame) -> DataFrame:
-        return und.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
+        return und.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
 
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, max_iter + 1):
         # ---- large-star ----
         und = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
             cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
-        mins = neighborhood_min(und)
         large = (
-            und.join(mins, "u")
+            und.join(neighborhood_min(und), "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
             .distinct()
@@ -139,7 +116,7 @@ def connected_components_star(
         und2 = large.select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         ).filter(F.col("u") != F.col("v"))
-        mins2 = und2.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        mins2 = neighborhood_min(und2)
         small = (
             und2.join(mins2, "u")
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
@@ -148,12 +125,24 @@ def connected_components_star(
             .distinct()
             .localCheckpoint(eager=True)
         )
+        # both are distinct edge sets: an edge in exactly one of them is the
+        # symmetric difference
         changed = (
-            small.exceptAll(cur).limit(1).count() + cur.exceptAll(small).limit(1).count()
+            cur.unionByName(small)
+            .groupBy("a", "b")
+            .count()
+            .filter(F.col("count") == 1)
+            .limit(1)
+            .count()
         )
         cur = small
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge after {max_iter} star "
+            "round(s); raise max_iter"
+        )
 
     # star forest → labels; isolated-after-contraction nodes label themselves
     labels = cur.select(F.col("a").alias("node"), F.col("b").alias("component"))
@@ -180,10 +169,7 @@ def canonical_entities(linked: DataFrame) -> DataFrame:
         .select(F.col("surface").alias("src"), F.col("ontology_iri").alias("dst"))
         .distinct()
     )
-    # O(log n)-round star variant: entity-resolution graphs are usually
-    # shallow, but surface↔ontology chains through shared mentions can get
-    # long — star converges regardless of diameter at the same per-round cost.
-    comps, _ = connected_components_star(edges)
+    comps, _ = connected_components(edges)
     return (
         linked.select("surface")
         .distinct()

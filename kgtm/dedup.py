@@ -476,21 +476,22 @@ def dedup_clusters(pairs: DataFrame, all_ids: DataFrame, id_col: str = "doc_id")
     """Near-dup pairs → clusters → survivor pick.
 
     Composition: connected components over the pair graph (transitive
-    closure — A~B, B~C ⇒ one cluster even if A,C never compared), survivor =
-    min id per cluster. Returns (id, cluster_id, is_survivor) covering EVERY
-    id in ``all_ids`` (singletons are their own cluster).
+    closure — A~B, B~C ⇒ one cluster even if A,C never compared), labelled
+    by the lexicographic min of the ids as strings; survivor = numeric min
+    id per cluster. Returns (id, cluster_id, is_survivor) covering EVERY id
+    in ``all_ids`` (singletons are their own cluster).
 
-    Uses the large-star/small-star O(log n)-round variant: near-dup clusters
-    are often CHAINS (A~B~C~…~Z under a sliding edit), where plain min-label
-    propagation needs O(diameter) rounds.
+    A pair graph within the literal row cap is closed by union-find on the
+    driver; a larger one by the O(log n)-round star plan, since near-dup
+    clusters are often CHAINS (A~B~C~…~Z under a sliding edit).
     """
-    from kgtm.canonicalize import connected_components_star
+    from kgtm.canonicalize import connected_components
 
     edges = pairs.select(
         F.col("id_a").cast("string").alias("src"),
         F.col("id_b").cast("string").alias("dst"),
     )
-    comps, _ = connected_components_star(edges)
+    comps, _ = connected_components(edges)
     ids = all_ids.select(F.col(id_col).cast("string").alias("id_str"), F.col(id_col).alias("id"))
     out = ids.join(comps, ids["id_str"] == comps["node"], "left").select(
         "id",

@@ -121,9 +121,9 @@ def pagerank(
     combine — a super-node receiving 10^8 edges arrives pre-summed per
     upstream partition. The dangling mass and N are one-row aggregates
     folded in as broadcast scalars (never a driver collect); each iteration
-    ends in an EAGER localCheckpoint (same lineage-cut discipline as
-    canonicalize.connected_components_star — 10 iterations would otherwise
-    stack a 10-deep join lineage into one giant plan).
+    ends in an EAGER localCheckpoint (same lineage-cut discipline as the
+    star rounds of canonicalize.connected_components — 10 iterations would
+    otherwise stack a 10-deep join lineage into one giant plan).
 
     Determinism note: float summation order varies with partitioning, so
     ranks are reproducible to ~1e-12 relative, not bit-for-bit — the pytest

@@ -1059,7 +1059,7 @@ def q_rollup_metrics() -> str:
 def q_dedup_clusters(threshold: float = 0.5) -> str:
     """Near-dup clustering twin: recursive reachability closure over the
     exact-Jaccard pair graph, cluster label = lexicographic min reachable id
-    (matching connected_components' string-label semantics), survivor =
+    (the engine casts ids to strings before connected components), survivor =
     numeric min id per cluster."""
     return f"""
       WITH RECURSIVE {WORDS_CTE}, {SHINGLES_CTE},

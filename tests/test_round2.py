@@ -1,6 +1,6 @@
 """Round-2 regression tests: faithful failover plumbing lives in
 test_extract_link_resolve; here the remaining fixes — deny-gate semantics,
-skew cap, star-CC wiring, oracle parity on multi-IRI turns, vectorized
+skew cap, oracle parity on multi-IRI turns, vectorized
 winnowing, error truncation, 128-bit mention ids."""
 
 from __future__ import annotations
@@ -103,37 +103,6 @@ def test_ngram_jaccard_skew_cap_drops_stop_phrase_only(spark, capsys):
     # shingles from both |∩| and the per-doc counts) but survives
     assert {(r.id_a, r.id_b) for r in uncapped} >= {(100, 101)}
     assert "dropped" in capsys.readouterr().out
-
-
-# ---------------------------------------------------------------------------
-# star CC wiring + plain-CC convergence guard
-# ---------------------------------------------------------------------------
-
-
-def test_dedup_clusters_chain_shaped(spark):
-    """dedup_clusters must close a CHAIN of pairwise near-dups into one
-    cluster (routed through the O(log n) star variant)."""
-    from kgtm.dedup import dedup_clusters
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
-    )
-    all_ids = spark.createDataFrame([(i,) for i in range(45)], "doc_id long")
-    out = {r.id: r for r in dedup_clusters(pairs, all_ids).collect()}
-    assert len({out[i].cluster_id for i in range(41)}) == 1
-    assert out[0].is_survivor and not out[1].is_survivor
-    # ids 41..44 are singletons
-    assert all(out[i].cluster_id == str(i) and out[i].is_survivor for i in range(41, 45))
-
-
-def test_plain_cc_raises_on_nonconvergence(spark):
-    from kgtm.canonicalize import connected_components
-
-    chain = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(20)], "src string, dst string"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=3)
 
 
 # ---------------------------------------------------------------------------

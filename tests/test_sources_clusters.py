@@ -80,6 +80,20 @@ def test_dedup_clusters_transitive(spark):
     assert out[10].cluster_id == out[11].cluster_id != out[1].cluster_id
 
 
+def test_dedup_clusters_chain_shaped(spark):
+    """dedup_clusters must close a CHAIN of pairwise near-dups into one
+    cluster."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+    )
+    all_ids = spark.createDataFrame([(i,) for i in range(45)], "doc_id long")
+    out = {r.id: r for r in dedup_clusters(pairs, all_ids).collect()}
+    assert len({out[i].cluster_id for i in range(41)}) == 1
+    assert out[0].is_survivor and not out[1].is_survivor
+    # ids 41..44 are singletons
+    assert all(out[i].cluster_id == str(i) and out[i].is_survivor for i in range(41, 45))
+
+
 def test_dedup_clusters_on_documents(spark, documents):
     pairs = ngram_jaccard_pairs(documents, threshold=0.5)
     clusters = dedup_clusters(pairs, documents)
