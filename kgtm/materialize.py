@@ -1,15 +1,16 @@
 """Triple-store materialization + per-commit metrics (north_rule).
 
 Writes the final triple table partitioned for consumer access patterns and
-drops a lineage/metrics table beside every commit — the batch analog of the
-reference's download_log.json written next to the downloaded corpus
-(/root/reference/experiments/download_ontologies.py:168-172).
+records the commit's lineage/metrics rows in the commit's own manifest — the
+batch analog of the reference's download_log.json written next to the
+downloaded corpus (the reference's experiments/download_ontologies.py:168-172),
+laid out like an Iceberg snapshot's ``summary`` map.
 
 Sandbox note (SURVEY §7 hard-part 4): no Iceberg catalog is available here,
 so the default format is parquet in an Iceberg-compatible layout (partition
 directories + a _commits manifest). ``fmt="iceberg"`` switches to a real
 Iceberg catalog when one is configured on the cluster — the contract
-(partition spec, metrics-beside-commit) is identical.
+(partition spec, metrics in the commit manifest) is identical.
 """
 
 from __future__ import annotations
@@ -22,8 +23,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from kgtm.metrics import MetricsCollector
+from kgtm.schemas import METRICS_SCHEMA
 
 # Manifest file name: the zero-padded seq IS the whole name, so two writers
 # claiming the same seq collide on the SAME destination path and
@@ -164,7 +167,8 @@ def write_table(
     commit sequence — `read_table(as_of=seq)` time-travels each table to the
     store state at that seq. ``extra_manifest`` entries are recorded verbatim
     in the manifest (used e.g. for streaming epoch ids, enabling idempotent
-    re-runs).
+    re-runs). The commit's ``metrics`` rows (METRICS_SCHEMA fields as plain
+    JSON) ride in the same manifest, so a parquet commit is one Spark job.
     """
     spark = df.sparkSession
     # ROUND-7 HANG FIX — the leading letter is load-bearing. Commit ids
@@ -195,19 +199,14 @@ def write_table(
         df = df.repartition(n_output_partitions, *partition_by)
 
     mc = metrics or MetricsCollector()
-    with mc.stage("materialize") as rec:
+    with mc.stage("materialize"):
         if fmt == "iceberg":
             df.writeTo(f"kgtm.{table}_{commit_id}").partitionedBy(
                 *[F.col(c) for c in partition_by]
             ).createOrReplace()
         else:
             df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_path)
-        rec["n_rows_out"] = None  # avoid a second full count pass
 
-    # metrics + commit manifest beside the data
-    mc.to_df(spark).write.mode("append").parquet(
-        _child(out_dir, "metrics", f"commit={commit_id}")
-    )
     return _commit_manifest(
         spark,
         out_dir,
@@ -216,7 +215,7 @@ def write_table(
             "table": table,
             "format": fmt,
             "partition_by": list(partition_by),
-            "stages": [r["stage"] for r in mc.rows],
+            "metrics": list(mc.rows),
             **(extra_manifest or {}),
         },
         coordinator=coordinator,
@@ -473,7 +472,20 @@ def read_table(
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(_child(out_dir, "metrics"))
+    """Metrics rows of every committed manifest: METRICS_SCHEMA plus the
+    ``commit`` id (string). Manifest-gated like read_table, so a writer that
+    crashed before its manifest rename contributes nothing; a store with no
+    commits gives a typed empty frame."""
+    fields = METRICS_SCHEMA.fieldNames()
+    rows = [
+        (*(r[f] for f in fields), c["commit_id"])
+        for c in list_commits(out_dir, spark)
+        for r in c.get("metrics", [])
+    ]
+    schema = StructType(
+        [*METRICS_SCHEMA.fields, StructField("commit", StringType(), False)]
+    )
+    return spark.createDataFrame(rows, schema)
 
 
 def compact_table(
@@ -534,12 +546,11 @@ def compact_table(
 def _delete_commit(fs, hpath, out_dir: str, c: dict) -> None:
     """Remove one commit: manifest FIRST (the atomic visibility switch —
     readers lose the commit instantly and never see a half-deleted
-    directory), then its data and metrics directories."""
+    directory), then its data directory. Its metrics go with the manifest."""
     for name in _manifest_names(c):  # canonical + legacy manifest names
         fs.delete(hpath(_child(out_dir, "_commits", name)), False)
     table = c.get("table", "triples")
     fs.delete(hpath(_child(out_dir, table, f"commit={c['commit_id']}")), True)
-    fs.delete(hpath(_child(out_dir, "metrics", f"commit={c['commit_id']}")), True)
 
 
 def expire_replaced(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
@@ -647,8 +658,9 @@ def vacuum(
     spark: SparkSession | None = None,
 ) -> list[str]:
     """Delete orphaned directories: commit= dirs with NO manifest, under
-    every table AND under metrics/ (write_table writes both before the
-    manifest rename, so a crash orphans them in pairs).
+    every top-level directory of the store. That covers each table and the
+    ``metrics/`` tree of stores written before metrics moved into the
+    manifest, whose directories become orphans once their commit expires.
 
     Orphans come from writers that crashed between the data write and the
     manifest rename — invisible to readers (the manifest gate) but occupying

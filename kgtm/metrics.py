@@ -71,8 +71,9 @@ def per_partition_counts(df: DataFrame, stage: str) -> DataFrame:
 
 
 class MetricsCollector:
-    """Driver-side stage timing + counters; emits rows matching
-    METRICS_SCHEMA and a one-line dict for bench output."""
+    """Driver-side stage timing + counters. ``rows`` are plain dicts with
+    METRICS_SCHEMA's fields; write_table records them in the commit manifest
+    and read_metrics reads them back as a frame."""
 
     def __init__(self) -> None:
         self.rows: list[dict] = []
@@ -97,20 +98,3 @@ class MetricsCollector:
         finally:
             rec["duration_s"] = time.perf_counter() - t0
             self.rows.append(rec)
-
-    def to_df(self, spark) -> DataFrame:
-        from kgtm.schemas import METRICS_SCHEMA
-
-        rows = [
-            (
-                r["partition_id"],
-                r["stage"],
-                r["n_rows_in"],
-                r["n_rows_out"],
-                r["n_triples"],
-                r["duration_s"],
-                tuple(r["error"].values()) if r["error"] else None,
-            )
-            for r in self.rows
-        ]
-        return spark.createDataFrame(rows, METRICS_SCHEMA)

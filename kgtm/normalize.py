@@ -22,11 +22,12 @@ HTTP client never sends the fragment in the request path. The https-flip retry
 (proxy_logic.py:256-257) is scheme normalization here: membership keys are
 scheme-agnostic (host, path); the canonical scheme comes from the dictionary.
 
-The pure functions below are the executable spec (unit-tested without Spark);
-``candidate_paths_col`` is the set-oriented Spark translation: instead of
-short-circuiting, generate all rungs, broadcast-join, and keep the minimum
-rung per mention via a window (SURVEY.md §4: the 6x candidate fan-out is the
-right trade at scale — no custom Catalyst rule needed).
+The pure functions below are the executable spec (unit-tested without Spark).
+``_rung_cands`` is the one Spark translation of the rungs; two expressions
+use it: ``ladder_probe_expr``, the first-hit-wins cascade of six map lookups
+that linking runs, and ``candidate_paths_col``, the candidate array that
+``link.incremental_relink`` explodes to find mentions a dictionary change
+can flip.
 """
 
 from __future__ import annotations
@@ -97,30 +98,36 @@ def resolve_membership(
 # ---------------------------------------------------------------------------
 
 
-def candidate_paths_col(path: str | Column = "path") -> Column:
-    """array<struct<rung:int, cand_path:string>> of ladder candidates.
-
-    Pure column expression — stays inside whole-stage codegen; later rungs
-    derive from the rstripped path exactly like the pure spec above.
-    """
-    p = F.col(path) if isinstance(path, str) else path
+def _rung_cands(p: Column) -> list[Column]:
+    """The six rung candidates of a path column, in rung order — the one
+    Spark definition of :func:`ladder_candidates` (pinned to it by
+    tests/test_normalize.py); later rungs derive from the rstripped path."""
     stripped = F.when(p.endswith("/"), F.regexp_replace(p, "/+$", "")).otherwise(p)
     parts = F.split(stripped, "/")
     n = F.size(parts)
     parent = F.array_join(F.slice(parts, 1, F.greatest(n - F.lit(1), F.lit(0))), "/")
     gparent = F.array_join(F.slice(parts, 1, F.greatest(n - F.lit(2), F.lit(0))), "/")
+    return [
+        p,
+        stripped,
+        parent,
+        F.concat(parent, F.lit("/")),
+        gparent,
+        F.concat(gparent, F.lit("/")),
+    ]
+
+
+def candidate_paths_col(path: str | Column = "path") -> Column:
+    """array<struct<rung:int, cand_path:string>> of ladder candidates.
+
+    Pure column expression — stays inside whole-stage codegen.
+    """
+    p = F.col(path) if isinstance(path, str) else path
 
     def rung(i: int, cand: Column) -> Column:
         return F.struct(F.lit(i).alias("rung"), cand.alias("cand_path"))
 
-    full = F.array(
-        rung(0, p),
-        rung(1, stripped),
-        rung(2, parent),
-        rung(3, F.concat(parent, F.lit("/"))),
-        rung(4, gparent),
-        rung(5, F.concat(gparent, F.lit("/"))),
-    )
+    full = F.array(*(rung(i, c) for i, c in enumerate(_rung_cands(p))))
     # Path-less request → single host-only candidate (NULL path, see the
     # pure spec above for why NULL and not "").
     return F.when(
@@ -144,23 +151,10 @@ def ladder_probe_expr(
     CodegenFallback — interpreted, one closure call per rung per row — and
     measured ~0.8 s/query slower at sf0.1 than this cascade of six
     GetMapValue lookups, which stays inside whole-stage codegen end to end
-    (round 7; the rung definitions MUST stay in lockstep with
-    ladder_candidates above, pinned by tests/test_normalize.py).
+    (round 7).
     """
     p = F.col(path_col) if isinstance(path_col, str) else path_col
-    stripped = F.when(p.endswith("/"), F.regexp_replace(p, "/+$", "")).otherwise(p)
-    parts = F.split(stripped, "/")
-    n = F.size(parts)
-    parent = F.array_join(F.slice(parts, 1, F.greatest(n - F.lit(1), F.lit(0))), "/")
-    gparent = F.array_join(F.slice(parts, 1, F.greatest(n - F.lit(2), F.lit(0))), "/")
-    cands = [
-        p,
-        stripped,
-        parent,
-        F.concat(parent, F.lit("/")),
-        gparent,
-        F.concat(gparent, F.lit("/")),
-    ]
+    cands = _rung_cands(p)
 
     def hit(i: int, cand: Column) -> Column:
         return F.struct(

@@ -1,4 +1,5 @@
-"""Resumable per-partition checkpoints (idempotent resume) + metrics rows."""
+"""Resumable per-partition checkpoints (idempotent resume) + metrics rows
+and error formatting."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgtm.checkpoints import bucket_col, completed_buckets, run_with_checkpoints
+from kgtm.materialize import read_metrics, write_table
 from kgtm.metrics import MetricsCollector, error_struct, per_partition_counts
 from kgtm.pipeline import build_triples
 from kgtm.transcripts import (
@@ -93,15 +95,21 @@ def test_error_struct_chain():
     assert "outer" in s["message"]
 
 
-def test_metrics_collector(spark):
+def test_metrics_collector(spark, tmp_path):
     mc = MetricsCollector()
     with mc.stage("extract", n_rows_in=10) as rec:
         rec["n_rows_out"] = 7
     with pytest.raises(ValueError):
         with mc.stage("boom"):
             raise ValueError("nope")
-    df = mc.to_df(spark)
-    rows = {r.stage: r for r in df.collect()}
+    store = str(tmp_path / "store")
+    commit = write_table(
+        spark.range(3).withColumn("source", F.lit("s")), store, metrics=mc
+    )
+    rows = {r.stage: r for r in read_metrics(spark, store).collect()}
+    assert set(rows) == {"extract", "boom", "materialize"}
+    assert {r.commit for r in rows.values()} == {commit["commit_id"]}
+    assert rows["extract"].n_rows_in == 10
     assert rows["extract"].n_rows_out == 7
     assert rows["extract"].duration_s >= 0
     assert rows["boom"].error.type == "ValueError"
@@ -113,3 +121,15 @@ def test_per_partition_counts(spark, events):
     rows = m.collect()
     assert sum(r.n_rows_out for r in rows) == events.count()
     assert all(r.stage == "assembly" for r in rows)
+
+
+def test_format_error_message_head_tail():
+    from kgtm.metrics import format_error_message
+
+    short = "\n".join(f"line{i}" for i in range(20))
+    assert format_error_message(short) == short
+    long = "\n".join(f"line{i}" for i in range(50))
+    out = format_error_message(long).splitlines()
+    assert out[:10] == [f"line{i}" for i in range(10)]
+    assert out[-10:] == [f"line{i}" for i in range(40, 50)]
+    assert "............" in "\n".join(out)

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgtm.cli import build_parser, parse_stamp
-from kgtm.materialize import read_metrics, read_triples, write_triples
+from kgtm.materialize import read_metrics, read_triples, write_table, write_triples
 from kgtm.pipeline import build_triples
 from kgtm.synth import SynthConfig, generate
 from kgtm.transcripts import (
@@ -51,6 +51,55 @@ def test_write_and_read_triples(spark, events, tmp_path):
     assert 0 < linked_only.count() < back.count()
     m = read_metrics(spark, str(tmp_path / "store"))
     assert m.filter(F.col("stage") == "materialize").count() == 1
+
+
+def test_write_table_runs_one_job_per_commit(spark, tmp_path):
+    """A parquet commit costs the data write and nothing else: the commit's
+    metrics ride in the manifest, so no second job writes a metrics/ tree."""
+    df = spark.createDataFrame(
+        [(i, f"s{i % 3}") for i in range(30)], "x long, source string"
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    store = tmp_path / "store"
+    bare = jobs(
+        f"bare-write-{tmp_path.name}",
+        lambda: df.write.partitionBy("source").parquet(str(tmp_path / "bare")),
+    )
+    commit = jobs(f"write-table-{tmp_path.name}", lambda: write_table(df, str(store)))
+    assert commit == bare
+    assert not (store / "metrics").exists()
+
+
+def test_read_metrics_is_manifest_gated(spark, tmp_path):
+    """read_metrics reads committed manifests only: a legacy-layout
+    metrics/commit=<id> directory with no manifest (a writer that crashed
+    before its rename) stays invisible, and an empty store reads as a typed
+    empty frame."""
+    from kgtm.schemas import METRICS_SCHEMA
+
+    store = str(tmp_path / "store")
+    columns = [*METRICS_SCHEMA.fieldNames(), "commit"]
+    c = write_table(spark.range(5).withColumn("source", F.lit("s")), store)
+    spark.createDataFrame(
+        [(-1, "orphaned", None, None, None, 0.5, None)], METRICS_SCHEMA
+    ).write.parquet(f"{store}/metrics/commit=c0ddba11c0de")
+    m = read_metrics(spark, store)
+    assert m.columns == columns
+    assert m.schema["commit"].dataType.simpleString() == "string"
+    assert [(r.stage, r.commit) for r in m.collect()] == [
+        ("materialize", c["commit_id"])
+    ]
+    empty = read_metrics(spark, str(tmp_path / "empty"))
+    assert empty.schema == m.schema and empty.count() == 0
 
 
 def test_commit_snapshot_isolation_and_time_travel(spark, events, tmp_path):
@@ -177,7 +226,9 @@ def test_expire_commits_and_vacuum(spark, events, tmp_path):
     # a YOUNG orphan is protected by the grace period
     assert vacuum(store, min_age_ms=3600 * 1000) == []
     assert orphan.exists()
-    # a crashed writer orphans the METRICS twin too — vacuum sweeps both
+    # a store written before metrics moved into the manifest kept them under
+    # metrics/commit=<id>; once the commit is gone that directory is an
+    # orphan of the legacy layout — vacuum sweeps it like a data orphan
     m_orphan = Path(store) / "metrics" / "commit=0ddba11c0de0"
     m_orphan.mkdir(parents=True)
     (m_orphan / "part-0.bin").write_bytes(b"x")

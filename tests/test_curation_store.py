@@ -1,6 +1,8 @@
-"""The curation ledger store (kgtm.curation): delta appends in derive and
-state mode, the materialized corpus-state tables and their upgrade path,
-compaction, chain-linked resolution, successor claims and re-curation."""
+"""Corpus curation (kgtm.curation) and its ledger store: drop reasons,
+incremental parity with a full run, ledger versions and time travel, delta
+appends in derive and state mode, the materialized corpus-state tables and
+their upgrade path, compaction, chain-linked resolution, successor claims
+and re-curation."""
 
 from __future__ import annotations
 
@@ -1041,3 +1043,201 @@ def test_recuration_replaces_state_landed_during_curation(
     b2 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
     cur.append_curated_batch(spark, store, new_docs=b2)
     assert cur.read_ledger(spark, store).count() == 140
+
+
+# ---------------------------------------------------------------------------
+# curation decisions, incremental parity and ledger versions
+# ---------------------------------------------------------------------------
+
+
+def test_corpus_curation_all_drop_reasons(spark):
+    """Every document lands in exactly one bucket; all three drop reasons
+    fire; survivor picks are min-doc_id at both dedup stages."""
+    from kgtm.curation import curate_documents
+
+    good = (
+        "the quick brown fox jumps over the lazy dog and the story of the "
+        "garden is a long one for all of the people in the world to read"
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, good),                      # kept (cluster survivor)
+            (2, good),                      # exact dup of 1 → exact-dup
+            (3, good + " almost"),          # near-dup of 1 → near-dup
+            (4, "x!!! ??? ;;; ,,,"),        # punctuation soup → low-quality
+            (5, good.replace("fox", "owl").replace("dog", "cat").replace("garden", "harbor").replace("story", "report").replace("read", "hear")),  # kept
+        ],
+        "doc_id long, text string",
+    )
+    out = {r.doc_id: r for r in curate_documents(docs, min_quality=0.45, jaccard_threshold=0.5).collect()}
+    assert len(out) == 5
+    assert out[1].kept and out[1].drop_reason is None
+    assert not out[2].kept and out[2].drop_reason == "exact-dup"
+    assert not out[3].kept and out[3].drop_reason == "near-dup"
+    assert not out[4].kept and out[4].drop_reason == "low-quality"
+    assert out[5].kept
+
+
+def test_incremental_curate_equals_full_run(spark, documents):
+    """Append-only batch curation: new-doc decisions from incremental_curate
+    must equal a full curate_documents over old∪new, row for row — on the
+    real sf corpus split at an id boundary, and including exact-dup-vs-old,
+    near-dup-vs-old, transitive-via-dropped-old, and all-new-cluster cases."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from kgtm.curation import curate_documents, incremental_curate
+
+    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
+
+    def check(all_docs, split):
+        old = all_docs.filter(F.col("doc_id") < split)
+        new = all_docs.filter(F.col("doc_id") >= split)
+        old_ledger = curate_documents(old, min_quality=0.45, jaccard_threshold=0.5)
+        inc = incremental_curate(old, old_ledger, new)
+        full = curate_documents(all_docs, min_quality=0.45, jaccard_threshold=0.5)
+        got = sorted(map(tuple, inc.select(*cols).collect()))
+        want = sorted(
+            map(tuple, full.filter(F.col("doc_id") >= split).select(*cols).collect())
+        )
+        assert got == want
+        return {r[0]: r for r in got}
+
+    # real corpus, split at the 60% boundary (id filter, not limit(): an
+    # unordered limit can pick different rows in each of the four plans)
+    docs = documents.filter(F.col("doc_id") < 300)
+    check(docs, 180)
+
+    # planted corner cases
+    good = (
+        "the quick brown fox jumps over the lazy dog and the story of the "
+        "garden is a long one for all of the people in the world to read"
+    )
+    g2 = good.replace("fox", "owl").replace("dog", "cat").replace("garden", "harbor")
+    planted = spark.createDataFrame(
+        [
+            (1, good),                 # old survivor
+            (2, good + " almost"),     # old near-dup of 1 (dropped)
+            (3, g2),                   # old survivor, distinct cluster
+            (10, good),                # new: exact dup of old survivor
+            (11, good + " almost ok"), # new: near-dup ONLY of dropped old 2
+                                       #      (transitive into 1's cluster)
+            (12, g2 + " extra bit"),   # new: near-dup of old survivor 3
+            (13, "x!!! ??? ;;; ,,,"),  # new: low quality
+            (14, good.replace("the", "a certain").replace("people", "birds")),
+            (15, good.replace("the", "a certain").replace("people", "birds")),
+                                       # new×new exact pair: 14 keeps, 15 drops
+        ],
+        "doc_id long, text string",
+    )
+    got = check(planted, 10)
+    assert not got[10][2] and got[10][3] == "exact-dup"
+    assert not got[11][2] and got[11][3] == "near-dup"
+    assert not got[12][2] and got[12][3] == "near-dup"
+    assert not got[13][2] and got[13][3] == "low-quality"
+    assert got[14][2] and not got[15][2] and got[15][3] == "exact-dup"
+
+    # the monotone-id guard (the parity proof's precondition) fires loudly
+    old = planted.filter(F.col("doc_id") >= 10)
+    new = planted.filter(F.col("doc_id") < 10)
+    with _pytest.raises(ValueError, match="monotone"):
+        incremental_curate(old, curate_documents(old), new)
+
+    # parameter-drift guard: a ledger built under a different min_quality
+    # disagrees with the new threshold on its own recorded scores → raises
+    old2 = planted.filter(F.col("doc_id") < 10)
+    stale = curate_documents(old2, min_quality=0.45)
+    with _pytest.raises(ValueError, match="different threshold"):
+        incremental_curate(
+            old2, stale, planted.filter(F.col("doc_id") >= 10), min_quality=0.99
+        )
+
+
+def test_append_curated_batch_versions_the_corpus(spark, documents, tmp_path):
+    """Store-integrated incremental ingest: batch 2 appends a new ledger
+    version whose decisions equal a full re-curation for the batch rows and
+    keep the old rows immutable; thresholds come from the previous commit's
+    manifest (no drift), and as_of still reads version 1."""
+    from kgtm.curation import (
+        append_curated_batch,
+        curate_documents,
+        persist_ledger,
+        read_ledger,
+    )
+
+    store = str(tmp_path / "store")
+    old = documents.filter(F.col("doc_id") < 200)
+    new = documents.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 260))
+    c1 = persist_ledger(
+        curate_documents(old, min_quality=0.4, jaccard_threshold=0.5),
+        store,
+        min_quality=0.4,
+        jaccard_threshold=0.5,
+    )
+    # NOTE: no thresholds passed — they must be read from c1's manifest
+    c2 = append_curated_batch(spark, store, old, new)
+    assert c2["curation_params"] == {"min_quality": 0.4, "jaccard_threshold": 0.5}
+
+    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
+    latest = read_ledger(spark, store)
+    assert latest.count() == 260
+    full = curate_documents(
+        documents.filter(F.col("doc_id") < 260), min_quality=0.4, jaccard_threshold=0.5
+    )
+    got_new = sorted(
+        map(tuple, latest.filter(F.col("doc_id") >= 200).select(*cols).collect())
+    )
+    want_new = sorted(
+        map(tuple, full.filter(F.col("doc_id") >= 200).select(*cols).collect())
+    )
+    assert got_new == want_new
+    # old rows immutable; version 1 still readable as-of
+    v1 = sorted(map(tuple, read_ledger(spark, store, as_of=c1["seq"]).select(*cols).collect()))
+    assert v1 == sorted(
+        map(tuple, latest.filter(F.col("doc_id") < 200).select(*cols).collect())
+    )
+
+    # guard: old_docs must be exactly the base corpus (a shrunken corpus
+    # would silently keep batch docs duplicating the missing ones)
+    more = documents.filter((F.col("doc_id") >= 260) & (F.col("doc_id") < 280))
+    with pytest.raises(ValueError, match="does not match the base ledger"):
+        append_curated_batch(spark, store, old.limit(10), more)
+
+    # guard: unrecorded thresholds refuse to guess defaults
+    store2 = str(tmp_path / "store2")
+    persist_ledger(curate_documents(old), store2)  # no params recorded
+    with pytest.raises(ValueError, match="refusing to guess"):
+        append_curated_batch(spark, store2, old, new)
+
+
+def test_curation_ledger_time_travel(spark, documents, tmp_path):
+    """Corpus versions time-travel through the commit store: each curation
+    run is one snapshot commit; read_ledger(as_of=seq) reproduces that run's
+    decision set exactly, and the latest read returns the newest run."""
+    from kgtm.curation import curate_documents, persist_ledger, read_ledger
+
+    docs = documents.filter(F.col("doc_id") < 200)
+    store = str(tmp_path / "store")
+    l1 = curate_documents(docs, min_quality=0.45, jaccard_threshold=0.5)
+    c1 = persist_ledger(l1, store, min_quality=0.45, jaccard_threshold=0.5)
+    l2 = curate_documents(docs, min_quality=0.99)  # stricter: everything drops
+    c2 = persist_ledger(l2, store, min_quality=0.99)
+    assert c2["seq"] > c1["seq"]
+    assert c2["curation_params"]["min_quality"] == 0.99
+
+    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
+
+    def snap(df):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    assert snap(read_ledger(spark, store, as_of=c1["seq"])) == snap(l1)
+    assert snap(read_ledger(spark, store)) == snap(l2)
+    # the two versions genuinely differ (else time travel proves nothing)
+    assert snap(l1) != snap(l2)
+    # ledger commits are invisible to the triples table and vice versa
+    import pytest as _pytest
+
+    from kgtm.materialize import read_table
+
+    with _pytest.raises(FileNotFoundError):
+        read_table(spark, store, table="triples")

@@ -3,6 +3,7 @@ text stats, similarity search, multimodal plumbing."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -466,3 +467,143 @@ def test_contamination_pairs_flags_embedded_benchmark(spark):
     }
     assert out[(0, 100)] == 1.0
     assert (1, 100) not in out and (2, 100) not in out
+
+
+# ---------------------------------------------------------------------------
+# hot-shingle skew cap (default on); empty docs in sketch dedup
+# ---------------------------------------------------------------------------
+
+
+def test_ngram_jaccard_skew_cap_drops_stop_phrase_only(spark, capsys):
+    """Every doc shares one stop phrase; one genuine near-dup pair shares
+    unique shingles too. The cap must kill the stop-phrase fan-out without
+    losing the genuine pair."""
+    from kgtm.dedup import ngram_jaccard_pairs
+
+    stop = "the quick brown fox jumps over the lazy dog again"
+    docs = [(i, f"{stop} unique tail number {i} content {i * 7} here") for i in range(40)]
+    # a genuine near-dup pair: same tail, one word differs
+    docs.append((100, f"{stop} shared tail alpha beta gamma delta epsilon zeta"))
+    docs.append((101, f"{stop} shared tail alpha beta gamma delta epsilon eta"))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    capped = ngram_jaccard_pairs(
+        df, threshold=0.4, max_shingle_df=10, log_dropped=True
+    ).collect()
+    uncapped = ngram_jaccard_pairs(df, threshold=0.4, max_shingle_df=None).collect()
+    assert {(r.id_a, r.id_b) for r in capped} == {(100, 101)}
+    # the genuine pair's EXACT jaccard differs (capped drops shared hot
+    # shingles from both |∩| and the per-doc counts) but survives
+    assert {(r.id_a, r.id_b) for r in uncapped} >= {(100, 101)}
+    assert "dropped" in capsys.readouterr().out
+
+
+def test_empty_docs_never_pair_in_sketch_dedup(spark):
+    """Empty/too-short docs have empty shingle sets: exact Jaccard pairs them
+    with nothing, so MinHash/SimHash must not either (their all-zero
+    signatures used to pair every empty doc with every other at est=1.0 and
+    form one quadratic hot bucket)."""
+    from kgtm.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs
+    from kgtm.fuzzy_link import link_fuzzy
+
+    docs = spark.createDataFrame(
+        [(0, ""), (1, ""), (2, "ab"), (3, None),
+         (4, "a real document body with enough words to shingle properly"),
+         (5, "a real document body with enough words to shingle nicely")],
+        "doc_id long, text string",
+    )
+    assert {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, threshold=0.2).collect()} == {(4, 5)}
+    assert {(r.id_a, r.id_b) for r in simhash_pairs(docs, max_hamming=8).collect()} == {(4, 5)}
+    assert {(r.id_a, r.id_b) for r in ngram_jaccard_pairs(docs, threshold=0.2).collect()} == {(4, 5)}
+
+    mentions = spark.createDataFrame([("",), ("ab",), ("click",)], "surface string")
+    labels = spark.createDataFrame(
+        [("click", "http://h/click"), ("x", "http://h/x")], "label string, ontology_iri string"
+    )
+    out = {r.surface: r for r in link_fuzzy(mentions, labels, threshold=0.3).collect()}
+    assert out["click"].is_linked
+    assert not out[""].is_linked and not out["ab"].is_linked
+
+
+# ---------------------------------------------------------------------------
+# vectorized winnowing: parity with the per-character rolling-hash reference
+# ---------------------------------------------------------------------------
+
+
+def _winnow_reference(s: str, k: int = 5, window: int = 4) -> int:
+    """The pre-vectorization per-character rolling-hash implementation."""
+    if not s or len(s) < k:
+        return 0
+    with np.errstate(over="ignore"):
+        b = np.frombuffer(s.lower().encode("utf-8", "ignore"), dtype=np.uint8)
+        n = len(b) - k + 1
+        base = np.uint64(257)
+        h = np.zeros(n, dtype=np.uint64)
+        acc = np.uint64(0)
+        powk = np.uint64(1)
+        for _ in range(k):
+            powk *= base
+        for i in range(k):
+            acc = acc * base + np.uint64(b[i])
+        h[0] = acc
+        for i in range(1, n):
+            acc = acc * base - np.uint64(b[i - 1]) * powk + np.uint64(b[i + k - 1])
+            h[i] = acc
+        if n <= window:
+            mins = np.array([h.min()], dtype=np.uint64)
+        else:
+            sw = np.lib.stride_tricks.sliding_window_view(h, window)
+            mins = np.unique(sw.min(axis=1))
+        out = np.uint64(0)
+        for m in mins:
+            out ^= m * np.uint64(0x9E3779B97F4A7C15)
+        return int(out.astype(np.int64))
+
+
+def test_winnow_vectorized_matches_rolling_reference():
+    from kgtm.textstats import winnow_fingerprint_series
+
+    rng = np.random.default_rng(7)
+    alphabet = list("abcdefg hij")
+    texts = [
+        "".join(rng.choice(alphabet, size=int(n)))
+        for n in rng.integers(0, 200, size=60)
+    ] + ["", "abc", "exact"]
+    got = winnow_fingerprint_series(pd.Series(texts)).tolist()
+    want = [_winnow_reference(t) for t in texts]
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# trigram language id on held-out sentences
+# ---------------------------------------------------------------------------
+
+
+def test_lang_id_trigram_on_held_out_sentences():
+    """The NB classifier must identify held-out sentences (none appear in
+    LANG_SAMPLES) — strictly stronger than the marker-word heuristic, which
+    scores 'und' on several of these."""
+    from kgtm.textstats import lang_id_trigram_series
+
+    cases = {
+        "the weather report said it would rain tomorrow afternoon": "en",
+        "my neighbour bought another second hand car last week": "en",
+        "la reunion de manana sera en la oficina central": "es",
+        "necesito comprar verduras frescas para la cena": "es",
+        "das wetter wird morgen wahrscheinlich besser werden": "de",
+        "ich moechte naechste woche nach berlin fahren": "de",
+        "la reunion de demain aura lieu au bureau principal": "fr",
+        "je voudrais acheter des legumes frais pour le diner": "fr",
+        "vorrei comprare delle verdure fresche per la cena di stasera": "it",
+        "il treno per milano parte domani mattina dalla stazione": "it",
+        "preciso comprar legumes frescos para o jantar de hoje": "pt",
+        "o trem para lisboa sai amanha de manha da estacao": "pt",
+        "ik wil volgende week met de trein naar amsterdam reizen": "nl",
+        "het weer wordt morgen waarschijnlijk veel beter dan vandaag": "nl",
+        "jag skulle vilja aka tag till stockholm nasta vecka": "sv",
+        "vadret blir formodligen mycket battre i morgon an idag": "sv",
+        "": "und",
+        "xy": "und",
+    }
+    got = lang_id_trigram_series(pd.Series(list(cases))).tolist()
+    assert got == list(cases.values()), dict(zip(cases, got))

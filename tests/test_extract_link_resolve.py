@@ -1,4 +1,5 @@
-"""Extraction, linking (first-hit-wins at scale), version resolution."""
+"""Extraction, linking (first-hit-wins at scale), version resolution, the
+restricted-access deny gate, failover and incremental re-linking."""
 
 from __future__ import annotations
 
@@ -14,8 +15,14 @@ from kgtm.extract import (
     make_gazetteer_matcher,
 )
 from kgtm.link import deny_unlinked, link_mentions
+from kgtm.oracles import MENTION_LINK_CTES
+from kgtm.pipeline import PipelineConfig, build_triples
 from kgtm.resolve import asof_snapshots, latest_snapshots, resolve_links
-from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA, ONTOLOGY_SNAPSHOTS_SCHEMA
+from kgtm.schemas import (
+    ONTOLOGY_INDEX_SCHEMA,
+    ONTOLOGY_SNAPSHOTS_SCHEMA,
+    TRANSCRIPTS_SCHEMA,
+)
 from kgtm.transcripts import events_to_transcripts, ontology_index_df, ontology_snapshots_df
 
 
@@ -262,3 +269,249 @@ def test_archivo_api_url_assembly(spark):
     # NULL format propagates (early-format-gate 500 analog)
     df2 = spark.createDataFrame([("http://h/a", None)], "ontology_iri string, format string")
     assert df2.select(archivo_api_url_col().alias("u")).collect()[0].u is None
+
+
+# ---------------------------------------------------------------------------
+# restrictedAccess deny gate: membership, not snapshot presence
+# ---------------------------------------------------------------------------
+
+
+def _mini_world(spark):
+    import datetime as dt
+
+    tr = spark.createDataFrame(
+        [
+            ("c1", 0, "user", "agent uses http://h/a now", None, dt.datetime(2024, 1, 1)),
+            ("c1", 1, "user", "agent uses http://h/nosnap now", None, dt.datetime(2024, 1, 1)),
+            ("c1", 2, "user", "agent uses http://evil.example/x now", None, dt.datetime(2024, 1, 1)),
+        ],
+        TRANSCRIPTS_SCHEMA,
+    )
+    idx = spark.createDataFrame(
+        [("http://h/a", "h", "/a", "slash"), ("http://h/nosnap", "h", "/nosnap", "slash")],
+        ONTOLOGY_INDEX_SCHEMA,
+    )
+    snaps = spark.createDataFrame(
+        [("http://h/a", dt.datetime(2024, 6, 1), "snap:a", "url:a", [])],
+        ONTOLOGY_SNAPSHOTS_SCHEMA,
+    )
+    return tr, idx, snaps
+
+
+def test_restricted_access_denies_on_membership_only(spark):
+    """The reference denies on dictionary membership (proxy_logic.py:39-44):
+    a linked ontology with NO archived snapshot is a 404 analog, not a 403 —
+    it must survive the deny gate."""
+    tr, idx, snaps = _mini_world(spark)
+    out = build_triples(
+        tr, idx, snaps,
+        PipelineConfig(restricted_access=True, persist_intermediate=False),
+    ).collect()
+    objs = {r.obj for r in out}
+    assert "http://h/a" in objs  # linked + snapshot
+    assert "http://h/nosnap" in objs  # linked, snapshotless → kept (404, not 403)
+    assert not any("evil.example" in o for o in objs)  # non-member → denied
+
+
+def test_restricted_access_keeps_linked_under_original_mode(spark):
+    """onto_version='original' has snapshot_iri NULL for EVERY row by design;
+    the old snapshot-presence filter dropped all http objects here."""
+    tr, idx, snaps = _mini_world(spark)
+    out = build_triples(
+        tr, idx, snaps,
+        PipelineConfig(
+            onto_version="original", restricted_access=True,
+            persist_intermediate=False,
+        ),
+    ).collect()
+    objs = {r.obj for r in out}
+    assert {"http://h/a", "http://h/nosnap"} <= objs
+    assert not any("evil.example" in o for o in objs)
+
+
+def test_build_triples_failover_with_live_legs(spark):
+    """End-to-end failover through the flagship: live-accepted objects keep
+    their ORIGINAL surface and no snapshot; rejected live legs fall back to
+    the latest archived snapshot."""
+    from kgtm.pipeline import PipelineConfig, build_triples
+
+    tr, idx, snaps = _mini_world(spark)
+    with pytest.raises(ValueError, match="live_legs"):
+        build_triples(
+            tr, idx, snaps,
+            PipelineConfig(
+                onto_version="originalFailoverLiveLatest",
+                persist_intermediate=False,
+            ),
+        )
+
+    live = spark.createDataFrame(
+        [
+            ("http://h/a", 200, "text/turtle", "text/turtle"),  # live accepted
+            ("http://h/nosnap", 500, "text/turtle", "text/turtle"),  # archived; none → not-found
+        ],
+        "surface string, live_status int, live_content_type string, accept_header string",
+    )
+    out = build_triples(
+        tr, idx, snaps,
+        PipelineConfig(
+            onto_version="originalFailoverLiveLatest",
+            live_legs=live,
+            persist_intermediate=False,
+        ),
+    ).collect()
+    by_obj = {r.obj: r for r in out}
+    assert by_obj["http://h/a"].source == "original"
+    assert by_obj["http://h/a"].obj_snapshot_iri is None
+    # linked but live-rejected and snapshotless → not-found outcome
+    assert by_obj["http://h/nosnap"].source == "not-found"
+    # outside the dictionary entirely → unlinked passthrough
+    assert by_obj["http://evil.example/x"].source == "unlinked"
+
+
+# ---------------------------------------------------------------------------
+# multi-IRI-per-turn: engine vs DuckDB mention CTE parity; mention id width
+# ---------------------------------------------------------------------------
+
+
+def test_multi_iri_oracle_parity(spark):
+    """The DuckDB mention CTE must extract ALL IRIs per turn (the engine
+    does); parity on a turn with 3 IRIs, one of them repeated."""
+    import duckdb
+
+    from kgtm.extract import extract_mentions
+    from kgtm.link import link_mentions
+    from kgtm.transcripts import ontology_index_df
+
+    texts = [
+        ("c1", 0, "see http://onto.example.org/view and http://onto.example.org/click/ plus http://unknown.example.net/z"),
+        ("c1", 1, "dup http://onto.example.org/view then http://onto.example.org/view again"),
+        ("c2", 0, "none here"),
+    ]
+    tr = spark.createDataFrame(texts, "conv_id string, turn_idx int, text string")
+    linked = link_mentions(extract_mentions(tr), ontology_index_df(spark))
+    got = sorted(
+        (r.conv_id, r.turn_idx, r.surface, r.is_linked, r.ontology_iri)
+        for r in linked.collect()
+    )
+
+    tr_vals = ",\n".join(
+        f"('{c}', {t}, '{x}')" for c, t, x in texts
+    )
+    # MENTION_LINK_CTES is already rendered (inline dictionary VALUES); only
+    # the transcripts CTE is swapped for the literal multi-IRI rows.
+    want = sorted(
+        tuple(r) for r in duckdb.sql(
+            f"""WITH transcripts AS (
+                  SELECT * FROM (VALUES {tr_vals}) AS t(conv_id, turn_idx, text)
+                ), {MENTION_LINK_CTES}
+                SELECT conv_id, turn_idx, surface, is_linked, ontology_iri FROM links
+            """
+        ).fetchall()
+    )
+    assert got == want
+    # 3 + 2 mentions from the IRI turns (dup IRIs are separate mentions)
+    assert len(got) == 5
+
+
+def test_mention_id_is_128_bit_and_distinct_per_pos(spark):
+    from kgtm.extract import extract_mentions
+
+    tr = spark.createDataFrame(
+        [("c1", 0, "x http://h/a y http://h/a z")],
+        "conv_id string, turn_idx int, text string",
+    )
+    rows = extract_mentions(tr).collect()
+    assert len(rows) == 2
+    ids = {r.mention_id for r in rows}
+    assert len(ids) == 2  # same surface, different pos → distinct ids
+    assert all(isinstance(i, str) and len(i) == 32 for i in ids)
+
+
+# ---------------------------------------------------------------------------
+# incremental re-link (dictionary-delta)
+# ---------------------------------------------------------------------------
+
+
+def test_incremental_relink_equals_full(spark, events):
+    from kgtm.extract import extract_mentions
+    from kgtm.link import incremental_relink, link_mentions
+    from kgtm.transcripts import (
+        events_to_transcripts,
+        mutated_index_rows,
+        ontology_index_df,
+    )
+
+    m = extract_mentions(events_to_transcripts(events))
+    old = ontology_index_df(spark)
+    new = spark.createDataFrame(mutated_index_rows(), old.schema)
+    linked_old = link_mentions(m, old)
+
+    inc = incremental_relink(linked_old, old, new)
+    full = link_mentions(m, new)
+    cols = ["mention_id", "surface", "is_linked", "rung", "ontology_iri", "canonical_path"]
+    got = sorted(map(tuple, inc.select(*cols).collect()))
+    want = sorted(map(tuple, full.select(*cols).collect()))
+    assert got == want
+
+    # the delta actually flipped something: /click mentions lost their link
+    by_surface = {r.surface: r for r in inc.collect()}
+    clicks = [r for s, r in by_surface.items() if "/click" in s]
+    assert clicks and all(not r.is_linked for r in clicks)
+    views = [
+        r for s, r in by_surface.items() if s.endswith("onto.example.org/view")
+    ]
+    assert views and all(r.is_linked for r in views)
+
+
+def test_incremental_relink_rejects_v1_int64_mention_id(spark, events):
+    """A linkage table materialized under the old int64 mention_id format
+    must fail loudly (re-materialize message), not silently produce ids that
+    never join the new string md5 ids."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from kgtm.extract import extract_mentions
+    from kgtm.link import incremental_relink, link_mentions
+    from kgtm.transcripts import (
+        events_to_transcripts,
+        mutated_index_rows,
+        ontology_index_df,
+    )
+
+    m = extract_mentions(events_to_transcripts(events))
+    old = ontology_index_df(spark)
+    new = spark.createDataFrame(mutated_index_rows(), old.schema)
+    v1_linked = link_mentions(m, old).withColumn(
+        "mention_id", F.xxhash64("conv_id", "turn_idx", "surface")
+    )
+    with pytest.raises(TypeError, match="re-materialize"):
+        incremental_relink(v1_linked, old, new)
+
+
+def test_incremental_relink_detects_repointed_entry(spark, events):
+    """An index entry re-pointed to a DIFFERENT ontology IRI keeps its
+    (host, path) key — the delta detection must still flag it."""
+    from kgtm.extract import extract_mentions
+    from kgtm.link import incremental_relink, link_mentions
+    from kgtm.transcripts import events_to_transcripts, ontology_index_df
+
+    m = extract_mentions(events_to_transcripts(events))
+    old = ontology_index_df(spark)
+    new = old.withColumn(
+        "ontology_iri",
+        F.when(
+            F.col("path") == "/view", F.lit("http://onto.example.org/view-v2")
+        ).otherwise(F.col("ontology_iri")),
+    )
+    linked_old = link_mentions(m, old).localCheckpoint(eager=True)
+    inc = incremental_relink(linked_old, old, new)
+    full = link_mentions(m, new)
+    cols = ["mention_id", "is_linked", "ontology_iri"]
+    assert sorted(map(tuple, inc.select(*cols).collect())) == sorted(
+        map(tuple, full.select(*cols).collect())
+    )
+    assert (
+        inc.filter(F.col("ontology_iri") == "http://onto.example.org/view-v2").count()
+        > 0
+    )
