@@ -944,7 +944,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tests/test_gate_contract.py enforces the cap. Entries rotated OUT of
     # the gate to stay under the cap keep their value checks as pytests:
     # value_percentiles_approx (bounded-rank-error pytest,
-    # test_round4.py:314) and simhash_wide_hamming (DuckDB all-pairs twin,
+    # tests/test_dataops.py) and simhash_wide_hamming (DuckDB all-pairs twin,
     # test_gate_contract.py).
     return {
         # KG-construction pipeline (reference semantics)

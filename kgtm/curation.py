@@ -28,6 +28,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgtm import session
 from kgtm.dedup import dedup_clusters, ngram_jaccard_pairs
 from kgtm.textstats import quality_features
 
@@ -153,20 +154,21 @@ def _pruned_flat_lookup(
     flat: DataFrame,
     shingles: DataFrame,
     n_buckets: int | None,
-    max_collect: int = 4096,
 ) -> DataFrame:
     """Rows of a (bucketed) stored shingle flat whose shingle is in the
     SMALL set ``shingles`` — the read path where directory bucketing
-    actually prunes: the set is collected (capped at ``max_collect``; the
-    newly-hot set is typically 0-10 shingles per append), its bucket ids
+    actually prunes: the set is collected (capped at
+    ``session.LITERAL_MAX_ROWS``; the newly-hot set is typically 0-10
+    shingles per append), its bucket ids
     computed driver-side, and the scan filtered to sb ∈ those buckets
     (partition pruning skips every other directory) plus shingle ∈ values.
     Falls back to the broadcast semi-join (full map-side-filtered scan —
     always correct, just unpruned) when the set is larger than the cap or
     the store predates bucketing. ``n_buckets`` must be the value recorded
     in the store's state manifests — a drifted constant would mis-prune."""
-    rows = shingles.limit(max_collect + 1).collect()
-    if len(rows) <= max_collect:
+    cap = session.LITERAL_MAX_ROWS
+    rows = shingles.limit(cap + 1).collect()
+    if len(rows) <= cap:
         vals = [r[0] for r in rows]
         if not vals:
             return flat.filter(F.lit(False))
@@ -175,7 +177,8 @@ def _pruned_flat_lookup(
             buckets = sorted({v % n_buckets for v in vals})
             out = out.filter(F.col("sb").isin(buckets))
         return out.filter(F.col("shingle").isin(vals))
-    return flat.join(F.broadcast(shingles), "shingle", "left_semi")
+    # a USING join puts the key first: keep the flat's column order
+    return flat.join(F.broadcast(shingles), "shingle", "left_semi").select(*flat.columns)
 
 
 def incremental_curate(

@@ -946,8 +946,6 @@ def contamination_pairs(
     bench_id_col: str = "bench_id",
     n: int = 5,
     threshold: float = 0.6,
-    strategy: str = "auto",
-    broadcast_max_flat_rows: int = 8_000_000,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Training-data decontamination: (doc_id, bench_id, containment) for
@@ -959,38 +957,35 @@ def contamination_pairs(
     dilute it toward 0), which is the standard eval-leakage test for
     pre-training corpora.
 
-    100 TB shape, ``strategy``:
-      - "broadcast": the benchmark side is SMALL by nature (eval suites are
-        10^4-10^6 items vs 10^9+ docs), so its shingle flat and sizes
+    100 TB shape: the plan is picked from the data. The benchmark's SHINGLE
+    FLAT is counted once (one cheap job on the already-checkpointed
+    small-by-assumption side) and compared with ``session.BROADCAST_MAX_ROWS``:
+      - at or under the cap, the benchmark side is broadcast: eval suites
+        are 10^4-10^6 items vs 10^9+ docs, so its shingle flat and sizes
         broadcast; the corpus is shingled in one scan and never self-joins —
         the only shuffle is the per-(doc, bench) intersection count over
         rows that actually collide.
-      - "shuffle": no size assumption — a plain shuffle join on the shingle
-        hash, for the day someone passes a held-out SHARD as "benchmark"
-        (round-4 verdict item 5: the broadcast assumption must degrade
-        gracefully, not OOM the executors). Pair it with ``max_shingle_df``
-        (the hot-shingle cap from the Jaccard operators, applied to BOTH
-        flats so numerator and denominator stay consistent): stop-phrase
-        shingles shared by both huge sides are exactly the skew that
-        explodes a shuffle join. With the cap, containment is computed over
-        the capped shingle space (documented approximation — same contract
-        as ngram_jaccard_pairs); with ``max_shingle_df=None`` both
-        strategies are EXACT and provably identical (parity pytest).
-      - "auto" (default): count the benchmark's SHINGLE FLAT once (one
-        cheap job on the already-checkpointed small-by-assumption side) and
-        pick broadcast when it holds under ``broadcast_max_flat_rows``,
-        else shuffle. The gauge is flat rows, not benchmark items: what is
-        broadcast is items × n-grams-per-item (bench_id, shingle) rows, so
-        an item count would let a million long documents pass the gate and
-        OOM the executors — the exact ungraceful failure this parameter
-        exists to prevent. 8M flat rows ≈ 128 MB of key data, comfortably
-        under executor broadcast budgets.
+      - above it, a plain shuffle join on the shingle hash, for the day
+        someone passes a held-out SHARD as "benchmark" (the broadcast
+        assumption must degrade gracefully, not OOM the executors).
+    The gauge is flat rows, not benchmark items: what is broadcast is
+    items × n-grams-per-item (bench_id, shingle) rows, so an item count
+    would let a million long documents pass the gate.
+
+    ``max_shingle_df`` (the hot-shingle cap from the Jaccard operators) is
+    applied to BOTH flats so numerator and denominator stay consistent:
+    stop-phrase shingles shared by both huge sides are exactly the skew
+    that explodes a shuffle join. With the cap, containment is computed
+    over the capped shingle space (documented approximation — same
+    contract as ngram_jaccard_pairs); with ``max_shingle_df=None`` it is
+    EXACT. Either way both plans give identical rows (forced-both-ways
+    pytest).
 
     Shingles are n-gram DISTINCT sets (flat_shingles), so repeated phrases
     inside one doc count once.
     """
-    if strategy not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"strategy must be auto|broadcast|shuffle, got {strategy!r}")
+    from kgtm import session
+
     # corpus side: ONE consumer (the intersection join) — no checkpoint, the
     # scan stays streaming; benchmark side is consumed twice (join + sizes),
     # so it keeps the default checkpoint
@@ -998,13 +993,9 @@ def contamination_pairs(
     b_flat = flat_shingles(benchmark, bench_text_col, bench_id_col, n).select(
         F.col("id").alias("bench_id"), "shingle"
     )
-    if strategy == "auto":
-        # b_flat is checkpointed by flat_shingles, so this count runs over
-        # materialized rows the join reuses — no duplicated shingling work
-        n_flat = b_flat.count()
-        strategy = (
-            "broadcast" if n_flat <= broadcast_max_flat_rows else "shuffle"
-        )
+    # b_flat is checkpointed by flat_shingles, so this count runs over
+    # materialized rows the join reuses — no duplicated shingling work
+    broadcast = b_flat.count() <= session.BROADCAST_MAX_ROWS
     if max_shingle_df is not None:
         # cap over the COMBINED shingle space so a shingle dropped on one
         # side is dropped on both — |∩| and |shingles(bench)| stay consistent
@@ -1018,7 +1009,7 @@ def contamination_pairs(
         d_flat = d_flat.join(F.broadcast(hot), "shingle", "left_anti")
         b_flat = b_flat.join(F.broadcast(hot), "shingle", "left_anti")
     b_sizes = b_flat.groupBy("bench_id").agg(F.count(F.lit(1)).alias("n_b"))
-    if strategy == "broadcast":
+    if broadcast:
         b_join, s_join = F.broadcast(b_flat), F.broadcast(b_sizes)
     else:
         b_join, s_join = b_flat, b_sizes

@@ -12,7 +12,7 @@ filter ordering and the dictionary/snapshot joins broadcast.
 from __future__ import annotations
 
 import datetime as dt
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,13 +37,8 @@ class PipelineConfig:
     onto_version: str = "latestArchived"
     pin_ts: dt.datetime | None = None
     restricted_access: bool = False
-    onto_format: str = "turtle"
-    precedence: str = "default"
-    patch_accept_upstream: bool = False
-    n_salt: int = 16
     persist_intermediate: bool = True
     live_legs: DataFrame | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def build_triples(

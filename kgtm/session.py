@@ -61,10 +61,7 @@ def get_spark(
         # Measured (5-rep medians, sf0.1): resolution_outcomes 0.91->0.49,
         # flagship_triples 0.77->0.33, failover 1.04->0.63, relink
         # 0.65->0.48, turn_assembly 0.59->0.47.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("KGTM_AQE_MIN_PARTITION", "256k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for every pandas UDF / mapInPandas stage (zero per-row Python).
@@ -83,16 +80,29 @@ def get_spark(
     return builder.getOrCreate()
 
 
-#: Row cap of the literal fold: a dim with more rows than this keeps its
-#: broadcast-join plan (a map literal that size bloats the plan; Archivo
-#: itself is 1,816 entries).
+# The two size caps. Every plan picked by size reads one of them from this
+# module when it is called (never as a default argument bound at import), so
+# a test forces either plan by monkeypatching the cap: -1 forces the
+# join/shuffle side, a large value the literal/broadcast side.
+
+#: Row cap of a driver-side collect: a dim with more rows than this keeps
+#: its broadcast-join plan (a map literal that size bloats the plan; Archivo
+#: itself is 1,816 entries), and the same cap decides the other
+#: collect-or-fall-back plans (the pruned bucket lookup, the driver-side
+#: union-find of connected_components).
 LITERAL_MAX_ROWS = 4096
 
+#: Row cap of a broadcast small side (decontamination's benchmark shingle
+#: flat, the incremental span dedup's batch gram set): above it the operator
+#: shuffles both sides instead. 8M rows of 16-byte keys is about 128 MB,
+#: comfortably under executor broadcast budgets.
+BROADCAST_MAX_ROWS = 8_000_000
 
-def local_literal_rows(df, cols: list[str], max_rows: int = LITERAL_MAX_ROWS):
+
+def local_literal_rows(df, cols: list[str]):
     """The rows of ``df.select(*cols)`` when its optimized plan is a
-    driver-local literal (LocalRelation) of at most ``max_rows`` rows; None
-    otherwise.
+    driver-local literal (LocalRelation) of at most ``LITERAL_MAX_ROWS``
+    rows; None otherwise.
 
     This is the only guard of the literal fold (kgtm.link / kgtm.resolve): a
     dim that is ALREADY a plan literal can be folded into consumer plans as
@@ -108,7 +118,7 @@ def local_literal_rows(df, cols: list[str], max_rows: int = LITERAL_MAX_ROWS):
     plan = proj._jdf.queryExecution().optimizedPlan()
     if plan.getClass().getSimpleName() != "LocalRelation":
         return None
-    if plan.data().size() > max_rows:
+    if plan.data().size() > LITERAL_MAX_ROWS:
         return None
     return proj.collect()  # LocalTableScan: driver-side, no tasks
 

@@ -132,13 +132,9 @@ def _compact_query_side(queries: DataFrame) -> DataFrame:
     pays one Python-worker round-trip per near-empty partition. A
     no-shuffle coalesce of a tiny frame is one cheap task; frames that are
     not provably small pass through untouched (the decision reads the
-    plan's byte estimate, not a sandbox constant)."""
-    try:
-        size = int(
-            str(queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return queries
+    plan's byte estimate, not a sandbox constant; an unknown estimate reads
+    as Long.MaxValue, which passes the frame through)."""
+    size = int(str(queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     if size > (1 << 20):
         return queries
     return queries.coalesce(1)

@@ -123,6 +123,33 @@ def gram_instances(
     )
 
 
+def _non_first_instances(grams: DataFrame) -> DataFrame:
+    """(id, pos): every gram instance that is NOT the first instance of its
+    gram value under (id, pos) order.
+
+    The first instance per gram value is the min (id, pos) struct —
+    map-side combinable, one row per gram value out; (id, pos) is unique
+    per instance, so the struct min is a total order. Only values seen more
+    than once join back."""
+    per_gram = grams.groupBy("gh").agg(
+        F.min(F.struct("id", "pos")).alias("first"),
+        F.count(F.lit(1)).alias("cnt"),
+    )
+    return (
+        grams.join(per_gram.filter(F.col("cnt") > 1), "gh")
+        .filter(
+            (F.col("id") != F.col("first.id")) | (F.col("pos") != F.col("first.pos"))
+        )
+        .select("id", "pos")
+    )
+
+
+def _with_end(dups: DataFrame, min_words: int) -> DataFrame:
+    """(id, pos, e): a duplicate instance at ``pos`` covers words
+    [pos, pos + L - 1]."""
+    return dups.select("id", "pos", (F.col("pos") + int(min_words) - 1).alias("e"))
+
+
 def _merged_span_arrays(dups: DataFrame) -> DataFrame:
     """(id, spans: array<struct<s,e>>) — maximal merged intervals per doc,
     sorted by start, in ONE aggregation.
@@ -185,23 +212,8 @@ def dup_spans(
 ) -> DataFrame:
     """(id, s, e): maximal merged word-index intervals (inclusive) covered
     by non-first duplicate gram instances, per document."""
-    L = int(min_words)
     grams = gram_instances(df, text_col, id_col, min_words)
-    # first instance per gram value = min (id, pos) struct; map-side
-    # combinable, one row per gram value out. (id, pos) is unique per
-    # instance, so the struct min is a total order.
-    per_gram = grams.groupBy("gh").agg(
-        F.min(F.struct("id", "pos")).alias("first"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    dups = (
-        grams.join(per_gram.filter(F.col("cnt") > 1), "gh")
-        .filter(
-            (F.col("id") != F.col("first.id")) | (F.col("pos") != F.col("first.pos"))
-        )
-        .select("id", "pos", (F.col("pos") + L - 1).alias("e"))
-    )
-    return _merge_intervals(dups)
+    return _merge_intervals(_with_end(_non_first_instances(grams), min_words))
 
 
 def substring_dedup(
@@ -214,36 +226,9 @@ def substring_dedup(
     every duplicated >= min_words-word span removed except its first
     occurrence (module docstring has the full contract). Untouched
     documents keep their text byte-identically."""
-    L = int(min_words)
     grams = gram_instances(df, text_col, id_col, min_words)
-    per_gram = grams.groupBy("gh").agg(
-        F.min(F.struct("id", "pos")).alias("first"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    dups = (
-        grams.join(per_gram.filter(F.col("cnt") > 1), "gh")
-        .filter(
-            (F.col("id") != F.col("first.id")) | (F.col("pos") != F.col("first.pos"))
-        )
-        .select("id", "pos", (F.col("pos") + L - 1).alias("e"))
-    )
+    dups = _with_end(_non_first_instances(grams), min_words)
     return _apply_span_arrays(df, _merged_span_arrays(dups), text_col, id_col)
-
-
-def _apply_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cut the (id, s, e) spans out of each document's words and emit the
-    (id_col, text, n_words, n_words_removed, n_spans) result frame — row-
-    form entry (collects spans per doc first); the internal paths hand
-    :func:`_apply_span_arrays` the already-merged arrays directly."""
-    spans_arr = spans.groupBy("id").agg(
-        F.sort_array(F.collect_list(F.struct("s", "e"))).alias("spans")
-    )
-    return _apply_span_arrays(df, spans_arr, text_col, id_col)
 
 
 def _apply_span_arrays(
@@ -252,7 +237,9 @@ def _apply_span_arrays(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Shared cut tail over (id, spans-array) rows — see _apply_spans."""
+    """Cut the merged (id, spans-array) rows out of each document's words
+    and emit the (id_col, text, n_words, n_words_removed, n_spans) result
+    frame — the cut tail shared by the full and incremental runs."""
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")).join(
         spans_arr, "id", "left"
     )
@@ -316,8 +303,6 @@ def incremental_substring_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_words: int = DEFAULT_MIN_WORDS,
-    strategy: str = "auto",
-    broadcast_max_grams: int = 8_000_000,
     checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """O(batch) span dedup of an APPENDED batch against stored gram state:
@@ -337,24 +322,24 @@ def incremental_substring_dedup(
     exact (pytest-pinned, including a DuckDB full-run twin comparison).
 
     Scale shape: nothing in the plan touches the old corpus — the state
-    table IS the old corpus's footprint, one row per distinct gram value —
-    and with ``strategy='broadcast'`` (the auto pick while the batch's
-    distinct gram count fits ``broadcast_max_grams``) the state NEVER
-    SHUFFLES either: the batch's gram-value set broadcasts onto a map-side
-    semi-filtered scan of the state (the curation ledger's one-flat-scan
-    pattern; a persisted state partitioned by sb additionally prunes
-    buckets), the surviving intersection — bounded by the batch — flows
-    back as a broadcast, and the new-state anti join runs against that
-    same intersection, so the ONLY state cost per append is one columnar
-    scan. ``strategy='shuffle'`` falls back to plain gh-keyed joins for
-    batches too large to broadcast (same decision shape as
-    kgtm.dedup.contamination_pairs). Plus the batch-sized intra-batch
-    aggregate and the shared per-doc interval merge + cut tail.
+    table IS the old corpus's footprint, one row per distinct gram value.
+    The plan is picked from the data: the batch's distinct gram values are
+    counted once and compared with ``session.BROADCAST_MAX_ROWS`` (the same
+    decision as kgtm.dedup.contamination_pairs).
+      - At or under the cap the state NEVER SHUFFLES: the batch's
+        gram-value set broadcasts onto a map-side semi-filtered scan of the
+        state (the curation ledger's one-flat-scan pattern; a persisted
+        state partitioned by sb additionally prunes buckets), the surviving
+        intersection — bounded by the batch — flows back as a broadcast,
+        and the new-state anti join runs against that same intersection, so
+        the ONLY state cost per append is one columnar scan.
+      - Above it, plain gh-keyed shuffle joins against the state.
+    Plus the batch-sized intra-batch aggregate and the shared per-doc
+    interval merge + cut tail.
     """
-    if strategy not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"strategy must be auto|broadcast|shuffle, got {strategy!r}")
-    L = int(min_words)
-    # checkpoint the batch's gram lineage ONCE: it feeds the strategy
+    from kgtm import session
+
+    # checkpoint the batch's gram lineage ONCE: it feeds the plan-choice
     # count, the intra-batch aggregate, both state joins, and (through the
     # two returned frames) two separate caller actions — without the cut,
     # the tokenize+md5 scan re-executes for each (the contamination_pairs
@@ -362,31 +347,15 @@ def incremental_substring_dedup(
     grams = gram_instances(batch, text_col, id_col, min_words)
     if checkpoint:
         grams = grams.localCheckpoint(eager=False)
-    per_gram = grams.groupBy("gh").agg(
-        F.min(F.struct("id", "pos")).alias("first"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    intra_dups = (
-        grams.join(per_gram.filter(F.col("cnt") > 1), "gh")
-        .filter(
-            (F.col("id") != F.col("first.id")) | (F.col("pos") != F.col("first.pos"))
-        )
-        .select("id", "pos")
-    )
+    intra_dups = _non_first_instances(grams)
     # checkpointed for the same reason: feeds the count, a broadcast, and
     # the new-state anti join
     batch_ghs = grams.select("gh").distinct()
     if checkpoint:
         batch_ghs = batch_ghs.localCheckpoint(eager=False)
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if batch_ghs.count() <= broadcast_max_grams
-            else "shuffle"
-        )
     # every batch instance of a stored gram value is a duplicate — the
     # stored occurrence precedes the whole batch under monotone ids
-    if strategy == "broadcast":
+    if batch_ghs.count() <= session.BROADCAST_MAX_ROWS:
         # intersection via a map-side-filtered state scan; bounded by batch.
         # Checkpointed: used by BOTH the dup marking and the new-state anti
         # join — without the cut each action re-scans the state table.
@@ -398,11 +367,7 @@ def incremental_substring_dedup(
     else:
         state_hits = grams.join(state.select("gh"), "gh", "semi").select("id", "pos")
         new_ghs = batch_ghs.join(state.select("gh"), "gh", "anti")
-    dups = (
-        intra_dups.unionByName(state_hits)
-        .distinct()
-        .select("id", "pos", (F.col("pos") + L - 1).alias("e"))
-    )
+    dups = _with_end(intra_dups.unionByName(state_hits).distinct(), min_words)
     deduped = _apply_span_arrays(
         batch, _merged_span_arrays(dups), text_col, id_col
     )

@@ -61,6 +61,8 @@ def streaming_resolution(
     (append-safe); the source taxonomy and failover null-out are batch
     resolve_links' own (resolve._with_source).
 
+    ``mode`` is latestArchived or originalFailoverLiveLatest; any other
+    mode raises ValueError (original and timestampArchived are batch-only).
     mode='originalFailoverLiveLatest' additionally needs ``live_legs`` — a
     STATIC (surface, live_status, live_content_type, accept_header) table of
     live-fetch outcomes, stream-static broadcast-joined; the acceptance gate
@@ -70,6 +72,11 @@ def streaming_resolution(
     """
     from kgtm.extract import mention_id_col
 
+    if mode not in ("latestArchived", "originalFailoverLiveLatest"):
+        raise ValueError(
+            f"streaming resolution implements latestArchived and "
+            f"originalFailoverLiveLatest, got ontoVersion mode {mode!r}"
+        )
     mentions = stream.select(
         "conv_id",
         "turn_idx",
@@ -86,7 +93,7 @@ def streaming_resolution(
     linked = broadcast_ladder_link(mentions, ontology_index)
     dim = F.broadcast(latest_snapshots(snapshots))
     out = linked.join(dim, "ontology_iri", "left")
-    if mode != "originalFailoverLiveLatest":
+    if mode == "latestArchived":
         return _with_source(out, "archivo-latest")
     if live_legs is None:
         raise ValueError(

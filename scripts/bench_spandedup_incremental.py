@@ -2,8 +2,9 @@
 500-doc batch to gram state built from x1 / x4 / x16 corpus copies and time
 the full append (dedup decisions + new-state rows, noop-forced). The
 O(batch) claim passes if cost stays ~flat while the state grows 16x — the
-state's only contribution is one map-side-filtered columnar scan
-(broadcast strategy).
+state's only contribution is one map-side-filtered columnar scan (the
+broadcast plan, which the operator picks while the batch's distinct gram
+count holds under ``session.BROADCAST_MAX_ROWS``).
 
 Appends BENCH/SPANDEDUP.md and prints one JSON line.
 """
@@ -130,7 +131,7 @@ from x1 / x4 / x16 copies of the corpus ({n_base:,} docs base):
 {rows}
 
 x1 -> x16 state growth costs **{growth}x** — the state's only contribution
-to the append is one map-side-filtered columnar scan (broadcast strategy;
+to the append is one map-side-filtered columnar scan (broadcast plan;
 the batch's gram set broadcasts onto it), so the append is O(batch), not
 O(corpus).
 

@@ -46,3 +46,40 @@ def duck_docs(parquet_docs: str | None = None, planted=None):
         con.register("planted_df", planted)
         con.execute("CREATE VIEW documents AS SELECT * FROM planted_df")
     return con
+
+
+def forced_both_ways(monkeypatch, cap: str, run):
+    """``run()`` under both sides of a size-picked plan, forced through the
+    session cap named ``cap`` (every such plan reads its cap at call time):
+    at -1 — below every count, even an empty input's — the join/shuffle
+    plan runs; at 2**30 the literal/broadcast plan does. Returns
+    (join_side, literal_or_broadcast_side)."""
+    from kgtm import session
+
+    out = []
+    for value in (-1, 1 << 30):
+        monkeypatch.setattr(session, cap, value)
+        out.append(run())
+    return tuple(out)
+
+
+def assert_same_both_ways(a, b):
+    """Identical schema (names, order, types and nullability) and identical
+    rows as multisets."""
+    assert a.schema == b.schema
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+def plan_without_auto_broadcast(df) -> str:
+    """``df``'s physical plan, planned with auto-broadcast off, so only an
+    explicit broadcast hint can make a BroadcastHashJoin. Call it before
+    any action on ``df``: the plan is planned once per frame."""
+    spark = df.sparkSession
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    thr = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, thr)

@@ -7,6 +7,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_same_both_ways, forced_both_ways
 from kgtm import canonicalize, session
 from kgtm.canonicalize import canonical_entities, connected_components
 from kgtm.dedup import dedup_clusters, ngram_jaccard_pairs
@@ -61,9 +62,8 @@ def test_canonical_entities_collapses_variants(spark, events):
 
 
 def _both_ways(monkeypatch, run):
-    """``run()`` with the literal row cap forced below every edge count (the
-    star plan — -1, since the empty edge set is within a cap of 0) and far
-    above it (the driver plan) → {plan: (frame, rounds of each
+    """``run()`` forced down the star plan and the driver plan (the session
+    cap, conftest.forced_both_ways) → {plan: (frame, rounds of each
     connected_components call)}."""
     real = canonicalize.connected_components
     rounds: list[int] = []
@@ -73,19 +73,18 @@ def _both_ways(monkeypatch, run):
         rounds.append(r)
         return labels, r
 
-    monkeypatch.setattr(canonicalize, "connected_components", spy)
-    out = {}
-    for plan, cap in (("star", -1), ("driver", 1 << 20)):
-        monkeypatch.setattr(session, "LITERAL_MAX_ROWS", cap)
+    def run_counting_rounds():
         rounds.clear()
-        out[plan] = (run(), list(rounds))
-    return out
+        return run(), list(rounds)
+
+    monkeypatch.setattr(canonicalize, "connected_components", spy)
+    star, driver = forced_both_ways(monkeypatch, "LITERAL_MAX_ROWS", run_counting_rounds)
+    return {"star": star, "driver": driver}
 
 
 def _assert_same_both_ways(out):
     (star, star_rounds), (drv, drv_rounds) = out["star"], out["driver"]
-    assert star.schema == drv.schema  # names, types and nullability
-    assert star.exceptAll(drv).count() == 0 and drv.exceptAll(star).count() == 0
+    assert_same_both_ways(star, drv)
     assert drv_rounds == [0]
     assert len(star_rounds) == 1 and star_rounds[0] > 0
     return star_rounds[0]

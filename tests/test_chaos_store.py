@@ -1,6 +1,6 @@
 """Randomized-interleaving chaos test for the curation commit store
 (VERDICT r5 item 7): the CAS/claims machinery is covered per-scenario by
-tests/test_round5.py; this closes the gap to the CLAIMED protocol by driving
+tests/test_curation_store.py; this closes the gap to the CLAIMED protocol by driving
 a seeded schedule of CONCURRENT appends, compactions, and expiries and
 asserting the ledger's content invariant after every step.
 

@@ -742,6 +742,35 @@ def test_orphaned_ledger_deltas_audit(spark, documents, tmp_path):
     assert read_ledger(spark, store).count() == 100
 
 
+def test_expire_refuses_stranding_deltas(spark, documents, tmp_path):
+    """expire_commits must not delete the base snapshot out from under live
+    delta commits (the kept suffix would become unreconstructable); once the
+    suffix contains a snapshot again, expiry proceeds."""
+    from kgtm.curation import (
+        append_curated_batch,
+        compact_ledger,
+        persist_curated_corpus,
+        read_ledger,
+    )
+    from kgtm.materialize import expire_commits
+
+    store = str(tmp_path / "store")
+    old = documents.filter(F.col("doc_id") < 120)
+    b1 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 150))
+    b2 = documents.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 170))
+    persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
+    append_curated_batch(spark, store, new_docs=b1)
+    append_curated_batch(spark, store, new_docs=b2)
+    # keep_last=2 would keep only the two deltas — stranded
+    with pytest.raises(ValueError, match="strand delta commits"):
+        expire_commits(store, keep_last=2)
+    assert read_ledger(spark, store).count() == 170
+    # after compaction the newest commit is a self-contained snapshot
+    compact_ledger(spark, store)
+    expire_commits(store, keep_last=1)
+    assert read_ledger(spark, store).count() == 170
+
+
 def test_expire_refuses_stranding_live_state(spark, documents, tmp_path):
     """A live state commit backing a LIVE ledger commit must not be expired
     (the store would silently demote to derive mode); a state commit backing
@@ -812,6 +841,59 @@ def test_expire_refuses_stranding_live_state(spark, documents, tmp_path):
 # ---------------------------------------------------------------------------
 # successor claims and re-curation
 # ---------------------------------------------------------------------------
+
+
+def _mini_store(spark, documents, root, n_old=100):
+    from kgtm.curation import persist_curated_corpus
+
+    old = documents.filter(F.col("doc_id") < n_old)
+    persist_curated_corpus(old, str(root), min_quality=0.4, jaccard_threshold=0.5)
+    return old
+
+
+def test_concurrent_appends_same_base_exactly_one_wins(spark, documents, tmp_path):
+    """Two truly concurrent appends from the same base through
+    LockCommitCoordinator (atomic claim): exactly one lands, the loser gets
+    the recompute error, and the store resolves old + winner only."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from kgtm.curation import append_curated_batch, read_ledger
+    from kgtm.materialize import LockCommitCoordinator
+
+    store = str(tmp_path / "store")
+    _mini_store(spark, documents, store)
+    b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
+    b2 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
+    coord = LockCommitCoordinator()
+
+    def run(batch):
+        try:
+            return ("ok", append_curated_batch(
+                spark, store, new_docs=batch, coordinator=coord
+            ))
+        except RuntimeError as e:
+            return ("err", str(e))
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        results = list(pool.map(run, [b1, b2]))
+    outcomes = sorted(r[0] for r in results)
+    assert outcomes == ["err", "ok"], results
+    err_msg = next(r[1] for r in results if r[0] == "err")
+    assert "concurrent ledger commit" in err_msg
+    n = read_ledger(spark, store).count()
+    assert n == 120  # 100 old + exactly one 20-doc batch
+
+    # the loser recomputes from the new head and lands cleanly
+    loser_batch = b1 if results[0][0] == "err" else b2
+    # ids must stay monotone: only the higher-id batch can follow the winner
+    if results[1][0] == "err":  # b2 lost: b2's ids > b1's — fine to re-append
+        append_curated_batch(spark, store, new_docs=b2, coordinator=coord)
+        assert read_ledger(spark, store).count() == 140
+    else:
+        # b1 lost to b2; b1's ids are below b2's, monotone guard refuses —
+        # exactly the contract (recompute means re-batching upstream)
+        with pytest.raises(ValueError, match="monotone"):
+            append_curated_batch(spark, store, new_docs=loser_batch, coordinator=coord)
 
 
 def test_release_stale_ledger_claims(spark, documents, tmp_path):

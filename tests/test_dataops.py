@@ -1,5 +1,6 @@
 """Training-data ops: dedup (exact/ngram/minhash/simhash/embedding),
-text stats, similarity search, multimodal plumbing."""
+decontamination, text stats and winnowing, similarity search, multimodal
+plumbing, and the approx percentile sketch's error bound."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_same_both_ways, forced_both_ways, plan_without_auto_broadcast
 from kgtm.dedup import (
     embedding_neardup_pairs,
     exact_dedup,
@@ -148,6 +150,27 @@ def test_shingle_hash64_three_way_parity():
     )
     for i, hv in con.execute(q).fetchall():
         assert int(hv) == int(ref[i]), strs[i]
+
+
+def test_shingle_hash_chunking_is_invariant():
+    """Round 6 replaced the md5+memo hasher with the vectorized polynomial:
+    its row-chunking and length-sorted routing are internal — hashes must be
+    identical however the batch is chunked, including across the 256-row
+    chunk floor and the heterogeneous-length sort branch."""
+    import numpy as np
+
+    import kgtm.dedup as dd
+
+    # >256 rows with wildly mixed lengths forces multiple chunks + sorting
+    sh = [f"s{i} " * ((i % 7) + 1) for i in range(600)] + ["x" * 5000, ""]
+    whole = dd._hash_shingles64(sh)
+    ref = np.array([dd.hash64_py(s) for s in sh], dtype=np.uint64)
+    assert np.array_equal(whole, ref)
+    # any split of the batch yields the same values (chunking invisibility)
+    parts = np.concatenate(
+        [dd._hash_shingles64(sh[:100]), dd._hash_shingles64(sh[100:])]
+    )
+    assert np.array_equal(parts, ref)
 
 
 def test_embedding_neardup(spark):
@@ -469,6 +492,44 @@ def test_contamination_pairs_flags_embedded_benchmark(spark):
     assert (1, 100) not in out and (2, 100) not in out
 
 
+def test_contamination_broadcast_shuffle_parity(spark, documents, monkeypatch):
+    """The benchmark-side size cap (session.BROADCAST_MAX_ROWS) picks the
+    plan: forced to each side, with and without a df cap, both plans emit
+    identical (doc, bench, containment) rows and schema, and each side
+    really took its plan — with auto-broadcast off only the operator's own
+    hints make BroadcastHashJoins, so the broadcast side has exactly the
+    two (flat and sizes) more than the shuffle side."""
+    from kgtm.dedup import contamination_pairs
+
+    docs = documents.filter(F.col("doc_id") < 200)
+    # benchmark = substrings of real docs → guaranteed containment hits
+    bench = (
+        documents.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 40))
+        .select(
+            (F.col("doc_id") - 20).alias("bench_id"),
+            F.array_join(F.slice(F.split(F.col("text"), " "), 1, 12), " ").alias(
+                "text"
+            ),
+        )
+    )
+    for max_df in (None, 50):
+        sh, bc = forced_both_ways(
+            monkeypatch,
+            "BROADCAST_MAX_ROWS",
+            lambda: contamination_pairs(
+                docs, bench, threshold=0.5, max_shingle_df=max_df
+            ),
+        )
+        n_sh, n_bc = (
+            plan_without_auto_broadcast(df).count("BroadcastHashJoin") for df in (sh, bc)
+        )
+        # the df cap's hot-shingle anti joins are hinted on both sides
+        assert n_sh == 0 or max_df is not None
+        assert n_bc == n_sh + 2
+        assert bc.count() > 0  # the planted substrings must actually hit
+        assert_same_both_ways(sh, bc)
+
+
 # ---------------------------------------------------------------------------
 # hot-shingle skew cap (default on); empty docs in sketch dedup
 # ---------------------------------------------------------------------------
@@ -574,6 +635,94 @@ def test_winnow_vectorized_matches_rolling_reference():
     assert got == want
 
 
+def test_corpus_is_ascii_for_winnow_oracle(spark):
+    """The winnow DuckDB twin (oracles.q_winnow_fingerprints) compares
+    ord()-code-points against the UDF's UTF-8 bytes — identical iff the
+    corpus is ASCII. Assert that precondition at EVERY scale factor the
+    gate/bench touch (the driver gate runs at sf0.01, bench at sf0.1), so a
+    non-ASCII regeneration fails loudly here instead of as a silent oracle
+    mismatch."""
+    import os
+
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        path = f"/root/testdata/{sf}/documents.parquet"
+        if not os.path.exists(path):
+            continue
+        n = (
+            spark.read.parquet(path)
+            .filter(F.col("text").rlike("[^\\x00-\\x7F]"))
+            .count()
+        )
+        assert n == 0, f"{sf} contains non-ASCII documents"
+
+
+def test_winnow_positions_matches_duckdb_twin(spark):
+    """The exploded (doc_id, pos, fp) positional winnowing table must equal
+    the DuckDB robust-winnowing twin row for row on the sf0.001 corpus
+    (pytest-gated value check, same pattern as simhash_wide_hamming — the
+    driver gate is capped at 50 queries)."""
+    import duckdb
+
+    from kgtm import oracles
+    from kgtm.textstats import winnow_positions
+
+    sf = "/root/testdata/sf0.001"
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    got = sorted(
+        (r.doc_id, r.pos, r.fp) for r in winnow_positions(docs).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    want = sorted(
+        (int(d), int(p), int(f))
+        for d, p, f in con.execute(oracles.q_winnow_positions()).fetchall()
+    )
+    assert len(got) > 0
+    assert got == want
+
+
+def test_winnow_positions_localize_planted_overlap(spark):
+    """The standard winnowing guarantee: two documents sharing a passage of
+    at least window+k-1 chars share at least one selected fingerprint, and
+    the matched positions land INSIDE the shared passage on both sides;
+    unrelated documents share (essentially) none."""
+    from kgtm.textstats import winnow_positions
+
+    shared = "the quick brown fox jumps over the lazy dog near the river bank"
+    pre_a, pre_b = "alpha beta gamma delta " , "one two three four five six "
+    doc_a = pre_a + shared + " and then some trailing words here"
+    doc_b = pre_b + shared + " with a different continuation text"
+    # junk tokens sharing no 5-gram with doc_a/doc_b (any real English words
+    # risk a legitimately-shared-and-selected 5-gram like ' cont')
+    doc_c = "zzzzq qqzzx xxqqy yyxxw wwyyv vvwwu uuvvt ttuus ssttr rrssp"
+    df = spark.createDataFrame(
+        [(1, doc_a), (2, doc_b), (3, doc_c)], "doc_id long, text string"
+    )
+    rows = winnow_positions(df).collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append((r.pos, r.fp))
+
+    fps = lambda d: {f for _, f in by_doc[d]}  # noqa: E731
+    common_ab = fps(1) & fps(2)
+    assert common_ab, "shared passage must produce shared fingerprints"
+    assert not (fps(1) & fps(3)) and not (fps(2) & fps(3))
+
+    # the winnowing guarantee is EXISTENCE: at least one shared fingerprint
+    # is picked INSIDE the shared span on both sides (a shared 5-gram can
+    # also legitimately repeat outside it — universality would overclaim)
+    k = 5
+    in_span = {}
+    for doc_id, pre in ((1, pre_a), (2, pre_b)):
+        lo, hi = len(pre), len(pre) + len(shared) - k
+        in_span[doc_id] = {
+            fp for pos, fp in by_doc[doc_id] if fp in common_ab and lo <= pos <= hi
+        }
+    assert in_span[1] & in_span[2], "no shared pick localized the overlap"
+
+
 # ---------------------------------------------------------------------------
 # trigram language id on held-out sentences
 # ---------------------------------------------------------------------------
@@ -607,3 +756,47 @@ def test_lang_id_trigram_on_held_out_sentences():
     }
     got = lang_id_trigram_series(pd.Series(list(cases))).tolist()
     assert got == list(cases.values()), dict(zip(cases, got))
+
+
+# ---------------------------------------------------------------------------
+# bounded-error contract for the approx percentile sketch
+# ---------------------------------------------------------------------------
+
+
+def test_value_percentiles_approx_within_rank_error(spark, events):
+    """percentile_approx(accuracy=A) guarantees rank error <= 1/A: for every
+    (event_type, percentile) the approx value's rank among the group's exact
+    values must land inside [(p - eps) * N, (p + eps) * N] (+-1 for ties /
+    integer rank edges). This quantifies the last sketch-valued gate query
+    (value_percentiles_approx has no hash oracle by nature)."""
+    from kgtm.sessions import value_percentiles_approx
+
+    accuracy = 10000
+    eps = 1.0 / accuracy
+    approx = {
+        r.event_type: r
+        for r in value_percentiles_approx(events, accuracy=accuracy).collect()
+    }
+    groups = (
+        events.groupBy("event_type")
+        .agg(F.sort_array(F.collect_list("value")).alias("vals"))
+        .collect()
+    )
+    assert len(groups) == len(approx) > 0
+    for g in groups:
+        vals, n = g.vals, len(g.vals)
+        row = approx[g.event_type]
+        for p, got in ((0.5, row.p50), (0.95, row.p95), (0.99, row.p99)):
+            # rank of the approx value = number of exact values <= it
+            import bisect
+
+            rank = bisect.bisect_right(vals, got)
+            lo = (p - eps) * n - 1
+            hi = (p + eps) * n + 1
+            assert lo <= rank <= hi, (
+                f"{g.event_type} p{int(p*100)}: approx {got} has rank {rank}"
+                f"/{n}, outside [{lo:.1f}, {hi:.1f}]"
+            )
+            # and the approx value is an actual member of the group (the
+            # sketch returns observed values, never interpolations)
+            assert got in vals

@@ -7,7 +7,7 @@ contract (queries() stays <= 50 so nothing falls off the report) and keep
 the value checks of the two entries rotated OUT of the gate alive as
 pytests: simhash_wide_hamming's DuckDB all-pairs twin runs here;
 value_percentiles_approx's bounded-rank-error check lives in
-tests/test_round4.py.
+tests/test_dataops.py.
 """
 
 import duckdb

@@ -9,6 +9,7 @@ import datetime as dt
 import pytest
 from pyspark.errors import AnalysisException
 
+from conftest import assert_same_both_ways
 from kgtm.link import link_mentions
 from kgtm.resolve import attach_reduced_snapshots, resolve_links
 from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA
@@ -26,12 +27,6 @@ def _linked(spark):
     )
 
 
-def _both_ways(a, b):
-    assert a.schema == b.schema  # names, order, types and nullability
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_all_null_literal_snapshots_keep_their_types(spark):
     """A plan-literal snapshot table whose snapshot_iri/file_url are all
     NULL attaches string columns, as the join path does — not void."""
@@ -44,7 +39,7 @@ def test_all_null_literal_snapshots_keep_their_types(spark):
     join = spark.createDataFrame(lit.collect(), SNAP_SCHEMA)
     got = attach_reduced_snapshots(_linked(spark), lit)
     assert dict(got.dtypes)["snapshot_iri"] == "string"
-    _both_ways(got, attach_reduced_snapshots(_linked(spark), join))
+    assert_same_both_ways(got, attach_reduced_snapshots(_linked(spark), join))
 
 
 def test_tz_aware_pin_matches_join_path(spark):
@@ -58,7 +53,7 @@ def test_tz_aware_pin_matches_join_path(spark):
     lit_snaps = ontology_snapshots_df(spark)
     join_snaps = spark.createDataFrame(lit_snaps.collect(), lit_snaps.schema)
     got = resolve_links(_linked(spark), lit_snaps, "timestampArchived", pin)
-    _both_ways(got, resolve_links(_linked(spark), join_snaps, "timestampArchived", pin))
+    assert_same_both_ways(got, resolve_links(_linked(spark), join_snaps, "timestampArchived", pin))
     assert got.filter("mention_id = 'm1'").first().source == "not-found"
 
 

@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_same_both_ways, forced_both_ways
 from kgtm.link import link_mentions
 from kgtm.extract import extract_mentions
 from kgtm.pipeline import PipelineConfig, build_triples
@@ -80,21 +82,17 @@ def test_broadcast_ladder_plan_is_one_broadcast_join_no_agg(spark, events):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_literal_probe_matches_broadcast_ladder(spark, events):
-    """The literal fast path and the broadcast-join ladder must produce
-    identical rows on the same corpus+dictionary (the round-7 rewrite's
-    equivalence pin)."""
-    from kgtm.transcripts import ontology_index_rows
-    from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA
-
+def test_literal_probe_matches_broadcast_ladder(spark, events, monkeypatch):
+    """session.LITERAL_MAX_ROWS picks the link plan over a plan-literal
+    dictionary: forced to each side, the broadcast-join ladder and the
+    map-literal probe give identical rows and schema."""
     m = extract_mentions(events_to_transcripts(events))
-    lit = link_mentions(m, ontology_index_df(spark))
-    rdd_index = spark.createDataFrame(ontology_index_rows(), ONTOLOGY_INDEX_SCHEMA)
-    bc = link_mentions(m, rdd_index)
+    index = ontology_index_df(spark)
+    bc, lit = forced_both_ways(
+        monkeypatch, "LITERAL_MAX_ROWS", lambda: link_mentions(m, index)
+    )
     assert "Join" not in _plan(lit) and "BroadcastHashJoin" in _plan(bc)
-    assert lit.schema == bc.schema  # names, order, types and nullability
-    assert lit.exceptAll(bc).count() == 0
-    assert bc.exceptAll(lit).count() == 0
+    assert_same_both_ways(bc, lit)
 
 
 @pytest.mark.parametrize(
@@ -105,10 +103,11 @@ def test_literal_probe_matches_broadcast_ladder(spark, events):
         ("originalFailoverLiveLatest", None),
     ],
 )
-def test_literal_snapshots_match_broadcast_resolve(spark, events, mode, pin):
-    """resolve_links over a plan-literal snapshot table (map-literal fold)
-    and over the same rows as a non-literal frame (broadcast-join dim) must
-    give identical rows and an identical schema, in every archived mode."""
+def test_literal_snapshots_match_broadcast_resolve(spark, events, monkeypatch, mode, pin):
+    """session.LITERAL_MAX_ROWS picks the resolve plan over a plan-literal
+    snapshot table: forced to each side, the map-literal fold and the
+    broadcast-join dim give identical rows and schema, in every archived
+    mode."""
     from kgtm.resolve import resolve_links
 
     linked = link_mentions(
@@ -124,14 +123,12 @@ def test_literal_snapshots_match_broadcast_resolve(spark, events, mode, pin):
             F.when(k == 2, "text/html").otherwise("text/turtle").alias("live_content_type"),
             F.lit("text/turtle").alias("accept_header"),
         )
-    lit_snaps = ontology_snapshots_df(spark)
-    join_snaps = spark.createDataFrame(lit_snaps.collect(), ONTOLOGY_SNAPSHOTS_SCHEMA)
-    lit = resolve_links(linked, lit_snaps, mode, pin)
-    bc = resolve_links(linked, join_snaps, mode, pin)
+    snaps = ontology_snapshots_df(spark)
+    bc, lit = forced_both_ways(
+        monkeypatch, "LITERAL_MAX_ROWS", lambda: resolve_links(linked, snaps, mode, pin)
+    )
     assert "Join" not in _plan(lit) and "BroadcastHashJoin" in _plan(bc)
-    assert lit.schema == bc.schema
-    assert lit.exceptAll(bc).count() == 0
-    assert bc.exceptAll(lit).count() == 0
+    assert_same_both_ways(bc, lit)
     sources = {r.source for r in bc.select("source").distinct().collect()}
     archived = "archivo-timestamp" if mode == "timestampArchived" else "archivo-latest"
     assert {"unlinked", archived} <= sources
@@ -349,8 +346,6 @@ def test_state_v2_newly_hot_owner_lookup_prunes_buckets(spark, tmp_path):
     """When a shingle crosses the df cap mid-append, the owner-correction
     lookup must read ONLY the sb= directory buckets the newly-hot shingles
     hash to (partition pruning), not the whole stored flat."""
-    import re
-
     from kgtm.curation import (
         N_SHINGLE_BUCKETS,
         _read_state,
@@ -400,3 +395,29 @@ def test_state_v2_newly_hot_owner_lookup_prunes_buckets(spark, tmp_path):
     assert m and "sb#" in m.group(1), corr
     # and the newly-hot set hits fewer buckets than exist, so pruning is real
     assert len({v % N_SHINGLE_BUCKETS for v in hot_vals}) < N_SHINGLE_BUCKETS
+
+
+@pytest.mark.parametrize("wanted", [[-7, 3, 12, 999], []], ids=["hits", "empty"])
+def test_pruned_flat_lookup_literal_join_parity(spark, tmp_path, monkeypatch, wanted):
+    """session.LITERAL_MAX_ROWS picks the stored-flat lookup's plan: the
+    collected shingle set as an sb-pruned isin filter, or a broadcast
+    semi-join. Forced to each side, both give the same rows and schema —
+    for an empty set too — and each side took its plan."""
+    from kgtm.curation import _pruned_flat_lookup
+
+    n_b = 8
+    shingle = (F.col("id") % 30) - 10  # duplicates and negative shingles
+    spark.range(90).select(
+        "id", shingle.alias("shingle"), F.pmod(shingle, F.lit(n_b)).cast("int").alias("sb")
+    ).write.partitionBy("sb").parquet(str(tmp_path / "flat"))
+    flat = spark.read.parquet(str(tmp_path / "flat"))
+    shingles = spark.createDataFrame([(v,) for v in wanted], "shingle bigint")
+
+    join, lit = forced_both_ways(
+        monkeypatch, "LITERAL_MAX_ROWS", lambda: _pruned_flat_lookup(flat, shingles, n_b)
+    )
+    assert "Join" in _plan(join) and "Join" not in _plan(lit)
+    if wanted:
+        assert re.search(r"PartitionFilters: \[[^\]]*sb#", _final_section(_plan(lit)))
+        assert lit.count() == 9  # three live shingles, three ids each
+    assert_same_both_ways(join, lit)

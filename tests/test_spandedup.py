@@ -9,7 +9,13 @@ import pytest
 
 from kgtm import oracles
 from kgtm.spandedup import dup_spans, substring_dedup
-from tests.conftest import SF_DIR, duck_docs
+from tests.conftest import (
+    SF_DIR,
+    assert_same_both_ways,
+    duck_docs,
+    forced_both_ways,
+    plan_without_auto_broadcast,
+)
 
 L = 10  # planted cases use a 10-word resolution for readability
 
@@ -261,11 +267,12 @@ def test_incremental_chained_appends_stay_exact(spark, documents):
 
 
 def test_incremental_broadcast_shuffle_parity_and_validation(
-    spark, documents, tmp_path
+    spark, documents, tmp_path, monkeypatch
 ):
-    """Both join strategies produce the identical result; bad strategy
-    rejected; and the broadcast path's plan really is broadcast-shaped —
-    strictly fewer shuffles than the shuffle path (dropping the broadcast
+    """session.BROADCAST_MAX_ROWS picks the state-join plan: forced to each
+    side, both give the identical deduped batch and new state rows and
+    schema, and the broadcast side's plan really is broadcast-shaped —
+    strictly fewer shuffles than the shuffle side (dropping the broadcast
     hints would equalize the counts and fail here), with the state lookups
     as BroadcastHashJoins."""
     from kgtm.spandedup import incremental_substring_dedup, span_gram_state
@@ -277,13 +284,6 @@ def test_incremental_broadcast_shuffle_parity_and_validation(
     # exchange in the plans below belongs to the operator under test
     span_gram_state(old, min_words=20).write.parquet(str(tmp_path / "state"))
     state = spark.read.parquet(str(tmp_path / "state"))
-    db, nb = incremental_substring_dedup(batch, state, min_words=20,
-                                         strategy="broadcast")
-    ds, _ = incremental_substring_dedup(batch, state, min_words=20,
-                                        strategy="shuffle")
-    assert sorted(map(tuple, db.collect())) == sorted(map(tuple, ds.collect()))
-    with pytest.raises(ValueError):
-        incremental_substring_dedup(batch, state, strategy="bogus")
 
     # plan shape with checkpoint=False (full lineage visible) and
     # stats-based auto-broadcast OFF, so ONLY the operator's explicit
@@ -291,33 +291,32 @@ def test_incremental_broadcast_shuffle_parity_and_validation(
     # turns the state lookups into shuffle joins and the exchange-count
     # comparison below fails even though tiny test tables would otherwise
     # auto-broadcast
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def shape(df):
+        plan = plan_without_auto_broadcast(df)
+        return plan.count("Exchange hashpartitioning"), plan.count("BroadcastHashJoin")
 
-        def shape(df):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return (
-                plan.count("Exchange hashpartitioning"),
-                plan.count("BroadcastHashJoin"),
-            )
+    (sd, sn), (bd, bn) = forced_both_ways(
+        monkeypatch,
+        "BROADCAST_MAX_ROWS",
+        lambda: incremental_substring_dedup(batch, state, min_words=20, checkpoint=False),
+    )
+    (x_s, bhj_s), (x_b, bhj_b) = shape(sd), shape(bd)
+    assert bhj_b >= 2, x_b  # state semi-filter + dup-marking broadcast
+    assert x_b < x_s, (x_b, x_s)  # the state side never shuffles
+    assert bhj_s == 0  # the fallback really is the shuffle shape
+    # new-state path: both its joins must be hint-broadcast; the raw
+    # exchange counts tie here because checkpoint=False recomputes
+    # batch_ghs inside hits, so the BHJ count is the guard
+    assert shape(bn)[1] >= 2
+    assert shape(sn)[1] == 0
+    assert_same_both_ways(sd, bd)
+    assert_same_both_ways(sn, bn)
 
-        fb, fn = incremental_substring_dedup(
-            batch, state, min_words=20, strategy="broadcast", checkpoint=False
-        )
-        sb_, sn = incremental_substring_dedup(
-            batch, state, min_words=20, strategy="shuffle", checkpoint=False
-        )
-        (x_b, bhj_b), (x_s, _) = shape(fb), shape(sb_)
-        assert bhj_b >= 2, x_b  # state semi-filter + dup-marking broadcast
-        assert x_b < x_s, (x_b, x_s)  # the state side never shuffles
-        # new-state path: both its joins must be hint-broadcast (with
-        # auto-broadcast off only explicit hints can produce a BHJ); the
-        # raw exchange counts tie here because checkpoint=False recomputes
-        # batch_ghs inside hits, so the BHJ count is the guard
-        _, bhjn_b = shape(fn)
-        assert bhjn_b >= 2
-        _, bhjn_s = shape(sn)
-        assert bhjn_s == 0  # the fallback really is the shuffle shape
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    # the checkpointed production path picks the same plans and rows
+    (sd_c, _), (bd_c, _) = forced_both_ways(
+        monkeypatch,
+        "BROADCAST_MAX_ROWS",
+        lambda: incremental_substring_dedup(batch, state, min_words=20),
+    )
+    assert_same_both_ways(sd_c, bd_c)
+    assert_same_both_ways(bd, bd_c)

@@ -173,6 +173,17 @@ def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     assert g == b and any(s == "archivo-latest" for s, _ in g)
 
 
+@pytest.mark.parametrize("mode", ["original", "timestampArchived", "latest", "bogus"])
+def test_stream_rejects_modes_it_does_not_implement(spark, stream_dirs, mode):
+    """Streaming resolves latestArchived and failover only; every other
+    mode — a batch-only mode or a typo — raises instead of quietly
+    resolving as archivo-latest."""
+    in_dir, _, _ = stream_dirs
+    idx, snaps = ontology_index_df(spark), ontology_snapshots_df(spark)
+    with pytest.raises(ValueError, match=mode):
+        streaming_resolution(read_transcript_stream(spark, in_dir), idx, snaps, mode=mode)
+
+
 def test_stream_failover_matches_batch(spark, events, stream_dirs):
     """Failover in streaming: the live-legs static table gates live-vs-
     archived per surface, and the per-source counts match the batch failover
