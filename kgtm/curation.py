@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -582,22 +581,6 @@ STATE_TABLES = (
     "ledger_hot",
 )
 
-#: DDL schemas of the state tables AS READ BACK (data columns + the sb/commit
-#: partition columns partition discovery would add) — the read-side fallback
-#: for commit dirs that hold ZERO data files: a partitionBy() write of an
-#: empty contribution (e.g. a re-curation whose min_quality keeps no docs)
-#: emits only _SUCCESS, and a parquet read over nothing-but-such-dirs cannot
-#: infer a schema. The contribution is legitimately empty, so the read
-#: substitutes a typed empty frame instead of failing or falling back to
-#: derive mode.
-_STATE_READ_SCHEMAS = {
-    "ledger_digests": "dg string, commit string",
-    "ledger_shingles": "id bigint, shingle bigint, sb int, commit string",
-    "ledger_shingle_df": "shingle bigint, df bigint, sb int, commit string",
-    "ledger_doc_sizes": "id bigint, n_sh bigint, commit string",
-    "ledger_hot": "shingle bigint, commit string",
-}
-
 #: Directory-bucket count for the shingle-keyed state tables
 #: (ledger_shingles / ledger_shingle_df are partitioned by
 #: sb = pmod(shingle, N)). Pruning wins come from SMALL probe sets — the
@@ -850,18 +833,10 @@ def _read_state(spark, out_dir: str, resolved: list[dict]) -> CorpusState | None
             df = read_table(spark, out_dir, table=table)
         except FileNotFoundError:
             # manifests exist but every data dir is gone (out-of-band
-            # deletion) — treat as no state rather than failing the append
+            # deletion), or every live commit predates recorded schemas and
+            # holds no data files — treat as no state rather than failing
+            # the append
             return None
-        except AnalysisException as e:
-            if "UNABLE_TO_INFER_SCHEMA" not in str(e):
-                raise
-            # every live dir exists but holds zero data files: partitionBy()
-            # of a zero-row contribution writes only _SUCCESS (verified —
-            # unpartitioned empty writes DO emit a schema-bearing file).
-            # The state is a real, empty contribution set; substitute the
-            # typed empty frame (_STATE_READ_SCHEMAS) so the commit filter
-            # and downstream joins run unchanged.
-            df = spark.createDataFrame([], _STATE_READ_SCHEMAS[table])
         frames[table] = df.filter(
             F.col("commit").isin([c["commit_id"] for c in live[table]])
         ).drop("commit")

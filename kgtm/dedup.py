@@ -814,17 +814,10 @@ def embedding_neardup_blocked(
     # Ship RAW vectors and normalize with numpy inside the task: evaluating a
     # higher-order normalize expression on every replica costs more than the
     # matmul itself (measured).
-    from kgtm.session import ensure_min_parallelism
-
-    # fan an under-parallel input out BEFORE the n_blocks replica explode
-    # (round 7, guide §2.5): a one-row-group scan would otherwise build and
-    # serialize every replica row in a single map task
-    raw = ensure_min_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("u"))
-    ).select(
-        "id",
-        "u",
-        F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int").alias("blk"),
+    raw = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("u"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     js = F.sequence(F.lit(0), F.lit(n_blocks - 1))
     tasks = raw.select("id", "u", "blk", F.explode(js).alias("other")).select(

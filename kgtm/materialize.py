@@ -4,7 +4,10 @@ Writes the final triple table partitioned for consumer access patterns and
 records the commit's lineage/metrics rows in the commit's own manifest — the
 batch analog of the reference's download_log.json written next to the
 downloaded corpus (the reference's experiments/download_ontologies.py:168-172),
-laid out like an Iceberg snapshot's ``summary`` map.
+laid out like an Iceberg snapshot's ``summary`` map. The manifest also
+records the written frame's schema, the way an Iceberg snapshot's metadata
+carries its table schema: ``read_table`` builds its frame from the recorded
+schemas and never infers one from the files or the directory names.
 
 Sandbox note (SURVEY §7 hard-part 4): no Iceberg catalog is available here,
 so the default format is parquet in an Iceberg-compatible layout (partition
@@ -169,21 +172,20 @@ def write_table(
     in the manifest (used e.g. for streaming epoch ids, enabling idempotent
     re-runs). The commit's ``metrics`` rows (METRICS_SCHEMA fields as plain
     JSON) ride in the same manifest, so a parquet commit is one Spark job.
+    The manifest's ``schema`` is the written frame's schema, which
+    ``read_table`` reads instead of inferring one from the files.
     """
     spark = df.sparkSession
-    # ROUND-7 HANG FIX — the leading letter is load-bearing. Commit ids
-    # become partition directory names (table/commit=<id>), and Spark's
-    # partition-value TYPE INFERENCE tries to parse each value as a number
-    # first. A bare 12-hex id matches `<digits>e<digits>` with p≈0.4%
-    # (e.g. the observed commit=20e519984576), which scientific-notation-
-    # parses as 20·10^519984576: BigDecimal.setScale then computes a
-    # 519-million-digit power of ten and the READER's analysis phase burns
-    # driver CPU for hours (jstack: Thread-3 in BigInteger.multiply under
-    # PartitioningUtils.inferPartitionColumnValue). An all-digit id
-    # (p≈0.3%) is quieter but worse: the commit column silently infers as
-    # bigint for that store and the manifest-id string comparisons
-    # misbehave. A leading letter makes every commit value
-    # unparseable-as-anything-but-string, closing both failure modes.
+    # The leading letter keeps the commit id a non-number. Commit ids become
+    # partition directory names (table/commit=<id>). read_table types the
+    # commit column from the manifests, but a reader that bypasses it (a
+    # bare spark.read with basePath at the table root) runs Spark's
+    # partition-value TYPE INFERENCE, which tries each value as a number
+    # first. A bare 12-hex id matches `<digits>e<digits>` with p≈0.4% (e.g.
+    # commit=20e519984576), which parses as 20·10^519984576: BigDecimal
+    # then computes a 519-million-digit power of ten and the reader's
+    # analysis burns driver CPU for hours. An all-digit id (p≈0.3%) reads as
+    # bigint. With a leading letter every id infers as a string.
     commit_id = "c" + uuid.uuid4().hex[:11]
     # Iceberg-style commit protocol on plain parquet: each commit writes into
     # its OWN directory (triples/commit=<id>/...), and the commit becomes
@@ -215,6 +217,7 @@ def write_table(
             "table": table,
             "format": fmt,
             "partition_by": list(partition_by),
+            "schema": df.schema.json(),
             "metrics": list(mc.rows),
             **(extra_manifest or {}),
         },
@@ -434,7 +437,6 @@ def read_table(
     out_dir: str,
     table: str = "triples",
     as_of: int | None = None,
-    merge_schema: bool = False,
 ) -> DataFrame:
     """Manifest-gated read of one named table from the store; ``as_of`` reads
     it as of that store-wide commit seq (time travel). Manifests written
@@ -443,8 +445,17 @@ def read_table(
     A commit whose manifest carries ``replaces: [commit_ids]`` (a compaction)
     HIDES those commits from any read that includes it — but an ``as_of``
     older than the compaction still sees the originals, so time travel is
-    preserved across rewrites. ``merge_schema=True`` unions schemas across
-    commits (columns added by later writers read as NULL in older commits).
+    preserved across rewrites.
+
+    The schema is the union by name of the live commits' recorded schemas
+    (a column added later reads as NULL in older commits; a column recorded
+    with two types raises ValueError), laid out as data columns, a string
+    ``commit``, then the partition columns. Nothing is inferred, so building
+    the frame runs no Spark job and an empty commit reads as a typed empty
+    frame. Commits whose manifests record no schema (older stores) take
+    theirs from one footer read of their files, with partition types
+    discovered across them and ``commit`` given as a string, so ``commit``
+    is never inferred there either.
     """
     commits = list_commits(out_dir, spark)
     if as_of is not None:
@@ -452,23 +463,106 @@ def read_table(
     commits = [c for c in commits if c.get("table", "triples") == table]
     replaced = {cid for c in commits for cid in c.get("replaces", [])}
     commits = [c for c in commits if c["commit_id"] not in replaced]
-    paths = [
-        _child(out_dir, table, f"commit={c['commit_id']}")
-        for c in commits
-    ]
     fs, jvm = _fs(spark, out_dir)
     hpath = jvm.org.apache.hadoop.fs.Path
-    existing = [p for p in paths if fs.exists(hpath(p))]
-    if not existing:
-        # no committed data → empty frame with the store path's layout is
-        # unknowable; raise like a missing-table read would
+    paths, parts, schemas, legacy = [], [], [], []
+    for c in commits:
+        path = _child(out_dir, table, f"commit={c['commit_id']}")
+        if not fs.exists(hpath(path)):
+            continue
+        paths.append(path)
+        parts += [p for p in c.get("partition_by", []) if p not in parts]
+        if "schema" in c:
+            schema = StructType.fromJson(json.loads(c["schema"]))
+            schemas.append((f"commit {c['commit_id']}", schema))
+        elif _holds_data_files(fs, hpath, path):
+            legacy.append((c["commit_id"], path))
+    if legacy:
+        # pre-schema commits precede every commit that records one
+        schemas.insert(
+            0, _legacy_schema(spark, _child(out_dir, table), legacy, schemas)
+        )
+    if not schemas:
+        # no committed data (or only pre-schema commits without data files):
+        # the table's columns are unknowable; raise like a missing-table read
         raise FileNotFoundError(f"no committed {table} under {out_dir}")
-    # basePath keeps partition discovery rooted at the store, so both the
-    # commit= and the user partition columns survive into the schema
-    reader = spark.read.option("basePath", _child(out_dir, table))
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*existing)
+    # basePath keeps partition discovery rooted at the table, so both the
+    # commit= and the user partition columns survive into the frame
+    return (
+        spark.read.schema(_union_schema(schemas, parts))
+        .option("basePath", _child(out_dir, table))
+        .parquet(*paths)
+    )
+
+
+def _holds_data_files(fs, hpath, path: str) -> bool:
+    files = fs.listFiles(hpath(path), True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return True
+    return False
+
+
+def _legacy_schema(
+    spark: SparkSession,
+    root: str,
+    legacy: list[tuple[str, str]],
+    schemas: list[tuple[str, StructType]],
+) -> tuple[str, StructType]:
+    """Schema of the commits ``(commit_id, path)`` under the table ``root``
+    whose manifests record none, in one Spark job. The partition columns
+    come from one discovery over all of them rooted at ``root``, so Spark
+    widens their types across commits as a partitioned read does; ``commit``
+    is given as a string there, so its values are never parsed as numbers.
+    A partition column that a recorded schema types is left out: the
+    recorded type wins and Spark casts the directory values to it. The data
+    columns come from one footer read that ignores directory names."""
+    paths = [path for _, path in legacy]
+    found = (
+        spark.read.schema("commit string")
+        .option("basePath", root)
+        .parquet(*paths)
+        .schema
+    )
+    data = (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("mergeSchema", "true")
+        .parquet(*paths)
+        .schema
+    )
+    recorded = {f.name for _, s in schemas for f in s.fields}
+    fields = [
+        *data.fields,
+        *(f for f in found.fields if f.name != "commit" and f.name not in recorded),
+    ]
+    ids = ", ".join(cid for cid, _ in legacy)
+    return f"pre-schema commits {ids}", StructType(fields)
+
+
+def _union_schema(
+    schemas: list[tuple[str, StructType]], parts: list[str]
+) -> StructType:
+    """Union by name of the ``(source, schema)`` pairs, laid out as a
+    partitioned parquet read lays it out: data columns, ``commit``, then the
+    partition columns ``parts`` in partition order."""
+    seen: dict[str, tuple[StructField, str]] = {}
+    for source, schema in schemas:
+        for f in schema.fields:
+            first, first_source = seen.setdefault(f.name, (f, source))
+            # simpleString leaves nullability out: parquet reads every
+            # column as nullable, so only the types must agree
+            if first.dataType.simpleString() != f.dataType.simpleString():
+                raise ValueError(
+                    f"column {f.name!r} is {first.dataType.simpleString()} in "
+                    f"{first_source} but {f.dataType.simpleString()} in {source}"
+                )
+    return StructType(
+        [
+            *(f for name, (f, _) in seen.items() if name not in parts),
+            StructField("commit", StringType()),
+            *(seen[p][0] for p in parts if p in seen),
+        ]
+    )
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -416,9 +416,10 @@ def test_compaction_asof_boundary(spark, events, tmp_path):
     assert at.select("commit").distinct().collect()[0][0] == comp["commit_id"]
 
 
-def test_read_table_merge_schema(spark, events, tmp_path):
+def test_read_table_unions_commit_schemas(spark, events, tmp_path):
     """Schema evolution across commits: a later commit adds a column; the
-    merged read surfaces it with NULLs for older commits."""
+    read surfaces it with NULLs for older commits. Two commits that record
+    one column with different types cannot be unioned."""
     from kgtm.materialize import read_table, write_table
 
     store = str(tmp_path / "store")
@@ -427,10 +428,167 @@ def test_read_table_merge_schema(spark, events, tmp_path):
     write_table(triples, store)
     write_table(triples.withColumn("pipeline_ver", F.lit("v2")), store)
 
-    merged = read_table(spark, store, merge_schema=True)
+    merged = read_table(spark, store)
     assert "pipeline_ver" in merged.columns
     counts = {r.pipeline_ver: r["count"] for r in merged.groupBy("pipeline_ver").count().collect()}
     assert counts[None] == counts["v2"] == triples.count()
+
+    clash = str(tmp_path / "clash")
+    c1 = write_table(spark.range(3).selectExpr("id AS x", "'s' AS source"), clash)
+    c2 = write_table(spark.range(3).selectExpr("CAST(id AS STRING) AS x", "'s' AS source"), clash)
+    with pytest.raises(ValueError, match="'x'") as err:
+        read_table(spark, clash)
+    assert c1["commit_id"] in str(err.value) and c2["commit_id"] in str(err.value)
+
+
+def test_read_table_types_legacy_commit_ids_as_strings(spark, tmp_path):
+    """A store written before manifests recorded schemas (plain partitionBy
+    writes, manifests without a ``schema`` key) reads ``commit`` as the
+    manifest's string ids even when an id looks like a number: partition
+    type inference reads 123456789012 alone as bigint, and together with
+    20e000000009 as a decimal."""
+    from kgtm.materialize import read_table
+
+    store = tmp_path / "store"
+    ids = ["123456789012", "20e000000009"]
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "x long, source string")
+    (store / "_commits").mkdir(parents=True)
+    for seq, cid in enumerate(ids):
+        df.write.partitionBy("source").parquet(str(store / "triples" / f"commit={cid}"))
+        (store / "_commits" / f"{seq:010d}.json").write_text(json.dumps(
+            {"commit_id": cid, "seq": seq, "table": "triples", "partition_by": ["source"]}
+        ))
+    for as_of, want in [(0, ids[:1]), (1, ids), (None, ids)]:
+        back = read_table(spark, str(store), as_of=as_of)
+        assert back.schema["commit"].dataType.simpleString() == "string"
+        assert back.columns == ["x", "commit", "source"]
+        assert sorted({r.commit for r in back.collect()}) == sorted(want)
+
+
+def _drop_recorded_schemas(store):
+    """Turn every manifest under ``store`` into a pre-schema one (and drop
+    its checksum sidecar, which would no longer match)."""
+    for m in (store / "_commits").glob("*.json"):
+        manifest = json.loads(m.read_text())
+        manifest.pop("schema", None)
+        m.write_text(json.dumps(manifest))
+        (m.parent / f".{m.name}.crc").unlink(missing_ok=True)
+
+
+def test_read_table_mixes_pre_schema_and_recorded_commits(spark, tmp_path):
+    """A store with commits from before and after manifests recorded
+    schemas stays readable. Inference alone types the ledger's kept_part
+    directories as string and "0"/"1" directories as int; the recorded
+    types (boolean, string) win over those, and Spark casts the values."""
+    from kgtm.curation import persist_ledger, read_ledger
+    from kgtm.materialize import read_table
+
+    store = tmp_path / "store"
+    ledger = spark.createDataFrame([(1, True), (2, False)], "id long, kept boolean")
+    old = persist_ledger(ledger, str(store))
+    _drop_recorded_schemas(store)
+    persist_ledger(ledger.withColumn("id", F.col("id") + 10), str(store))
+    assert sorted(r.id for r in read_ledger(spark, str(store)).collect()) == [11, 12]
+    assert sorted(r.id for r in read_ledger(spark, str(store), as_of=old["seq"]).collect()) == [1, 2]
+    assert read_table(spark, str(store), table="ledger").schema["kept_part"].dataType.simpleString() == "boolean"
+
+    digits = tmp_path / "digits"
+    df = spark.createDataFrame([(i, str(i % 3)) for i in range(6)], "x long, bucket string")
+    write_table(df, str(digits), partition_by=("bucket",))
+    _drop_recorded_schemas(digits)
+    write_table(df, str(digits), partition_by=("bucket",))
+    back = read_table(spark, str(digits))
+    assert back.schema.simpleString() == "struct<x:bigint,commit:string,bucket:string>"
+    assert sorted(r.bucket for r in back.collect()) == sorted(2 * [str(i % 3) for i in range(6)])
+
+
+def test_read_table_widens_pre_schema_partition_types(spark, tmp_path):
+    """Pre-schema commits are inferred together, in one Spark job, so their
+    partition types widen across commits as one partitioned read widens
+    them: int with bigint reads as bigint, int with string as string."""
+    from kgtm.materialize import read_table
+
+    for name, values, want in [
+        ("wide", [1, 2, 10**10], "bigint"),
+        ("mixed", [1, 2, "a"], "string"),
+    ]:
+        store = tmp_path / name
+        for seq, v in enumerate(values):
+            spark.createDataFrame([(seq, str(v))], "x long, part string").write.partitionBy(
+                "part"
+            ).parquet(str(store / "triples" / f"commit=c{seq}"))
+        (store / "_commits").mkdir()
+        for seq in range(len(values)):
+            (store / "_commits" / f"{seq:010d}.json").write_text(json.dumps(
+                {"commit_id": f"c{seq}", "seq": seq, "table": "triples", "partition_by": ["part"]}
+            ))
+        sc = spark.sparkContext
+        group = f"legacy-read-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, group)
+        try:
+            back = read_table(spark, str(store))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert back.schema.simpleString() == f"struct<x:bigint,commit:string,part:{want}>"
+        assert sorted(str(r.part) for r in back.collect()) == sorted(str(v) for v in values)
+
+
+def test_read_table_keeps_written_partition_types(spark, tmp_path):
+    """Partition columns read back with the types the writer wrote, never
+    the types their directory names suggest: string values "0", "1", "2"
+    stay strings (inference says int) and a boolean stays boolean
+    (inference says string)."""
+    from kgtm.materialize import read_table, write_table
+
+    store = str(tmp_path / "store")
+    df = spark.createDataFrame(
+        [(i, str(i % 3), i % 2 == 0) for i in range(9)],
+        "x long, bucket string, flag boolean",
+    )
+    write_table(df, store, partition_by=("bucket", "flag"))
+    back = read_table(spark, store)
+    assert back.schema.simpleString() == (
+        "struct<x:bigint,commit:string,bucket:string,flag:boolean>"
+    )
+    assert sorted((r.x, r.bucket, r.flag) for r in back.collect()) == sorted(
+        tuple(r) for r in df.collect()
+    )
+
+
+def test_read_table_runs_no_job(spark, tmp_path):
+    """Building a read costs no Spark job: the schema comes from the
+    manifests, not from a footer read of the data files."""
+    from kgtm.materialize import read_table, write_table
+
+    store = str(tmp_path / "store")
+    df = spark.createDataFrame([(i, f"s{i % 3}") for i in range(30)], "x long, source string")
+    write_table(df, store)
+    write_table(df, store)
+    sc = spark.sparkContext
+    group = f"read-table-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        read_table(spark, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+def test_read_table_empty_partitioned_commit(spark, tmp_path):
+    """A zero-row partitioned commit leaves only _SUCCESS on disk; it reads
+    as a typed empty frame with the layout of a non-empty commit's read."""
+    from kgtm.materialize import read_table, write_table
+
+    store = tmp_path / "store"
+    df = spark.createDataFrame([(1, 2, "a")], "x long, y int, source string")
+    c = write_table(df.limit(0), str(store))
+    commit_dir = store / "triples" / f"commit={c['commit_id']}"
+    assert {p.name for p in commit_dir.iterdir() if not p.name.startswith(".")} == {"_SUCCESS"}
+    empty = read_table(spark, str(store))
+    assert empty.count() == 0
+    write_table(df, str(store))
+    assert empty.schema == read_table(spark, str(store)).schema
 
 
 def test_cli_end_to_end_subprocess(tmp_path):
