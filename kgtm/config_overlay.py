@@ -45,7 +45,9 @@ def parse_auth_config(auth_header: str | None) -> dict | None:
         return None
     try:
         decoded = base64.b64decode(parts[1]).decode("utf-8", "strict")
-    except Exception:  # noqa: BLE001
+    except ValueError:
+        # binascii.Error (bad base64), UnicodeDecodeError (not UTF-8) and the
+        # plain ValueError b64decode raises on non-ASCII header text
         return None
     user = decoded.split(":", 1)[0]
     cfg = dict(DEFAULTS)

@@ -474,7 +474,7 @@ def incremental_curate(
 
 
 def persist_ledger(
-    ledger: DataFrame, out_dir: str, coordinator=None, **curation_params
+    ledger: DataFrame, out_dir: str, **curation_params
 ) -> dict:
     """Commit a curation ledger SNAPSHOT into the manifest store
     (table='ledger', manifest ledger_kind='snapshot').
@@ -519,7 +519,6 @@ def persist_ledger(
             out_dir,
             f"ledger-succ-{head['commit_id']}",
             {"op": "snapshot", "base_seq": head["seq"]},
-            coordinator=coordinator,
         ):
             raise RuntimeError(
                 f"concurrent ledger commit: another writer holds the "
@@ -535,7 +534,6 @@ def persist_ledger(
         kind="snapshot",
         curation_params=curation_params,
         extra=extra,
-        coordinator=coordinator,
     )
 
 
@@ -545,7 +543,6 @@ def _commit_ledger_rows(
     kind: str,
     curation_params: dict | None,
     extra: dict | None = None,
-    coordinator=None,
 ) -> dict:
     from kgtm.materialize import write_table
 
@@ -560,7 +557,6 @@ def _commit_ledger_rows(
         table="ledger",
         partition_by=("kept_part",),
         extra_manifest=manifest,
-        coordinator=coordinator,
     )
 
 
@@ -858,7 +854,6 @@ def persist_curated_corpus(
     jaccard_threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    coordinator=None,
 ) -> dict:
     """Curate ``docs`` and commit the full result: ledger snapshot + the
     materialized corpus-side state (digests + shingle flat). Subsequent
@@ -878,7 +873,6 @@ def persist_curated_corpus(
     c = persist_ledger(
         ledger,
         out_dir,
-        coordinator=coordinator,
         min_quality=min_quality,
         jaccard_threshold=jaccard_threshold,
     )
@@ -989,7 +983,6 @@ def append_curated_batch(
     jaccard_threshold: float | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    coordinator=None,
     max_deltas: int | None = 64,
 ) -> dict:
     """Incrementally curate a new batch against the store's LATEST ledger
@@ -1016,15 +1009,17 @@ def append_curated_batch(
     incremental parity contract needs unchanged settings); a threshold that
     is neither recorded nor passed raises rather than silently guessing.
 
-    Concurrency (round-5 CAS): two concurrent appends from the same base
-    would each write a delta claiming the same base. Before publishing, the
-    append CLAIMS the marker ``ledger-succ-{base_commit_id}`` through the
-    commit ``coordinator``'s rename-if-absent primitive — the marker path is
-    named by the base alone, so the two writers collide on the SAME path and
-    exactly one proceeds; the loser gets a recompute error. Defense in
-    depth: even a delta that slips past the claim (coordinator whose rename
-    overwrites, or a plain snapshot landing in the claim→commit window) is
-    structurally orphaned by chain-linked resolution
+    Concurrency (CAS): two concurrent appends from the same base would each
+    write a delta claiming the same base. Before publishing, the append
+    CLAIMS the marker ``ledger-succ-{base_commit_id}`` (claim_marker: a
+    rename-if-absent that is atomic on the store's own filesystem) — the
+    marker path is named by the base alone, so the two writers collide on
+    the SAME path and exactly one proceeds; the loser gets a recompute
+    error. Every commit of the append (the ledger delta and its five state
+    tables) lands through the same atomic seq claim. Defense in depth: even
+    a delta that slips past the claim (a store whose rename overwrites, or
+    a plain snapshot landing in the claim→commit window) is structurally
+    orphaned by chain-linked resolution
     (_resolve_ledger_commits matches each delta's base_seq to the chain
     head), so readers never see an inconsistent fold. A claim whose winner
     crashed before committing blocks later appends from that base — see
@@ -1154,7 +1149,6 @@ def append_curated_batch(
         out_dir,
         f"ledger-succ-{base['commit_id']}",
         {"op": "append", "base_seq": base["seq"]},
-        coordinator=coordinator,
     ):
         raise RuntimeError(
             f"concurrent ledger commit: another writer holds the successor "
@@ -1169,7 +1163,6 @@ def append_curated_batch(
         kind="delta",
         curation_params={"min_quality": mq, "jaccard_threshold": jt},
         extra={"base_seq": base["seq"], "base_commit_id": base["commit_id"]},
-        coordinator=coordinator,
     )
     if state is not None:
         # keep the materialized state current: the delta's own O(batch)
@@ -1195,19 +1188,20 @@ def append_curated_batch(
             # an operator runs compact_ledger directly, where failures DO
             # propagate).
             try:
-                compact_ledger(spark, out_dir, coordinator=coordinator)
-            except Exception:
+                compact_ledger(spark, out_dir)
+            except Exception as e:
                 warnings.warn(
-                    "post-append auto-compaction failed (the append itself "
-                    "committed); chain length stays above max_deltas until "
-                    "a later append or an explicit compact_ledger succeeds",
+                    f"post-append auto-compaction failed ({type(e).__name__}: "
+                    f"{e}); the append itself committed, and the chain stays "
+                    "above max_deltas until a later append or an explicit "
+                    "compact_ledger succeeds",
                     RuntimeWarning,
                     stacklevel=2,
                 )
     return c
 
 
-def compact_ledger(spark, out_dir: str, coordinator=None) -> dict:
+def compact_ledger(spark, out_dir: str) -> dict:
     """Fold the newest snapshot + its delta chain into ONE snapshot commit
     (and likewise fold the state tables), marking the inputs ``replaces``.
 
@@ -1256,7 +1250,6 @@ def compact_ledger(spark, out_dir: str, coordinator=None) -> dict:
         out_dir,
         f"ledger-succ-{resolved[-1]['commit_id']}",
         {"op": "compact", "base_seq": resolved[-1]["seq"]},
-        coordinator=coordinator,
     ):
         raise RuntimeError(
             f"concurrent ledger commit: another writer holds the successor "
@@ -1270,7 +1263,6 @@ def compact_ledger(spark, out_dir: str, coordinator=None) -> dict:
         kind="snapshot",
         curation_params=params,
         extra={"replaces": [rc["commit_id"] for rc in resolved]},
-        coordinator=coordinator,
     )
     if state is not None:
         want = {rc["commit_id"] for rc in resolved}

@@ -9,23 +9,24 @@ records the written frame's schema, the way an Iceberg snapshot's metadata
 carries its table schema: ``read_table`` builds its frame from the recorded
 schemas and never infers one from the files or the directory names.
 
-Sandbox note (SURVEY §7 hard-part 4): no Iceberg catalog is available here,
-so the default format is parquet in an Iceberg-compatible layout (partition
-directories + a _commits manifest). ``fmt="iceberg"`` switches to a real
-Iceberg catalog when one is configured on the cluster — the contract
-(partition spec, metrics in the commit manifest) is identical.
+Layout: parquet in an Iceberg-compatible shape — partition directories per
+commit plus a ``_commits`` manifest log — with no catalog. A commit becomes
+visible when its manifest claims the next seq through ``_claim``, a
+rename-if-absent that is atomic on the filesystem the store lives on: a hard
+link on ``file:``, ``FileSystem.rename`` on HDFS-class stores. Stores whose
+rename overwrites (S3A-class object stores) need a single writer.
 """
 
 from __future__ import annotations
 
+import contextlib
 import copy
 import json
+import os
 import re
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from kgtm.metrics import MetricsCollector
@@ -40,7 +41,7 @@ from kgtm.schemas import METRICS_SCHEMA
 _MANIFEST_RE = re.compile(r"^(\d{10})(-[0-9a-f]+)?\.json$")
 
 #: parsed-manifest cache: uri -> ((mtime, length), manifest dict). Committed
-#: manifests are write-once (atomic rename), so a (mtime, length) match from
+#: manifests are write-once (one atomic claim), so a (mtime, length) match from
 #: listStatus makes the cached parse authoritative with zero extra reads.
 #: Entries are returned as deep copies so callers can never poison the cache.
 _MANIFEST_CACHE: dict[str, tuple[tuple[int, int], dict]] = {}
@@ -91,65 +92,48 @@ def _active_spark(spark: SparkSession | None) -> SparkSession:
     return s
 
 
-class RenameCommitCoordinator:
-    """Default seq-claim arbitration: exists-check + rename to the seq-named
-    destination. Atomic on HDFS/ABFS (rename-if-absent); on S3A or POSIX
-    local filesystems, whose renames overwrite, the exists+rename pair
-    narrows but cannot close the race window — pair those stores with a
-    coordinating service via a custom coordinator (below)."""
+def _claim(fs, jvm, tmp: str, dst: str) -> bool:
+    """Rename-if-absent of ``tmp`` to ``dst``; True iff THIS call created
+    ``dst``. Atomic on the store's own filesystem, so among any number of
+    concurrent claims of one ``dst`` exactly one wins.
 
-    def claim(self, fs, jvm, tmp: str, dst: str) -> bool:
-        hpath = jvm.org.apache.hadoop.fs.Path
+    A POSIX rename overwrites, so on ``file:`` the claim is a hard link
+    (link(2) fails atomically with EEXIST when ``dst`` exists), after which
+    ``tmp`` is deleted through ``fs`` (taking the ``.crc`` sidecar that
+    LocalFileSystem wrote with it). ``dst`` carries no sidecar; one left by a
+    manifest removed outside Hadoop would fail the checksum of the new
+    ``dst``, so it is removed. Any other OSError (say, a filesystem without
+    hard links) raises. Elsewhere ``FileSystem.rename`` is the claim: it is
+    rename-if-absent on HDFS/ABFS. On the loser ``tmp`` is left in place."""
+    hpath = jvm.org.apache.hadoop.fs.Path
+    if fs.getScheme() != "file":
         return (not fs.exists(hpath(dst))) and fs.rename(hpath(tmp), hpath(dst))
-
-
-class LockCommitCoordinator:
-    """Coordinated claim: serializes the exists+rename pair under a process-
-    wide lock, making the claim atomic even where rename overwrites (POSIX
-    local FS, S3A). This is the in-process stand-in for the external
-    coordinator an object store needs — a metastore conditional-put
-    (S3 If-None-Match / DynamoDB lock table); swap ``_LOCK`` acquisition for
-    that service's primitive and the commit protocol is unchanged."""
-
-    _LOCK = threading.Lock()  # process-wide: one claim section per process
-
-    def claim(self, fs, jvm, tmp: str, dst: str) -> bool:
-        hpath = jvm.org.apache.hadoop.fs.Path
-        with self._LOCK:
-            if fs.exists(hpath(dst)):
-                return False
-            return fs.rename(hpath(tmp), hpath(dst))
-
-
-#: Store-wide default; replace with LockCommitCoordinator (or a custom
-#: conditional-put implementation) when the store lives on a filesystem
-#: whose rename overwrites (S3A, POSIX file:).
-DEFAULT_COORDINATOR = RenameCommitCoordinator()
+    local_dst = fs.pathToFile(hpath(dst)).getPath()
+    try:
+        os.link(fs.pathToFile(hpath(tmp)).getPath(), local_dst)
+    except FileExistsError:
+        return False
+    head, name = os.path.split(local_dst)
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(os.path.join(head, f".{name}.crc"))
+    fs.delete(hpath(tmp), False)
+    return True
 
 
 def write_triples(
     triples: DataFrame,
     out_dir: str,
-    fmt: str = "parquet",
     partition_by: tuple[str, ...] = ("source",),
     metrics: MetricsCollector | None = None,
-    n_output_partitions: int | None = None,
 ) -> dict:
     """Write the triple table + metrics; returns the commit record.
 
     Partitioning: by `source` (original/archivo-latest/...) — low
     cardinality, prunes the common "only linked triples" consumers. Within
-    partitions files are sized by AQE coalesce; pass n_output_partitions to
-    force fewer, larger files.
+    partitions files are sized by AQE coalesce.
     """
     return write_table(
-        triples,
-        out_dir,
-        table="triples",
-        fmt=fmt,
-        partition_by=partition_by,
-        metrics=metrics,
-        n_output_partitions=n_output_partitions,
+        triples, out_dir, table="triples", partition_by=partition_by, metrics=metrics
     )
 
 
@@ -157,12 +141,10 @@ def write_table(
     df: DataFrame,
     out_dir: str,
     table: str = "triples",
-    fmt: str = "parquet",
     partition_by: tuple[str, ...] = ("source",),
     metrics: MetricsCollector | None = None,
     n_output_partitions: int | None = None,
     extra_manifest: dict | None = None,
-    coordinator=None,
 ) -> dict:
     """Generic manifest-gated commit of any table into the store.
 
@@ -202,12 +184,7 @@ def write_table(
 
     mc = metrics or MetricsCollector()
     with mc.stage("materialize"):
-        if fmt == "iceberg":
-            df.writeTo(f"kgtm.{table}_{commit_id}").partitionedBy(
-                *[F.col(c) for c in partition_by]
-            ).createOrReplace()
-        else:
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_path)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_path)
 
     return _commit_manifest(
         spark,
@@ -215,44 +192,33 @@ def write_table(
         {
             "commit_id": commit_id,
             "table": table,
-            "format": fmt,
             "partition_by": list(partition_by),
             "schema": df.schema.json(),
             "metrics": list(mc.rows),
             **(extra_manifest or {}),
         },
-        coordinator=coordinator,
     )
 
 
-def _commit_manifest(
-    spark: SparkSession, out_dir: str, commit: dict, coordinator=None
-) -> dict:
+def _commit_manifest(spark: SparkSession, out_dir: str, commit: dict) -> dict:
     """Publish a commit manifest atomically through the Hadoop FileSystem.
 
-    Protocol (the LogStore pattern — works on HDFS/ABFS where rename-if-absent
-    is atomic; on S3A or a POSIX local FS, whose renames overwrite, the
-    exists+rename pair narrows but cannot close the window — pair those
-    filesystems with a coordinating metastore, same as every rename-based
-    committer):
+    Protocol (the LogStore pattern):
       1. write the full manifest JSON to a dot-prefixed temp file (readers
          skip dot/underscore names, so a crash mid-write is invisible),
-      2. claim seq = max(committed seq) + 1 by handing the temp file to the
-         ``coordinator`` (default: exists+rename), whose destination
-         `{seq:010d}.json` is named by the seq ALONE — two writers claiming
-         one seq collide on the SAME path and exactly one claim wins; the
-         loser re-stamps its manifest with the next seq and retries.
+      2. claim seq = max(committed seq) + 1 by handing the temp file to
+         ``_claim`` (rename-if-absent, atomic on the store's filesystem),
+         whose destination `{seq:010d}.json` is named by the seq ALONE — two
+         writers claiming one seq collide on the SAME path and exactly one
+         claim wins; the loser re-stamps its manifest with the next seq and
+         retries.
     The commit_id lives in the manifest CONTENT, never in the destination
     name — a writer-unique name would make collisions impossible and the
-    uniqueness guarantee vacuous. The coordinator is pluggable so stores on
-    overwrite-rename filesystems (S3A) can substitute a conditional-put /
-    lock-service claim without touching the rest of the protocol.
+    uniqueness guarantee vacuous.
     """
     commits_dir = _child(out_dir, "_commits")
     fs, jvm = _fs(spark, commits_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hpath(commits_dir))
-    coordinator = coordinator or DEFAULT_COORDINATOR
+    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(commits_dir))
 
     commit_id = commit["commit_id"]
     tmp = _child(commits_dir, f".tmp-{commit_id}.json")
@@ -260,22 +226,16 @@ def _commit_manifest(
     while True:
         commit["seq"] = seq
         _write_bytes(spark, tmp, json.dumps(commit).encode())
-        dst = _child(commits_dir, f"{seq:010d}.json")
-        if coordinator.claim(fs, jvm, tmp, dst):
+        if _claim(fs, jvm, tmp, _child(commits_dir, f"{seq:010d}.json")):
             return commit
         seq += 1  # lost the race for this seq — claim the next one
 
 
 def claim_marker(
-    spark: SparkSession,
-    out_dir: str,
-    name: str,
-    payload: dict | None = None,
-    coordinator=None,
+    spark: SparkSession, out_dir: str, name: str, payload: dict | None = None
 ) -> bool:
     """Atomically create the claim marker ``_commits/.claim-{name}`` through
-    the coordinator's rename-if-absent primitive; True iff THIS caller
-    created it.
+    ``_claim``'s rename-if-absent; True iff THIS caller created it.
 
     The CAS building block for operations that must have at most ONE
     successor per precondition token (e.g. one ledger delta per base commit
@@ -290,15 +250,13 @@ def claim_marker(
     fs, jvm = _fs(spark, commits_dir)
     hpath = jvm.org.apache.hadoop.fs.Path
     fs.mkdirs(hpath(commits_dir))
-    coordinator = coordinator or DEFAULT_COORDINATOR
     tmp = _child(commits_dir, f".claimtmp-{uuid.uuid4().hex[:12]}.json")
     body = dict(payload or {})
     body["claimed_at_ms"] = int(
         jvm.java.lang.System.currentTimeMillis()
     )
     _write_bytes(spark, tmp, json.dumps(body).encode())
-    dst = _child(commits_dir, f".claim-{name}.json")
-    if coordinator.claim(fs, jvm, tmp, dst):
+    if _claim(fs, jvm, tmp, _child(commits_dir, f".claim-{name}.json")):
         return True
     fs.delete(hpath(tmp), False)
     return False
@@ -364,7 +322,7 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
 
     Reads through the Hadoop FileSystem (object-store safe). Dot/underscore
     temp files, unparsable manifests (a writer crashed mid-write before the
-    atomic rename, or bitrot), and manifests deleted between listing and
+    atomic claim, or bitrot), and manifests deleted between listing and
     open (a concurrent expire) are all skipped, so a broken or racing file
     can never take the whole store down for readers.
     """
@@ -381,7 +339,7 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
         name = status.getPath().getName()
         if not _MANIFEST_RE.match(name):
             continue
-        # Committed manifests are IMMUTABLE (created by one atomic rename,
+        # Committed manifests are IMMUTABLE (created by one atomic claim,
         # never rewritten in place), so re-parsing every manifest on every
         # listing is pure py4j round-trip waste — measured at ~100-150 ms
         # per manifest-read chain, which made ledger reads O(total commits)
@@ -389,12 +347,9 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
         # Cache parsed manifests keyed by (uri, mtime, length) from the
         # SAME listStatus (zero extra calls on a hit); the listing itself
         # stays fresh, so new commits are always seen and expired ones drop
-        # out naturally. Caveat: a store whose rename OVERWRITES (POSIX
-        # local, S3A) could in principle replace a same-name manifest with
-        # different bytes inside one mtime tick — those stores already
-        # require LockCommitCoordinator for correctness (see
-        # RenameCommitCoordinator's docstring); the cache adds no new
-        # failure mode beyond that documented one.
+        # out naturally. Caveat: on a store whose rename OVERWRITES (S3A-
+        # class), two writers could replace a same-name manifest inside one
+        # mtime tick; such stores need a single writer anyway (see _claim).
         key = status.getPath().toString()
         stamp = (status.getModificationTime(), status.getLen())
         hit = _MANIFEST_CACHE.get(key)
@@ -412,8 +367,7 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
             # drop the oldest-inserted half; plain dicts preserve insertion
             # order, and a long-lived driver touching many stores should
             # not grow this without bound. pop(k, None), not del: in-process
-            # concurrent writers (LockCommitCoordinator's supported mode)
-            # can both enter this branch over the same key snapshot, and the
+            # concurrent writers can both enter this branch over the same key snapshot, and the
             # loser's del would KeyError out of a commit that already landed
             for k in list(_MANIFEST_CACHE)[: _MANIFEST_CACHE_MAX // 2]:
                 _MANIFEST_CACHE.pop(k, None)

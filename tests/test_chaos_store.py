@@ -39,7 +39,7 @@ def _surviving_ids(spark, store) -> list[int]:
 
 def test_chaos_concurrent_appends_compactions_expiry(spark, documents, tmp_path):
     from kgtm.curation import append_curated_batch, compact_ledger, persist_curated_corpus
-    from kgtm.materialize import LockCommitCoordinator, expire_replaced, list_commits
+    from kgtm.materialize import expire_replaced, list_commits
 
     store = str(tmp_path / "store")
     persist_curated_corpus(
@@ -48,7 +48,6 @@ def test_chaos_concurrent_appends_compactions_expiry(spark, documents, tmp_path)
         min_quality=0.4,
         jaccard_threshold=0.5,
     )
-    coord = LockCommitCoordinator()
     rng = random.Random(20260818)
 
     # The curation gate drops some batch rows (quality/near-dup) — the
@@ -67,9 +66,7 @@ def test_chaos_concurrent_appends_compactions_expiry(spark, documents, tmp_path)
 
         def run():
             try:
-                append_curated_batch(
-                    spark, store, new_docs=batch, coordinator=coord
-                )
+                append_curated_batch(spark, store, new_docs=batch)
                 ids = [
                     r.doc_id
                     for r in batch.select("doc_id").collect()
@@ -83,7 +80,7 @@ def test_chaos_concurrent_appends_compactions_expiry(spark, documents, tmp_path)
     def mk_compact():
         def run():
             try:
-                compact_ledger(spark, store, coordinator=coord)
+                compact_ledger(spark, store)
                 return ("compact_ok", None, None)
             except (RuntimeError, ValueError) as e:
                 return ("compact_lost", None, str(e))
@@ -161,6 +158,6 @@ def test_chaos_concurrent_appends_compactions_expiry(spark, documents, tmp_path)
     assert steps and next_lo > N_OLD + BATCH
 
     # final compact + expire leaves the same content, fully folded
-    compact_ledger(spark, store, coordinator=coord)
+    compact_ledger(spark, store)
     expire_replaced(store, spark)
     assert set(_surviving_ids(spark, store)) == expected

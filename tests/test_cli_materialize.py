@@ -267,38 +267,58 @@ def test_truly_concurrent_writers_get_unique_seqs(spark, events, tmp_path):
     assert read_table(spark, store).count() == 8 * n
 
 
-@pytest.mark.parametrize("coord_name", ["rename", "lock"])
-def test_concurrent_writers_through_coordinators(spark, documents, tmp_path, coord_name):
-    """The seq-claim protocol holds through BOTH coordinator implementations.
+class _NonLocalFS:
+    """The store's Hadoop filesystem, reporting a scheme other than
+    ``file`` so ``_claim`` takes its exists + ``FileSystem.rename`` branch
+    (the one HDFS-class stores take); every other call goes to the real
+    filesystem. Each rename is counted in ``renames``."""
 
-    True 6-way concurrency runs ONLY through LockCommitCoordinator — its
-    claim is atomic by construction. RenameCommitCoordinator's own docstring
-    says the exists+rename pair 'narrows but cannot close' the race window on
-    a POSIX local FS (rename overwrites), so asserting unique seqs under real
-    concurrency there is asserting a property the implementation explicitly
-    does not guarantee — that leg runs the same 6 writers sequentially
-    (exercising claim/retry mechanics, not the un-guaranteed race)."""
+    def __init__(self, fs, renames):
+        self._fs, self._renames = fs, renames
+
+    def getScheme(self):
+        return "hdfs"
+
+    def rename(self, src, dst):
+        self._renames.append(dst.getName())
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+@pytest.mark.parametrize("coord_name", ["rename", "lock"])
+def test_concurrent_writers_through_coordinators(
+    spark, documents, tmp_path, monkeypatch, coord_name
+):
+    """The seq-claim protocol holds through both branches of ``_claim``,
+    six unpartitioned ``docs`` commits each.
+
+    ``lock``: the claim a ``file:`` store takes (a hard link, which fails
+    atomically when the manifest exists, so it excludes like a lock), under
+    six truly concurrent writers. ``rename``: the exists + rename branch,
+    forced onto the local store. It is rename-if-absent only on HDFS-class
+    filesystems (a POSIX rename overwrites), so that leg runs its six writers
+    one after another: it checks the claim and the seq pick, not a race."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from kgtm.materialize import (
-        LockCommitCoordinator,
-        RenameCommitCoordinator,
-        list_commits,
-        read_table,
-        write_table,
-    )
+    from kgtm import materialize as mat
+    from kgtm.materialize import list_commits, read_table
 
-    coord = {"rename": RenameCommitCoordinator, "lock": LockCommitCoordinator}[
-        coord_name
-    ]()
+    renames = []
+    if coord_name == "rename":
+        claim = mat._claim
+        monkeypatch.setattr(
+            mat,
+            "_claim",
+            lambda fs, jvm, tmp, dst: claim(_NonLocalFS(fs, renames), jvm, tmp, dst),
+        )
     store = str(tmp_path / f"store-{coord_name}")
     df = documents.limit(20).localCheckpoint(eager=True)
     n = df.count()
 
     def commit(_):
-        return write_table(
-            df, store, table="docs", partition_by=(), coordinator=coord
-        )
+        return write_table(df, store, table="docs", partition_by=())
 
     if coord_name == "lock":
         with ThreadPoolExecutor(max_workers=6) as pool:
@@ -309,6 +329,49 @@ def test_concurrent_writers_through_coordinators(spark, documents, tmp_path, coo
     assert len(set(seqs)) == 6, seqs
     assert [c["seq"] for c in list_commits(store)] == seqs
     assert read_table(spark, store, table="docs").count() == 6 * n
+    if coord_name == "rename":  # every claim went through the rename branch
+        assert renames == [f"{seq:010d}.json" for seq in seqs], renames
+
+
+def test_claim_marker_has_one_winner_under_race(spark, tmp_path):
+    """Eight threads, released together by a barrier, claim one marker name
+    per round: exactly one claim wins each round, so the rename-if-absent
+    under claim_marker is atomic on the store's own (file:) filesystem."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from kgtm.materialize import claim_marker
+
+    store = str(tmp_path / "store")
+    writers, rounds = 8, 200
+    barrier = threading.Barrier(writers)
+
+    def claim(name):
+        barrier.wait(timeout=60)
+        return claim_marker(spark, store, name)
+
+    with ThreadPoolExecutor(max_workers=writers) as pool:
+        winners = [
+            sum(pool.map(claim, [f"race-{r}"] * writers)) for r in range(rounds)
+        ]
+    bad = {r: w for r, w in enumerate(winners) if w != 1}
+    assert not bad, f"rounds without exactly one winner: {bad}"
+
+
+def test_commit_claims_seq_over_a_stale_checksum_sidecar(spark, tmp_path):
+    """A manifest removed outside Hadoop leaves LocalFileSystem's .crc
+    sidecar behind; the next commit claiming that seq must not be read
+    against the stale checksum, which would hide it from every reader."""
+    from kgtm.materialize import _write_bytes, list_commits
+
+    store = tmp_path / "store"
+    gone = store / "_commits" / "0000000000.json"
+    _write_bytes(spark, str(gone), b'{"commit_id": "cgone", "seq": 0, "pad": 0}')
+    gone.unlink()
+    assert (gone.parent / ".0000000000.json.crc").exists()
+    c = write_table(spark.range(3).withColumn("source", F.lit("s")), str(store))
+    assert c["seq"] == 0
+    assert [m["commit_id"] for m in list_commits(str(store))] == [c["commit_id"]]
 
 
 def test_manifest_cache_fresh_and_unpoisonable(spark, tmp_path):

@@ -622,6 +622,29 @@ def test_append_auto_compaction_is_best_effort(spark, documents, tmp_path, monke
     assert cur.read_ledger(spark, store).count() == 120  # and it landed
 
 
+def test_append_auto_compaction_warning_names_the_failure(
+    spark, documents, tmp_path, monkeypatch
+):
+    """The best-effort auto-compaction's warning says what failed: the
+    exception's type and message, so a run explains itself without a rerun."""
+    import kgtm.curation as cur
+
+    store = str(tmp_path / "store")
+    old = documents.filter(F.col("doc_id") < 100)
+    cur.persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
+
+    def failing_compact(*a, **k):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(cur, "compact_ledger", failing_compact)
+    b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
+    with pytest.warns(RuntimeWarning) as record:
+        c = cur.append_curated_batch(spark, store, new_docs=b1, max_deltas=1)
+    assert c["seq"] and c.get("ledger_kind") == "delta"
+    text = " ".join(str(w.message) for w in record)
+    assert "RuntimeError" in text and "boom" in text, text
+
+
 # ---------------------------------------------------------------------------
 # chain resolution, orphans and out-of-band damage
 # ---------------------------------------------------------------------------
@@ -852,25 +875,21 @@ def _mini_store(spark, documents, root, n_old=100):
 
 
 def test_concurrent_appends_same_base_exactly_one_wins(spark, documents, tmp_path):
-    """Two truly concurrent appends from the same base through
-    LockCommitCoordinator (atomic claim): exactly one lands, the loser gets
-    the recompute error, and the store resolves old + winner only."""
+    """Two truly concurrent appends from the same base (one atomic successor
+    claim): exactly one lands, the loser gets the recompute error, and the
+    store resolves old + winner only."""
     from concurrent.futures import ThreadPoolExecutor
 
     from kgtm.curation import append_curated_batch, read_ledger
-    from kgtm.materialize import LockCommitCoordinator
 
     store = str(tmp_path / "store")
     _mini_store(spark, documents, store)
     b1 = documents.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 120))
     b2 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
-    coord = LockCommitCoordinator()
 
     def run(batch):
         try:
-            return ("ok", append_curated_batch(
-                spark, store, new_docs=batch, coordinator=coord
-            ))
+            return ("ok", append_curated_batch(spark, store, new_docs=batch))
         except RuntimeError as e:
             return ("err", str(e))
 
@@ -887,13 +906,13 @@ def test_concurrent_appends_same_base_exactly_one_wins(spark, documents, tmp_pat
     loser_batch = b1 if results[0][0] == "err" else b2
     # ids must stay monotone: only the higher-id batch can follow the winner
     if results[1][0] == "err":  # b2 lost: b2's ids > b1's — fine to re-append
-        append_curated_batch(spark, store, new_docs=b2, coordinator=coord)
+        append_curated_batch(spark, store, new_docs=b2)
         assert read_ledger(spark, store).count() == 140
     else:
         # b1 lost to b2; b1's ids are below b2's, monotone guard refuses —
         # exactly the contract (recompute means re-batching upstream)
         with pytest.raises(ValueError, match="monotone"):
-            append_curated_batch(spark, store, new_docs=loser_batch, coordinator=coord)
+            append_curated_batch(spark, store, new_docs=loser_batch)
 
 
 def test_release_stale_ledger_claims(spark, documents, tmp_path):

@@ -33,6 +33,9 @@ def test_parse_auth_config_pure():
     assert parse_auth_config("bearer xyz") is None
     assert parse_auth_config(None) is None
     assert parse_auth_config("basic !!!notb64!!!") is None
+    # valid base64, invalid UTF-8; and non-ASCII text where base64 belongs
+    assert parse_auth_config("basic " + base64.b64encode(b"\xff\xfe").decode()) is None
+    assert parse_auth_config("basic ñ") is None
     got2 = parse_auth_config("basic " + _b("--restrictedAccess:pw"))
     assert got2["restricted"] is True
 
