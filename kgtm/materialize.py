@@ -404,9 +404,11 @@ def read_table(
     The schema is the union by name of the live commits' recorded schemas
     (a column added later reads as NULL in older commits; a column recorded
     with two types raises ValueError), laid out as data columns, a string
-    ``commit``, then the partition columns. Nothing is inferred, so building
-    the frame runs no Spark job and an empty commit reads as a typed empty
-    frame. Commits whose manifests record no schema (older stores) take
+    ``commit``, then the partition columns. Nothing is inferred, and an
+    empty commit reads as a typed empty frame. Building the frame runs no
+    Spark job up to ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) live commits; above that, Spark lists their paths with one
+    distributed job. Commits whose manifests record no schema (older stores) take
     theirs from one footer read of their files, with partition types
     discovered across them and ``commit`` given as a string, so ``commit``
     is never inferred there either.

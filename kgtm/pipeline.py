@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgtm.extract import extract_triples
-from kgtm.resolve import resolve_links
+from kgtm.resolve import attach_live_legs, resolve_links
 
 
 @dataclass
@@ -102,18 +102,9 @@ def build_triples(
         .distinct()
         .select("surface", *parse_iri_cols("surface"))
     )
-    linked = link_surfaces(surfaces, ontology_index)
-    if config.onto_version == "originalFailoverLiveLatest":
-        if config.live_legs is None:
-            raise ValueError(
-                "originalFailoverLiveLatest needs PipelineConfig.live_legs: a "
-                "(surface, live_status, live_content_type, accept_header) "
-                "table of live-fetch outcomes — batch has no network leg to "
-                "probe (failover gate: proxy_logic.py:209-238)"
-            )
-        # left join: surfaces missing from live_legs get NULL live columns,
-        # i.e. "no original response" → archived fallback, like the reference
-        linked = linked.join(F.broadcast(config.live_legs), "surface", "left")
+    linked = attach_live_legs(
+        link_surfaces(surfaces, ontology_index), config.onto_version, config.live_legs
+    )
     resolved = resolve_links(
         linked, ontology_snapshots, config.onto_version, config.pin_ts
     )

@@ -164,6 +164,33 @@ def attach_reduced_snapshots(
     ).select(*linked.columns, *_SNAPSHOT_COLS)
 
 
+def attach_live_legs(
+    linked: DataFrame, mode: str, live_legs: DataFrame | None
+) -> DataFrame:
+    """linked + the live-leg columns of each row's surface under
+    originalFailoverLiveLatest; ``linked`` unchanged under any other mode.
+
+    ``live_legs`` is a broadcast-sized (surface, live_status,
+    live_content_type, accept_header) table of live-fetch outcomes: there is
+    no network leg to probe, so the failover gate takes it as input. A
+    surface missing from it gets NULL live columns ("no original response"
+    → archived fallback, like the reference).
+    """
+    if mode != "originalFailoverLiveLatest":
+        return linked
+    if live_legs is None:
+        raise ValueError(
+            "originalFailoverLiveLatest needs live_legs: a (surface, "
+            "live_status, live_content_type, accept_header) table of "
+            "live-fetch outcomes (failover gate: proxy_logic.py:209-238)"
+        )
+    live = [c for c in live_legs.columns if c != "surface"]
+    # the USING join moves surface first; keep linked's column order
+    return linked.join(F.broadcast(live_legs), "surface", "left").select(
+        *linked.columns, *live
+    )
+
+
 def _with_source(
     out: DataFrame, archived_tag: str, live_cols: tuple[str, str, str] | None = None
 ) -> DataFrame:

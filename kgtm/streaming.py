@@ -1,15 +1,21 @@
 """Structured Streaming ingest variant.
 
 The reference is request-at-a-time dispatch (a stream of HTTP requests
-through proxy.py's event loop — SURVEY §3.1); this module is the same
-resolution pipeline as kgtm.pipeline expressed over a transcript *stream*:
+through proxy.py's event loop — SURVEY §3.1); this module runs batch's
+resolution plan, one composition of the batch functions, over a
+transcript *stream*:
 
   readStream (file source, transcripts schema) →
-  mention extraction (stateless codegen exprs) →
-  ladder link (a map-literal probe for a small plan-literal dictionary, else
-  a stream-static broadcast join) + latest-snapshot resolution (stream-static
-  broadcast join) →
+  extract.extract_mentions (stateless codegen exprs) →
+  link.broadcast_ladder_link (a map-literal probe for a small plan-literal
+  dictionary, else a stream-static broadcast join) →
+  resolve.attach_live_legs (failover only) →
+  resolve.resolve_links over latest_snapshots (stream-static broadcast
+  join; all four ontoVersion modes) →
   append sink, exactly-once per file via checkpointLocation.
+
+Stream and batch give the same rows and schema in every mode; the stream
+has no resolution logic of its own.
 
 Also: watermarked per-conversation windowed counts (late-data handling) —
 the streaming twin of turn assembly's groupBy. Full ordered assembly needs
@@ -22,13 +28,14 @@ stops — deterministic in CI.
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgtm.extract import iri_mentions_col
+from kgtm.extract import extract_mentions
 from kgtm.link import broadcast_ladder_link
-from kgtm.normalize import parse_iri_cols
-from kgtm.resolve import _with_source, latest_snapshots
+from kgtm.resolve import attach_live_legs, latest_snapshots, resolve_links
 from kgtm.schemas import TRANSCRIPTS_SCHEMA
 
 
@@ -45,64 +52,31 @@ def streaming_resolution(
     ontology_index: DataFrame,
     snapshots: DataFrame,
     mode: str = "latestArchived",
+    pin_ts: dt.datetime | None = None,
     live_legs: DataFrame | None = None,
 ) -> DataFrame:
-    """Stream of resolved mention rows.
+    """Stream of resolved mention rows: batch's plan composed over the
+    stream — extract_mentions (carrying ``ts``) → broadcast_ladder_link →
+    attach_live_legs → resolve_links — so all four ontoVersion modes, with
+    batch's rows, column order and source taxonomy. ``pin_ts`` and
+    ``live_legs`` are resolve_links' and attach_live_legs' inputs.
 
-    Linking must stay aggregation-free — append output mode forbids
-    unwatermarked aggregations. link.broadcast_ladder_link probes each row
-    with pure expressions: a small plan-literal dictionary is folded into
-    the plan as a map literal, any other one is reached through ONE
-    stream-static broadcast join against (host → map<path, iri>), whose
-    plan size is O(1) in the dictionary, so 10^5+-entry dictionaries stream
-    fine.
+    Append-safe: no step aggregates the stream; the dictionary, snapshot
+    and live-leg dims are plan literals or stream-static broadcast joins.
 
-    The snapshot dim is a stream-static broadcast join of latest_snapshots
-    (append-safe); the source taxonomy and failover null-out are batch
-    resolve_links' own (resolve._with_source).
-
-    ``mode`` is latestArchived or originalFailoverLiveLatest; any other
-    mode raises ValueError (original and timestampArchived are batch-only).
-    mode='originalFailoverLiveLatest' additionally needs ``live_legs`` — a
-    STATIC (surface, live_status, live_content_type, accept_header) table of
-    live-fetch outcomes, stream-static broadcast-joined; the acceptance gate
-    (status ∈ passthrough whitelist ∧ content-type ∈ Accept mimes,
-    proxy_logic.py:209-238) is a stateless column expression, so the plan
-    stays append-safe.
+    broadcast_ladder_link and latest_snapshots are called through this
+    module's names (not link_mentions or resolve_links' own reduction), so
+    timing ``kgtm.streaming.<name>`` covers the link and the snapshot dim.
     """
-    from kgtm.extract import mention_id_col
-
-    if mode not in ("latestArchived", "originalFailoverLiveLatest"):
-        raise ValueError(
-            f"streaming resolution implements latestArchived and "
-            f"originalFailoverLiveLatest, got ontoVersion mode {mode!r}"
-        )
-    mentions = stream.select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.posexplode(iri_mentions_col("text")).alias("pos", "surface"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        mention_id_col().alias("mention_id"),
-        "surface",
-        *parse_iri_cols("surface"),
+    mentions = extract_mentions(stream, carry=("ts",))
+    linked = attach_live_legs(
+        broadcast_ladder_link(mentions, ontology_index), mode, live_legs
     )
-    linked = broadcast_ladder_link(mentions, ontology_index)
-    dim = F.broadcast(latest_snapshots(snapshots))
-    out = linked.join(dim, "ontology_iri", "left")
-    if mode == "latestArchived":
-        return _with_source(out, "archivo-latest")
-    if live_legs is None:
-        raise ValueError(
-            "originalFailoverLiveLatest needs a static live_legs table "
-            "(surface, live_status, live_content_type, accept_header)"
-        )
-    out = out.join(F.broadcast(live_legs), "surface", "left")
-    live = ("live_status", "live_content_type", "accept_header")
-    return _with_source(out, "archivo-latest", live)
+    if mode == "timestampArchived":
+        snapshots = snapshots.filter(F.col("version_ts") <= F.lit(pin_ts))
+    # resolve_links reduces this dim again: a table already reduced to one
+    # row per ontology reduces to the same rows
+    return resolve_links(linked, latest_snapshots(snapshots), mode, pin_ts)
 
 
 def run_stream_to_parquet(

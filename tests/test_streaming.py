@@ -3,14 +3,16 @@ windowed counts, stream-batch parity."""
 
 from __future__ import annotations
 
+import datetime as dt
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import forced_both_ways
 from kgtm.extract import extract_mentions
-from kgtm.link import link_mentions
-from kgtm.resolve import latest_snapshots, resolve_links
+from kgtm.link import broadcast_ladder_link, link_mentions
+from kgtm.resolve import ONTO_VERSION_MODES, attach_live_legs, resolve_links
 from kgtm.schemas import TRANSCRIPTS_SCHEMA
 from kgtm.streaming import (
     read_transcript_stream,
@@ -24,6 +26,9 @@ from kgtm.transcripts import (
     ontology_snapshots_df,
 )
 
+#: picks an older snapshot than the latest for 3 of the 5 ontologies
+PIN = dt.datetime(2024, 7, 1)
+
 
 @pytest.fixture()
 def stream_dirs(spark, events, tmp_path):
@@ -33,24 +38,75 @@ def stream_dirs(spark, events, tmp_path):
     return in_dir, str(tmp_path / "out"), str(tmp_path / "ck")
 
 
+def batch_twin(spark, in_dir, idx, snaps, mode="latestArchived", pin_ts=None,
+               live_legs=None):
+    """The batch resolution of the stream's input: the same composition
+    over a batch read typed like the stream (a bare spark.read.parquet
+    would type ts as timestamp_ntz)."""
+    tr = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(in_dir)
+    linked = broadcast_ladder_link(extract_mentions(tr, carry=("ts",)), idx)
+    return resolve_links(attach_live_legs(linked, mode, live_legs), snaps, mode, pin_ts)
+
+
+def drain_equals_batch(spark, resolved, batch, out_dir, ck_dir):
+    """Drain ``resolved`` and assert its schema and rows (both ways, as
+    multisets) equal ``batch``'s; returns the drained rows."""
+    assert resolved.isStreaming
+    assert resolved.schema == batch.schema
+    run_stream_to_parquet(resolved, out_dir, ck_dir)
+    got = spark.read.parquet(out_dir)
+    assert got.exceptAll(batch).count() == 0
+    assert batch.exceptAll(got).count() == 0
+    return got
+
+
+def live_legs_of(spark, in_dir):
+    """/view surfaces get an acceptable live leg; everything else fails over."""
+    surfaces = extract_mentions(spark.read.parquet(in_dir)).select("surface").distinct()
+    return surfaces.select(
+        "surface",
+        F.when(F.col("surface").contains("/view"), F.lit(200))
+        .otherwise(F.lit(500))
+        .alias("live_status"),
+        F.lit("text/turtle; charset=utf-8").alias("live_content_type"),
+        F.lit("text/turtle").alias("accept_header"),
+    ).localCheckpoint(eager=True)
+
+
 def test_stream_matches_batch_resolution(spark, events, stream_dirs):
     in_dir, out_dir, ck_dir = stream_dirs
     idx, snaps = ontology_index_df(spark), ontology_snapshots_df(spark)
 
-    stream = read_transcript_stream(spark, in_dir)
-    assert stream.isStreaming
-    resolved = streaming_resolution(stream, idx, snaps)
-    run_stream_to_parquet(resolved, out_dir, ck_dir)
-
-    got = spark.read.parquet(out_dir)
-    # batch twin over the same input
-    tr = spark.read.parquet(in_dir)
-    batch = resolve_links(
-        link_mentions(extract_mentions(tr), idx), snaps, "latestArchived"
+    resolved = streaming_resolution(read_transcript_stream(spark, in_dir), idx, snaps)
+    got = drain_equals_batch(
+        spark, resolved, batch_twin(spark, in_dir, idx, snaps), out_dir, ck_dir
     )
-    g = got.groupBy("source").count().collect()
-    b = batch.groupBy("source").count().collect()
-    assert {(r.source, r["count"]) for r in g} == {(r.source, r["count"]) for r in b}
+    assert got.filter(F.col("source") == "archivo-latest").count() > 0
+
+
+@pytest.mark.parametrize("mode", ONTO_VERSION_MODES)
+def test_stream_matches_batch_every_mode(spark, events, stream_dirs, monkeypatch, mode):
+    """Every ontoVersion mode resolves on the stream with batch's rows and
+    schema, under both LITERAL_MAX_ROWS settings (small dims folded into
+    the plan as literals, or broadcast-joined)."""
+    in_dir, out_dir, ck_dir = stream_dirs
+    idx, snaps = ontology_index_df(spark), ontology_snapshots_df(spark)
+    pin = PIN if mode == "timestampArchived" else None
+    live = live_legs_of(spark, in_dir) if mode == "originalFailoverLiveLatest" else None
+    runs = iter(range(2))
+
+    def run():
+        i = next(runs)
+        resolved = streaming_resolution(
+            read_transcript_stream(spark, in_dir), idx, snaps,
+            mode=mode, pin_ts=pin, live_legs=live,
+        )
+        batch = batch_twin(spark, in_dir, idx, snaps, mode, pin, live)
+        got = drain_equals_batch(spark, resolved, batch, f"{out_dir}{i}", f"{ck_dir}{i}")
+        return {(r.source, r["count"]) for r in got.groupBy("source").count().collect()}
+
+    joined, literal = forced_both_ways(monkeypatch, "LITERAL_MAX_ROWS", run)
+    assert joined == literal
 
 
 def test_streaming_exact_dedup_matches_batch(spark, events, stream_dirs, tmp_path):
@@ -139,8 +195,8 @@ def test_stream_commit_store_exactly_once(spark, events, stream_dirs, tmp_path):
 def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     """The large-dictionary scale path (NOTES item 5): streaming with a
     10^5-entry dictionary must (a) plan as a broadcast join, not a 10^5-entry
-    map literal, and (b) match the batch link_mentions resolution row-counts
-    per source over the same input."""
+    map literal, and (b) give the batch resolution's rows and schema over the
+    same input."""
     in_dir, out_dir, ck_dir = stream_dirs
     from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA
     from kgtm.transcripts import ontology_index_rows
@@ -161,47 +217,39 @@ def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     snaps = ontology_snapshots_df(spark)
 
     resolved = streaming_resolution(read_transcript_stream(spark, in_dir), idx, snaps)
-    run_stream_to_parquet(resolved, out_dir, ck_dir)
-    got = spark.read.parquet(out_dir)
-
-    tr = spark.read.parquet(in_dir)
-    batch = resolve_links(
-        link_mentions(extract_mentions(tr), idx), snaps, "latestArchived"
+    got = drain_equals_batch(
+        spark, resolved, batch_twin(spark, in_dir, idx, snaps), out_dir, ck_dir
     )
-    g = {(r.source, r["count"]) for r in got.groupBy("source").count().collect()}
-    b = {(r.source, r["count"]) for r in batch.groupBy("source").count().collect()}
-    assert g == b and any(s == "archivo-latest" for s, _ in g)
+    assert got.filter(F.col("source") == "archivo-latest").count() > 0
 
 
-@pytest.mark.parametrize("mode", ["original", "timestampArchived", "latest", "bogus"])
+@pytest.mark.parametrize("mode", ["latest", "bogus"])
 def test_stream_rejects_modes_it_does_not_implement(spark, stream_dirs, mode):
-    """Streaming resolves latestArchived and failover only; every other
-    mode — a batch-only mode or a typo — raises instead of quietly
-    resolving as archivo-latest."""
+    """A mode that is not one of the four ontoVersion modes raises (it is
+    resolve_links' own check) instead of quietly resolving as
+    archivo-latest."""
     in_dir, _, _ = stream_dirs
     idx, snaps = ontology_index_df(spark), ontology_snapshots_df(spark)
     with pytest.raises(ValueError, match=mode):
         streaming_resolution(read_transcript_stream(spark, in_dir), idx, snaps, mode=mode)
 
 
+def test_stream_timestamp_archived_requires_pin(spark, stream_dirs):
+    in_dir, _, _ = stream_dirs
+    idx, snaps = ontology_index_df(spark), ontology_snapshots_df(spark)
+    with pytest.raises(ValueError, match="pin_ts"):
+        streaming_resolution(
+            read_transcript_stream(spark, in_dir), idx, snaps, mode="timestampArchived"
+        )
+
+
 def test_stream_failover_matches_batch(spark, events, stream_dirs):
     """Failover in streaming: the live-legs static table gates live-vs-
-    archived per surface, and the per-source counts match the batch failover
-    resolution over the same input."""
+    archived per surface, with the batch failover resolution's rows and
+    schema over the same input."""
     in_dir, out_dir, ck_dir = stream_dirs
     idx, snaps = ontology_index_df(spark), ontology_snapshots_df(spark)
-
-    tr = spark.read.parquet(in_dir)
-    surfaces = extract_mentions(tr).select("surface").distinct()
-    live = surfaces.select(
-        "surface",
-        # /view surfaces get an acceptable live leg; everything else fails over
-        F.when(F.col("surface").contains("/view"), F.lit(200))
-        .otherwise(F.lit(500))
-        .alias("live_status"),
-        F.lit("text/turtle; charset=utf-8").alias("live_content_type"),
-        F.lit("text/turtle").alias("accept_header"),
-    ).localCheckpoint(eager=True)
+    live = live_legs_of(spark, in_dir)
 
     with pytest.raises(ValueError, match="live_legs"):
         streaming_resolution(
@@ -213,34 +261,22 @@ def test_stream_failover_matches_batch(spark, events, stream_dirs):
         read_transcript_stream(spark, in_dir), idx, snaps,
         mode="originalFailoverLiveLatest", live_legs=live,
     )
-    run_stream_to_parquet(resolved, out_dir, ck_dir)
-    got = spark.read.parquet(out_dir)
-
-    batch = resolve_links(
-        link_mentions(extract_mentions(tr), idx).join(live, "surface", "left"),
-        snaps,
-        "originalFailoverLiveLatest",
-    )
-    g = {(r.source, r["count"]) for r in got.groupBy("source").count().collect()}
-    b = {(r.source, r["count"]) for r in batch.groupBy("source").count().collect()}
-    assert g == b
-    assert any(s == "original" for s, _ in g)  # live-accepted rows exist
-    # a live-accepted response carries NO snapshot: ALL archived-leg columns
-    # must be null, exactly like batch resolve_links (not just snapshot_iri)
+    batch = batch_twin(spark, in_dir, idx, snaps, "originalFailoverLiveLatest", live_legs=live)
+    got = drain_equals_batch(spark, resolved, batch, out_dir, ck_dir)
+    # live-accepted rows exist and carry NO snapshot: all archived-leg
+    # columns are null
     live_rows = got.filter(F.col("source") == "original")
+    assert live_rows.count() > 0
     assert live_rows.filter(
         F.col("snapshot_iri").isNotNull()
         | F.col("version_ts").isNotNull()
         | F.col("file_url").isNotNull()
     ).count() == 0
-    # and archived rows still carry all three
+    # fallback rows exist and carry all three
     assert got.filter(
         (F.col("source") == "archivo-latest") & F.col("version_ts").isNotNull()
         & F.col("file_url").isNotNull()
     ).count() > 0
-    assert any(s == "archivo-latest" for s, _ in g)  # fallback rows exist
-    # live-accepted rows carry no snapshot
-    assert got.filter((F.col("source") == "original") & F.col("snapshot_iri").isNotNull()).count() == 0
 
 
 def test_stream_exactly_once_on_rerun(spark, events, stream_dirs):
