@@ -647,10 +647,10 @@ def _q_curation_ledger_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_incremental_curation_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-4 O(batch) ingest path end-to-end, value-checked: persist
     the old 90% via persist_curated_corpus (snapshot + materialized digest/
-    shingle state), append the newest 10% WITHOUT old_docs (state-backed
-    delta commit), and return the batch's decisions from the resolved
-    ledger. Must hash-match the same full-run DuckDB twin restricted to the
-    batch as the in-memory incremental_curation gate — proving the store
+    shingle state), append the newest 10% (state-backed delta commit), and
+    return the batch's decisions from the resolved ledger. Must hash-match
+    the same full-run DuckDB twin restricted to the batch as the in-memory
+    incremental_curation gate — proving the store
     round-trip (state write → state read → delta commit → snapshot+delta
     resolution) changes nothing. Scratch store deleted after an eager
     checkpoint, as above; root via _gate_store (deployment-shaped paths)."""

@@ -18,6 +18,14 @@ Reference lineage: the quality/aggregate side descends from the experiment
 harness's per-file accessibility accounting (aggregate_results.py:92-151 —
 every URL ends in exactly one category); the drop-reason CASE is the same
 idea over documents.
+
+A curation store keeps the ledger as versioned commits
+(persist_curated_corpus → snapshot, append_curated_batch → O(batch)
+deltas) beside five materialized corpus-state tables (STATE_TABLES), so an
+append reads compact state instead of the corpus text. Every append is
+state-backed; a store without complete state is refused until
+upgrade_to_state backfills it. incremental_curate also takes the prior
+corpus documents directly, for a caller with no store.
 """
 
 from __future__ import annotations
@@ -115,40 +123,6 @@ def _assemble_ledger(joined: DataFrame, id_col: str, min_quality: float) -> Data
     )
 
 
-def _drift_flag(min_quality: float):
-    """1 where a ledger row disagrees with ``min_quality`` on its own recorded
-    score (the detectable signature of a threshold drift), else 0."""
-    return (
-        (
-            (F.col("quality_score") < min_quality)
-            & (F.col("drop_reason").isNull() | (F.col("drop_reason") != "low-quality"))
-        )
-        | (
-            (F.col("quality_score") >= min_quality)
-            & (F.col("drop_reason") == "low-quality")
-        )
-    ).cast("long")
-
-
-def _check_guard_row(row, min_quality: float) -> None:
-    """Shared raise logic for the single-job precondition aggregate: row has
-    mx (max old id), mn (min new id), n_drift (threshold-drift rows)."""
-    if row.mx is not None and row.mn is not None and row.mx >= row.mn:
-        raise ValueError(
-            "incremental_curate requires monotone ids: every new doc_id must "
-            f"exceed all old ones (old max {row.mx} >= new min {row.mn})"
-            " — the exact-parity proof leans on old ids always winning the "
-            "min-id survivor pick"
-        )
-    if row.n_drift:
-        raise ValueError(
-            f"old_ledger disagrees with min_quality={min_quality} on "
-            f"{row.n_drift} rows — it was built with a different threshold; "
-            "re-curate or pass the original parameters (recorded in the "
-            "ledger's commit manifest by persist_ledger)"
-        )
-
-
 def _pruned_flat_lookup(
     flat: DataFrame,
     shingles: DataFrame,
@@ -189,7 +163,6 @@ def incremental_curate(
     text_col: str = "text",
     id_col: str = "doc_id",
     state: CorpusState | None = None,
-    skip_guards: bool = False,
     _state_out: dict | None = None,
     _plan_probes: dict | None = None,
 ) -> DataFrame:
@@ -203,22 +176,17 @@ def incremental_curate(
     only, never the old×old self-join) and exact dedup is a digest join of
     the batch against prior digests.
 
-    The LINEAR corpus-side work has two modes:
-      - derive mode (``old_docs`` given, ``state`` None): each call re-scans
-        and re-shingles the prior corpus from text — simple, but O(corpus
-        text) per batch.
-      - state mode (``state`` given): the five materialized corpus tables
-        (CorpusState — digests, shingle flat, df contributions, post-cap doc
-        sizes, hot set) maintained by the store (append_curated_batch /
-        persist_curated_corpus write a delta per commit), so a batch append
-        reads compact int/hash tables instead of re-deriving them from text
-        and ``old_docs`` is not needed at all. The stored flat is scanned
-        once, filtered map-side to the batch's shingles.
-    Decisions are identical in both modes (pytest-asserted parity).
-
-    ``skip_guards=True`` skips the precondition job — ONLY for callers that
-    have already verified the preconditions in their own single-job guard
-    (append_curated_batch folds them into its id-set check).
+    The LINEAR corpus-side inputs come from one of two places:
+      - ``old_docs`` (a caller with no store): the prior corpus is scanned
+        and shingled from text on each call — O(corpus text) per batch.
+      - ``state`` (a curation store; append_curated_batch passes it): the
+        five materialized corpus tables (CorpusState — digests, shingle
+        flat, df contributions, post-cap doc sizes, hot set) that the store
+        keeps current with one contribution per commit, so a batch reads
+        compact int/hash tables instead of text and ``old_docs`` is not
+        needed. The stored flat is scanned once, filtered map-side to the
+        batch's shingles. When ``state`` is given, ``old_docs`` is unused.
+    Decisions are identical from either input (pytest-asserted parity).
 
     PRECONDITIONS: (a) monotone ids — checked below; (b) the SAME
     min_quality / jaccard_threshold / shingle settings as the run that
@@ -246,28 +214,40 @@ def incremental_curate(
     )
 
     if state is None and old_docs is None:
+        raise ValueError("incremental_curate needs either old_docs or state")
+    # ONE Spark job for every precondition: max old id + threshold-drift
+    # count come from a single scan of the ledger (which covers every old
+    # doc, scored), crossed with the batch's min id. min_quality drift:
+    # under the ledger's own min_quality, a row is low-quality IFF its
+    # recorded score is below the threshold — any disagreement means
+    # old_ledger was built with different settings and the parity contract
+    # is void.
+    drift = (
+        (F.col("quality_score") < min_quality)
+        & (F.col("drop_reason").isNull() | (F.col("drop_reason") != "low-quality"))
+    ) | ((F.col("quality_score") >= min_quality) & (F.col("drop_reason") == "low-quality"))
+    row = (
+        old_ledger.agg(
+            F.max(id_col).alias("mx"),
+            F.sum(drift.cast("long")).alias("n_drift"),
+        )
+        .crossJoin(new_docs.agg(F.min(id_col).alias("mn")))
+        .first()
+    )
+    if row.mx is not None and row.mn is not None and row.mx >= row.mn:
         raise ValueError(
-            "incremental_curate needs either old_docs (derive mode) or "
-            "state (state mode)"
+            "incremental_curate requires monotone ids: every new doc_id must "
+            f"exceed all old ones (old max {row.mx} >= new min {row.mn})"
+            " — the exact-parity proof leans on old ids always winning the "
+            "min-id survivor pick"
         )
-    if not skip_guards:
-        # ONE Spark job for every precondition: max old id + threshold-drift
-        # count come from a single scan of the ledger (which covers every old
-        # doc, scored), crossed with the batch's min id. The earlier form ran
-        # a .first() and a .count() — two full passes for the same facts.
-        # min_quality drift: under the ledger's own min_quality, a row is
-        # low-quality IFF its recorded score is below the threshold — any
-        # disagreement means old_ledger was built with different settings
-        # and the parity contract is void.
-        row = (
-            old_ledger.agg(
-                F.max(id_col).alias("mx"),
-                F.sum(_drift_flag(min_quality)).alias("n_drift"),
-            )
-            .crossJoin(new_docs.agg(F.min(id_col).alias("mn")))
-            .first()
+    if row.n_drift:
+        raise ValueError(
+            f"old_ledger disagrees with min_quality={min_quality} on "
+            f"{row.n_drift} rows — it was built with a different threshold; "
+            "re-curate or pass the original parameters (recorded in the "
+            "ledger's commit manifest by persist_ledger)"
         )
-        _check_guard_row(row, min_quality)
 
     # the batch-derived intermediates are consumed 2-3x each downstream
     # (digest stage, graph union, probe ids, node set, final ledger joins);
@@ -284,7 +264,7 @@ def incremental_curate(
     # exact stage: the batch's digests vs prior HIGH-QUALITY digests (old
     # exact- and near-dup-dropped docs still occupy their digest groups in a
     # full run; only quality-dropped old docs never entered the groupBy).
-    # State mode: the prior digest set IS the materialized table — the exact
+    # From state, the prior digest set IS the materialized table — the exact
     # keepers own one distinct digest each, and every old HQ doc's digest is
     # owned by some keeper, so keepers' digests == distinct HQ digests.
     if state is not None:
@@ -567,7 +547,7 @@ def _commit_ledger_rows(
 #: The five state tables: digest set, participant shingle flat, df
 #: contributions, per-doc post-cap shingle counts and the accreted
 #: hot-shingle set — together they let an append skip every counting pass
-#: over the corpus flat (see incremental_curate's state mode). A store is
+#: over the corpus flat (see incremental_curate's ``state``). A store is
 #: state-backed only when ALL five cover its resolved ledger chain.
 STATE_TABLES = (
     "ledger_digests",
@@ -593,7 +573,7 @@ N_SHINGLE_BUCKETS = 64
 class CorpusState:
     """Materialized corpus-side curation state, as read for one resolved
     ledger chain: one frame per STATE_TABLES entry, all required — the
-    state-mode input of incremental_curate. ``n_buckets`` is the sb=
+    ``state`` input of incremental_curate. ``n_buckets`` is the sb=
     directory-bucket count recorded in the flat's manifests (None when the
     flat is unbucketed; lookups then skip partition pruning)."""
 
@@ -714,23 +694,20 @@ def _write_state(
         if replaces and replaces.get(table):
             manifest["replaces"] = replaces[table]
         partition_by: tuple[str, ...] = ()
-        n_out = None
         if table in _BUCKETED_STATE and n_buckets:
             # n_buckets=None → unbucketed (a delta landing in a pre-round-5
             # table must match its live layout: parquet partition discovery
             # refuses mixed sb=/flat directory structures)
             df = df.withColumn(
                 "sb", F.pmod(F.col("shingle"), F.lit(n_buckets)).cast("int")
-            )
+            ).repartition(n_buckets, "sb")
             partition_by = ("sb",)
-            n_out = n_buckets
             manifest["shingle_buckets"] = n_buckets
         write_table(
             df,
             out_dir,
             table=table,
             partition_by=partition_by,
-            n_output_partitions=n_out,
             extra_manifest=manifest,
         )
 
@@ -790,9 +767,8 @@ def _read_state(spark, out_dir: str, resolved: list[dict]) -> CorpusState | None
     was never written, a writer crashed between the ledger commit and its
     state commits, or a round-4 store holds only three tables). Coverage is
     decided from manifests before any table is read, so an incomplete
-    store's directories never reach partition discovery. On None, callers
-    fall back to derive mode when given ``old_docs`` and otherwise raise,
-    pointing at upgrade_to_state."""
+    store's directories never reach partition discovery. On None,
+    append_curated_batch raises, pointing at upgrade_to_state."""
     from kgtm.materialize import list_commits, read_table
 
     from kgtm.dedup import DEFAULT_MAX_SHINGLE_DF
@@ -804,8 +780,8 @@ def _read_state(spark, out_dir: str, resolved: list[dict]) -> CorpusState | None
     # silently diverges decisions from a full re-run (shingles in the gap
     # between the two caps are never re-examined). Commits from before the
     # stamp existed carry no key and are accepted (they were all written at
-    # the current default). Raise, don't fall back: this is a configuration
-    # error, and derive mode would diverge the same way.
+    # the current default). Raise rather than return None: this is a
+    # configuration error, and upgrade_to_state would not repair it.
     stamped = {
         c["max_shingle_df"]
         for cs in _live_state_commits(commits, STATE_TABLES, want).values()
@@ -856,11 +832,11 @@ def persist_curated_corpus(
     id_col: str = "doc_id",
 ) -> dict:
     """Curate ``docs`` and commit the full result: ledger snapshot + the
-    materialized corpus-side state (digests + shingle flat). Subsequent
+    materialized corpus-side state (all five STATE_TABLES). Subsequent
     append_curated_batch calls then run entirely from the store — O(batch)
-    compute AND O(batch) reads, no old_docs required. On a store that
-    already has a ledger chain this is a RE-curation and serializes with
-    in-flight appends/compactions via the successor claim (persist_ledger)."""
+    compute AND O(batch) reads. On a store that already has a ledger chain
+    this is a RE-curation and serializes with in-flight appends/compactions
+    via the successor claim (persist_ledger)."""
     from kgtm.materialize import list_commits
 
     ledger = curate_documents(
@@ -919,14 +895,15 @@ def persist_curated_corpus(
 def upgrade_to_state(spark, out_dir: str, docs: DataFrame,
                      text_col: str = "text", id_col: str = "doc_id") -> dict:
     """Backfill materialized curation state for a store that is not fully
-    state-backed — written before state existed (plain persist_ledger /
-    derive-mode appends), a round-4 store holding only three of the five
-    tables, or a store whose writer crashed part-way through a state write —
-    WITHOUT re-curating: one linear derivation pass over ``docs`` (which
-    must be the corpus the newest ledger version covers — verified against
-    the ledger's id set) writes all five tables for the resolved snapshot.
-    Then every future append is state-backed and old_docs-free. This is the
-    only migration path; appends never repair partial state themselves.
+    state-backed — written before state existed (a plain persist_ledger
+    snapshot, maybe with delta commits on it), a round-4 store holding only
+    three of the five tables, or a store whose writer crashed part-way
+    through a state write — WITHOUT re-curating: one linear derivation pass
+    over ``docs`` (which must be the corpus the newest ledger version
+    covers — verified against the ledger's id set) writes all five tables
+    for the resolved snapshot. append_curated_batch refuses every such
+    store until this has run; it is the only migration path, and appends
+    never repair partial state themselves.
 
     Contribution tagging requires one state commit per resolved ledger
     commit, so a multi-commit chain is first folded by compact_ledger (a
@@ -977,8 +954,7 @@ def upgrade_to_state(spark, out_dir: str, docs: DataFrame,
 def append_curated_batch(
     spark,
     out_dir: str,
-    old_docs: DataFrame | None = None,
-    new_docs: DataFrame | None = None,
+    new_docs: DataFrame,
     min_quality: float | None = None,
     jaccard_threshold: float | None = None,
     text_col: str = "text",
@@ -990,19 +966,18 @@ def append_curated_batch(
 
     The scale contract (the round-3 gap this closes): an append writes ONLY
     the batch's rows — the manifest records ledger_kind='delta' and the base
-    seq — and, when the store carries materialized corpus state
-    (persist_curated_corpus / prior appends), also READS only compact state
-    tables + the batch, so per-batch cost is independent of corpus size.
-    read_ledger resolves newest-snapshot + deltas, and compact_ledger folds
-    them back into one snapshot when the delta chain grows long.
+    seq — and READS only the store's materialized corpus state
+    (persist_curated_corpus / prior appends / upgrade_to_state) + the batch,
+    so per-batch cost is independent of corpus size. The append then writes
+    the batch's own state contribution. read_ledger resolves newest-snapshot
+    + deltas, and compact_ledger folds them back into one snapshot when the
+    delta chain grows long.
 
-    Two modes, as in incremental_curate. State mode runs when all five
-    state tables cover the resolved chain; it is then authoritative and
-    ``old_docs`` is ignored. Otherwise (a pre-state store, a round-4 store
+    The append needs all five state tables to cover the resolved chain. A
+    store where they do not (a plain persist_ledger store, a round-4 store
     with three tables, or a writer that crashed between the ledger commit
-    and the end of its state write) the append runs in derive mode over
-    ``old_docs``, or raises a ValueError naming upgrade_to_state when
-    ``old_docs`` is not passed — partial state is never used.
+    and the end of its state write) raises a ValueError naming
+    upgrade_to_state — partial state is never used.
 
     Thresholds default to the values RECORDED in the base ledger commit's
     manifest (explicit arguments override, at the caller's own risk — the
@@ -1033,8 +1008,6 @@ def append_curated_batch(
     """
     from kgtm.materialize import claim_marker
 
-    if new_docs is None:
-        raise ValueError("append_curated_batch requires new_docs")
     # base = the RESOLVED chain head (never a raw newest-by-seq commit: an
     # orphaned delta must not become anyone's base)
     resolved = _resolve_ledger_commits(spark, out_dir)
@@ -1060,80 +1033,27 @@ def append_curated_batch(
     old_ledger = _read_resolved_ledger(spark, out_dir, resolved)
 
     state = _read_state(spark, out_dir, resolved)
+    if state is None:
+        raise ValueError(
+            f"store {out_dir} has no materialized curation state for the "
+            "base ledger version (none of the five state tables, or not all "
+            "of them, cover it) — backfill it once with upgrade_to_state"
+        )
     state_out: dict = {}
-    if state is not None:
-        # preconditions (monotone ids + threshold drift) run INSIDE
-        # incremental_curate — its single-job guard reads them from the
-        # ledger, which is exactly the right source here
-        new_rows = incremental_curate(
-            None,
-            old_ledger,
-            new_docs,
-            min_quality=mq,
-            jaccard_threshold=jt,
-            text_col=text_col,
-            id_col=id_col,
-            state=state,
-            _state_out=state_out,
-        )
-    else:
-        if old_docs is None:
-            raise ValueError(
-                f"store {out_dir} has no materialized curation state for the "
-                "base ledger version (none of the five state tables, or not "
-                "all of them, cover it) and old_docs was not passed — pass "
-                "the base corpus documents (derive mode), or backfill the "
-                "state once with upgrade_to_state"
-            )
-        # derive-mode single-job guard: id-set equality (old_docs must be
-        # exactly the base corpus — a shrunken corpus would silently keep
-        # batch docs duplicating the missing ones), monotone-id bound and
-        # threshold drift, all in ONE aggregation over a full-outer join,
-        # crossed with the batch min — one Spark job instead of round 3's
-        # four (.first() + .count() + two anti-join .count()s)
-        led = old_ledger.select(
-            F.col(id_col).alias("id"),
-            F.lit(True).alias("in_ledger"),
-            "quality_score",
-            "drop_reason",
-        )
-        dcs = old_docs.select(F.col(id_col).alias("id"), F.lit(True).alias("in_docs"))
-        row = (
-            led.join(dcs, "id", "full_outer")
-            .agg(
-                F.sum(F.when(F.col("in_docs").isNull(), 1).otherwise(0)).alias(
-                    "n_missing"
-                ),
-                F.sum(F.when(F.col("in_ledger").isNull(), 1).otherwise(0)).alias(
-                    "n_extra"
-                ),
-                F.max(F.when(F.col("in_ledger").isNotNull(), F.col("id"))).alias("mx"),
-                F.sum(
-                    F.when(F.col("in_ledger").isNotNull(), _drift_flag(mq)).otherwise(0)
-                ).alias("n_drift"),
-            )
-            .crossJoin(new_docs.agg(F.min(id_col).alias("mn")))
-            .first()
-        )
-        if row.n_missing or row.n_extra:
-            raise ValueError(
-                f"old_docs does not match the base ledger's corpus "
-                f"({row.n_missing} ledger ids missing from old_docs, "
-                f"{row.n_extra} old_docs ids absent from the ledger) — pass "
-                "the exact document set the base version was curated from"
-            )
-        _check_guard_row(row, mq)
-        new_rows = incremental_curate(
-            old_docs,
-            old_ledger,
-            new_docs,
-            min_quality=mq,
-            jaccard_threshold=jt,
-            text_col=text_col,
-            id_col=id_col,
-            skip_guards=True,
-        )
-
+    # preconditions (monotone ids + threshold drift) run INSIDE
+    # incremental_curate — its single-job guard reads them from the ledger,
+    # which is exactly the right source here
+    new_rows = incremental_curate(
+        None,
+        old_ledger,
+        new_docs,
+        min_quality=mq,
+        jaccard_threshold=jt,
+        text_col=text_col,
+        id_col=id_col,
+        state=state,
+        _state_out=state_out,
+    )
     new_rows = new_rows.localCheckpoint(eager=True)
     # optimistic re-check as late as possible (cheap manifest listing), then
     # the CAS claim: exactly one successor per base can pass it
@@ -1164,15 +1084,14 @@ def append_curated_batch(
         curation_params={"min_quality": mq, "jaccard_threshold": jt},
         extra={"base_seq": base["seq"], "base_commit_id": base["commit_id"]},
     )
-    if state is not None:
-        # keep the materialized state current: the delta's own O(batch)
-        # contribution, tagged to the delta commit, stashed by the curate
-        # (including the newly-hot set and owner corrections — NOT
-        # derivable from new_docs alone). Written AFTER the ledger commit —
-        # a crash in between (or part-way through the five table commits)
-        # leaves the ledger authoritative and the state incomplete, so the
-        # next append reads no state at all instead of half-state.
-        _write_state(state_out, out_dir, c["commit_id"], n_buckets=state.n_buckets)
+    # keep the materialized state current: the delta's own O(batch)
+    # contribution, tagged to the delta commit, stashed by the curate
+    # (including the newly-hot set and owner corrections — NOT derivable
+    # from new_docs alone). Written AFTER the ledger commit — a crash in
+    # between (or part-way through the five table commits) leaves the ledger
+    # authoritative and the state incomplete, so the next append raises
+    # instead of reading half-state.
+    _write_state(state_out, out_dir, c["commit_id"], n_buckets=state.n_buckets)
     if max_deltas is not None:
         chain = _resolve_ledger_commits(spark, out_dir)
         if len(chain) - 1 >= max_deltas and chain[-1]["commit_id"] == c["commit_id"]:

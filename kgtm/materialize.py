@@ -143,7 +143,6 @@ def write_table(
     table: str = "triples",
     partition_by: tuple[str, ...] = ("source",),
     metrics: MetricsCollector | None = None,
-    n_output_partitions: int | None = None,
     extra_manifest: dict | None = None,
 ) -> dict:
     """Generic manifest-gated commit of any table into the store.
@@ -178,9 +177,6 @@ def write_table(
     # to any earlier commit — the output-store mirror of the reference's
     # versioned-ontology time machine.
     data_path = _child(out_dir, table, f"commit={commit_id}")
-
-    if n_output_partitions:
-        df = df.repartition(n_output_partitions, *partition_by)
 
     mc = metrics or MetricsCollector()
     with mc.stage("materialize"):
@@ -542,8 +538,6 @@ def compact_table(
     spark: SparkSession,
     out_dir: str,
     table: str = "triples",
-    partition_by: tuple[str, ...] | None = None,
-    n_output_partitions: int | None = None,
 ) -> dict:
     """Rewrite all LIVE commits of ``table`` into one commit (small-files
     compaction — the answer to one-commit-per-epoch streaming sinks).
@@ -554,8 +548,8 @@ def compact_table(
     instant the manifest lands (never both, never neither). ``as_of`` reads
     OLDER than the compaction still resolve the original commits, so time
     travel survives the rewrite; the replaced data dirs themselves are
-    reclaimed later by expire_replaced/vacuum, not here. ``partition_by``
-    defaults to the newest live commit's recorded partition spec.
+    reclaimed later by expire_replaced/vacuum, not here. The rewrite keeps
+    the newest live commit's recorded partition spec.
     """
     commits = [
         c
@@ -579,16 +573,12 @@ def compact_table(
             "deltas/state) — a blind union-compaction would corrupt its "
             "read resolution; use kgtm.curation.compact_ledger instead"
         )
-    if partition_by is None:
-        # inherit the table's partition spec from the newest live commit
-        partition_by = tuple(live[-1].get("partition_by", ["source"]))
     df = read_table(spark, out_dir, table).drop("commit")
     return write_table(
         df,
         out_dir,
         table=table,
-        partition_by=partition_by,
-        n_output_partitions=n_output_partitions,
+        partition_by=tuple(live[-1].get("partition_by", ["source"])),
         extra_manifest={"replaces": [c["commit_id"] for c in live]},
     )
 
@@ -669,9 +659,9 @@ def expire_commits(
     # 'state', tagged for_ledger_commit=X) that is NOT itself replaced by a
     # compaction is still feeding _read_state whenever X is a live ledger
     # commit. Expiring it (e.g. after upgrade_to_state added extra state
-    # commits, pushing older ones past keep_last) would silently demote the
-    # store to derive mode — the next old_docs-free append fails. Refuse,
-    # mirroring the delta-stranding guard above.
+    # commits, pushing older ones past keep_last) would leave the store
+    # without complete state — its next append raises, naming
+    # upgrade_to_state. Refuse, mirroring the delta-stranding guard above.
     surviving_ledger = by_table.get("ledger", [])[-keep_last:]
     replaced_any = {cid for c in commits for cid in c.get("replaces", [])}
     live_ledger_ids = {
@@ -692,8 +682,9 @@ def expire_commits(
             f"expiring down to keep_last={keep_last} would delete live state "
             f"commits {sorted(c['commit_id'] for c in stranded_state)} from "
             f"{tables} while the ledger commits they back are still live — "
-            "the store would silently fall back to derive mode; run "
-            "kgtm.curation.compact_ledger first (or raise keep_last)"
+            "the store's next append would raise until upgrade_to_state "
+            "backfills it; run kgtm.curation.compact_ledger first (or raise "
+            "keep_last)"
         )
     fs, jvm = _fs(spark, out_dir)
     hpath = jvm.org.apache.hadoop.fs.Path

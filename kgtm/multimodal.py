@@ -61,9 +61,10 @@ def _decode_image_pil(content: bytes) -> np.ndarray | None:
     """REAL image decode when PIL is importable: grayscale → 4x4 resize →
     L1-normalized pixel intensities (the same 16-feature shape contract as
     the stub). Returns None when PIL is missing OR the bytes are not a
-    decodable image — the caller falls back to the stub, so the pipeline is
+    decodable image (PIL raises OSError — UnidentifiedImageError is one —
+    or ValueError) — the caller falls back to the stub, so the pipeline is
     environment-portable: real features where codecs exist, deterministic
-    fakes where they don't (this sandbox ships no codec libraries)."""
+    fakes where they don't. Any other error propagates."""
     import io
 
     try:
@@ -75,7 +76,7 @@ def _decode_image_pil(content: bytes) -> np.ndarray | None:
             px = np.asarray(
                 im.convert("L").resize((4, 4)), dtype=np.float32
             ).ravel()
-    except Exception:
+    except (OSError, ValueError):
         return None
     return px / max(float(px.sum()), 1.0)
 

@@ -5,15 +5,15 @@ The round-3 verdict's top item: every append used to rewrite the full ledger
 snapshot AND re-shingle the whole prior corpus. Round 4 made appends delta
 commits over materialized corpus state. This script measures the claim the
 design makes — per-batch append wall time should stay (near-)flat as the
-corpus grows — and contrasts it with derive mode (state-less fallback),
-whose cost is expected to grow linearly with corpus text.
+corpus grows — and contrasts it with the store-less incremental_curate
+over the corpus text, whose cost is expected to grow linearly with it.
 
 Protocol: amplify the sf documents deterministically (every word gets a
 rep-specific suffix, so copies are DISTINCT docs, not near-dups, and ids
 stay monotone per rep block). For each corpus size: persist the curated
 corpus + state once (untimed setup), then time
-  state  = append_curated_batch(new_docs=batch)        (state-backed delta)
-  derive = incremental_curate(old_docs, ledger, batch)  (re-derive from text)
+  state     = append_curated_batch(new_docs=batch)        (state-backed delta)
+  storeless = incremental_curate(old_docs, ledger, batch)  (corpus from text)
 with the SAME fixed-size batch. Writes BENCH/INGEST.md.
 """
 
@@ -131,7 +131,7 @@ def main() -> None:
             n_after = read_ledger(spark, store).count()
             assert n_after == old_n + 3 * BATCH_DOCS, (n_after, old_n)
 
-            # derive-mode contrast: same decisions, corpus re-derived from text
+            # store-less contrast: same decisions, corpus read from text
             ledger = read_ledger(spark, store).filter(
                 F.col("doc_id") < corpus_n
             ).localCheckpoint(eager=True)
@@ -139,7 +139,7 @@ def main() -> None:
             incremental_curate(old, ledger, batches[0]).write.format("noop").mode(
                 "overwrite"
             ).save()
-            derive_sec = round(time.perf_counter() - t0, 2)
+            storeless_sec = round(time.perf_counter() - t0, 2)
         finally:
             shutil.rmtree(store, ignore_errors=True)
         rows.append(
@@ -147,16 +147,16 @@ def main() -> None:
                 "corpus_docs": old_n,  # measured row count, not the id stride
                 "setup_sec": setup_sec,
                 "state_append_sec": state_sec,
-                "derive_sec": derive_sec,
+                "storeless_sec": storeless_sec,
             }
         )
         print(json.dumps(rows[-1]), flush=True)
 
     first, last = rows[0], rows[-1]
     growth = round(last["state_append_sec"] / first["state_append_sec"], 2)
-    d_growth = round(last["derive_sec"] / first["derive_sec"], 2)
+    s_growth = round(last["storeless_sec"] / first["storeless_sec"], 2)
     table = "\n".join(
-        f"| {r['corpus_docs']:,} | {r['setup_sec']} s | {r['state_append_sec']} s | {r['derive_sec']} s |"
+        f"| {r['corpus_docs']:,} | {r['setup_sec']} s | {r['state_append_sec']} s | {r['storeless_sec']} s |"
         for r in rows
     )
     (REPO / "BENCH" / "INGEST.md").write_text(
@@ -186,12 +186,12 @@ successive appends (this box swings ±30% on single runs). Setup = full
 curate + snapshot + state write (once per corpus version, amortized over
 all subsequent appends).
 
-| corpus docs | setup (full curate + state, untimed path) | state-backed append (median of 3) | derive-mode append (fallback) |
+| corpus docs | setup (full curate + state, untimed path) | state-backed append (median of 3) | store-less `incremental_curate` (corpus text) |
 |---|---|---|---|
 {table}
 
 State-backed append grew {growth}x across a {last['corpus_docs'] // first['corpus_docs']}x
-corpus growth (derive mode: {d_growth}x). The remaining corpus-proportional
+corpus growth (store-less: {s_growth}x). The remaining corpus-proportional
 term is the single 16-byte-row columnar scan of the stored flat (filtered
 map-side before any shuffle); everything else an append reads —
 digest lookups, df lookups, size lookups — is probe-restricted.
@@ -200,7 +200,7 @@ Reproduce: `python scripts/bench_ingest.py`
 (env: SPARK_GRAFT_SF_DIR, KGTM_INGEST_BATCH, KGTM_INGEST_FACTORS).
 """
     )
-    print(json.dumps({"rows": rows, "state_growth": growth, "derive_growth": d_growth}))
+    print(json.dumps({"rows": rows, "state_growth": growth, "storeless_growth": s_growth}))
     spark.stop()
 
 

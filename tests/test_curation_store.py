@@ -1,8 +1,8 @@
 """Corpus curation (kgtm.curation) and its ledger store: drop reasons,
-incremental parity with a full run, ledger versions and time travel, delta
-appends in derive and state mode, the materialized corpus-state tables and
-their upgrade path, compaction, chain-linked resolution, successor claims
-and re-curation."""
+incremental parity with a full run, ledger versions and time travel,
+state-backed delta appends, the materialized corpus-state tables and their
+upgrade path, compaction, chain-linked resolution, successor claims and
+re-curation."""
 
 from __future__ import annotations
 
@@ -13,13 +13,37 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# delta appends and the two corpus modes
+# delta appends and the corpus state
 # ---------------------------------------------------------------------------
+
+
+def _stateless_delta(spark, store, old_docs, new_docs):
+    """Commit a batch's ledger rows as a delta with NO state contribution,
+    curated by the store-less incremental_curate under the base commit's
+    recorded thresholds — the delta chain of a store that predates
+    materialized state, which upgrade_to_state migrates."""
+    from kgtm.curation import (
+        _commit_ledger_rows,
+        _resolve_ledger_commits,
+        incremental_curate,
+        read_ledger,
+    )
+
+    base = _resolve_ledger_commits(spark, store)[-1]
+    params = base["curation_params"]
+    rows = incremental_curate(old_docs, read_ledger(spark, store), new_docs, **params)
+    return _commit_ledger_rows(
+        rows,
+        store,
+        kind="delta",
+        curation_params=params,
+        extra={"base_seq": base["seq"], "base_commit_id": base["commit_id"]},
+    )
 
 
 def test_append_is_delta_and_state_backed(spark, documents, tmp_path):
     """The round-3 scale gap, closed: persist_curated_corpus writes the
-    snapshot + state once; append_curated_batch then needs NO old_docs, its
+    snapshot + state once; append_curated_batch then reads that state, its
     ledger commit holds ONLY the batch's rows (O(batch) write), and the
     resolved read equals a full re-curation."""
     from kgtm.curation import (
@@ -37,14 +61,13 @@ def test_append_is_delta_and_state_backed(spark, documents, tmp_path):
 
     c1 = persist_curated_corpus(old, store, min_quality=0.4, jaccard_threshold=0.5)
     assert c1.get("ledger_kind") == "snapshot"
-    # state-backed append: old_docs deliberately omitted
     c2 = append_curated_batch(spark, store, new_docs=b1)
     assert c2["ledger_kind"] == "delta" and c2["base_commit_id"] == c1["commit_id"]
     assert c2["curation_params"] == {"min_quality": 0.4, "jaccard_threshold": 0.5}
     # the delta COMMIT carries only the batch's rows — the O(batch) write
     raw = read_table(spark, store, table="ledger")
     assert raw.filter(F.col("commit") == c2["commit_id"]).count() == 60
-    # second chained append, still no old_docs
+    # second chained append
     c3 = append_curated_batch(spark, store, new_docs=b2)
     assert c3["base_commit_id"] == c2["commit_id"]
 
@@ -79,10 +102,15 @@ def test_append_is_delta_and_state_backed(spark, documents, tmp_path):
 
 
 def test_append_without_state_needs_old_docs(spark, documents, tmp_path):
-    """A plain persist_ledger store has no state: append without old_docs
-    raises with the fallback explained; with old_docs it works (derive mode)
-    and still commits an O(batch) delta."""
-    from kgtm.curation import append_curated_batch, curate_documents, persist_ledger
+    """A plain persist_ledger store has no state: an append raises naming
+    upgrade_to_state; after the upgrade over the store's corpus documents it
+    commits an O(batch) delta whose rows equal a full run's."""
+    from kgtm.curation import (
+        append_curated_batch,
+        curate_documents,
+        persist_ledger,
+        upgrade_to_state,
+    )
     from kgtm.materialize import read_table
 
     store = str(tmp_path / "store")
@@ -94,22 +122,21 @@ def test_append_without_state_needs_old_docs(spark, documents, tmp_path):
         min_quality=0.4,
         jaccard_threshold=0.5,
     )
-    with pytest.raises(ValueError, match="no materialized curation state"):
+    with pytest.raises(
+        ValueError, match="no materialized curation state.*upgrade_to_state"
+    ):
         append_curated_batch(spark, store, new_docs=new)
-    c = append_curated_batch(spark, store, old_docs=old, new_docs=new)
+    upgrade_to_state(spark, store, old)
+    c = append_curated_batch(spark, store, new_docs=new)
     assert c["ledger_kind"] == "delta"
     raw = read_table(spark, store, table="ledger")
-    assert raw.filter(F.col("commit") == c["commit_id"]).count() == 40
-    # derive-mode single-job guard still enforces the id-set contract
-    with pytest.raises(ValueError, match="does not match the base ledger"):
-        append_curated_batch(
-            spark,
-            store,
-            old_docs=old.limit(10),
-            new_docs=documents.filter(
-                (F.col("doc_id") >= 190) & (F.col("doc_id") < 200)
-            ),
-        )
+    cols = ["doc_id", "quality_score", "kept", "drop_reason"]
+    got = raw.filter(F.col("commit") == c["commit_id"]).select(*cols)
+    full = curate_documents(
+        documents.filter(F.col("doc_id") < 190), min_quality=0.4, jaccard_threshold=0.5
+    )
+    want = full.filter(F.col("doc_id") >= 150).select(*cols)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_state_mode_equals_derive_mode_on_planted_corners(spark):
@@ -172,8 +199,8 @@ def test_state_mode_equals_derive_mode_on_planted_corners(spark):
     assert got[14][2] and got[15][3] == "exact-dup"
 
 
-def test_state_v2_hot_crossing_corrections_and_invariant(spark, tmp_path):
-    """A shingle crossing the df cap DURING an append exercises the whole v2
+def test_append_crossing_df_cap_keeps_parity_and_doc_size_sums(spark, tmp_path):
+    """A shingle crossing the df cap DURING an append exercises the whole
     correction machinery: newly-hot detection from stored df contributions,
     owner corrections into ledger_doc_sizes, and the accreting ledger_hot
     set. Three checks: (a) append decisions == full-run parity, (b) the
@@ -286,10 +313,11 @@ def test_state_refuses_df_cap_drift(spark, documents, tmp_path, monkeypatch):
 
 
 def test_upgrade_to_state_backfills_pre_state_store(spark, documents, tmp_path):
-    """A store written before state existed (persist_ledger + derive-mode
-    delta appends) upgrades via ONE linear derivation pass — no re-curation;
-    the chain is compacted first so contributions tag a single snapshot, and
-    the next append runs state-backed with no old_docs."""
+    """A store written before state existed (a persist_ledger snapshot and
+    a delta with no state) refuses appends, and upgrades via ONE linear
+    derivation pass — no re-curation; the chain is compacted first so
+    contributions tag a single snapshot, and the next append runs
+    state-backed with full-run parity."""
     from kgtm.curation import (
         append_curated_batch,
         curate_documents,
@@ -308,7 +336,9 @@ def test_upgrade_to_state_backfills_pre_state_store(spark, documents, tmp_path):
         min_quality=0.4,
         jaccard_threshold=0.5,
     )
-    append_curated_batch(spark, store, old_docs=old, new_docs=b1)  # derive mode
+    _stateless_delta(spark, store, old, b1)
+    with pytest.raises(ValueError, match="upgrade_to_state"):
+        append_curated_batch(spark, store, new_docs=b2)
 
     corpus = documents.filter(F.col("doc_id") < 180)
     with pytest.raises(ValueError, match="ids differ"):
@@ -318,7 +348,7 @@ def test_upgrade_to_state_backfills_pre_state_store(spark, documents, tmp_path):
     # idempotent
     assert upgrade_to_state(spark, store, corpus)["commit_id"] == target["commit_id"]
 
-    c = append_curated_batch(spark, store, new_docs=b2)  # NO old_docs
+    c = append_curated_batch(spark, store, new_docs=b2)
     assert c["ledger_kind"] == "delta"
     latest = read_ledger(spark, store)
     assert latest.count() == 210
@@ -331,12 +361,14 @@ def test_upgrade_to_state_backfills_pre_state_store(spark, documents, tmp_path):
     assert got == want
 
 
-def test_v1_store_upgrades_to_v2(spark, documents, tmp_path):
+def test_three_unbucketed_state_tables_upgrade_to_five_bucketed(
+    spark, documents, tmp_path
+):
     """A round-4 store (three of the five state tables, unbucketed) reads
-    as NO state: an append needs old_docs (derive mode) or raises naming
-    upgrade_to_state. upgrade_to_state rewrites all five tables bucketed,
-    replacing the unbucketed commits, and the next append runs in state
-    mode with full-run parity."""
+    as NO state: an append raises naming upgrade_to_state, and so does one
+    after a further delta with no state. upgrade_to_state rewrites all five
+    tables bucketed, replacing the unbucketed commits, and the next append
+    runs state-backed with full-run parity."""
     from kgtm.curation import (
         STATE_TABLES,
         _live_state_commits,
@@ -368,9 +400,12 @@ def test_v1_store_upgrades_to_v2(spark, documents, tmp_path):
     b1 = documents.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 140))
     with pytest.raises(ValueError, match="upgrade_to_state"):
         append_curated_batch(spark, store, new_docs=b1)
-    append_curated_batch(spark, store, old_docs=old, new_docs=b1)  # derive mode
+    _stateless_delta(spark, store, old, b1)
     assert read_ledger(spark, store).count() == 140
     assert _read_state(spark, store, _resolve_ledger_commits(spark, store)) is None
+    b2 = documents.filter((F.col("doc_id") >= 140) & (F.col("doc_id") < 160))
+    with pytest.raises(ValueError, match="upgrade_to_state"):
+        append_curated_batch(spark, store, new_docs=b2)
 
     all_docs = old.unionByName(b1)
     target = upgrade_to_state(spark, store, all_docs)
@@ -383,10 +418,9 @@ def test_v1_store_upgrades_to_v2(spark, documents, tmp_path):
     for table, cs in live.items():
         assert {sc["for_ledger_commit"] for sc in cs} == {target["commit_id"]}, table
 
-    b2 = documents.filter((F.col("doc_id") >= 140) & (F.col("doc_id") < 160))
-    append_curated_batch(spark, store, new_docs=b2)  # state mode, no old_docs
+    append_curated_batch(spark, store, new_docs=b2)
     assert read_ledger(spark, store).count() == 160
-    # parity of the state-mode append against the full run on the combined corpus
+    # parity of the state-backed append against the full run on the combined corpus
     cols = ["doc_id", "quality_score", "kept", "drop_reason"]
     got = sorted(
         map(tuple, read_ledger(spark, store).filter(F.col("doc_id") >= 140)
@@ -408,9 +442,9 @@ def test_append_after_crashed_state_write_needs_upgrade(
 ):
     """A writer that crashes part-way through a delta's state write (after
     ledger_shingle_df, before ledger_doc_sizes) leaves the delta committed
-    and its state incomplete. The next append without old_docs must raise,
-    naming upgrade_to_state, instead of running on the three tables that
-    did land; upgrade_to_state then restores state mode with parity."""
+    and its state incomplete. The next append must raise, naming
+    upgrade_to_state, instead of running on the three tables that did land;
+    upgrade_to_state then restores state-backed appends with parity."""
     import kgtm.materialize as mat
     from kgtm.curation import (
         append_curated_batch,
@@ -796,7 +830,7 @@ def test_expire_refuses_stranding_deltas(spark, documents, tmp_path):
 
 def test_expire_refuses_stranding_live_state(spark, documents, tmp_path):
     """A live state commit backing a LIVE ledger commit must not be expired
-    (the store would silently demote to derive mode); a state commit backing
+    (the store's next append would raise until upgrade_to_state); a state commit backing
     a dead/unknown ledger commit expires fine."""
     from kgtm.materialize import expire_commits, write_table
 
@@ -828,7 +862,7 @@ def test_expire_refuses_stranding_live_state(spark, documents, tmp_path):
         partition_by=(),
         extra_manifest={"ledger_kind": "state", "for_ledger_commit": "deadbeef"},
     )
-    with pytest.raises(ValueError, match="derive mode"):
+    with pytest.raises(ValueError, match="upgrade_to_state"):
         expire_commits(store, keep_last=1)
 
     # flip the order: now the victim backs the dead commit — expiry proceeds
@@ -1021,7 +1055,7 @@ def test_recuration_snapshot_serializes_with_appends(spark, documents, tmp_path)
     # claim free → the re-curation lands as the head's sole successor
     # (persist_curated_corpus = the full re-curation path: ledger snapshot
     # through the SAME persist_ledger claim + fresh state tables, so later
-    # appends keep running in state mode)
+    # appends stay state-backed)
     c = persist_curated_corpus(
         full, store, min_quality=0.99, jaccard_threshold=0.5
     )
@@ -1264,6 +1298,7 @@ def test_append_curated_batch_versions_the_corpus(spark, documents, tmp_path):
         curate_documents,
         persist_ledger,
         read_ledger,
+        upgrade_to_state,
     )
 
     store = str(tmp_path / "store")
@@ -1275,8 +1310,9 @@ def test_append_curated_batch_versions_the_corpus(spark, documents, tmp_path):
         min_quality=0.4,
         jaccard_threshold=0.5,
     )
+    assert upgrade_to_state(spark, store, old)["commit_id"] == c1["commit_id"]
     # NOTE: no thresholds passed — they must be read from c1's manifest
-    c2 = append_curated_batch(spark, store, old, new)
+    c2 = append_curated_batch(spark, store, new)
     assert c2["curation_params"] == {"min_quality": 0.4, "jaccard_threshold": 0.5}
 
     cols = ["doc_id", "quality_score", "kept", "drop_reason"]
@@ -1298,17 +1334,12 @@ def test_append_curated_batch_versions_the_corpus(spark, documents, tmp_path):
         map(tuple, latest.filter(F.col("doc_id") < 200).select(*cols).collect())
     )
 
-    # guard: old_docs must be exactly the base corpus (a shrunken corpus
-    # would silently keep batch docs duplicating the missing ones)
-    more = documents.filter((F.col("doc_id") >= 260) & (F.col("doc_id") < 280))
-    with pytest.raises(ValueError, match="does not match the base ledger"):
-        append_curated_batch(spark, store, old.limit(10), more)
-
-    # guard: unrecorded thresholds refuse to guess defaults
+    # guard: unrecorded thresholds refuse to guess defaults (checked before
+    # the store's state is)
     store2 = str(tmp_path / "store2")
     persist_ledger(curate_documents(old), store2)  # no params recorded
     with pytest.raises(ValueError, match="refusing to guess"):
-        append_curated_batch(spark, store2, old, new)
+        append_curated_batch(spark, store2, new)
 
 
 def test_curation_ledger_time_travel(spark, documents, tmp_path):

@@ -397,6 +397,30 @@ def test_multimodal_real_decode_or_stub_fallback(spark):
         assert abs(sum(r.features) - 1.0) < 1e-4
 
 
+@pytest.mark.parametrize("exc", [OSError, RuntimeError])
+def test_pil_decode_falls_back_only_on_decode_errors(monkeypatch, exc):
+    """Through a fake PIL whose Image.open raises: an OSError (what PIL
+    raises for undecodable bytes) falls back to the stub, any other error
+    propagates instead of being stubbed over."""
+    import sys
+    import types
+
+    from kgtm.multimodal import _decode_and_featurize
+
+    def open_image(fp):
+        raise exc("decoder failed")
+
+    fake = types.ModuleType("PIL")
+    fake.Image = types.SimpleNamespace(open=open_image)
+    monkeypatch.setitem(sys.modules, "PIL", fake)
+    if exc is OSError:
+        got = _decode_and_featurize(BMP_DARK, "image", "auto")
+        assert (got == _decode_and_featurize(BMP_DARK, "image", "stub")).all()
+    else:
+        with pytest.raises(exc, match="decoder failed"):
+            _decode_and_featurize(BMP_DARK, "image", "auto")
+
+
 def test_sample_frames(spark, documents):
     media = synth_media_df(spark, documents)
     frames = sample_frames(media, every_ms=1000)

@@ -280,7 +280,7 @@ def _final_section(plan: str) -> str:
     return plan[:cut] if cut != -1 else plan
 
 
-def test_state_v2_append_plan_flat_scanned_once_no_shuffle(spark, documents, tmp_path):
+def test_state_append_scans_stored_flat_once_without_shuffle(spark, documents, tmp_path):
     """Structural pin of the O(batch) append contract (BENCH/INGEST.md): in
     the state path the stored shingle flat is read by exactly ONE parquet
     scan, column-pruned to (id, shingle), filtered map-side by a broadcast
@@ -307,7 +307,6 @@ def test_state_v2_append_plan_flat_scanned_once_no_shuffle(spark, documents, tmp
         read_ledger(spark, store),
         batch,
         state=st,
-        skip_guards=True,
         _plan_probes=probes,
     )
 
@@ -342,7 +341,7 @@ def test_state_v2_append_plan_flat_scanned_once_no_shuffle(spark, documents, tmp
     assert old_tot.index("partial_sum") < old_tot.index("LeftSemi"), old_tot
 
 
-def test_state_v2_newly_hot_owner_lookup_prunes_buckets(spark, tmp_path):
+def test_newly_hot_owner_lookup_prunes_shingle_buckets(spark, tmp_path):
     """When a shingle crosses the df cap mid-append, the owner-correction
     lookup must read ONLY the sb= directory buckets the newly-hot shingles
     hash to (partition pruning), not the whole stored flat."""
@@ -380,7 +379,6 @@ def test_state_v2_newly_hot_owner_lookup_prunes_buckets(spark, tmp_path):
         batch,
         min_quality=0.0,
         state=st,
-        skip_guards=True,
         _plan_probes=probes,
     )
     hot_vals = [r[0] for r in probes["newly_hot"].collect()]

@@ -4,6 +4,7 @@ windowed counts, stream-batch parity."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 from pathlib import Path
 
 import pytest
@@ -196,7 +197,8 @@ def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     """The large-dictionary scale path (NOTES item 5): streaming with a
     10^5-entry dictionary must (a) plan as a broadcast join, not a 10^5-entry
     map literal, and (b) give the batch resolution's rows and schema over the
-    same input."""
+    same input. The plan is read from the started query: a streaming frame
+    has no executed plan of its own."""
     in_dir, out_dir, ck_dir = stream_dirs
     from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA
     from kgtm.transcripts import ontology_index_rows
@@ -217,9 +219,28 @@ def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     snaps = ontology_snapshots_df(spark)
 
     resolved = streaming_resolution(read_transcript_stream(spark, in_dir), idx, snaps)
-    got = drain_equals_batch(
-        spark, resolved, batch_twin(spark, in_dir, idx, snaps), out_dir, ck_dir
+    batch = batch_twin(spark, in_dir, idx, snaps)
+    assert resolved.schema == batch.schema
+    # run_stream_to_parquet's query, kept to read its last execution's plan
+    q = (
+        resolved.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ck_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(False)
+    # the dictionary is the build side of a broadcast join on host ...
+    assert re.search(r"BroadcastHashJoin \[host#\d+\], \[d_host#\d+\]", plan), plan
+    # ... and none of its entries is folded into the plan as a literal
+    assert "filler99999.example.net" not in plan, plan[:2000]
+    assert len(plan) < 100_000, len(plan)
+
+    got = spark.read.parquet(out_dir)
+    assert got.exceptAll(batch).count() == 0
+    assert batch.exceptAll(got).count() == 0
     assert got.filter(F.col("source") == "archivo-latest").count() > 0
 
 
