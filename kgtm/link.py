@@ -2,21 +2,22 @@
 
 Set-oriented translation of the reference's first-hit-wins ladder
 (ontologytimemachine/utils/proxy_logic.py:88-144): every mention's ≤6
-rung-ordered candidate keys (kgtm.normalize.ladder_probe_expr) are probed
-against a host → map<path, ontology_iri> dictionary and the FIRST non-null
-hit wins and canonicalizes the path — the min-rung proof obligation from
-SURVEY.md §7 item (5); tests include cases where multiple rungs match
-different dictionary entries.
+rung-ordered candidate keys (kgtm.normalize._rung_cands) are looked up in
+the (host, path) → ontology_iri dictionary and the FIRST non-null hit wins
+and canonicalizes the path — the min-rung proof obligation from SURVEY.md §7
+item (5); tests include cases where multiple rungs match different
+dictionary entries.
 
-One probe, two ways to bring the dictionary to it (broadcast_ladder_link):
+One cascade (kgtm.normalize.first_rung_hit), two ways to look a rung up
+(broadcast_ladder_link):
   * a small driver-local dictionary folds into the plan as ONE map literal
     (session.map_literal) — zero joins, zero dictionary-side stages;
-  * any other dictionary is reduced to one row per host and broadcast-joined
-    on host — the mention side never shuffles, and plan size is O(1) in
-    |dictionary|.
+  * any other dictionary is reduced to one row per (host, path) and each
+    rung is a broadcast equi-join on (host, candidate), all six against one
+    broadcast build — the mention side never shuffles, and a lookup is one
+    hash probe however many paths a host has (BENCH/LADDER.md).
 Both are aggregation-free on the mention side, so they run unchanged under
-streaming append mode. Hot dictionary hosts (semanticscience.org 265/1,816
-entries — BASELINE.md skew row) widen one map row, never a join partition.
+streaming append mode.
 """
 
 from __future__ import annotations
@@ -41,48 +42,25 @@ def link_mentions(
     failover queries re-deriving ``text``) carry it instead, saving a second
     full scan+window of the source (guide §2.4).
 
-    ROUND-7 SHAPE (guide §2.4 "remove shuffles outright"): this is now a thin
-    wrapper over :func:`broadcast_ladder_link` — ONE broadcast hash join on
-    host + pure probe expressions, ZERO exchanges and ZERO aggregates on the
-    mention side. The previous formulation (explode 6 rung candidates →
-    broadcast join → groupBy(mention_id).min_by) paid one full shuffle of the
-    6x-exploded candidate rows plus two SortAggregates per query; min-rung
-    first-hit-wins is instead computed per row by probing the rung-ordered
-    candidate array against the broadcast host→(path→iri) map and taking the
-    first non-null hit — semantically identical (same pure spec
-    kgtm.normalize.resolve_membership; oracle-gate + fuzz-parity checked),
-    and the removal of the aggregation barrier lets Catalyst prune the
-    upstream turn-index Window whenever a consumer does not use turn_idx.
+    A thin wrapper over :func:`broadcast_ladder_link`: per-row lookups and
+    a first-non-null cascade, ZERO exchanges and ZERO aggregates on the
+    mention side. (The round-6 formulation — explode the 6 rung candidates →
+    join → groupBy(mention_id).min_by — paid one full shuffle of the
+    6x-exploded rows plus two SortAggregates per query.) Same pure spec,
+    kgtm.normalize.resolve_membership (oracle-gate + fuzz-parity checked);
+    with no aggregation barrier, Catalyst prunes the upstream turn-index
+    Window whenever a consumer does not use turn_idx.
     """
     cols = ["mention_id", "conv_id", "turn_idx", "surface", "host", "path", *carry]
     return broadcast_ladder_link(mentions.select(*cols), index)
 
 
-def host_path_map(index: DataFrame) -> DataFrame:
-    """Dictionary side for the stream-static broadcast ladder:
-    (d_host, path_map: map<path, ontology_iri>) — one row per host.
-
-    Duplicate (host, path) dictionary rows are resolved deterministically to
-    min(ontology_iri) (the batch broadcast-join path is NONdeterministic
-    there: min_by over rung-equal hits picks an arbitrary one)."""
-    return (
-        index.groupBy("host", "path")
-        .agg(F.min("ontology_iri").alias("ontology_iri"))
-        .groupBy(F.col("host").alias("d_host"))
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("path", "ontology_iri"))
-            ).alias("path_map")
-        )
-    )
-
-
 def _literal_host_map(index: DataFrame):
     """map<host, map<path, iri>> literal of a driver-local small dictionary
     (session.local_literal_rows); None otherwise — then the caller keeps
-    the broadcast join. Same reduction as host_path_map: duplicate
+    the rung lookups. Same reduction as their dictionary's: duplicate
     (host, path) rows resolve to min(ontology_iri), and a NULL host is
-    dropped (it never matches the join's d_host)."""
+    dropped."""
     from kgtm.session import local_literal_rows, map_literal
 
     rows = local_literal_rows(index, ["host", "path", "ontology_iri"])
@@ -102,71 +80,102 @@ def _literal_host_map(index: DataFrame):
     )
 
 
-def broadcast_ladder_link(
-    df: DataFrame,
-    index: DataFrame,
-    host_col: str = "host",
-    path_col: str = "path",
-) -> DataFrame:
-    """Ladder linking as one map probe per row, against a dictionary that
-    is either folded into the plan as a literal or broadcast-joined on host.
+#: The rung lookups of the non-literal plan: one left broadcast equi-join
+#: per ladder rung on (host, candidate) against the reduced dictionary
+#: ``d``. The candidate key is null-safe (``<=>``): a path-less mention has
+#: six NULL candidates and meets its host's (host, NULL) row, so d0's
+#: ``d_host`` is the host membership it links on. One statement, so the
+#: joins are analyzed once (a chain of DataFrame joins re-analyzes the
+#: growing plan at every call).
+_RUNG_LOOKUPS = (
+    "SELECT /*+ BROADCAST(d0, d1, d2, d3, d4, d5) */ m.*, d0.d_host, "
+    + ", ".join(f"d{i}.d_iri AS _li{i}" for i in range(6))
+    + " FROM {m} m "
+    + " ".join(
+        f"LEFT JOIN {{d}} d{i} ON m.host = d{i}.d_host AND m._lc{i} <=> d{i}.d_path"
+        for i in range(6)
+    )
+)
+
+
+def broadcast_ladder_link(df: DataFrame, index: DataFrame) -> DataFrame:
+    """Ladder linking: the six rung candidates of each row are looked up in
+    the dictionary and the FIRST hit wins — the reference's short-circuit
+    (proxy_logic.py:88-144) — with identical rows and schema on both plans.
 
     A small driver-local dictionary (session.local_literal_rows) becomes ONE
-    map<host, map<path, iri>> literal, so the query runs zero joins. Any
-    other dictionary arrives as a broadcast (host → map<path, iri>) table
-    (host_path_map), so plan size is O(1) in |dictionary|. Either way the
-    rung-ordered candidates are probed against the host's map and the FIRST
-    hit wins — the same short-circuit semantics as the reference
-    (proxy_logic.py:88-144), with identical rows and schema on both plans.
+    map<host, map<path, iri>> literal and each rung is a GetMapValue, so the
+    query runs zero joins. Any other dictionary is reduced once to
+    (host, path) → min(ontology_iri), plus one (host, NULL) → NULL row per
+    host — NULL hosts and paths dropped, so duplicate dictionary rows
+    resolve deterministically — and each rung is a left broadcast equi-join
+    on (host, candidate) against it (_RUNG_LOOKUPS). The six joins share one
+    broadcast build (ReusedExchange). A rung costs one hash probe whatever
+    the number of paths per host; the host-keyed map<path, iri> this
+    replaced was scanned linearly per rung (BENCH/LADDER.md).
 
-    Append-safe: the stream side sees a literal lookup or a broadcast join
-    plus stateless column
-    expressions — no aggregation, so it runs under streaming append mode.
-    Path-less mentions link on host membership alone (proxy_logic.py:100-101:
-    d_host non-null after the left join), rung 0, no iri/canonical path.
+    Append-safe: the stream side sees a literal lookup or broadcast joins
+    plus stateless column expressions — no aggregation, so it runs under
+    streaming append mode. When ``df`` is a stream, the reduced dictionary
+    is materialized once, here, with an eager localCheckpoint: every
+    micro-batch then broadcasts it without re-scanning and re-aggregating
+    the index, and the stream sees the dictionary as of this call. A local
+    checkpoint lives in the executors' block managers, so losing an executor
+    mid-stream fails the micro-batch (the trade-off of build_triples'
+    surface-dim checkpoint).
 
-    Adds (is_linked, ontology_iri, canonical_path, rung) to df's columns.
+    Path-less mentions link on host membership alone (proxy_logic.py:
+    100-101), rung 0, no iri/canonical path.
 
-    Round-7 staging notes (measured at sf0.1):
-
-      * The probe is the SCALAR cascade :func:`kgtm.normalize.ladder_probe_expr`
-        — six GetMapValue lookups in rung order inside whole-stage codegen.
-        The earlier higher-order form (transform + filter over the candidate
-        array) is CodegenFallback, i.e. interpreted per row, and measured
-        ~0.8 s/query slower on the 100k-mention corpus.
-      * The probe feeds FOUR output columns; referencing it directly would
-        inline the whole tree into each consumer. The explode(array(probe))
-        Generate below is the same staging barrier flat_shingles uses: the
-        probe runs exactly ONCE per row inside Generate, and the four
-        consumers read its struct fields.
+    Adds (is_linked, ontology_iri, canonical_path, rung) to ``df``'s
+    columns (it needs ``host`` and ``path``). The four outputs read one hit
+    struct, so the cascade runs once per row. The literal plan stages it
+    through explode(array(hit)) — the Generate barrier flat_shingles uses —
+    so its twelve map lookups are not inlined into each consumer; the join
+    plan's cascade only reads columns and needs no barrier (a Generate above
+    the six joins cost about 35 ms more analysis per call on kg_build's
+    surfaces, 4 vCPUs).
     """
-    from kgtm.normalize import ladder_probe_expr
+    from kgtm.normalize import _rung_cands, first_rung_hit, ladder_probe_expr
 
+    p = F.col("path")
     # The switch derives from the actual plan (LocalRelation + size cap),
     # never from a tuned constant: at production scale the dictionary is not
-    # a plan literal and the broadcast join below is the plan.
+    # a plan literal and the rung lookups below are the plan.
     hm = _literal_host_map(index)
     if hm is not None:
-        joined = df.select(
+        staged = df.select(
             "*",
-            F.when(F.map_contains_key(hm, F.col(host_col)), F.col(host_col)).alias(
-                "d_host"
-            ),
+            F.when(F.map_contains_key(hm, F.col("host")), F.col("host")).alias("d_host"),
             # GetMapValue ([]) like ladder_probe_expr, NOT element_at: the
             # bracket form yields NULL for missing keys under ANSI
-            hm[F.col(host_col)].alias("path_map"),
+            hm[F.col("host")].alias("path_map"),
+        ).select(
+            *df.columns,
+            "d_host",
+            F.explode(F.array(ladder_probe_expr(F.col("path_map")))).alias("_hit"),
         )
     else:
-        dict_side = F.broadcast(host_path_map(index))
-        joined = df.join(dict_side, F.col(host_col) == F.col("d_host"), "left")
-    first = ladder_probe_expr(F.col("path_map"), path_col)
-    staged = joined.select(
-        *df.columns,
-        F.col("d_host"),
-        F.explode(F.array(first)).alias("_hit"),
-    )
+        keyed = index.filter(F.col("host").isNotNull() & F.col("path").isNotNull())
+        no_path = F.lit(None).cast("string")
+        lookup = (
+            keyed.select("host", "path", "ontology_iri")
+            .unionByName(keyed.select("host", no_path.alias("path"), no_path.alias("ontology_iri")))
+            .groupBy(F.col("host").alias("d_host"), F.col("path").alias("d_path"))
+            .agg(F.min("ontology_iri").alias("d_iri"))
+        )
+        if df.isStreaming:
+            lookup = lookup.localCheckpoint(eager=True)
+        # a path-less row probes no rung, only its host's (host, NULL) row
+        cands = [F.when(p != "", c) for c in _rung_cands(p)]
+        m = df.select("*", *[c.alias(f"_lc{i}") for i, c in enumerate(cands)])
+        first = first_rung_hit(
+            [F.col(f"_lc{i}") for i in range(6)], [F.col(f"_li{i}") for i in range(6)]
+        )
+        staged = df.sparkSession.sql(_RUNG_LOOKUPS, m=m, d=lookup).select(
+            *df.columns, "d_host", first.alias("_hit")
+        )
     hit = F.col("_hit")
-    p = F.col(path_col)
     pathless_hit = (p.isNull() | (p == "")) & F.col("d_host").isNotNull()
     return staged.select(
         *df.columns,
@@ -188,10 +197,10 @@ def link_surfaces(surfaces: DataFrame, index: DataFrame) -> DataFrame:
     the ladder fan-out and broadcast probe run on |distinct surfaces|, not
     |mentions|.
 
-    ROUND-7 SHAPE: map-probe wrapper over :func:`broadcast_ladder_link`,
-    like link_mentions — the previous explode → inner join → groupBy(surface)
-    → left join-back needed one exchange and one extra join on the surface
-    dim subtree of every flagship build; the probe form needs neither.
+    A wrapper over :func:`broadcast_ladder_link`, like link_mentions — the
+    round-6 explode → inner join → groupBy(surface) → left join-back needed
+    one exchange and one extra join on the surface dim subtree of every
+    flagship build; the per-row lookups need neither.
     """
     return broadcast_ladder_link(surfaces.select("surface", "host", "path"), index)
 

@@ -23,9 +23,11 @@ HTTP client never sends the fragment in the request path. The https-flip retry
 scheme-agnostic (host, path); the canonical scheme comes from the dictionary.
 
 The pure functions below are the executable spec (unit-tested without Spark).
-``_rung_cands`` is the one Spark translation of the rungs; two expressions
-use it: ``ladder_probe_expr``, the first-hit-wins cascade of six map lookups
-that linking runs, and ``candidate_paths_col``, the candidate array that
+``_rung_cands`` is the one Spark translation of the rungs. Linking probes
+its six candidates and keeps the first hit (``first_rung_hit``), by map
+lookups against a literal dictionary (``ladder_probe_expr``) or by rung-keyed
+broadcast equi-joins (``kgtm.link.broadcast_ladder_link``);
+``candidate_paths_col`` is the candidate array that
 ``link.incremental_relink`` explodes to find mentions a dictionary change
 can flip.
 """
@@ -136,36 +138,44 @@ def candidate_paths_col(path: str | Column = "path") -> Column:
     ).otherwise(full)
 
 
-def ladder_probe_expr(
-    path_map: Column, path_col: str | Column = "path"
-) -> Column:
-    """First-hit-wins ladder probe against a ``map<path, ontology_iri>``
-    column: struct<rung:int, cand_path:string, ontology_iri:string> of the
-    LOWEST-rung dictionary hit, NULL when no rung hits or the path is
-    empty/NULL (host-only matching stays the caller's business, exactly like
-    candidate_paths_col's [(0, NULL)] sentinel — without the guard an empty
-    path would spuriously probe rungs 3/5's bare "/" candidate).
+def first_rung_hit(cands: list[Column], iris: list[Column]) -> Column:
+    """struct<rung:int, cand_path:string, ontology_iri:string> of the LOWEST
+    rung whose dictionary lookup ``iris[i]`` (of candidate ``cands[i]``) is
+    non-NULL; NULL when no rung hits. The first-hit-wins cascade both link
+    plans share: six map lookups on the literal plan, six broadcast equi-join
+    lookups on the other (kgtm.link.broadcast_ladder_link).
 
-    Scalar twin of ``candidate_paths_col`` + first-non-null probe: the
-    higher-order form (transform + filter over the candidate array) is
-    CodegenFallback — interpreted, one closure call per rung per row — and
-    measured ~0.8 s/query slower at sf0.1 than this cascade of six
-    GetMapValue lookups, which stays inside whole-stage codegen end to end
-    (round 7).
+    A scalar CASE WHEN cascade, not the higher-order form (transform +
+    filter over the candidate array): that form is CodegenFallback —
+    interpreted, one closure call per rung per row — and measured ~0.8
+    s/query slower at sf0.1 (round 7); this one stays inside whole-stage
+    codegen end to end.
     """
-    p = F.col(path_col) if isinstance(path_col, str) else path_col
-    cands = _rung_cands(p)
 
-    def hit(i: int, cand: Column) -> Column:
+    def hit(i: int) -> Column:
         return F.struct(
             F.lit(i).alias("rung"),
-            cand.alias("cand_path"),
-            path_map[cand].alias("ontology_iri"),
+            cands[i].alias("cand_path"),
+            iris[i].alias("ontology_iri"),
         )
 
-    cascade = F.when(path_map[cands[0]].isNotNull(), hit(0, cands[0]))
-    for i in range(1, 6):
-        cascade = cascade.when(path_map[cands[i]].isNotNull(), hit(i, cands[i]))
+    cascade = F.when(iris[0].isNotNull(), hit(0))
+    for i in range(1, len(cands)):
+        cascade = cascade.when(iris[i].isNotNull(), hit(i))
+    return cascade
+
+
+def ladder_probe_expr(path_map: Column) -> Column:
+    """First-hit-wins ladder probe of the ``path`` column against a
+    ``map<path, ontology_iri>`` column (:func:`first_rung_hit` over six
+    GetMapValue lookups): NULL when no rung hits or the path is empty/NULL
+    (host-only matching stays the caller's business, exactly like
+    candidate_paths_col's [(0, NULL)] sentinel — without the guard an empty
+    path would spuriously probe rungs 3/5's bare "/" candidate).
+    """
+    p = F.col("path")
+    cands = _rung_cands(p)
+    cascade = first_rung_hit(cands, [path_map[c] for c in cands])
     return F.when(p.isNull() | (p == ""), F.lit(None)).otherwise(cascade)
 
 

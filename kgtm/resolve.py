@@ -145,6 +145,12 @@ def attach_reduced_snapshots(
     builds, zero dim-side aggregation stages. Other snapshot tables keep the
     reduce-then-broadcast-join plan. Both plans yield the same rows and
     schema.
+
+    When ``linked`` is a stream, the reduced dim is materialized once, here,
+    with an eager localCheckpoint, so a micro-batch broadcasts it without
+    re-scanning and re-reducing the snapshot table; the stream sees the
+    snapshots as of this call. Losing an executor mid-stream then fails the
+    micro-batch (a local checkpoint lives in the block managers).
     """
     hm = _literal_latest_map(snapshots, pin_ts)
     if hm is not None:
@@ -154,14 +160,14 @@ def attach_reduced_snapshots(
         latest_snapshots(snapshots)
         if pin_ts is None
         else asof_snapshots(snapshots, pin_ts)
-    )
+    ).select("ontology_iri", *_SNAPSHOT_COLS)
+    if linked.isStreaming:
+        dim = dim.localCheckpoint(eager=True)
     # the USING join moves ontology_iri first; restore linked's order so
     # both plans yield the same schema
-    return linked.join(
-        F.broadcast(dim.select("ontology_iri", *_SNAPSHOT_COLS)),
-        "ontology_iri",
-        "left",
-    ).select(*linked.columns, *_SNAPSHOT_COLS)
+    return linked.join(F.broadcast(dim), "ontology_iri", "left").select(
+        *linked.columns, *_SNAPSHOT_COLS
+    )
 
 
 def attach_live_legs(

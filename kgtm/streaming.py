@@ -8,7 +8,7 @@ transcript *stream*:
   readStream (file source, transcripts schema) →
   extract.extract_mentions (stateless codegen exprs) →
   link.broadcast_ladder_link (a map-literal probe for a small plan-literal
-  dictionary, else a stream-static broadcast join) →
+  dictionary, else stream-static broadcast rung lookups) →
   resolve.attach_live_legs (failover only) →
   resolve.resolve_links over latest_snapshots (stream-static broadcast
   join; all four ontoVersion modes) →
@@ -63,6 +63,9 @@ def streaming_resolution(
 
     Append-safe: no step aggregates the stream; the dictionary, snapshot
     and live-leg dims are plan literals or stream-static broadcast joins.
+    The reduced dictionary and the reduced snapshot dim are built once, by
+    this call (eager local checkpoints), not per micro-batch: the stream
+    sees the dims as of this call.
 
     broadcast_ladder_link and latest_snapshots are called through this
     module's names (not link_mentions or resolve_links' own reduction), so
@@ -74,8 +77,9 @@ def streaming_resolution(
     )
     if mode == "timestampArchived":
         snapshots = snapshots.filter(F.col("version_ts") <= F.lit(pin_ts))
-    # resolve_links reduces this dim again: a table already reduced to one
-    # row per ontology reduces to the same rows
+    # resolve_links reduces this dim again (a table already reduced to one
+    # row per ontology reduces to the same rows), once per query: it
+    # checkpoints the reduced dim of a stream, so no epoch re-reduces it
     return resolve_links(linked, latest_snapshots(snapshots), mode, pin_ts)
 
 

@@ -101,7 +101,7 @@ def test_append_is_delta_and_state_backed(spark, documents, tmp_path):
     }
 
 
-def test_append_without_state_needs_old_docs(spark, documents, tmp_path):
+def test_stateless_store_append_needs_upgrade_to_state(spark, documents, tmp_path):
     """A plain persist_ledger store has no state: an append raises naming
     upgrade_to_state; after the upgrade over the store's corpus documents it
     commits an O(batch) delta whose rows equal a full run's."""

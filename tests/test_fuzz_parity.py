@@ -9,13 +9,17 @@ import string
 
 from pyspark.sql import functions as F
 
+from conftest import forced_both_ways
 from kgtm.link import link_mentions
 from kgtm.negotiate import format_from_accept_col, get_format_from_accept_header
 from kgtm.normalize import parse_iri_cols, resolve_membership, split_iri
 from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA
+from kgtm.transcripts import local_index_df
 
 
-def test_fuzz_ladder_spark_vs_pure(spark):
+def test_fuzz_ladder_spark_vs_pure(spark, monkeypatch):
+    """Both link plans (literal map probe and broadcast rung lookups,
+    forced through LITERAL_MAX_ROWS) agree with the pure spec."""
     rng = random.Random(424242)
 
     def rand_seg():
@@ -54,7 +58,7 @@ def test_fuzz_ladder_spark_vs_pure(spark):
         iris.add(f"{rng.choice(['http', 'https'])}://{h}{p}")
     iris = sorted(iris)
 
-    index = spark.createDataFrame(dict_rows, ONTOLOGY_INDEX_SCHEMA)
+    index = local_index_df(spark, dict_rows)
     m = spark.createDataFrame([(i,) for i in iris], "surface string").select(
         F.lit("c").alias("conv_id"),
         F.lit(0).alias("turn_idx"),
@@ -62,16 +66,20 @@ def test_fuzz_ladder_spark_vs_pure(spark):
         "surface",
         *parse_iri_cols("surface"),
     )
-    got = {r.surface: r for r in link_mentions(m, index).collect()}
+    want = {}
     for iri in iris:
         _, h, p, _ = split_iri(iri)
         ok, canon, rung = resolve_membership(h, p, dict_set)
-        r = got[iri]
-        assert (r.is_linked, r.canonical_path, r.rung) == (
-            ok,
-            canon if ok else None,
-            rung if ok else None,
-        ), iri
+        want[iri] = (ok, canon if ok else None, rung if ok else None)
+
+    def run():
+        return {
+            r.surface: (r.is_linked, r.canonical_path, r.rung)
+            for r in link_mentions(m, index).collect()
+        }
+
+    for got in forced_both_ways(monkeypatch, "LITERAL_MAX_ROWS", run):
+        assert got == want
 
 
 def test_fuzz_incremental_relink_equals_full(spark):

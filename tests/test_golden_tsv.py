@@ -80,10 +80,10 @@ def test_spark_path_matches_golden(spark):
 
 
 def test_broadcast_ladder_matches_golden(spark):
-    """The 4th formulation — one host-keyed broadcast join over a
-    (host → map<path,iri>) dictionary (link.broadcast_ladder_link, the
-    large-dictionary streaming path) — must agree with the golden corpus and
-    with link_mentions row-for-row, including path-less host-only matches."""
+    """link.broadcast_ladder_link over a non-literal dictionary — six
+    rung-keyed broadcast lookups plus a host join, the large-dictionary and
+    streaming path — must agree with the golden corpus and with
+    link_mentions row-for-row, including path-less host-only matches."""
     from kgtm.link import broadcast_ladder_link, link_mentions
 
     index = spark.createDataFrame(DICT_ROWS, ONTOLOGY_INDEX_SCHEMA)

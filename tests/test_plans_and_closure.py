@@ -57,13 +57,15 @@ def test_linking_nonlocal_dict_uses_broadcast_join(spark, events):
     assert "SortMergeJoin" not in plan.split("BroadcastHashJoin")[0]
 
 
-def test_broadcast_ladder_plan_is_one_broadcast_join_no_agg(spark, events):
-    """The large-dictionary ladder (link.broadcast_ladder_link on a
-    NON-literal index) must plan as exactly ONE broadcast hash join on the
-    probe side with NO aggregation and NO sort-merge join — the properties
-    that make it append-safe in streaming and O(1)-plan-size in |dictionary|
-    (the map side aggregates on the STATIC dictionary side only, before the
-    broadcast exchange)."""
+def test_broadcast_ladder_is_rung_lookups_over_one_broadcast(spark, events):
+    """The ladder over a NON-literal index (link.broadcast_ladder_link) plans
+    as six broadcast hash joins, one per rung on (host, null-safe
+    candidate), all sharing ONE broadcast build of the reduced dictionary
+    (ReusedExchange in the final adaptive plan); path-less mentions find
+    their host through its (host, NULL) row in that build, so there is no
+    other join. No aggregation above the broadcasts on the probe side, no
+    sort-merge join and no Python eval: the properties that keep it
+    append-safe in streaming and one hashed lookup per rung."""
     from kgtm.link import broadcast_ladder_link
     from kgtm.transcripts import ontology_index_rows
     from kgtm.schemas import ONTOLOGY_INDEX_SCHEMA
@@ -71,13 +73,25 @@ def test_broadcast_ladder_plan_is_one_broadcast_join_no_agg(spark, events):
     tr = events_to_transcripts(events)
     rdd_index = spark.createDataFrame(ontology_index_rows(), ONTOLOGY_INDEX_SCHEMA)
     linked = broadcast_ladder_link(extract_mentions(tr), rdd_index)
+    linked.collect()
     plan = _plan(linked)
-    assert plan.count("BroadcastHashJoin") == 1
+    final = plan.split("== Initial Plan ==")[0]
+    rungs = re.findall(
+        r"BroadcastHashJoin \[host#\d+, coalesce\(_lc(\d)#\d+, \), isnull\(_lc\d#\d+\)\], "
+        r"\[d_host#\d+, coalesce\(d_path#\d+, \), isnull\(d_path#\d+\)\]",
+        final,
+    )
+    assert sorted(rungs) == [str(i) for i in range(6)], final
+    assert final.count("BroadcastHashJoin") == 6
+    # one build; the other five rungs reuse it (a ReusedExchange line also
+    # names the exchange it reuses)
+    assert len(re.findall(r"\+- BroadcastExchange", final)) == 1, final
+    assert final.count("ReusedExchange") == 5, final
     assert "SortMergeJoin" not in plan
-    # any HashAggregate must sit BELOW the broadcast exchange (dictionary
-    # prep), never above the join on the probe side
-    probe_side = plan.split("BroadcastExchange")[0]
-    assert "HashAggregate" not in probe_side
+    # any aggregate must sit BELOW a broadcast exchange (dictionary prep),
+    # never above the joins on the probe side
+    probe_side = final.split("BroadcastExchange")[0]
+    assert "Aggregate" not in probe_side
     # probe side stays whole-stage-codegen (no Python UDF in the ladder)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -93,6 +107,73 @@ def test_literal_probe_matches_broadcast_ladder(spark, events, monkeypatch):
     )
     assert "Join" not in _plan(lit) and "BroadcastHashJoin" in _plan(bc)
     assert_same_both_ways(bc, lit)
+
+
+def _values_index(spark, rows):
+    """Index rows (NULLs allowed) as an inline VALUES table: a plan literal,
+    so LITERAL_MAX_ROWS can force either link plan."""
+
+    def lit(v):
+        return "NULL" if v is None else "'" + v.replace("'", "''") + "'"
+
+    vals = ", ".join("(" + ", ".join(map(lit, r)) + ")" for r in rows)
+    return spark.sql(
+        f"SELECT * FROM VALUES {vals} AS ontology_index(ontology_iri, host, path, iri_type)"
+    )
+
+
+def test_link_plans_agree_on_hard_dictionaries(spark, monkeypatch):
+    """Literal map probe vs broadcast rung lookups, forced both ways, on the
+    inputs where they could part: duplicate (host, path) rows with
+    different IRIs, a NULL-host row, '//' and multi-trailing-slash paths,
+    path-less mentions on known and unknown hosts, and one host with 2,000
+    paths."""
+    from kgtm.link import broadcast_ladder_link
+
+    rows = [
+        ("http://dup.org/a/z", "dup.org", "/a/", "slash"),
+        ("http://dup.org/a/b", "dup.org", "/a/", "slash"),
+        ("http://dup.org/a/y", "dup.org", "/a/", "slash"),
+        ("http://nohost/x", None, "/x", "term"),
+        ("http://sl.org/a//b", "sl.org", "/a//b", "term"),
+        ("http://sl.org/c", "sl.org", "/c", "term"),
+        ("http://sl.org//", "sl.org", "//", "slash"),
+        ("http://sl.org/", "sl.org", "/", "slash"),
+        *[(f"http://big.org/t{i}", "big.org", f"/t{i}", "term") for i in range(2000)],
+        ("http://big.org/ns/", "big.org", "/ns/", "slash"),
+    ]
+    index = _values_index(spark, rows)
+    surfaces = [
+        ("dup.org", "/a/"), ("dup.org", "/a/q"), ("dup.org", "/a///"),
+        ("nohost.org", "/x"), (None, "/x"), ("", "/x"),
+        ("sl.org", "/a//b"), ("sl.org", "/a//b//"), ("sl.org", "/a//b/c"),
+        ("sl.org", "//"), ("sl.org", "///"), ("sl.org", "/c///"), ("sl.org", "/c//d"),
+        ("sl.org", "/q"), ("sl.org", "/"),
+        ("dup.org", ""), ("dup.org", None), ("big.org", ""), ("nowhere.org", ""),
+        ("nowhere.org", None),
+        ("big.org", "/t0"), ("big.org", "/t1999/"), ("big.org", "/t777/x"),
+        ("big.org", "/t5/x/y"), ("big.org", "/ns/q/r/"), ("big.org", "/t2000"),
+    ]
+    m = spark.createDataFrame(
+        [(f"s{i}", h, p) for i, (h, p) in enumerate(surfaces)],
+        "surface string, host string, path string",
+    )
+    bc, lit = forced_both_ways(
+        monkeypatch, "LITERAL_MAX_ROWS", lambda: broadcast_ladder_link(m, index)
+    )
+    assert "Join" not in _plan(lit) and "BroadcastHashJoin" in _plan(bc)
+    assert_same_both_ways(bc, lit)
+    got = {(r.host, r.path): r for r in bc.collect()}
+    assert got[("dup.org", "/a/q")].ontology_iri == "http://dup.org/a/b"
+    # rung 1 strips every trailing slash, so "/a///" never reaches "/a/"
+    assert not got[("dup.org", "/a///")].is_linked
+    assert not got[(None, "/x")].is_linked and not got[("nohost.org", "/x")].is_linked
+    assert got[("sl.org", "/a//b/c")].canonical_path == "/a//b"
+    assert got[("dup.org", None)].is_linked and got[("dup.org", None)].rung == 0
+    assert not got[("nowhere.org", "")].is_linked
+    assert got[("big.org", "/t777/x")].ontology_iri == "http://big.org/t777"
+    assert got[("big.org", "/ns/q/r/")].rung == 5
+    assert not got[("big.org", "/t2000")].is_linked
 
 
 @pytest.mark.parametrize(

@@ -195,8 +195,8 @@ def test_stream_commit_store_exactly_once(spark, events, stream_dirs, tmp_path):
 
 def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     """The large-dictionary scale path (NOTES item 5): streaming with a
-    10^5-entry dictionary must (a) plan as a broadcast join, not a 10^5-entry
-    map literal, and (b) give the batch resolution's rows and schema over the
+    10^5-entry dictionary must (a) plan as broadcast rung lookups, not a
+    10^5-entry map literal, and (b) give the batch resolution's rows and schema over the
     same input. The plan is read from the started query: a streaming frame
     has no executed plan of its own."""
     in_dir, out_dir, ck_dir = stream_dirs
@@ -232,8 +232,12 @@ def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     )
     q.awaitTermination()
     plan = q._jsq.explainInternal(False)
-    # the dictionary is the build side of a broadcast join on host ...
-    assert re.search(r"BroadcastHashJoin \[host#\d+\], \[d_host#\d+\]", plan), plan
+    # the dictionary is the build side of the rung-lookup broadcast joins ...
+    assert re.search(
+        r"BroadcastHashJoin \[host#\d+, coalesce\(_lc0#\d+, \), isnull\(_lc0#\d+\)\], "
+        r"\[d_host#\d+, coalesce\(d_path#\d+, \), isnull\(d_path#\d+\)\]",
+        plan,
+    ), plan
     # ... and none of its entries is folded into the plan as a literal
     assert "filler99999.example.net" not in plan, plan[:2000]
     assert len(plan) < 100_000, len(plan)
@@ -242,6 +246,43 @@ def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
     assert got.exceptAll(batch).count() == 0
     assert batch.exceptAll(got).count() == 0
     assert got.filter(F.col("source") == "archivo-latest").count() > 0
+
+
+def test_stream_static_dims_built_once(spark, events, stream_dirs, tmp_path):
+    """Over parquet dims, the stream reduces the dictionary and the snapshot
+    dim once per query, not once per micro-batch: after a drain of three or
+    more epochs, the last epoch's executed plan scans neither dim's files
+    and holds no aggregation or shuffle exchange (the transcript side has
+    none of either)."""
+    in_dir, out_dir, ck_dir = stream_dirs
+    many = str(tmp_path / "in_many")
+    spark.read.parquet(in_dir).repartition(24).write.parquet(many)
+    idx_dir, snaps_dir = str(tmp_path / "index"), str(tmp_path / "snaps")
+    ontology_index_df(spark).write.parquet(idx_dir)
+    ontology_snapshots_df(spark).write.parquet(snaps_dir)
+    idx, snaps = spark.read.parquet(idx_dir), spark.read.parquet(snaps_dir)
+
+    resolved = streaming_resolution(read_transcript_stream(spark, many), idx, snaps)
+    q = (
+        resolved.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ck_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) >= 3
+    plan = q._jsq.explainInternal(False)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "Aggregate" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert idx_dir not in plan and snaps_dir not in plan, plan
+
+    got = spark.read.parquet(out_dir)
+    batch = batch_twin(spark, many, idx, snaps)
+    assert got.exceptAll(batch).count() == 0
+    assert batch.exceptAll(got).count() == 0
 
 
 @pytest.mark.parametrize("mode", ["latest", "bogus"])
