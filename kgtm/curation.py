@@ -79,11 +79,15 @@ def curate_documents(
     hq = meta.filter(F.col("quality_score") >= min_quality)
 
     # stage 2: exact dedup among high-quality docs (digest groupBy; the
-    # min-id keeper joins back broadcast — one digest shuffle total)
+    # min-id keeper joins back broadcast — one digest shuffle total). The
+    # narrow decision is checkpointed EAGERLY: hq2's semi-join, the fan-out
+    # check and the shingle flat's checkpoint in ngram_jaccard_pairs, and
+    # the ledger all read it, and built lazily each of those three Spark
+    # executions re-ran the digest aggregate and its join.
     keepers = hq.groupBy("_dg").agg(F.min(id_col).alias("_keep"))
     exact_kept = hq.join(keepers, "_dg").select(
         id_col, (F.col(id_col) == F.col("_keep")).alias("_exact_keep")
-    )
+    ).localCheckpoint(eager=True)
 
     # stage 3: near-dup clustering among exact survivors (the only consumers
     # of text besides the scoring pass above)

@@ -91,7 +91,12 @@ def with_shingles(
     under-parallel input (one-row-group fixture, a coalesced upstream)
     would otherwise run the whole shingling — and any downstream
     AQE-broadcast probe pipelined onto it — in a single task. No-op when
-    the input is already parallel."""
+    the input is already parallel.
+
+    Deciding that executes every AQE stage below ``df`` (see
+    ``session.ensure_min_parallelism``), so ``df`` should be a scan or read
+    its shuffles from a checkpoint: curate_documents checkpoints its
+    exact-dedup decision before its near-dup input reaches here."""
     from kgtm.session import ensure_min_parallelism
 
     base = ensure_min_parallelism(
@@ -475,34 +480,41 @@ def minhash_lsh_pairs(
 def dedup_clusters(pairs: DataFrame, all_ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Near-dup pairs → clusters → survivor pick.
 
-    Composition: connected components over the pair graph (transitive
-    closure — A~B, B~C ⇒ one cluster even if A,C never compared), labelled
-    by the lexicographic min of the ids as strings; survivor = numeric min
-    id per cluster. Returns (id, cluster_id, is_survivor) covering EVERY id
-    in ``all_ids`` (singletons are their own cluster).
+    Returns (id, cluster_id, is_survivor) covering EVERY id in ``all_ids``
+    (singletons are their own cluster). PRECONDITION: every id in ``pairs``
+    is in ``all_ids``.
 
-    A pair graph within the literal row cap is closed by union-find on the
-    driver; a larger one by the O(log n)-round star plan, since near-dup
-    clusters are often CHAINS (A~B~C~…~Z under a sliding edit).
+    Connected components run over the TYPED ``id_a``/``id_b`` (transitive
+    closure — A~B, B~C ⇒ one cluster even if A,C never compared), so a
+    component's label is its minimum id, which is the survivor:
+    ``is_survivor = id == coalesce(component, id)``, with no window. A pair
+    graph within the literal row cap is closed by union-find on the driver;
+    a larger one by the O(log n)-round star plan, since near-dup clusters
+    are often CHAINS (A~B~C~…~Z under a sliding edit).
+
+    ``cluster_id`` is the lexicographic min of the members' ids as strings,
+    a window over the component label. Column pruning drops that window
+    (and its shuffle) when the caller does not read ``cluster_id``.
+
+    An id that breaks the precondition still labels its component when it
+    is the minimum, and then no output row of that cluster is a survivor;
+    ``cluster_id`` ranges over the ``all_ids`` members only.
     """
-    from kgtm.canonicalize import connected_components
-
-    edges = pairs.select(
-        F.col("id_a").cast("string").alias("src"),
-        F.col("id_b").cast("string").alias("dst"),
-    )
-    comps, _ = connected_components(edges)
-    ids = all_ids.select(F.col(id_col).cast("string").alias("id_str"), F.col(id_col).alias("id"))
-    out = ids.join(comps, ids["id_str"] == comps["node"], "left").select(
-        "id",
-        F.coalesce(F.col("component"), F.col("id_str")).alias("cluster_id"),
-    )
-    # survivor = min id within cluster (deterministic, matches exact_dedup)
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("cluster_id")
-    return out.withColumn(
-        "is_survivor", F.col("id") == F.min("id").over(w)
+    from kgtm.canonicalize import connected_components
+
+    comps, _ = connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    )
+    ids = all_ids.select(F.col(id_col).alias("id"))
+    labelled = ids.join(comps, F.col("id") == F.col("node"), "left").select(
+        "id", F.coalesce("component", "id").alias("_root")
+    )
+    return labelled.select(
+        "id",
+        F.min(F.col("id").cast("string")).over(Window.partitionBy("_root")).alias("cluster_id"),
+        (F.col("id") == F.col("_root")).alias("is_survivor"),
     )
 
 

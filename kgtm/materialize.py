@@ -26,6 +26,7 @@ import os
 import re
 import uuid
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -68,7 +69,14 @@ def _fs(spark: SparkSession, path: str):
 
 
 def _write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write a manifest or claim-marker temp file. On ``file:`` it goes
+    through the raw local filesystem: LocalFileSystem would also write a
+    ``.crc`` sidecar, a second file on every call. Readers open it through
+    LocalFileSystem, which verifies a file only when its sidecar exists,
+    and ``_claim`` links it to a name that never carries one."""
     fs, jvm = _fs(spark, path)
+    if is_instance_of(spark.sparkContext._gateway, fs, "org.apache.hadoop.fs.LocalFileSystem"):
+        fs = fs.getRawFileSystem()
     out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
     try:
         out.write(bytearray(data))
@@ -99,8 +107,8 @@ def _claim(fs, jvm, tmp: str, dst: str) -> bool:
 
     A POSIX rename overwrites, so on ``file:`` the claim is a hard link
     (link(2) fails atomically with EEXIST when ``dst`` exists), after which
-    ``tmp`` is deleted through ``fs`` (taking the ``.crc`` sidecar that
-    LocalFileSystem wrote with it). ``dst`` carries no sidecar; one left by a
+    ``tmp`` is deleted through ``fs`` (``_write_bytes`` wrote it with no
+    ``.crc`` sidecar). ``dst`` carries no sidecar; one left by a
     manifest removed outside Hadoop would fail the checksum of the new
     ``dst``, so it is removed. Any other OSError (say, a filesystem without
     hard links) raises. Elsewhere ``FileSystem.rename`` is the claim: it is

@@ -362,11 +362,15 @@ def test_commit_claims_seq_over_a_stale_checksum_sidecar(spark, tmp_path):
     """A manifest removed outside Hadoop leaves LocalFileSystem's .crc
     sidecar behind; the next commit claiming that seq must not be read
     against the stale checksum, which would hide it from every reader."""
-    from kgtm.materialize import _write_bytes, list_commits
+    from kgtm.materialize import _fs, list_commits
 
     store = tmp_path / "store"
     gone = store / "_commits" / "0000000000.json"
-    _write_bytes(spark, str(gone), b'{"commit_id": "cgone", "seq": 0, "pad": 0}')
+    # written through LocalFileSystem itself, which writes the sidecar
+    fs, jvm = _fs(spark, str(gone))
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(str(gone)), True)
+    out.write(bytearray(b'{"commit_id": "cgone", "seq": 0, "pad": 0}'))
+    out.close()
     gone.unlink()
     assert (gone.parent / ".0000000000.json.crc").exists()
     c = write_table(spark.range(3).withColumn("source", F.lit("s")), str(store))

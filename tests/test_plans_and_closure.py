@@ -500,3 +500,48 @@ def test_pruned_flat_lookup_literal_join_parity(spark, tmp_path, monkeypatch, wa
         assert re.search(r"PartitionFilters: \[[^\]]*sb#", _final_section(_plan(lit)))
         assert lit.count() == 9  # three live shingles, three ids each
     assert_same_both_ways(join, lit)
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_curation_ledger_plans_no_window(spark, documents):
+    """Near-dup survivors come from the component label, and the ledger
+    reads no cluster_id, so its plan holds no Window (no shuffle over every
+    id)."""
+    from kgtm.curation import curate_documents
+
+    assert "Window" not in _optimized(curate_documents(documents))
+
+
+def test_dedup_clusters_prunes_the_cluster_id_window(spark):
+    from kgtm.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    ids = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    clusters = dedup_clusters(pairs, ids)
+    assert "Window" in _optimized(clusters)
+    assert "Window" not in _optimized(clusters.select("id", "is_survivor"))
+
+
+def test_curation_runs_the_digest_aggregate_once(spark, documents):
+    """One curate_documents(...).collect() runs the exact-dedup digest
+    aggregate in exactly one Spark execution: the decision is checkpointed
+    once, and the near-dup input, the shingle checkpoint and the ledger all
+    read it."""
+    from kgtm.curation import curate_documents
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = {e.executionId() for e in executions()}
+    curate_documents(documents).collect()
+    digest = re.compile(r"Keys \[\d+\]: \[_dg#")
+    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() not in seen]
+    assert sum(bool(digest.search(p)) for p in plans) == 1

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import forced_both_ways
 from kgtm.dedup import dedup_clusters, ngram_jaccard_pairs
 from kgtm.sources import (
     index_digest,
@@ -92,6 +93,20 @@ def test_dedup_clusters_chain_shaped(spark):
     assert out[0].is_survivor and not out[1].is_survivor
     # ids 41..44 are singletons
     assert all(out[i].cluster_id == str(i) and out[i].is_survivor for i in range(41, 45))
+
+
+def test_dedup_clusters_pair_id_missing_from_all_ids(spark, monkeypatch):
+    """Outside the precondition (id 1 is in a pair but not in all_ids): the
+    missing id still labels its component, so no listed member of that
+    cluster survives, and cluster_id ranges over the listed members only.
+    Both connected-components plans agree."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    ids = spark.createDataFrame([(2,), (3,), (4,)], "doc_id long")
+    for out in forced_both_ways(
+        monkeypatch, "LITERAL_MAX_ROWS", lambda: dedup_clusters(pairs, ids).collect()
+    ):
+        got = {r.id: (r.cluster_id, r.is_survivor) for r in out}
+        assert got == {2: ("2", False), 3: ("2", False), 4: ("4", True)}
 
 
 def test_dedup_clusters_on_documents(spark, documents):
