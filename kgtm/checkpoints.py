@@ -1,42 +1,45 @@
-"""Resumable per-partition checkpoints (north_rule).
+"""Resumable per-bucket runs on the commit store (north_rule).
 
-The unit of resumable work is a *bucket* of conversations (pmod(hash(conv_id),
-n_buckets)) — deterministic under re-partitioning, unlike
-spark_partition_id. Each bucket's output lands in its own directory
-(bucket=K/, an Iceberg-compatible partition layout); a _SUCCESS-style marker
-row in the manifest records completion. On resume, completed buckets are
-anti-joined away and only the remainder recomputes — re-running with half the
-checkpoints present yields byte-identical output (idempotence test).
+The unit of resumable work is a *bucket* of conversations (pmod(xxhash64(key),
+n_buckets)) — deterministic under re-partitioning, unlike spark_partition_id.
+A run computes every bucket that no earlier commit records, in one Spark job,
+and commits it through kgtm.materialize as one commit of the ``checkpoint``
+table, partitioned by ``_bucket``; the commit's manifest records the buckets
+it holds, the key and n_buckets. So completion is the manifest claim itself:
+a run killed before its claim leaves a ``commit=`` directory that no manifest
+names, which reads never see and ``materialize.vacuum`` reclaims. Re-running
+with half the buckets committed yields the output of a clean run (idempotence
+test). The root may be any Hadoop URI the store takes (``file:``, ``hdfs:``,
+``s3a:``).
 
 Ancestor: the reference's SHA-256 change detection + skip-if-done download
 refresh (/root/reference/ontologytimemachine/utils/download_archivo_urls.py:
-41-46,65-74,108-116) generalized from one file to N partitions.
-
-At cluster scale the same contract maps onto Iceberg: bucket → partition
-spec, manifest → snapshot metadata; here it is plain parquet + a manifest
-parquet so the sandbox needs no catalog (SURVEY §7 hard-part (4)).
+41-46,65-74,108-116) generalized from one file to N buckets.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST = "_kgtm_manifest"
+from kgtm.materialize import list_commits, read_table, write_table
+
+TABLE = "checkpoint"
 
 
 def bucket_col(key: str = "conv_id", n_buckets: int = 32):
     return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
 
 
+def _commits(spark: SparkSession, out_dir: str) -> list[dict]:
+    return [c for c in list_commits(out_dir, spark) if c.get("table") == TABLE]
+
+
 def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
-    path = os.path.join(out_dir, MANIFEST)
-    if not os.path.exists(path):
-        return []
-    return [r.bucket for r in spark.read.parquet(path).select("bucket").distinct().collect()]
+    """Buckets some commit under ``out_dir`` records; runs no Spark job."""
+    return sorted({b for c in _commits(spark, out_dir) for b in c["buckets"]})
 
 
 def run_with_checkpoints(
@@ -49,43 +52,29 @@ def run_with_checkpoints(
 ) -> DataFrame:
     """Run `transform` over `inputs` with per-bucket resume.
 
-    Incomplete buckets are computed IN ONE Spark job (a single filtered
+    The buckets left to do are computed IN ONE Spark job (a single filtered
     pass + partitionBy write), not a per-bucket loop — resume granularity
-    without N job launches. Returns the full output (all buckets).
+    without N job launches. Returns the full output (all buckets). A root
+    whose commits were bucketed by another key or bucket count raises
+    ValueError: their buckets are other sets of rows.
     """
-    import shutil
-
-    done = set(completed_buckets(spark, out_dir))
-    data_dir = os.path.join(out_dir, "data")
-
-    # Crash hygiene: a bucket directory without a manifest row is a partial
-    # write from an interrupted run — drop it before recomputing, so append
-    # can never double a bucket.
-    if os.path.isdir(data_dir):
-        for entry in os.listdir(data_dir):
-            if entry.startswith("_bucket="):
-                b = int(entry.split("=", 1)[1])
-                if b not in done:
-                    shutil.rmtree(os.path.join(data_dir, entry))
-
-    with_bucket = inputs.withColumn("_bucket", bucket_col(key, n_buckets))
-    todo = (
-        with_bucket.filter(~F.col("_bucket").isin(list(done))) if done else with_bucket
-    )
-
-    if len(done) < n_buckets:
-        out = transform(todo.drop("_bucket")).withColumn(
-            "_bucket", bucket_col(key, n_buckets)
+    commits = _commits(spark, out_dir)
+    for c in commits:
+        if (c["bucket_key"], c["n_buckets"]) != (key, n_buckets):
+            raise ValueError(
+                f"{out_dir} holds buckets of pmod(xxhash64({c['bucket_key']}), "
+                f"{c['n_buckets']}); resuming it with key={key!r}, "
+                f"n_buckets={n_buckets} would duplicate or drop rows"
+            )
+    done = {b for c in commits for b in c["buckets"]}
+    todo = [b for b in range(n_buckets) if b not in done]
+    if todo:
+        rest = inputs.filter(bucket_col(key, n_buckets).isin(todo)) if done else inputs
+        write_table(
+            transform(rest).withColumn("_bucket", bucket_col(key, n_buckets)),
+            out_dir,
+            table=TABLE,
+            partition_by=("_bucket",),
+            extra_manifest={"buckets": todo, "bucket_key": key, "n_buckets": n_buckets},
         )
-        out.write.mode("append").partitionBy("_bucket").parquet(data_dir)
-        # Manifest commit AFTER data lands: buckets become visible atomically
-        # per run; a crash in between is healed by the hygiene pass above.
-        all_buckets = spark.range(n_buckets).select(
-            F.col("id").cast("int").alias("bucket")
-        )
-        new_manifest = all_buckets.filter(
-            ~F.col("bucket").isin(list(done)) if done else F.lit(True)
-        )
-        new_manifest.write.mode("append").parquet(os.path.join(out_dir, MANIFEST))
-
-    return spark.read.parquet(data_dir).drop("_bucket")
+    return read_table(spark, out_dir, table=TABLE).drop("commit", "_bucket")

@@ -727,17 +727,16 @@ def _live_state_commits(
     _covering_state (selection) and upgrade_to_state / compact_ledger /
     persist_curated_corpus (the ``replaces`` maps their rewrites pass to
     _write_state) — so the rule cannot drift between readers and rewriters."""
-    out: dict[str, list[dict]] = {}
-    for table in tables:
-        tcs = [c for c in commits if c.get("table") == table]
-        replaced = {cid for c in tcs for cid in c.get("replaces", [])}
-        out[table] = [
+    from kgtm.materialize import _live_commits
+
+    return {
+        table: [
             c
-            for c in tcs
-            if c["commit_id"] not in replaced
-            and (want is None or c.get("for_ledger_commit") in want)
+            for c in _live_commits(commits, table)
+            if want is None or c.get("for_ledger_commit") in want
         ]
-    return out
+        for table in tables
+    }
 
 
 def _state_replaces(
@@ -1282,15 +1281,9 @@ def _resolve_ledger_commits(
     claim (append_curated_batch's CAS marker) cannot cover. An orphaned
     delta's batch must be re-appended from the new base.
     """
-    from kgtm.materialize import list_commits
+    from kgtm.materialize import _live_commits, list_commits
 
-    commits = [
-        c
-        for c in list_commits(out_dir, spark)
-        if c.get("table") == "ledger" and (as_of is None or c["seq"] <= as_of)
-    ]
-    replaced = {cid for c in commits for cid in c.get("replaces", [])}
-    live = [c for c in commits if c["commit_id"] not in replaced]
+    live = _live_commits(list_commits(out_dir, spark), "ledger", as_of)
     snaps = [c for c in live if c.get("ledger_kind", "snapshot") != "delta"]
     if not snaps:
         raise FileNotFoundError(f"no committed ledger under {out_dir}")
@@ -1322,22 +1315,15 @@ def orphaned_ledger_deltas(
     ``base_seq`` / ``n_rows``, and the recovery is to re-append the batch
     from the current base. Deltas OLDER than the resolved snapshot are not
     orphans (a re-curation supersedes them on purpose) and are excluded."""
-    from kgtm.materialize import list_commits
+    from kgtm.materialize import _live_commits, list_commits
 
     chain = _resolve_ledger_commits(spark, out_dir, as_of)
     in_chain = {c["commit_id"] for c in chain}
     snap_seq = chain[0]["seq"]
-    commits = [
-        c
-        for c in list_commits(out_dir, spark)
-        if c.get("table") == "ledger" and (as_of is None or c["seq"] <= as_of)
-    ]
-    replaced = {cid for c in commits for cid in c.get("replaces", [])}
     return [
         c
-        for c in commits
+        for c in _live_commits(list_commits(out_dir, spark), "ledger", as_of)
         if c.get("ledger_kind") == "delta"
-        and c["commit_id"] not in replaced
         and c["seq"] > snap_seq
         and c["commit_id"] not in in_chain
     ]

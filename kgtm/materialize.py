@@ -325,12 +325,12 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
     """Committed manifests, ordered by seq (the visible snapshot history).
 
     Reads through the Hadoop FileSystem (object-store safe). Dot/underscore
-    temp files, unparsable manifests (a writer crashed mid-write before the
-    atomic claim, or bitrot), and manifests deleted between listing and
-    open (a concurrent expire) are all skipped, so a broken or racing file
-    can never take the whole store down for readers.
+    temp files, truncated manifests, and manifests deleted between listing
+    and open (a concurrent expire) are skipped, so a racing file can never
+    take the whole store down for readers. Any other failed read raises:
+    skipping it would silently drop a commit from every read.
     """
-    from py4j.protocol import Py4JError
+    from py4j.protocol import Py4JJavaError
 
     spark = _active_spark(spark)
     commits_dir = _child(out_dir, "_commits")
@@ -347,7 +347,7 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
         # never rewritten in place), so re-parsing every manifest on every
         # listing is pure py4j round-trip waste — measured at ~100-150 ms
         # per manifest-read chain, which made ledger reads O(total commits)
-        # in DRIVER latency (seconds at a 32-delta chain; BENCH/INGEST.md).
+        # in DRIVER latency (seconds at a 32-delta chain; BENCH/CHAIN.md).
         # Cache parsed manifests keyed by (uri, mtime, length) from the
         # SAME listStatus (zero extra calls on a hit); the listing itself
         # stays fresh, so new commits are always seen and expired ones drop
@@ -362,10 +362,17 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
             continue
         try:
             parsed = json.loads(_read_bytes(spark, _child(commits_dir, name)))
-        except (ValueError, OSError, Py4JError):
-            # truncated/corrupt manifest, or deleted after listStatus by a
-            # concurrent expire (surfaces as a JVM FileNotFoundException
-            # wrapped in a Py4JError): skip
+        except ValueError:
+            continue  # truncated manifest
+        except Py4JJavaError as e:
+            # deleted after listStatus by a concurrent expire; any other
+            # failed read (an I/O or checksum error) must not drop a commit
+            if not is_instance_of(
+                spark.sparkContext._gateway,
+                e.java_exception,
+                "java.io.FileNotFoundException",
+            ):
+                raise
             continue
         if len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
             # drop the oldest-inserted half; plain dicts preserve insertion
@@ -378,6 +385,24 @@ def list_commits(out_dir: str, spark: SparkSession | None = None) -> list[dict]:
         _MANIFEST_CACHE[key] = (stamp, copy.deepcopy(parsed))
         commits.append(parsed)
     return sorted(commits, key=lambda c: c.get("seq", 0))
+
+
+def _live_commits(
+    commits: list[dict], table: str, as_of: int | None = None
+) -> list[dict]:
+    """The commits of ``table`` in view at ``as_of`` (every one when None),
+    minus those a commit in view ``replaces``: the one rule of which commits
+    a read of ``table`` sees. ``commits`` is a ``list_commits`` result, so
+    the order stays seq order. Manifests written before tables were named
+    belong to 'triples'."""
+    commits = [
+        c
+        for c in commits
+        if c.get("table", "triples") == table
+        and (as_of is None or c.get("seq", 0) <= as_of)
+    ]
+    replaced = {cid for c in commits for cid in c.get("replaces", [])}
+    return [c for c in commits if c["commit_id"] not in replaced]
 
 
 def read_triples(
@@ -417,12 +442,7 @@ def read_table(
     discovered across them and ``commit`` given as a string, so ``commit``
     is never inferred there either.
     """
-    commits = list_commits(out_dir, spark)
-    if as_of is not None:
-        commits = [c for c in commits if c.get("seq", 0) <= as_of]
-    commits = [c for c in commits if c.get("table", "triples") == table]
-    replaced = {cid for c in commits for cid in c.get("replaces", [])}
-    commits = [c for c in commits if c["commit_id"] not in replaced]
+    commits = _live_commits(list_commits(out_dir, spark), table, as_of)
     fs, jvm = _fs(spark, out_dir)
     hpath = jvm.org.apache.hadoop.fs.Path
     paths, parts, schemas, legacy = [], [], [], []
@@ -559,13 +579,7 @@ def compact_table(
     reclaimed later by expire_replaced/vacuum, not here. The rewrite keeps
     the newest live commit's recorded partition spec.
     """
-    commits = [
-        c
-        for c in list_commits(out_dir, spark)
-        if c.get("table", "triples") == table
-    ]
-    replaced = {cid for c in commits for cid in c.get("replaces", [])}
-    live = [c for c in commits if c["commit_id"] not in replaced]
+    live = _live_commits(list_commits(out_dir, spark), table)
     if len(live) < 2:
         raise ValueError(f"nothing to compact: {len(live)} live commit(s)")
     # Curation-ledger tables are NOT plain append tables: each snapshot commit

@@ -10,7 +10,7 @@ so the sweep can observe arbitrarily long chains.
 Appends at sf0.001-sized batches keep the sweep fast; the READ cost under
 test is dominated by per-commit planning/IO fan-in (manifest resolution +
 one parquet dir per commit), which scales with chain length, not batch
-size. Appends a section to BENCH/INGEST.md.
+size. Writes BENCH/CHAIN.md.
 """
 
 from __future__ import annotations
@@ -96,9 +96,7 @@ def main() -> None:
         shutil.rmtree(store, ignore_errors=True)
 
     table = "\n".join(f"| {r['deltas']} | {r['read_sec']} s |" for r in rows)
-    section = f"""
-
-## Read latency vs delta-chain length
+    chain_md = f"""# BENCH/CHAIN — read latency vs delta-chain length
 
 `read_ledger` resolves newest-snapshot + chain-linked deltas — one commit
 dir per chain element in every read plan. Sweep: {BATCH_DOCS}-doc appends
@@ -115,9 +113,11 @@ The slope is planning + per-commit IO fan-in, the cost
 reaches N deltas folds the chain back into one snapshot in the same call,
 so read fan-in never exceeds N+1 commits and time-travel history survives
 via `replaces`.
+
+Reproduce: `python scripts/bench_chain.py` (rewrites this file;
+env: KGTM_CHAIN_SF_DIR, KGTM_CHAIN_POINTS, KGTM_CHAIN_BATCH).
 """
-    with open(REPO / "BENCH" / "INGEST.md", "a") as f:
-        f.write(section)
+    (REPO / "BENCH" / "CHAIN.md").write_text(chain_md)
     print(json.dumps({"compact_sec": compact_sec, "points": len(rows)}))
 
 

@@ -196,8 +196,9 @@ term is the single 16-byte-row columnar scan of the stored flat (filtered
 map-side before any shuffle); everything else an append reads —
 digest lookups, df lookups, size lookups — is probe-restricted.
 
-Reproduce: `python scripts/bench_ingest.py`
-(env: SPARK_GRAFT_SF_DIR, KGTM_INGEST_BATCH, KGTM_INGEST_FACTORS).
+Reproduce: `python scripts/bench_ingest.py` (rewrites this file;
+env: SPARK_GRAFT_SF_DIR, KGTM_INGEST_BATCH, KGTM_INGEST_FACTORS). The
+read-latency-vs-chain-length sweep is in BENCH/CHAIN.md.
 """
     )
     print(json.dumps({"rows": rows, "state_growth": growth, "storeless_growth": s_growth}))

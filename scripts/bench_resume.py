@@ -1,10 +1,13 @@
 """Kill/restart resumability evidence (north_rule): run the checkpointed
-flagship over a 30M-turn corpus, SIGKILL the JVM mid-run, resume, and verify
-the final output is identical to an uninterrupted run. Writes BENCH/RESUME.md.
+flagship over a large corpus (the 30M-turn scaling input by default),
+SIGKILL the JVM once its bucket commit's data write has started, resume,
+and verify the final output is identical to an uninterrupted run. Writes
+BENCH/RESUME.md.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import signal
@@ -15,6 +18,8 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from kgtm.checkpoints import TABLE  # noqa: E402
 
 SCALE_INPUT = os.environ.get("KGTM_SCALE_INPUT", "/tmp/kgtm_scale_input")
 CK_DIR = "/tmp/kgtm_resume_ck"
@@ -52,18 +57,17 @@ def main() -> None:
         raise SystemExit(1)
     subprocess.run(["rm", "-rf", CK_DIR], check=True)
 
-    # Run 1: SIGKILL once the first buckets have committed.
+    # Run 1: SIGKILL once its commit's data directory exists (the one
+    # bucket commit is mid-write: data landing, manifest not yet claimed).
     t0 = time.perf_counter()
     child = subprocess.Popen(
         [sys.executable, "-c", CHILD], env=_env(),
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
     )
-    manifest = Path(CK_DIR) / "_kgtm_manifest"
     killed_after = None
     while child.poll() is None:
-        time.sleep(1.0)
-        if manifest.exists() and any(manifest.glob("*.parquet")):
-            time.sleep(2.0)  # let it get mid-write of later buckets
+        time.sleep(0.2)
+        if glob.glob(f"{CK_DIR}/{TABLE}/commit=*"):
             os.kill(child.pid, signal.SIGKILL)
             killed_after = round(time.perf_counter() - t0, 1)
             break
@@ -71,9 +75,14 @@ def main() -> None:
     if killed_after is None:
         print("run finished before kill — buckets too fast; results still valid")
 
-    import glob
-
-    committed = len(glob.glob(f"{CK_DIR}/_kgtm_manifest/*.parquet"))
+    # buckets whose commit claimed its manifest before the kill
+    committed = len(
+        {
+            b
+            for m in glob.glob(f"{CK_DIR}/_commits/*.json")
+            for b in json.loads(Path(m).read_text())["buckets"]
+        }
+    )
 
     # Run 2: resume to completion.
     t1 = time.perf_counter()
@@ -86,6 +95,7 @@ def main() -> None:
     # Reference: uninterrupted run output signature.
     from pyspark.sql import functions as F
 
+    from kgtm.materialize import read_table
     from kgtm.pipeline import PipelineConfig, build_triples
     from kgtm.session import get_spark
     from kgtm.transcripts import ontology_index_df, ontology_snapshots_df
@@ -104,7 +114,7 @@ def main() -> None:
             F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
         ).collect()[0]
 
-    resumed = spark.read.parquet(f"{CK_DIR}/data").drop("_bucket")
+    resumed = read_table(spark, CK_DIR, table=TABLE).drop("commit", "_bucket")
     sig_resumed = signature(resumed.select(*direct.columns))
     sig_direct = signature(direct)
     identical = (sig_resumed.n, sig_resumed.h) == (sig_direct.n, sig_direct.h)
@@ -122,14 +132,15 @@ def main() -> None:
     (REPO / "BENCH" / "RESUME.md").write_text(
         f"""# BENCH/RESUME — kill/restart resumability evidence
 
-Checkpointed flagship run over the 30M-turn corpus ({SCALE_INPUT}),
+Checkpointed flagship run over the transcripts at {SCALE_INPUT},
 16 conversation-hash buckets (kgtm/checkpoints.py).
 
-1. Run 1 SIGKILLed {killed_after}s in, after {committed} manifest commits —
-   a hard crash, possibly mid-write of later buckets.
-2. Run 2 resumed from the same checkpoint dir: orphan (un-manifested)
-   bucket directories pruned, completed buckets skipped, remainder
-   recomputed in ONE job; finished in {resume_sec}s.
+1. Run 1 SIGKILLed {killed_after}s in, with {committed} of 16 buckets
+   committed — a hard crash while its bucket commit's data was landing.
+2. Run 2 resumed from the same checkpoint root: the killed run's commit
+   directory has no manifest, so reads never see it (`vacuum` reclaims
+   it); committed buckets skipped, remainder recomputed in ONE job and
+   committed through the manifest store; finished in {resume_sec}s.
 3. Output signature (row count + order-insensitive xxhash64 sum) vs an
    uninterrupted run: **identical = {identical}** ({rows_resumed:,} rows).
 

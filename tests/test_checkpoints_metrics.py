@@ -3,13 +3,14 @@ and error formatting."""
 
 from __future__ import annotations
 
-import os
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_same_both_ways
 from kgtm.checkpoints import bucket_col, completed_buckets, run_with_checkpoints
-from kgtm.materialize import read_metrics, write_table
+from kgtm.materialize import list_commits, read_metrics, vacuum, write_table
 from kgtm.metrics import MetricsCollector, error_struct, per_partition_counts
 from kgtm.pipeline import build_triples
 from kgtm.transcripts import (
@@ -25,6 +26,14 @@ def _transform_factory(spark):
 
     def transform(tr):
         return build_triples(tr, idx, snaps)
+
+    return transform
+
+
+def _counting(calls):
+    def transform(df):
+        calls["n"] += 1
+        return df.select("conv_id", "turn_idx", "text")
 
     return transform
 
@@ -46,18 +55,17 @@ def test_checkpoint_resume_is_idempotent(spark, events, tmp_path):
     transform = _transform_factory(spark)
     out_dir = str(tmp_path / "ck2")
 
-    # simulate a partial run: restrict input to buckets 0-3, mark only those
+    # simulate a partial run: restrict input to buckets 0-3, record only those
     half = tr.withColumn("_b", bucket_col("conv_id", 8)).filter(F.col("_b") < 4).drop("_b")
     run_with_checkpoints(spark, half, transform, out_dir, n_buckets=8)
-    # pretend buckets 4-7 never committed: drop their manifest rows
-    # (they were committed as empty; rewrite manifest with only 0-3)
-    man_dir = os.path.join(out_dir, "_kgtm_manifest")
-    kept = spark.read.parquet(man_dir).filter(F.col("bucket") < 4)
-    kept_rows = kept.collect()
-    import shutil
-
-    shutil.rmtree(man_dir)
-    spark.createDataFrame(kept_rows, "bucket int").write.parquet(man_dir)
+    (c,) = list_commits(out_dir, spark)
+    # pretend buckets 4-7 never committed (they were committed empty): the
+    # first commit's manifest records only 0-3
+    manifest = tmp_path / "ck2" / "_commits" / f"{c['seq']:010d}.json"
+    recorded = json.loads(manifest.read_text())
+    recorded["buckets"] = [0, 1, 2, 3]
+    manifest.write_text(json.dumps(recorded))
+    assert completed_buckets(spark, out_dir) == [0, 1, 2, 3]
 
     # resume with the FULL input
     resumed = run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=8)
@@ -70,16 +78,88 @@ def test_checkpoint_skips_completed(spark, events, tmp_path):
     """A second run over a fully-checkpointed dir reads, never recomputes."""
     tr = events_to_transcripts(events)
     calls = {"n": 0}
-
-    def transform(df):
-        calls["n"] += 1
-        return df.select("conv_id", "turn_idx", "text")
+    transform = _counting(calls)
 
     out_dir = str(tmp_path / "ck3")
     run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=4)
     assert calls["n"] == 1
     run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=4)
     assert calls["n"] == 1  # not called again
+
+
+def test_checkpoint_resume_on_file_uri_root(spark, events, tmp_path):
+    """A ``file:`` root resumes like a plain path: the rerun returns the
+    first run's rows and never calls ``transform``."""
+    tr = events_to_transcripts(events)
+    calls = {"n": 0}
+    transform = _counting(calls)
+    root = (tmp_path / "ck-uri").as_uri()
+    first = run_with_checkpoints(spark, tr, transform, root, n_buckets=4)
+    second = run_with_checkpoints(spark, tr, transform, root, n_buckets=4)
+    assert calls["n"] == 1
+    assert second.count() == tr.count()
+    assert_same_both_ways(first, second)
+
+
+def test_checkpoint_resume_rejects_other_bucketing(spark, events, tmp_path):
+    """Buckets of another key or count are other sets of rows: resuming
+    with them would duplicate or drop rows, so it raises."""
+    tr = events_to_transcripts(events)
+    transform = _counting({"n": 0})
+    out_dir = str(tmp_path / "ck4")
+    run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=4)
+    with pytest.raises(ValueError, match="n_buckets=8"):
+        run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=8)
+    with pytest.raises(ValueError, match="key='turn_idx'"):
+        run_with_checkpoints(spark, tr, transform, out_dir, key="turn_idx", n_buckets=4)
+
+
+def test_checkpoint_done_rerun_runs_no_job(spark, events, tmp_path):
+    """With every bucket committed, building the result frame reads only
+    manifests: no Spark job."""
+    tr = events_to_transcripts(events)
+    transform = _counting({"n": 0})
+    out_dir = str(tmp_path / "ck5")
+    run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=4)
+    sc = spark.sparkContext
+    group = f"ck-rerun-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+def test_checkpoint_crashed_run_is_invisible_and_vacuumed(spark, events, tmp_path, monkeypatch):
+    """A run killed between its data write and its manifest claim leaves a
+    ``commit=`` directory no manifest names: the resumed output never
+    sees it, and vacuum removes it."""
+    from kgtm import materialize
+
+    tr = events_to_transcripts(events)
+    transform = _counting({"n": 0})
+    out_dir = str(tmp_path / "ck6")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("killed before the manifest claim")
+
+    with monkeypatch.context() as m:
+        m.setattr(materialize, "_commit_manifest", crash)
+        with pytest.raises(RuntimeError):
+            run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=4)
+    (orphan,) = (tmp_path / "ck6" / "checkpoint").iterdir()
+    assert completed_buckets(spark, out_dir) == []
+
+    resumed = run_with_checkpoints(spark, tr, transform, out_dir, n_buckets=4)
+    direct = transform(tr)
+    assert resumed.exceptAll(direct).count() == 0
+    assert direct.exceptAll(resumed).count() == 0
+    assert vacuum(out_dir, min_age_ms=0, spark=spark) == [
+        f"{out_dir}/checkpoint/{orphan.name}"
+    ]
+    assert not orphan.exists()
+    assert resumed.count() == direct.count()
 
 
 def test_error_struct_chain():

@@ -418,6 +418,34 @@ def test_manifest_cache_fresh_and_unpoisonable(spark, tmp_path):
     assert warm == cold
 
 
+def test_list_commits_skips_only_vanished_manifests(spark, tmp_path, monkeypatch):
+    """A manifest deleted between listing and open is skipped; any other
+    failed read (an I/O or checksum error) raises instead of silently
+    dropping the commit from every read."""
+    from py4j.protocol import Py4JJavaError
+
+    from kgtm import materialize as mat
+
+    store = str(tmp_path / "store")
+    write_table(spark.range(3).selectExpr("id", "'x' as source"), store)
+    jvm = spark.sparkContext._jvm
+
+    def failing(exc):
+        def read(spark, path):
+            raise Py4JJavaError(f"open {path}", exc)
+
+        return read
+
+    mat._MANIFEST_CACHE.clear()
+    monkeypatch.setattr(mat, "_read_bytes", failing(jvm.java.io.IOException("disk")))
+    with pytest.raises(Py4JJavaError):
+        mat.list_commits(store, spark)
+    monkeypatch.setattr(
+        mat, "_read_bytes", failing(jvm.java.io.FileNotFoundException("gone"))
+    )
+    assert mat.list_commits(store, spark) == []
+
+
 def test_compaction_replaces_and_preserves_time_travel(spark, events, tmp_path):
     """compact_table rewrites N live commits into one: current reads switch
     atomically to the rewrite (same rows, one data dir), as_of OLDER than the
@@ -682,6 +710,37 @@ def test_cli_end_to_end_subprocess(tmp_path):
     report = json.loads(out.stdout.strip().splitlines()[-1])
     assert report["pr"]["precision"] >= 0.95
     assert report["pr"]["recall"] >= 0.95
+
+
+def test_cli_checkpoint_dir_commits_the_same_triples(spark, tmp_path, monkeypatch):
+    """The CLI's ``--checkpoint-dir`` path, run twice over one (``file:``)
+    root, commits the same triples as a run without it; the second run
+    reads the committed buckets back."""
+    from kgtm import session
+    from kgtm.cli import main
+    from kgtm.materialize import read_triples
+
+    corpus = tmp_path / "corpus"
+    generate(SynthConfig(seed=11, n_convs=40, n_ontologies=15), out_dir=str(corpus))
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    base = [
+        "--transcripts", str(corpus / "transcripts.parquet"),
+        "--ontology-index", str(corpus / "ontology_index.parquet"),
+        "--snapshots", str(corpus / "ontology_snapshots.parquet"),
+    ]
+    ck = (tmp_path / "ck").as_uri()
+    for out in ("ck1", "ck2"):
+        assert main([*base, "--out", str(tmp_path / out), "--checkpoint-dir", ck, "--n-buckets", "4"]) == 0
+    assert main([*base, "--out", str(tmp_path / "plain")]) == 0
+
+    plain = read_triples(spark, str(tmp_path / "plain")).drop("commit")
+    assert plain.count() > 0
+    for out in ("ck1", "ck2"):
+        got = read_triples(spark, str(tmp_path / out)).drop("commit")
+        assert got.columns == plain.columns
+        assert got.exceptAll(plain).count() == 0
+        assert plain.exceptAll(got).count() == 0
 
 
 def test_cli_rejects_pin_mode_without_timestamp():

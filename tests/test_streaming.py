@@ -194,7 +194,7 @@ def test_stream_commit_store_exactly_once(spark, events, stream_dirs, tmp_path):
 
 
 def test_stream_broadcast_ladder_large_dictionary(spark, events, stream_dirs):
-    """The large-dictionary scale path (NOTES item 5): streaming with a
+    """The large-dictionary scale path: streaming with a
     10^5-entry dictionary must (a) plan as broadcast rung lookups, not a
     10^5-entry map literal, and (b) give the batch resolution's rows and schema over the
     same input. The plan is read from the started query: a streaming frame
